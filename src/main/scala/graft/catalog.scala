@@ -26,13 +26,18 @@ object Catalog {
   }
 
   /** Register every gold table written by [[Pipeline.run]] as a
-    * `gold_<name>` view. */
+    * `gold_<name>` view. Resolving a relation infers its schema from the
+    * parquet footers, one small Spark job per table, so the relations are
+    * resolved concurrently through [[FanOut]] (bounded by
+    * `defaultParallelism`, one in-flight job per task slot); the views are
+    * then registered on the caller's thread, in directory-name order. */
   def registerGold(spark: SparkSession, outDir: String): Unit = {
     val goldDir = new java.io.File(s"$outDir/gold")
     require(goldDir.isDirectory, s"no gold dir at $goldDir — run Pipeline first")
-    goldDir.listFiles().filter(_.isDirectory).foreach { d =>
-      spark.read.parquet(d.getAbsolutePath)
-        .createOrReplaceTempView(s"gold_${d.getName.stripPrefix("gold_")}")
+    val dirs = goldDir.listFiles().filter(_.isDirectory).sortBy(_.getName).toSeq
+    val frames = FanOut(spark, dirs.map(d => () => spark.read.parquet(d.getAbsolutePath)))
+    dirs.zip(frames).foreach { case (d, df) =>
+      df.createOrReplaceTempView(s"gold_${d.getName.stripPrefix("gold_")}")
     }
     graft.functions.CosineSimilarity.register(spark)
   }

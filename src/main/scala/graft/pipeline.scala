@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** End-to-end medallion flow (reference tools/run.py:131-146 →
   * flows_spark/{silver,gold}_transformation_spark.py): bronze (typed
@@ -17,7 +18,21 @@ import org.apache.spark.sql.functions._
   *    is the big one, and year partitions give partition pruning to every
   *    downstream time-ranged scan;
   *  - silver quality counters are computed in one pass, not one action
-  *    per rule.
+  *    per rule;
+  *  - independent sinks are written concurrently through [[FanOut]]: the
+  *    2 silver sinks together, then the 13 gold sinks with their readback
+  *    counts, `fact_achats` (the largest) first. Up to sf0.01 the flow is
+  *    ~130 jobs of about two tasks each, so a single calling thread leaves
+  *    most task slots idle; the pool is bounded by `defaultParallelism`
+  *    since one in-flight job per slot already fills them. `fact` and
+  *    `feats` enter [[CacheOnce]] on the caller's thread before the
+  *    fan-out, so all sinks share one cached copy;
+  *  - the quality pass stays sequential, ahead of the silver writes:
+  *    overlapping it saves little more and would blur its cost in a trace,
+  *    where an action that starts before the first silver write is the
+  *    quality step;
+  *  - sinks are read back with the schema of the frame just written
+  *    ([[readBack]]), saving the footer-inference job per sink.
   */
 object Pipeline {
 
@@ -31,14 +46,15 @@ object Pipeline {
     val qualityMap = quality.schema.fieldNames.map(n =>
       n -> quality.getAs[Long](n)).toMap
 
-    val silverOrders = Silver.cleanOrders(rawOrders, rawCustomer)
-    val silverCustomer = Silver.cleanCustomers(rawCustomer)
-    silverOrders.write.mode("overwrite").parquet(s"$outDir/silver/orders")
-    silverCustomer.write.mode("overwrite").parquet(s"$outDir/silver/customer")
+    val silver = Seq(
+      "orders" -> Silver.cleanOrders(rawOrders, rawCustomer),
+      "customer" -> Silver.cleanCustomers(rawCustomer))
+    FanOut(spark, silver.map { case (name, df) =>
+      () => df.write.mode("overwrite").parquet(s"$outDir/silver/$name") })
 
     // ---- gold -------------------------------------------------------------
-    val orders = spark.read.parquet(s"$outDir/silver/orders")
-    val customer = spark.read.parquet(s"$outDir/silver/customer")
+    val Seq(orders, customer) = silver.map { case (name, df) =>
+      readBack(spark, df, s"$outDir/silver/$name") }
     val nation = Tables.nation(spark, sfDir)
     val lineitem = Tables.lineitem(spark, sfDir)
     val part = Tables.part(spark, sfDir)
@@ -48,31 +64,41 @@ object Pipeline {
     val feats = CacheOnce(Gold.clientFeatures(orders, lineitem, ref))
     val scored = Gold.scoreClients(feats, Gold.scoreThresholds(feats))
 
-    val gold: Map[String, (DataFrame, Seq[String])] = Map(
-      "fact_achats" -> ((fact, Seq("annee"))),
-      "dim_clients" -> ((Gold.dimClients(customer, orders, lineitem, ref), Nil)),
-      "client_features" -> ((feats, Nil)),
-      "client_scores" -> ((scored, Nil)),
-      "segment_summary" -> ((Gold.segmentSummary(scored), Nil)),
-      "ca_monthly" -> ((Gold.caMonthly(fact), Nil)),
-      "ca_country" -> ((Gold.caCountry(fact), Nil)),
-      "ca_product" -> ((Gold.caProduct(orders, lineitem, part), Nil)),
-      "cohort_first_purchase" -> ((Gold.cohort(fact), Nil)),
-      "gold_daily" -> ((Serving.daily(fact), Nil)),
-      "gold_weekly" -> ((Serving.weekly(fact), Nil)),
-      "gold_distribution" -> ((Serving.distribution(fact), Nil)),
-      "gold_monthly_growth" -> ((Serving.monthlyGrowth(Gold.caMonthly(fact)), Nil)))
+    // (name, frame, partition columns); fact_achats first, the largest sink
+    val gold: Seq[(String, DataFrame, Seq[String])] = Seq(
+      ("fact_achats", fact, Seq("annee")),
+      ("dim_clients", Gold.dimClients(customer, orders, lineitem, ref), Nil),
+      ("client_features", feats, Nil),
+      ("client_scores", scored, Nil),
+      ("segment_summary", Gold.segmentSummary(scored), Nil),
+      ("ca_monthly", Gold.caMonthly(fact), Nil),
+      ("ca_country", Gold.caCountry(fact), Nil),
+      ("ca_product", Gold.caProduct(orders, lineitem, part), Nil),
+      ("cohort_first_purchase", Gold.cohort(fact), Nil),
+      ("gold_daily", Serving.daily(fact), Nil),
+      ("gold_weekly", Serving.weekly(fact), Nil),
+      ("gold_distribution", Serving.distribution(fact), Nil),
+      ("gold_monthly_growth", Serving.monthlyGrowth(Gold.caMonthly(fact)), Nil))
 
-    val rows = gold.map { case (name, (df, partitions)) =>
-      val writer = df.write.mode("overwrite")
-      (if (partitions.nonEmpty) writer.partitionBy(partitions: _*) else writer)
-        .parquet(s"$outDir/gold/$name")
-      name -> spark.read.parquet(s"$outDir/gold/$name").count()
-    }
+    val rows = FanOut(spark, gold.map { case (name, df, partitions) => () =>
+      val dir = s"$outDir/gold/$name"
+      df.write.mode("overwrite").partitionBy(partitions: _*).parquet(dir)
+      name -> readBack(spark, df, dir, partitions).count()
+    }).toMap
     fact.unpersist()
     feats.unpersist()
     Result(rows, qualityMap)
   }
+
+  /** Reads a sink back with the schema of the frame just written there,
+    * which skips the one-job footer inference of an inferring
+    * `spark.read.parquet`. Partition columns are left out of that schema,
+    * so their types come from the directory names as in an inferring read
+    * (a long `annee` reads back as int); GoldSpec pins the equality. */
+  private[graft] def readBack(spark: SparkSession, df: DataFrame, dir: String,
+      partitions: Seq[String] = Nil): DataFrame =
+    spark.read.schema(StructType(df.schema.filterNot(f => partitions.contains(f.name))))
+      .parquet(dir)
 
   /** Small-file compaction for a Hive-partitioned parquet sink — the
     * maintenance job every long-lived 100 TB table needs: daily appends
@@ -271,7 +297,8 @@ object Pipeline {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -848,6 +848,12 @@ class StreamsSpec extends SparkSpec {
     val out = java.nio.file.Files.createTempDirectory("graft_cat").toString
     Pipeline.run(spark, sf, out)
     Catalog.registerGold(spark, out)
+    val goldViews = spark.catalog.listTables().collect()
+      .filter(t => t.isTemporary && t.name.startsWith("gold_")).map(_.name).toSet
+    assert(goldViews == Set("fact_achats", "dim_clients", "client_features",
+      "client_scores", "segment_summary", "ca_monthly", "ca_country", "ca_product",
+      "cohort_first_purchase", "daily", "weekly", "distribution", "monthly_growth")
+      .map("gold_" + _))
     val months = spark.sql("SELECT mois, ca FROM gold_ca_monthly ORDER BY mois").collect()
     assert(months.nonEmpty)
     val sim = spark.sql(
