@@ -18,14 +18,14 @@ import org.apache.spark.sql.SparkSession
   * bill as a visible line item (also an added `shared_build` entry in
   * the queries map), while the three timed passes still measure each
   * query's incremental cost with the shared frames warm (so per-query
-  * mins stay comparable to earlier rounds). CacheOnce/mlMemo frames,
-  * built inside query bodies, are charged to their first pass-1 consumer
-  * instead — the per-query `pass1` map records that cold pass next to
-  * the min. The registry's total footprint is recorded per run
-  * (`cache_mb` in BENCH_FULL.json — ~10 MB at sf0.1 against 128 GiB
-  * heap, so headroom is not a concern at any test SF) and the release
-  * path runs at end-of-suite, after every frame's last consumer, via
-  * SparkEntry.unpersistShared().
+  * mins stay comparable to earlier rounds). The other released Shared
+  * entries (ML fits, CacheOnce frames), built inside query bodies, are
+  * charged to their first pass-1 consumer instead — the per-query
+  * `pass1` map records that cold pass next to the min. The registry's
+  * total footprint is recorded per run (`cache_mb` in BENCH_FULL.json —
+  * ~10 MB at sf0.1 against 128 GiB heap, so headroom is not a concern at
+  * any test SF) and the release path runs at end-of-suite, after every
+  * frame's last consumer, via SparkEntry.unpersistShared().
   *
   * Timing materializes EVERY output row through the noop DataSourceV2 sink
   * (full projection + row production, no I/O) — `count()` would let
@@ -129,10 +129,11 @@ object Bench {
     // frame UNDER THE CLOCK — the total now carries a visible
     // `shared_build` line item, per-query numbers stay the honest
     // incremental (shared-frames-warm) cost, and per-query cross-round
-    // comparability with r17 is preserved. Frames built inside query
-    // bodies (CacheOnce, mlMemo) are not in the registry; releasing them
-    // here charges their rebuild to their first pass-1 consumer, which
-    // the `pass1` map in BENCH_FULL.json records next to the min.
+    // comparability with r17 is preserved. Released entries built inside
+    // query bodies (ML fits, CacheOnce frames) are not in the registry;
+    // releasing them here charges their rebuild to their first pass-1
+    // consumer, which the `pass1` map in BENCH_FULL.json records next to
+    // the min.
     // Skipped on SPARK_GRAFT_QUERIES-filtered dev runs: building all 21
     // frames for a 2-query probe would distort, and filtered runs are
     // not cross-round records.
@@ -256,8 +257,9 @@ object Bench {
       val sp = spreads.map { case (k, v) => jstr(k) + ":" + v }
         .mkString("{", ",", "}")
       // per-frame breakdown of the timed shared_build phase, and the
-      // pass-1 (cold CacheOnce/mlMemo) per-query seconds next to the
-      // min — a reader can see exactly where every build's cost landed
+      // pass-1 (cold ML fits and CacheOnce frames) per-query seconds next
+      // to the min — a reader can see exactly where every build's cost
+      // landed
       val sbJson = sharedBuild.map { case (k, v) => jstr(k) + ":" + v }
         .mkString("{", ",", "}")
       val p1Json = p1.collect { case (k, v, None) => jstr(k) + ":" + v }

@@ -65,225 +65,6 @@ object Profile {
           println(f"[streamprof] $name pass $i: wall=$wall%.2fs rows=$n")
           batches.synchronized(batches.foreach(b => println(s"  $b")))
         }
-      case Array("skew") =>
-        import org.apache.spark.sql.functions._
-        // hot-key demo over real data: salted vs direct revenue by country
-        val fact = Gold.buildFact(Tables.orders(spark, d),
-          Tables.customer(spark, d), Tables.nation(spark, d))
-        val direct = fact.groupBy("pays")
-          .agg(sum(Tables.cents(col("o_totalprice"))).as("sum"),
-            count(lit(1)).as("sum_count"))
-        val salted = Skew.saltedSum(fact, "pays", Tables.cents(col("o_totalprice")))
-        val diff = direct.join(salted, Seq("pays"))
-          .filter(direct("sum") =!= salted("sum")).count()
-        println(s"[profile] salted-vs-direct mismatches: $diff (rows ${salted.count()})")
-      case Array("sessions") =>
-        import org.apache.spark.sql.expressions.Window
-        import org.apache.spark.sql.functions._
-        val batch = Serving.eventSessions(Tables.events(spark, d))
-        val w = Window.partitionBy("user_id")
-        val closed = batch.withColumn("mx", max("session_seq").over(w))
-          .filter(col("session_seq") < col("mx"))
-        val streamed = Streams.eventSessionsStreamed(spark, d)
-        val b = closed.groupBy("user_id").count().withColumnRenamed("count", "nb")
-        val s = streamed.groupBy("user_id").count().withColumnRenamed("count", "ns")
-        val cmp = b.join(s, Seq("user_id"), "full").filter(
-          coalesce(col("nb"), lit(-1)) =!= coalesce(col("ns"), lit(-1)))
-        cmp.orderBy("user_id").show(30)
-        val u = cmp.select("user_id").collect().headOption.map(_.getLong(0))
-        u.foreach { uid =>
-          println(s"--- user $uid batch closed:")
-          closed.filter(col("user_id") === uid).orderBy("session_start").show(50, false)
-          println(s"--- user $uid streamed:")
-          streamed.filter(col("user_id") === uid).orderBy("session_start").show(50, false)
-        }
-      case Array("ngram") =>
-        import org.apache.spark.sql.functions._
-        def noop(df: DataFrame): Long = {
-          df.write.format("noop").mode("overwrite").save(); 0L
-        }
-        val docs = Tables.documents(spark, d)
-        // old round-1 formulation (shingle self-join) for comparison
-        def oldNgram(): DataFrame = {
-          import org.apache.spark.sql.expressions.Window
-          val sh0 = docs
-            .withColumn("ws", split(lower(col("text")), "\\s+"))
-            .filter(size(col("ws")) >= 3)
-            .select(col("doc_id"), explode(
-              array_distinct(transform(sequence(lit(0), size(col("ws")) - 3),
-                i => concat_ws(" ", slice(col("ws"), i + 1, lit(3)))))).as("shingle"))
-            .select(col("doc_id"), xxhash64(col("shingle")).as("shingle"))
-          val sizes0 = sh0.groupBy("doc_id").agg(count(lit(1)).as("n"))
-          val inter0 = sh0.select(col("doc_id").as("doc_a"), col("shingle"))
-            .join(sh0.select(col("doc_id").as("doc_b"), col("shingle")), Seq("shingle"))
-            .filter(col("doc_a") < col("doc_b"))
-            .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("inter"))
-          val jac0 = inter0
-            .join(sizes0.select(col("doc_id").as("doc_a"), col("n").as("na")), Seq("doc_a"))
-            .join(sizes0.select(col("doc_id").as("doc_b"), col("n").as("nb")), Seq("doc_b"))
-            .withColumn("jaccard",
-              round(col("inter") * 1.0 / (col("na") + col("nb") - col("inter")), 6))
-          jac0.withColumn("rn", row_number().over(
-              Window.partitionBy("doc_a").orderBy(desc("jaccard"), col("doc_b"))))
-            .filter(col("rn") === 1)
-            .select(col("doc_a").as("doc_id"), col("doc_b").as("best_match"), col("jaccard"))
-            .orderBy("doc_id")
-        }
-        val base0 = docs.repartition(32)
-          .withColumn("ws", split(lower(col("text")), "\\s+"))
-          .filter(size(col("ws")) >= 3)
-          .select(col("doc_id"),
-            array_distinct(transform(sequence(lit(0), size(col("ws")) - 3),
-              i => concat_ws(" ", slice(col("ws"), i + 1, lit(3))))).as("sh"))
-        val sizes0 = base0.select(col("doc_id"), size(col("sh")).cast("long").as("n"))
-        val exh = base0.select(col("doc_id"), explode_outer(col("sh")).as("shingle"))
-          .filter(col("shingle").isNotNull)
-          .select(col("doc_id"), xxhash64(col("shingle")).as("shingle"))
-        val grouped0 = exh.groupBy("shingle")
-          .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-          .filter(size(col("ds")) >= 2)
-        val pairs0 = grouped0.filter(size(col("ds")) <= 256)
-          .select(explode(flatten(transform(col("ds"), (x, i) =>
-            transform(slice(col("ds"), i + lit(2), greatest(size(col("ds")) - i - 1, lit(0))),
-              y => struct(x.as("doc_a"), y.as("doc_b")))))).as("p"))
-          .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-        val inter0 = pairs0.groupBy("doc_a", "doc_b").agg(count(lit(1)).as("inter"))
-        val jac0 = inter0
-          .join(sizes0.select(col("doc_id").as("doc_a"), col("n").as("na")), Seq("doc_a"))
-          .join(sizes0.select(col("doc_id").as("doc_b"), col("n").as("nb")), Seq("doc_b"))
-          .withColumn("jaccard",
-            round(col("inter") * 1.0 / (col("na") + col("nb") - col("inter")), 6))
-        noop(jac0) // warm
-        time("1 sizes")(noop(sizes0))
-        time("2 exh")(noop(exh))
-        time("3 grouped")(noop(grouped0))
-        time("4 pairs")(noop(pairs0))
-        time("5 inter")(noop(inter0))
-        time("6 jac")(noop(jac0))
-        for (i <- 1 to 6) time(s"full $i")(noop(Llm.dedupNgram(docs)))
-        val base = docs
-          .withColumn("ws", split(lower(col("text")), "\\s+"))
-          .filter(size(col("ws")) >= 3)
-          .select(col("doc_id"),
-            array_distinct(transform(sequence(lit(0), size(col("ws")) - 3),
-              i => concat_ws(" ", slice(col("ws"), i + 1, lit(3))))).as("sh"))
-        time("warmup-scan")(docs.count())
-        time("base sizes")(mat(base.select(col("doc_id"), size(col("sh")).as("n"))))
-        time("base sizes warm")(mat(base.select(col("doc_id"), size(col("sh")).as("n"))))
-        val grouped = base.select(col("doc_id"), explode(col("sh")).as("shingle"))
-          .select(col("doc_id"), xxhash64(col("shingle")).as("shingle"))
-          .groupBy("shingle")
-          .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-          .filter(size(col("ds")) >= 2)
-        time("grouped")(mat(grouped.select(col("shingle"), size(col("ds")).as("k"))))
-        time("grouped warm")(mat(grouped.select(col("shingle"), size(col("ds")).as("k"))))
-        val pairs = grouped
-          .select(explode(flatten(transform(col("ds"), (x, i) =>
-            transform(slice(col("ds"), i + lit(2), greatest(size(col("ds")) - i - 1, lit(0))),
-              y => struct(x.as("doc_a"), y.as("doc_b")))))).as("p"))
-          .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-        time("pairs")(mat(pairs.groupBy("doc_a", "doc_b").count()))
-        time("pairs warm")(mat(pairs.groupBy("doc_a", "doc_b").count()))
-        time("full dedupNgram")(mat(Llm.dedupNgram(docs)))
-        time("full dedupNgram warm")(mat(Llm.dedupNgram(docs)))
-      case Array("simhash") =>
-        import org.apache.spark.sql.functions._
-        def noop(df: DataFrame): Long = {
-          df.write.format("noop").mode("overwrite").save(); 0L
-        }
-        val docs = Tables.documents(spark, d)
-        val sh = Llm.simhashDocs(docs)
-        noop(Llm.dedupSimhash(docs)) // warm
-        time("simhashDocs")(noop(sh))
-        val banded = sh.select(col("doc_id"), col("simhash"),
-          explode(expr("transform(sequence(0, 3), j -> " +
-            "concat(CAST(j AS STRING), ':', CAST(shiftright(simhash, j * 16) & 65535 AS STRING)))")).as("band"))
-        val a = banded.select(col("doc_id").as("doc_a"), col("simhash").as("sh_a"), col("band"))
-        val b = banded.select(col("doc_id").as("doc_b"), col("simhash").as("sh_b"), col("band"))
-        val joined = a.join(b, Seq("band")).filter(col("doc_a") < col("doc_b"))
-        time("banded join")(noop(joined))
-        println(s"[profile] joined pairs: ${joined.count()}")
-        val pairs = joined.select("doc_a", "doc_b", "sh_a", "sh_b").distinct()
-        time("pairs distinct")(noop(pairs))
-        println(s"[profile] distinct pairs: ${pairs.count()}")
-        for (i <- 1 to 3) time(s"full $i")(noop(Llm.dedupSimhash(docs)))
-      case Array("recall") =>
-        import org.apache.spark.sql.functions._
-        val e = Tables.embeddings(spark, d)
-        val bf = Llm.knnBruteforce(e).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        def recall(df: DataFrame, label: String): Unit = {
-          val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-          println(f"[profile] $label recall@5 = ${(bf & got).size.toDouble / bf.size}%.3f (${got.size} returned)")
-        }
-        for ((b, l) <- Seq((2, 4), (3, 8), (4, 12), (4, 16), (4, 24), (6, 32)))
-          recall(Llm.knnLsh(e, nPlanes = b, nTables = l), s"lsh b=$b L=$l")
-        for (np <- Seq(1, 2, 4, 8)) recall(Ml.knnIvf(e, nprobe = np), s"ivf nprobe=$np")
-      case Array("ssread") =>
-        import org.apache.spark.sql.streaming.Trigger
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_ss_probe").toString
-        val q = Streams.sessionizeStream(Streams.eventsStream(spark, d))
-          .writeStream.outputMode("append").format("memory").queryName("ss_probe")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        println(s"closed sessions: ${spark.table("ss_probe").count()}")
-        val st = spark.read.format("statestore").load(ckpt)
-        st.printSchema()
-        st.show(5, false)
-        println(s"state rows: ${st.count()}  ckpt: $ckpt")
-      case Array("dim") =>
-        import org.apache.spark.sql.functions._
-        def noop(df: DataFrame): Long = {
-          df.write.format("noop").mode("overwrite").save(); 0L
-        }
-        val orders = Tables.orders(spark, d)
-        // warm everything once
-        noop(SparkEntry.queries("dim_clients")(spark, d))
-        time("referenceDate")({ Gold.referenceDate(Gold.validOrders(orders)); 0L })
-        val ref = Gold.referenceDate(Gold.validOrders(orders))
-        val dim = Gold.dimClients(Tables.customer(spark, d), orders,
-          Tables.lineitem(spark, d), ref)
-        val o = Gold.validOrders(orders)
-        time("agg only")(noop(o.groupBy(col("o_custkey")).agg(
-          min("o_orderdate"), max("o_orderdate"), count("o_orderkey"),
-          sum(Tables.cents(col("o_totalprice"))))))
-        time("parts only")(noop(o.join(
-            Tables.lineitem(spark, d).select("l_orderkey", "l_partkey"),
-            col("o_orderkey") === col("l_orderkey"))
-          .groupBy(col("o_custkey"))
-          .agg(countDistinct("l_partkey"))))
-        time("parts narrow-proj")(noop(o.select("o_orderkey", "o_custkey").join(
-            Tables.lineitem(spark, d).select("l_orderkey", "l_partkey"),
-            col("o_orderkey") === col("l_orderkey"))
-          .groupBy(col("o_custkey"))
-          .agg(countDistinct("l_partkey"))))
-        time("parts merge-join")(noop(o.select("o_orderkey", "o_custkey").hint("merge").join(
-            Tables.lineitem(spark, d).select("l_orderkey", "l_partkey"),
-            col("o_orderkey") === col("l_orderkey"))
-          .groupBy(col("o_custkey"))
-          .agg(countDistinct("l_partkey"))))
-        time("parts pre-distinct")(noop(o.select("o_orderkey", "o_custkey").join(
-            Tables.lineitem(spark, d).select("l_orderkey", "l_partkey").distinct(),
-            col("o_orderkey") === col("l_orderkey"))
-          .groupBy(col("o_custkey"))
-          .agg(countDistinct("l_partkey"))))
-        // r18 experiments: single-exchange collect_set shape, and an
-        // explicit group-then-count two-step (dedup exchange only)
-        time("parts collect_set")(noop(o.select("o_orderkey", "o_custkey").join(
-            Tables.lineitem(spark, d).select("l_orderkey", "l_partkey"),
-            col("o_orderkey") === col("l_orderkey"))
-          .groupBy(col("o_custkey"))
-          .agg(size(collect_set("l_partkey")))))
-        time("parts dedup+count")(noop(o.select("o_orderkey", "o_custkey").join(
-            Tables.lineitem(spark, d).select("l_orderkey", "l_partkey"),
-            col("o_orderkey") === col("l_orderkey"))
-          .select(col("o_custkey"), col("l_partkey")).distinct()
-          .groupBy(col("o_custkey"))
-          .agg(count(lit(1)))))
-        time("dim no-sort")(noop(dim))
-        time("dim sorted")(noop(dim.orderBy("c_custkey")))
-        time("full registered")(noop(SparkEntry.queries("dim_clients")(spark, d)))
       case Array("floor") =>
         // decompose the bench's per-query fixed cost at tiny SF:
         //   build = SparkEntry builder call (incl. any driver actions)
@@ -332,55 +113,6 @@ object Profile {
         rows.sortBy(r => -(r._2 + r._3 + r._4)).take(30).foreach { case (n, b, p, x, j) =>
           println(f"[profile] floor $n%-32s build=$b%6.2f plan=$p%6.2f exec=$x%6.2f jobs=$j%3d")
         }
-      case Array("tri") =>
-        import org.apache.spark.sql.functions._
-        val e = Gold.itemPairEdges(Tables.lineitem(spark, d))
-        val nEdges = e.count()
-        val exTot = Gold.triangleCounts(e).agg(sum("n_triangles")).head.getLong(0)
-        for (seed <- Seq(42L, 7L, 123L, 9001L, 5L)) {
-          val kept = e.filter(
-            pmod(xxhash64(col("a"), col("b"), lit(seed)), lit(2L)) === 0L)
-          val est =
-            Gold.triangleCounts(kept).agg(sum("n_triangles")).head.getLong(0) * 8
-          println(f"[profile] tri $d seed=$seed edges=$nEdges exact=$exTot " +
-            f"est=$est relerr=${math.abs(est - exTot).toDouble / exTot}%.4f")
-        }
-        val topEx = Gold.copurchaseTrianglesFrom(e).collect().map(_.getLong(0)).toSet
-        val topAp = Gold.copurchaseTrianglesApprox(e).collect().map(_.getLong(0)).toSet
-        println(s"[profile] tri $d top20 overlap=${(topEx & topAp).size}")
-      case Array("lpa") =>
-        // round-plan evidence for the r18 LPA regime change: the final
-        // frame's lineage is severed per round (localCheckpoint), so the
-        // per-round shape is only visible via the probe. "BEFORE" is the
-        // pre-r18 round body reconstructed inline (hash(dst)-pinned
-        // edges, shuffle label join) — bit-identical semantics, the old
-        // physical shape; "AFTER" is the live labelPropagation round.
-        import org.apache.spark.sql.functions._
-        val edges = Gold.communityEdges(Gold.itemCooccurrenceFrom(
-          Gold.orderItems(Tables.lineitem(spark, d))))
-        val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
-        val symOld = org.apache.spark.sql.graftbridge.Bridge.declareHashPartitioning(
-          edges.select(col("a").as("src"), col("b").as("dst"), col("w"))
-            .union(edges.select(col("b").as("src"), col("a").as("dst"), col("w")))
-            .repartition(nPart, col("dst")).localCheckpoint(), Seq("dst"), nPart)
-        val labels0 = symOld.select(col("src").as("v")).distinct()
-          .withColumn("label", col("v")).localCheckpoint()
-        val oldRound = symOld.join(labels0, col("dst") === col("v"))
-          .groupBy(col("src"), col("label")).agg(sum("w").as("wt"))
-          .groupBy("src")
-          .agg(max(struct(col("wt"), (-col("label")).as("nl"),
-            col("label").as("label"))).as("m"))
-          .select(col("src").as("v"), col("m.label").as("label"))
-        println("========== BEFORE (pre-r18 round body, hash(dst) pin) ==========")
-        println(oldRound.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-        println("========== AFTER (live labelPropagation round 1) ==========")
-        var printed = false
-        Graph.labelPropagation(edges, rounds = 1, roundProbe = df => {
-          if (!printed) println(df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
-          printed = true
-        }).write.format("noop").mode("overwrite").save()
       case Array("explain", names @ _*) =>
         names.foreach { n =>
           println(s"========== $n ==========")

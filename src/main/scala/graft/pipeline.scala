@@ -25,8 +25,10 @@ import org.apache.spark.sql.types.StructType
   *    ~130 jobs of about two tasks each, so a single calling thread leaves
   *    most task slots idle; the pool is bounded by `defaultParallelism`
   *    since one in-flight job per slot already fills them. `fact` and
-  *    `feats` enter [[CacheOnce]] on the caller's thread before the
-  *    fan-out, so all sinks share one cached copy;
+  *    `feats` are cached on the caller's thread before the fan-out, so
+  *    all sinks share one cached copy, and unpersisted when the run
+  *    ends: the caches are the run's own, never a session memo, so a
+  *    second run into the same `outDir` reads its own silver files;
   *  - the quality pass stays sequential, ahead of the silver writes:
   *    overlapping it saves little more and would blur its cost in a trace,
   *    where an action that starts before the first silver write is the
@@ -60,34 +62,37 @@ object Pipeline {
     val part = Tables.part(spark, sfDir)
 
     val ref = Gold.referenceDate(Gold.validOrders(orders))
-    val fact = CacheOnce(Gold.buildFact(orders, customer, nation))
-    val feats = CacheOnce(Gold.clientFeatures(orders, lineitem, ref))
-    val scored = Gold.scoreClients(feats, Gold.scoreThresholds(feats))
+    val fact = Gold.buildFact(orders, customer, nation).cache()
+    val feats = Gold.clientFeatures(orders, lineitem, ref).cache()
+    try {
+      val scored = Gold.scoreClients(feats, Gold.scoreThresholds(feats))
 
-    // (name, frame, partition columns); fact_achats first, the largest sink
-    val gold: Seq[(String, DataFrame, Seq[String])] = Seq(
-      ("fact_achats", fact, Seq("annee")),
-      ("dim_clients", Gold.dimClients(customer, orders, lineitem, ref), Nil),
-      ("client_features", feats, Nil),
-      ("client_scores", scored, Nil),
-      ("segment_summary", Gold.segmentSummary(scored), Nil),
-      ("ca_monthly", Gold.caMonthly(fact), Nil),
-      ("ca_country", Gold.caCountry(fact), Nil),
-      ("ca_product", Gold.caProduct(orders, lineitem, part), Nil),
-      ("cohort_first_purchase", Gold.cohort(fact), Nil),
-      ("gold_daily", Serving.daily(fact), Nil),
-      ("gold_weekly", Serving.weekly(fact), Nil),
-      ("gold_distribution", Serving.distribution(fact), Nil),
-      ("gold_monthly_growth", Serving.monthlyGrowth(Gold.caMonthly(fact)), Nil))
+      // (name, frame, partition columns); fact_achats first, the largest sink
+      val gold: Seq[(String, DataFrame, Seq[String])] = Seq(
+        ("fact_achats", fact, Seq("annee")),
+        ("dim_clients", Gold.dimClients(customer, orders, lineitem, ref), Nil),
+        ("client_features", feats, Nil),
+        ("client_scores", scored, Nil),
+        ("segment_summary", Gold.segmentSummary(scored), Nil),
+        ("ca_monthly", Gold.caMonthly(fact), Nil),
+        ("ca_country", Gold.caCountry(fact), Nil),
+        ("ca_product", Gold.caProduct(orders, lineitem, part), Nil),
+        ("cohort_first_purchase", Gold.cohort(fact), Nil),
+        ("gold_daily", Serving.daily(fact), Nil),
+        ("gold_weekly", Serving.weekly(fact), Nil),
+        ("gold_distribution", Serving.distribution(fact), Nil),
+        ("gold_monthly_growth", Serving.monthlyGrowth(Gold.caMonthly(fact)), Nil))
 
-    val rows = FanOut(spark, gold.map { case (name, df, partitions) => () =>
-      val dir = s"$outDir/gold/$name"
-      df.write.mode("overwrite").partitionBy(partitions: _*).parquet(dir)
-      name -> readBack(spark, df, dir, partitions).count()
-    }).toMap
-    fact.unpersist()
-    feats.unpersist()
-    Result(rows, qualityMap)
+      val rows = FanOut(spark, gold.map { case (name, df, partitions) => () =>
+        val dir = s"$outDir/gold/$name"
+        df.write.mode("overwrite").partitionBy(partitions: _*).parquet(dir)
+        name -> readBack(spark, df, dir, partitions).count()
+      }).toMap
+      Result(rows, qualityMap)
+    } finally {
+      fact.unpersist()
+      feats.unpersist()
+    }
   }
 
   /** Reads a sink back with the schema of the frame just written there,

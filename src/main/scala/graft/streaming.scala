@@ -30,7 +30,7 @@ object Streams extends Serializable {
     * bench passes that accumulation was measured pushing the suite into
     * GC thrash. The previous invocation's DataFrame is dead by the time
     * the next one starts, so the drop is safe. */
-  private val lastSink = new Tables.SessionMemo[String, String]
+  private[graft] val lastSink = new Tables.SessionMemo[String, String]
   private def sinkName(spark: SparkSession, prefix: String): String = {
     val name = s"${prefix}_${runId.incrementAndGet()}"
     lastSink.put(spark, prefix, name)
@@ -841,9 +841,8 @@ object Streams extends Serializable {
   /** The one shared full-outer pair drain behind the three attribution
     * views — drained once per (session, dataset), heartbeat-punctuated
     * on both sides so every outer row flushes. */
-  private val attrPairsMemo = new Tables.SessionMemo[String, DataFrame]
   private def sharedAttributionPairs(spark: SparkSession, dir: String): DataFrame =
-    attrPairsMemo.getOrElseUpdate(spark, dir,
+    Shared.session(spark, ("attrPairs", dir))(
       attributionPairsDrain(spark,
         () => eventsStream(spark, dir).unionByName(heartbeatStream(spark, dir)),
         // own per-dir sink prefix: sinkName drops the PREVIOUS view of the
@@ -935,11 +934,9 @@ object Streams extends Serializable {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = Tables.parquetSchema(spark, s"$dir/events.parquet")
     val isNanos = schema("ts").dataType == org.apache.spark.sql.types.LongType
-    val tmp = heartbeatMemo.getOrElseUpdate(spark, dir, {
+    val tmp = Shared.dir(spark, "heartbeat", dir) { p =>
       // the full relation resolves only on the one-time sentinel build
       val static = spark.read.parquet(s"$dir/events.parquet")
-      val p = java.nio.file.Files.createTempDirectory("graft_heartbeat")
-      sys.addShutdownHook(deleteRec(p.toFile))
       val maxTs = static.agg(max("ts")).first()
       // `lit` accepts java.sql.Timestamp (TIMESTAMP) and
       // java.time.LocalDateTime (TIMESTAMP_NTZ) alike, so the same branch
@@ -953,14 +950,12 @@ object Streams extends Serializable {
         .withColumn("ts", tsLit)
         .withColumn("event_type", lit("sentinel"))
         .withColumn("value", lit(0.0))
-        .write.mode("overwrite").parquet(p.toString)
-      p.toString
-    })
+        .write.mode("overwrite").parquet(p)
+    }
     val raw = spark.readStream.schema(schema).parquet(tmp)
     if (isNanos) raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else raw.withColumn("ts", col("ts").cast("timestamp"))
   }
-  private val heartbeatMemo = new Tables.SessionMemo[String, String]
 
   /** [[attributionStreamed]]'s LEFT OUTER form: every purchase emits,
     * zero-click purchases with a null-click row once the watermark proves

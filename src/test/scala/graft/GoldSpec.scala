@@ -318,27 +318,44 @@ class GoldSpec extends SparkSpec {
     assert(out(3).isNullAt(out(3).fieldIndex("growth_pct"))) // prev == 0
   }
 
+  // Pipeline.run's result at sf0.001: exact per-sink counts (a sink
+  // dropped or written twice by the concurrent fan-out changes the map)
+  // and the silver quality counters
+  private val pipelineRows = Map(
+    "fact_achats" -> 1500L, "dim_clients" -> 150L, "client_features" -> 150L,
+    "client_scores" -> 150L, "segment_summary" -> 5L, "ca_monthly" -> 80L,
+    "ca_country" -> 25L, "ca_product" -> 62L, "cohort_first_purchase" -> 26L,
+    "gold_daily" -> 1094L, "gold_weekly" -> 343L, "gold_distribution" -> 12L,
+    "gold_monthly_growth" -> 80L)
+  private val pipelineQuality = Map(
+    "initial_rows" -> 1500L, "dropped_missing" -> 0L, "dropped_invalid_date" -> 0L,
+    "dropped_bad_amount" -> 0L, "dropped_orphan_client" -> 0L,
+    "cust_initial_rows" -> 150L, "cust_dropped_duplicates" -> 0L,
+    "cust_dropped_invalid_id" -> 0L, "cust_dropped_invalid_name" -> 0L)
+
   test("pipeline: full medallion flow writes silver + 13 gold tables, invariants hold") {
     val out = java.nio.file.Files.createTempDirectory("graft_pipeline").toString
     val res = Pipeline.run(spark, sf, out)
-    // exact per-sink counts: a sink dropped or written twice by the
-    // concurrent fan-out changes this map
-    assert(res.rows == Map(
-      "fact_achats" -> 1500L, "dim_clients" -> 150L, "client_features" -> 150L,
-      "client_scores" -> 150L, "segment_summary" -> 5L, "ca_monthly" -> 80L,
-      "ca_country" -> 25L, "ca_product" -> 62L, "cohort_first_purchase" -> 26L,
-      "gold_daily" -> 1094L, "gold_weekly" -> 343L, "gold_distribution" -> 12L,
-      "gold_monthly_growth" -> 80L))
-    assert(res.quality == Map(
-      "initial_rows" -> 1500L, "dropped_missing" -> 0L, "dropped_invalid_date" -> 0L,
-      "dropped_bad_amount" -> 0L, "dropped_orphan_client" -> 0L,
-      "cust_initial_rows" -> 150L, "cust_dropped_duplicates" -> 0L,
-      "cust_dropped_invalid_id" -> 0L, "cust_dropped_invalid_name" -> 0L))
+    assert(res.rows == pipelineRows)
+    assert(res.quality == pipelineQuality)
     Pipeline.checkGold(spark, out)
     // fact sink is partitioned by year → directory per annee
     val factDirs = new java.io.File(s"$out/gold/fact_achats").listFiles()
       .filter(_.isDirectory).map(_.getName)
     assert(factDirs.nonEmpty && factDirs.forall(_.startsWith("annee=")))
+  }
+
+  test("pipeline: a second run in the same session into the same outDir reads its own silver") {
+    // the run's fact/feats caches end with the run: a session-memoized
+    // cache would hand the second run the first run's frame, whose file
+    // listing points at the silver files the second run overwrote
+    val out = java.nio.file.Files.createTempDirectory("graft_pipeline_rerun").toString
+    for (_ <- 1 to 2) {
+      val res = Pipeline.run(spark, sf, out)
+      assert(res.rows == pipelineRows)
+      assert(res.quality == pipelineQuality)
+    }
+    Pipeline.checkGold(spark, out)
   }
 
   test("sink readback: the schema-bound read equals the inferred one, flat and annee-partitioned") {

@@ -7,14 +7,16 @@ import org.apache.spark.sql.SparkSession
   * allows one active SparkContext, and stopping it would kill every
   * other suite), so this main runs the full lifecycle in its own JVM:
   *
-  *  1. session A populates a representative slice of the memo
-  *     registries (load, gold frame, ML fit, streaming attribution
-  *     scratch + heartbeat, upsert sink prefix + lastSink, CacheOnce);
+  *  1. session A populates one entry of each memo family: Shared's
+  *     released side (the `fact` frame, the `kmeans` fit, a CacheOnce
+  *     plan frame), Shared's session side (the attribution pairs drain,
+  *     its heartbeat dir, the upsert sink dir), Streams' lastSink
+  *     pointer and Tables.load;
   *  2. session A's context stops; a FRESH context (session B) comes up;
   *  3. the eviction pass every access runs is invoked on EVERY
   *     SessionMemo in the JVM (the instance registry — a memo added
-  *     anywhere in the codebase is audited automatically), and no
-  *     registry may still hold an entry owned by the dead session;
+  *     anywhere in the codebase is audited automatically); no family may
+  *     still hold session A's entry, and no registry any entry of it;
   *  4. session B then uses the memos normally, proving the eviction
   *     left them serviceable.
   *
@@ -32,25 +34,34 @@ object MemoAuditMain {
     val s1 = session()
     s1.sparkContext.setLogLevel("ERROR")
     val id1 = Tables.sessionId(s1)
-    // one query per memo family (cheap at sf0.001): gold frame memo,
-    // ML memo, streaming attribution pairs + heartbeat dir, keyed
-    // upsert sink + lastSink pointer, CacheOnce (triangles' oriented
-    // frame); Tables.load rides under all of them
+    // one query per family (cheap at sf0.001): event_funnel caches its
+    // step frames through CacheOnce; copurchase_triangles adds entries
+    // owned by a cloned session of the same context
     for (q <- Seq("fact_achats", "kmeans_segments", "events_attribution_outer",
-        "events_upsert_publish", "copurchase_triangles"))
+        "events_upsert_publish", "event_funnel", "copurchase_triangles"))
       SparkEntry.queries(q)(s1, sf).collect()
-    val regs = Tables.SessionMemo.registries
-    val populated = regs.count(_.ownerSessionIds.contains(id1))
-    // the five queries must have landed entries in at least the six
-    // registries the audit names (plus the load memo) — fewer means the
-    // population half of the audit silently stopped covering them
-    require(populated >= 7,
-      s"only $populated/${regs.size} registries hold session-A entries")
+    // family -> does it hold an entry of the session with this uuid
+    val families: Seq[(String, String => Boolean)] = Seq(
+      "shared frame fact" -> (id => Shared.released.keys((id, ("fact", sf)))),
+      "ML fit kmeans" -> (id => Shared.released.keys((id, ("kmeans", sf)))),
+      "CacheOnce plan frame" -> (id =>
+        Shared.released.keys.exists { case (u, k) => u == id && k.isInstanceOf[Int] }),
+      "attribution pairs" -> (id => Shared.kept.keys((id, ("attrPairs", sf)))),
+      "heartbeat dir" -> (id => Shared.kept.keys((id, ("heartbeat", sf)))),
+      "upsert dir" -> (id => Shared.kept.keys((id, ("upsert_q", sf)))),
+      "lastSink" -> (id => Streams.lastSink.ownerSessionIds(id)),
+      "Tables.load" -> (id => Tables.loadMemoKeys.exists(_._1 == id)))
+    val missing = families.collect { case (f, holds) if !holds(id1) => f }
+    require(missing.isEmpty, s"no session-A entry in: ${missing.mkString(", ")}")
     s1.stop()
 
     val s2 = session()
     s2.sparkContext.setLogLevel("ERROR")
+    val regs = Tables.SessionMemo.registries
     regs.foreach(_.evictStopped())
+    val survivors = families.collect { case (f, holds) if holds(id1) => f }
+    require(survivors.isEmpty,
+      s"dead session's entries survive in: ${survivors.mkString(", ")}")
     val leftover = regs.zipWithIndex.collect {
       case (r, i) if r.ownerSessionIds.contains(id1) => i }
     require(leftover.isEmpty,
@@ -58,9 +69,8 @@ object MemoAuditMain {
     // the registries stay serviceable for the new session
     require(Tables.load(s2, sf, "region").count() > 0)
     require(SparkEntry.queries("fact_achats")(s2, sf).count() > 0)
-    require(Tables.SessionMemo.registries
-      .exists(_.ownerSessionIds.contains(Tables.sessionId(s2))))
+    require(Shared.released.keys((Tables.sessionId(s2), ("fact", sf))))
     s2.stop()
-    println(s"MEMO_AUDIT_PASS populated=$populated registries=${regs.size}")
+    println(s"MEMO_AUDIT_PASS families=${families.size} registries=${regs.size}")
   }
 }

@@ -41,6 +41,39 @@ class SourceGateSpec extends AnyFunSuite {
         s"never .asInstanceOf[Seq[...]]:\n${offenders.mkString("\n")}")
   }
 
+  /** A source file without its comment lines and trailing `//`
+    * comments, so a scaladoc that names a banned construct doesn't count
+    * as a use of it. */
+  private def code(p: Path): String =
+    Files.readAllLines(p).asScala
+      .filterNot(l => Seq("*", "/*", "//").exists(l.trim.startsWith))
+      .map(_.replaceAll("//.*", ""))
+      .mkString("\n")
+
+  test("SessionMemo is constructed only by Shared, Tables' two loader memos and lastSink") {
+    val decl = """val\s+(\w+)\s*=\s*new\s+(?:Tables\.)?SessionMemo\b""".r
+    val anyNew = """new\s+(?:Tables\.)?SessionMemo\b""".r
+    val sites = mainSources.flatMap { p =>
+      val text = code(p)
+      val named = decl.findAllMatchIn(text).map(_.group(1)).toSeq
+      val anonymous = anyNew.findAllMatchIn(text).size - named.size
+      named.map(p.getFileName.toString -> _) ++
+        Seq.fill(anonymous)(p.getFileName.toString -> "<anonymous>")
+    }
+    val outsideShared = sites.filterNot(_._1 == "shared.scala")
+    assert(outsideShared.sorted == Seq("streaming.scala" -> "lastSink",
+        "tables.scala" -> "loadMemo", "tables.scala" -> "schemaMemo"),
+      "a cross-query memo belongs in graft.Shared (released or session " +
+        s"lifetime), not in its own SessionMemo: $outsideShared")
+  }
+
+  test("sys.addShutdownHook appears only in Shared (its tempDir helper)") {
+    val files = mainSources.filter(p => code(p).contains("addShutdownHook"))
+      .map(_.getFileName.toString)
+    assert(files == Seq("shared.scala"),
+      s"create scratch dirs with Shared.tempDir / Shared.dir: $files")
+  }
+
   test("percentile-array folds go through the shared decode helper") {
     // every file that builds a percentile(..., array(...)) driver fold
     // must reference doubleSeqAt or getSeq — not ad-hoc casts
