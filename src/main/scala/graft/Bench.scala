@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import EntryPoint.jsonString
+
 /** Driver benchmark: one shared SparkSession, every SparkEntry query timed
   * at SPARK_GRAFT_SF_DIR; emits one JSON metric line.
   *
@@ -53,35 +55,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val minPart = sys.env.getOrElse("SPARK_GRAFT_MINPART", "16k")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE's parallelism-first coalescing floors partitions at 1 MB —
-      // CPU-heavy-but-small-bytes stages (interpreted HOF pipelines over
-      // text) collapse to 1-2 tasks at test scale. A 16 KB floor keeps
-      // them on all cores; at production scale partitions are >= 64 MB so
-      // this floor never binds.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", minPart)
-      // AQE-gated sort-merge -> shuffled-hash conversion (guide §3.1):
-      // fires only when EVERY post-shuffle partition of the build side is
-      // under the threshold, so it is scale-adaptive by construction —
-      // local joins skip both sorts, while at production partition sizes
-      // (>= 64 MB by §2.2 sizing) the plan stays sort-merge and spills
-      // gracefully. Env-overridable; 0 disables (Spark default).
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m"))
-      // streaming state store provider, env-overridable for the r18
-      // RocksDB experiment (VERDICT r17 item 5); default = Spark's
-      // HDFS-backed store, i.e. no behavior change unless set
-      .config("spark.sql.streaming.stateStore.providerClass",
-        sys.env.getOrElse("SPARK_GRAFT_STATESTORE",
-          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = EntryPoint.cpus("32")
+    val spark = EntryPoint.session(cpus)
     val only = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").map(_.trim).toSet)
     val qs = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
@@ -169,17 +144,12 @@ object Bench {
         }
     }.toSeq
 
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
     // total = Σ per-query min + the shared_build bill (r18): the
     // suite total now charges the memoized frames' build cost instead
     // of amortizing it into the untimed warmup
     val total = results.collect { case (_, v, None, _) => v }.sum + sharedBuildSec
-    val errJson = results.collect { case (k, _, Some(m), _) => jstr(k) + ":" + jstr(m) }
+    val errJson = results
+      .collect { case (k, _, Some(m), _) => jsonString(k) + ":" + jsonString(m) }
       .mkString("{", ",", "}")
     // crashed queries live ONLY in `errors` — a -1.0 inside `queries`
     // would poison any consumer that sums or mins the map.
@@ -227,12 +197,12 @@ object Bench {
         // The context records the prev run's cpus/minPartitionSize; a
         // context written before conf was recorded falls back to
         // requiring that no env override is in force here.
-        val confOverridden = sys.env.contains("SPARK_GRAFT_CPUS") ||
-          sys.env.contains("SPARK_GRAFT_MINPART")
+        val confOverridden = sys.env.contains("SPARK_GRAFT_CPUS")
         for {
           ctxSf <- str("sf") if ctxSf == sfDir
           if str("cpus").map(_ == cpus).getOrElse(!confOverridden)
-          if str("minPartitionSize").map(_ == minPart).getOrElse(!confOverridden)
+          if str("minPartitionSize").map(_ == EntryPoint.MinPartitionSize)
+            .getOrElse(!confOverridden)
           prevTotal <- num("prev_total_sec") if prevTotal > 0
           prev = str("prev").getOrElse("prev")
         } yield {
@@ -240,7 +210,7 @@ object Bench {
           val drift = num("temporal_drift_median").filter(_ > 0)
           val corrected = drift.map(d => raw / d)
           def r3(v: Double) = math.rint(v * 1000) / 1000.0
-          s""""calib":{"prev":${jstr(prev)},"prev_total_sec":$prevTotal""" +
+          s""""calib":{"prev":${jsonString(prev)},"prev_total_sec":$prevTotal""" +
             s""","vs_prev_raw":${r3(raw)}""" +
             drift.map(d => s""","host_drift_median":$d""").getOrElse("") +
             corrected.map(c => s""","vs_prev_corrected":${r3(c)}""").getOrElse("") +
@@ -252,28 +222,28 @@ object Bench {
     // seconds, no prose fields) to survive that tail capture intact, and
     // everything else lives in this file.
     val fullJson = {
-      val q = timed.map { case (k, v) => jstr(k) + ":" + v }
+      val q = timed.map { case (k, v) => jsonString(k) + ":" + v }
         .mkString("{", ",", "}")
-      val sp = spreads.map { case (k, v) => jstr(k) + ":" + v }
+      val sp = spreads.map { case (k, v) => jsonString(k) + ":" + v }
         .mkString("{", ",", "}")
       // per-frame breakdown of the timed shared_build phase, and the
       // pass-1 (cold ML fits and CacheOnce frames) per-query seconds next
       // to the min — a reader can see exactly where every build's cost
       // landed
-      val sbJson = sharedBuild.map { case (k, v) => jstr(k) + ":" + v }
+      val sbJson = sharedBuild.map { case (k, v) => jsonString(k) + ":" + v }
         .mkString("{", ",", "}")
-      val p1Json = p1.collect { case (k, v, None) => jstr(k) + ":" + v }
+      val p1Json = p1.collect { case (k, v, None) => jsonString(k) + ":" + v }
         .mkString("{", ",", "}")
-      // effective env-tunable session config rides in the artifact so an
-      // overridden probe run can never masquerade as a default-config
-      // record in cross-round comparisons
-      val conf = s"""{"cpus":${jstr(cpus)},"minPartitionSize":${jstr(minPart)},"queryFilter":${only.map(f => jstr(f.toSeq.sorted.mkString(","))).getOrElse("null")}}"""
+      // effective session config rides in the artifact so an overridden
+      // probe run can never masquerade as a default-config record in
+      // cross-round comparisons
+      val conf = s"""{"cpus":${jsonString(cpus)},"minPartitionSize":${jsonString(EntryPoint.MinPartitionSize)},"queryFilter":${only.map(f => jsonString(f.toSeq.sorted.mkString(","))).getOrElse("null")}}"""
       // tier-switch posture per affected query (ADVICE r14): what this
       // bench MEASURED vs what Verify hash-checks, so amortized tiers
       // can never be misread as engine speedups in cross-round deltas
-      val posture = SparkEntry.benchPostures
+      val posture = SparkEntry.exactTiers
         .filter { case (k, _) => qs.contains(k) }.toSeq.sortBy(_._1)
-        .map { case (k, v) => jstr(k) + ":" + jstr(v) }
+        .map { case (k, t) => jsonString(k) + ":" + jsonString(t.posture) }
         .mkString("{", ",", "}")
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$q,"spread":$sp,"shared_build":$sbJson,"pass1":$p1Json,"errors":$errJson,"cache_mb":${math.round(cacheMb * 10) / 10.0},"conf":$conf,"posture":$posture,${calibJson.map(_ + ",").getOrElse("")}"timing":"noop-materialize min-of-3 + timed shared_build of the released memo frames; spread = max-min over the 3 timed passes; pass1 = cold-CacheOnce first pass (r1-r6 were min-of-2 or single-pass; r7-r17 left shared builds untimed in warmup)","sf":"$sfDir"}"""
     }
@@ -285,7 +255,7 @@ object Bench {
       System.err.println(s"[bench] BENCH_FULL.json not written: ${e.getMessage}")
     }
     def f3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qJson = timed.map { case (k, v) => jstr(k) + ":" + f3(v) }
+    val qJson = timed.map { case (k, v) => jsonString(k) + ":" + f3(v) }
       .mkString("{", ",", "}")
     val errField = if (errJson == "{}") "" else s""","errors":$errJson"""
     // field order matters for the harness's LAST-2KB stdout tail: the

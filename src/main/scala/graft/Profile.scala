@@ -17,19 +17,7 @@ object Profile {
 
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MINPART", "1m"))
-      // mirror Bench's AQE SMJ->SHJ gate so executed-plan dumps show the
-      // join strategies the bench actually runs (same 64m default;
-      // SPARK_GRAFT_SHJ_THRESHOLD=0 restores Spark's default, off)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EntryPoint.session(EntryPoint.cpus("8"))
     args.drop(1) match {
       case Array("sql", query @ _*) =>
         Catalog.registerTables(spark, d)

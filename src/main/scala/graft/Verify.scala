@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import EntryPoint.jsonString
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -9,25 +9,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args.drop(2).toSet) else None
-    // correctness-dump posture: tier-switch queries whose sketch side is
-    // separately spec-pinned (kpis_rewritten + PlanShapeSpec) run their
-    // exact body here so the oracle hash-checks the query code itself;
-    // Bench never sets this and always measures the sketch plan
-    System.setProperty("graft.verify.exactTiers", "true")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
-      // same AQE-gated SMJ->SHJ conversion as Bench (r17): the oracle
-      // sweep must hash-check results under the exact conf the bench
-      // times, proving join-strategy flips can never change a result
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EntryPoint.session(EntryPoint.cpus("4"))
     new java.io.File(outDir).mkdirs()
     // 4 queries in flight: Spark's scheduler interleaves their jobs, so
     // one long shuffle doesn't serialize the whole dump. Failures stay
@@ -47,7 +29,11 @@ object Verify {
     val digests = scala.collection.concurrent.TrieMap.empty[String, String]
     val futures = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
+      .map { case (name, body) =>
+      // correctness-dump posture: a tier-switch query runs its exact body
+      // here so the oracle hash-checks the query code itself; Bench
+      // always measures the registry (derived/warm/sketch) body
+      val fn = SparkEntry.exactTiers.get(name).fold(body)(_.body)
       Future {
         val t0 = System.nanoTime()
         try {
@@ -70,18 +56,6 @@ object Verify {
     }
     futures.foreach(Await.result(_, Duration.Inf))
     pool.shutdown() // non-daemon workers would keep the forked JVM alive
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // artifacts substitution: oracle SQL that reads persisted model
     // state (IVF centroids) carries a placeholder — concretize it to
     // this dataset's stable artifacts path so the dumped SQL is
@@ -92,14 +66,14 @@ object Verify {
     val outAbs = Paths.get(outDir).toAbsolutePath.toString
     val json = SparkEntry.oracleSql
       .map { case (k, v) =>
-        s"${q(k)}: ${q(v.replace(SparkEntry.ArtifactsToken, art)
+        s"${jsonString(k)}: ${jsonString(v.replace(SparkEntry.ArtifactsToken, art)
           .replace(SparkEntry.OutDirToken, outAbs))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // computed no-oracle digests (regeneration source for Digests.golden)
     Files.writeString(Paths.get(s"$outDir/digests.json"),
       digests.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${q(s"$k|$dataset")}: ${q(v)}" }
+        .map { case (k, v) => s"${jsonString(s"$k|$dataset")}: ${jsonString(v)}" }
         .mkString("{", ",", "}"))
     spark.stop()
   }

@@ -302,15 +302,8 @@ object Pipeline {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EntryPoint.session(
+      EntryPoint.cpus(Runtime.getRuntime.availableProcessors.toString))
     val t0 = System.nanoTime()
     val res = run(spark, sfDir, outDir)
     checkGold(spark, outDir)

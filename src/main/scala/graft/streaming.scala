@@ -51,8 +51,7 @@ object Streams extends Serializable {
   private def withStatePartitions[T](spark: SparkSession)(f: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    spark.conf.set(key,
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
+    spark.conf.set(key, "8")
     try f finally spark.conf.set(key, prev)
   }
 
@@ -785,13 +784,12 @@ object Streams extends Serializable {
     * rows with the purchase side present. [[sharedAttributionPairs]]
     * memoizes that drain; the per-view filters/rollups are proved
     * pair-for-pair equal to the independent drains by StreamsSpec.
-    * Verify (-Dgraft.verify.exactTiers) still runs each view's own
-    * genuine drain, so the cross-SF oracle sweep keeps hash-checking
-    * the real inner and left-outer stream-stream join paths. */
+    * Verify still runs each view's own genuine drain
+    * (`SparkEntry.exactTiers`), so the cross-SF oracle sweep keeps
+    * hash-checking the real inner and left-outer stream-stream join
+    * paths. */
   def attributionStreamed(spark: SparkSession, dir: String): DataFrame =
-    if (java.lang.Boolean.getBoolean("graft.verify.exactTiers"))
-      attributionInnerDrain(spark, () => eventsStream(spark, dir))
-    else innerFromPairs(sharedAttributionPairs(spark, dir))
+    innerFromPairs(sharedAttributionPairs(spark, dir))
 
   /** Inner-attribution rollup over a (possibly full-outer) drained pair
     * set: matched rows only — both join sides present and neither the
@@ -882,9 +880,10 @@ object Streams extends Serializable {
     spark.table(name)
   }
 
-  /** The inner-attribution drain behind [[attributionStreamed]], split on
-    * a source FACTORY (each side of a stream-stream join needs its own
-    * source instance tracking its own offsets) for the fuzz harness. */
+  /** The genuine inner drain Verify runs for [[attributionStreamed]],
+    * split on a source FACTORY (each side of a stream-stream join needs
+    * its own source instance tracking its own offsets) for the fuzz
+    * harness. */
   private[graft] def attributionInnerDrain(spark: SparkSession,
       mkSource: () => DataFrame): DataFrame = withStatePartitions(spark) {
     val name = sinkName(spark, "graft_attr_stream")
@@ -930,7 +929,7 @@ object Streams extends Serializable {
     * rows in the join state (the watermark stops at lastEvent − delay).
     * Written in the source parquet's raw schema so the streaming reader
     * treats it exactly like the real feed. */
-  private def heartbeatStream(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def heartbeatStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = Tables.parquetSchema(spark, s"$dir/events.parquet")
     val isNanos = schema("ts").dataType == org.apache.spark.sql.types.LongType
@@ -967,13 +966,11 @@ object Streams extends Serializable {
     * batch left join it is hash-checked against. State stays bounded to
     * one hour per user exactly as in the inner form. */
   def attributionOuterStreamed(spark: SparkSession, dir: String): DataFrame =
-    if (java.lang.Boolean.getBoolean("graft.verify.exactTiers"))
-      attributionOuterDrain(spark,
-        () => eventsStream(spark, dir).unionByName(heartbeatStream(spark, dir)))
-    else outerFromPairs(sharedAttributionPairs(spark, dir))
+    outerFromPairs(sharedAttributionPairs(spark, dir))
 
-  /** The left-outer drain behind [[attributionOuterStreamed]], split on a
-    * source FACTORY for the fuzz harness — the fuzz writes its own
+  /** The genuine left-outer drain Verify runs for
+    * [[attributionOuterStreamed]], split on a source FACTORY for the fuzz
+    * harness — the fuzz writes its own
     * sentinel row as the final chunk instead of the heartbeat union, so
     * the null-row flush runs through the same machinery under random
     * data and multi-batch arrival. */
@@ -1027,13 +1024,11 @@ object Streams extends Serializable {
     * State stays bounded to one hour per user exactly as in the inner and
     * left-outer forms. */
   def attributionFullStreamed(spark: SparkSession, dir: String): DataFrame =
-    if (java.lang.Boolean.getBoolean("graft.verify.exactTiers"))
-      attributionFullDrain(spark,
-        () => eventsStream(spark, dir).unionByName(heartbeatStream(spark, dir)))
-    else fullFromPairs(sharedAttributionPairs(spark, dir))
+    fullFromPairs(sharedAttributionPairs(spark, dir))
 
-  /** The full-outer drain behind [[attributionFullStreamed]], split on a
-    * source factory for the fuzz harness (same sentinel-as-final-chunk
+  /** The genuine full-outer drain Verify runs for
+    * [[attributionFullStreamed]], split on a source factory for the fuzz
+    * harness (same sentinel-as-final-chunk
     * pattern as [[attributionOuterDrain]]) — the raw pair drain plus the
     * full-outer rollup. */
   private[graft] def attributionFullDrain(spark: SparkSession,

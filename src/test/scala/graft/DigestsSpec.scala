@@ -49,6 +49,15 @@ class DigestsSpec extends SparkSpec {
     // none of the digest queries carries a DuckDB oracle (those are
     // already hash-checked; double-gating would mask a ledger error)
     assert((Digests.queries & SparkEntry.oracleSql.keySet).isEmpty)
+    // every registry query has exactly one gate: a DuckDB oracle or a
+    // digest pin — a query with neither would ship unchecked
+    assert(SparkEntry.oracleSql.keySet ++ Digests.queries == reg,
+      s"ungated: ${reg -- SparkEntry.oracleSql.keySet -- Digests.queries}; " +
+        s"unregistered: ${SparkEntry.oracleSql.keySet ++ Digests.queries -- reg}")
+    // an exact tier replaces its query's body in Verify, so it must be
+    // oracle-checked there
+    assert(SparkEntry.exactTiers.keySet.subsetOf(SparkEntry.oracleSql.keySet),
+      s"exact tiers without an oracle: ${SparkEntry.exactTiers.keySet -- SparkEntry.oracleSql.keySet}")
   }
 
   test("SessionMemo: winner semantics, put returns previous, per-session keys") {

@@ -74,6 +74,25 @@ class SourceGateSpec extends AnyFunSuite {
       s"create scratch dirs with Shared.tempDir / Shared.dir: $files")
   }
 
+  test("no JVM-global system property switches in src/main") {
+    // a query tier is data (SparkEntry.exactTiers), not a -D flag that
+    // flips every suite and query in the JVM at once
+    val offenders = mainSources.flatMap { p =>
+      code(p).linesIterator.collect {
+        case l if l.contains("System.setProperty") || l.contains("Boolean.getBoolean") =>
+          s"${p.getFileName}: ${l.trim}"
+      }
+    }
+    assert(offenders.isEmpty, s"system-property switches:\n${offenders.mkString("\n")}")
+  }
+
+  test("SparkSession.builder appears only in EntryPoint and GenScale") {
+    val files = mainSources.filter(p => code(p).contains("SparkSession.builder"))
+      .map(_.getFileName.toString).sorted
+    assert(files == Seq("GenScale.scala", "entrypoint.scala"),
+      s"entry-point mains build their session with EntryPoint.session: $files")
+  }
+
   test("percentile-array folds go through the shared decode helper") {
     // every file that builds a percentile(..., array(...)) driver fold
     // must reference doubleSeqAt or getSeq — not ad-hoc casts

@@ -153,9 +153,10 @@ else:
           f"{tests['framework_total']} framework-aggregate")
 
 # -- 2a'. bench-posture gate ------------------------------------------------
-# Bench measures derived/warm/sketch tiers for the tier-switch queries
-# (SparkEntry.benchPostures); their correctness rests on the StreamsSpec
-# derived==genuine equivalence test plus Verify's exactTiers sweep. The
+# Bench measures derived/warm/sketch tiers for the tier-switch queries;
+# Verify runs their exact bodies (SparkEntry.exactTiers). Their
+# correctness rests on the StreamsSpec derived==genuine equivalence test
+# plus Verify's oracle sweep over the exact bodies. The
 # equivalence test must EXIST in the certified tree — a green suite then
 # proves it ran; deleting the test can no longer silently drop the gate.
 POSTURE_TEST = "derived attribution views equal their genuine independent drains"
