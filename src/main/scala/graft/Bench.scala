@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import EntryPoint.jsonString
+import graft.queries.{Oracle, QuerySpec}
 
 /** Driver benchmark: one shared SparkSession, every SparkEntry query timed
   * at SPARK_GRAFT_SF_DIR; emits one JSON metric line.
@@ -241,9 +242,10 @@ object Bench {
       // tier-switch posture per affected query (ADVICE r14): what this
       // bench MEASURED vs what Verify hash-checks, so amortized tiers
       // can never be misread as engine speedups in cross-round deltas
-      val posture = SparkEntry.exactTiers
-        .filter { case (k, _) => qs.contains(k) }.toSeq.sortBy(_._1)
-        .map { case (k, t) => jsonString(k) + ":" + jsonString(t.posture) }
+      val posture = SparkEntry.specs
+        .collect { case QuerySpec(k, _, Oracle(_, Some(t))) if qs.contains(k) => k -> t.posture }
+        .sortBy(_._1)
+        .map { case (k, p) => jsonString(k) + ":" + jsonString(p) }
         .mkString("{", ",", "}")
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$q,"spread":$sp,"shared_build":$sbJson,"pass1":$p1Json,"errors":$errJson,"cache_mb":${math.round(cacheMb * 10) / 10.0},"conf":$conf,"posture":$posture,${calibJson.map(_ + ",").getOrElse("")}"timing":"noop-materialize min-of-3 + timed shared_build of the released memo frames; spread = max-min over the 3 timed passes; pass1 = cold-CacheOnce first pass (r1-r6 were min-of-2 or single-pass; r7-r17 left shared builds untimed in warmup)","sf":"$sfDir"}"""
     }

@@ -1,10 +1,15 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-/** Driver contract — one `queries` entry (+ DuckDB `oracleSql` twin) per
-  * implemented operator from SURVEY.md §2.
+import graft.queries._
+
+/** Driver contract — the query registry: one [[QuerySpec]] per
+  * implemented operator from SURVEY.md §2, each carrying its body and its
+  * single gate (a DuckDB [[Oracle]], possibly with an [[ExactTier]], or a
+  * [[Digest]] pin). The specs live per family under `graft.queries`;
+  * this object concatenates them and owns the shared frames their bodies
+  * reuse.
   *
   * Determinism conventions shared by every query/oracle pair:
   *  - money aggregates in exact integer cents (Tables.moneySum /
@@ -23,91 +28,23 @@ object SparkEntry {
       Tables.orders(spark, d), Tables.customer(spark, d), Tables.nation(spark, d)))
   }
 
-  // ---------------------------------------------------------------- helpers
-  /** Placeholder in [[oracleSql]] for [[Tables.oracleArtifactsDir]] —
-    * Verify substitutes the dataset's real artifacts path at dump time,
-    * so oracle SQL that must read PERSISTED model state (the IVF
-    * centroid parquets) stays a static map here while the dumped
-    * `oracle_sql.json` is fully concrete and runnable by the driver. */
-  private[graft] val ArtifactsToken = "__GRAFT_ARTIFACTS__"
+  /** Every registry query, family by family. Lazy, so that callers that
+    * only use the shared frames never build the oracle texts, and so that
+    * this object is fully initialized before any spec object loads. */
+  lazy val specs: Seq[QuerySpec] =
+    SilverQueries.specs ++ GoldQueries.specs ++ ServingQueries.specs ++
+      EventsQueries.specs ++ LlmQueries.specs ++ SearchQueries.specs ++
+      SimilarityQueries.specs ++ MultimodalQueries.specs ++ ExtensionQueries.specs
 
-  /** Placeholder in [[oracleSql]] for Verify's OWN dump directory —
-    * the bounded-error oracle pattern (r16 judge item 5): for a sketch
-    * estimator the oracle reads the query's dumped ESTIMATE, computes
-    * the EXACT twin from the source tables, and echoes the estimate
-    * only while |est − exact| is inside the sketch's published error
-    * bound (× a safety factor), else a poison value that hash-fails.
-    * Hash equality with the dump is then a SEMANTIC accuracy gate, not
-    * a regression pin. Exact columns riding along in the same output
-    * are re-derived independently and gated on equality. */
-  private[graft] val OutDirToken = "__GRAFT_VERIFY_OUT__"
+  /** The registry bodies by name — what Bench times and the perfbench
+    * harness calls. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map(q => q.name -> q.body).toMap
 
-  /** A tier-switch query's second tier: `posture` says what Bench
-    * MEASURES vs what Verify HASH-CHECKS (stamped into BENCH_FULL.json,
-    * ADVICE r14, so a cross-round reader can never misread tier
-    * amortization as engine speedup); `body` is the genuine/exact query
-    * Verify runs in place of `queries(name)`. */
-  final case class ExactTier(posture: String,
-      body: (SparkSession, String) => DataFrame)
-
-  /** Tier-switch queries, keyed by registry name. `queries` holds the
-    * production (derived/warm/sketch) body Bench times; Verify runs each
-    * entry's exact body against the DuckDB oracle at all 3 SFs. StreamsSpec
-    * pins bench == exact row for row on the attribution and maintained
-    * views (tools/preflight.py refuses a tree whose gate is deleted);
-    * GoldSpec and PlanShapeSpec bound the two HLL tiers. */
-  val exactTiers: Map[String, ExactTier] = Map(
-    "events_attribution" -> ExactTier(
-      "bench: rollup over ONE shared memoized full-outer pair drain per (session,dataset); verify: genuine independent stream-stream drain (StreamsSpec derived==genuine)",
-      (s, d) => Streams.attributionInnerDrain(s, () => Streams.eventsStream(s, d))),
-    "events_attribution_outer" -> ExactTier(
-      "bench: rollup over the shared full-outer pair drain; verify: genuine independent outer drain (StreamsSpec derived==genuine)",
-      (s, d) => Streams.attributionOuterDrain(s,
-        () => Streams.eventsStream(s, d).unionByName(Streams.heartbeatStream(s, d)))),
-    "events_attribution_full" -> ExactTier(
-      "bench: rollup over the shared full-outer pair drain; verify: genuine independent full-outer drain (StreamsSpec derived==genuine)",
-      (s, d) => Streams.attributionFullDrain(s,
-        () => Streams.eventsStream(s, d).unionByName(Streams.heartbeatStream(s, d)))),
-    // the fully-exact merge: algebraic fields + a persisted exact key set
-    "kpis_incremental" -> ExactTier(
-      "bench: HLL sketch-union merge; verify: fully-exact merge vs the kpis oracle (GoldSpec pins sketch error bound + split-insensitivity)",
-      (s, d) => Serving.kpisExactIncremental(
-        s.read.parquet(kpisPartialDir(s, d)),
-        s.read.parquet(kpisKeysDir(s, d)),
-        Tables.orders(s, d)
-          .filter(col("o_orderdate") >= lit(IncrementalCutoff).cast("timestamp")))),
-    // the rewrite flag stays off: the QUERY BODY hash-checks against the
-    // same oracle as kpis
-    "kpis_rewritten" -> ExactTier(
-      "bench: optimizer-rewritten HLL plan; verify: exact query body vs the kpis oracle (PlanShapeSpec pins the rule swap + estimate equality)",
-      (s, d) => Serving.kpis(fact(s, d))),
-    // the COLD from-empty 4-batch replays: the oracle sweep keeps
-    // hash-checking the full bootstrap path, not just the steady-state merge
-    "ca_monthly_maintained" -> ExactTier(
-      "bench: warm-sink one-trigger tail merge; verify: cold from-empty 4-batch streaming replay, hash-checked vs the batch ca_monthly oracle",
-      (s, d) => Streams.caMonthlyMaintained(s, ordersStreamDir(s, d), coldSink("camaint"))),
-    "top_clients_maintained" -> ExactTier(
-      "bench: warm-sink one-trigger tail merge; verify: cold from-empty 4-batch streaming replay, hash-checked vs the top_clients oracle",
-      (s, d) => Streams.topClientsMaintained(s, ordersStreamDir(s, d), coldSink("topkmaint"))))
-
-  /** gold-entry validity predicate (reference gold_transformation_spark.py:225) */
-  private val V = s"o_totalprice > 0 AND o_totalprice <= ${Gold.MaxAmount}"
-  private def ms(c: String) = Tables.moneySumSql(c)
-
-  /** knn_lsh's 64 deterministic ±1 hyperplanes (4 planes × 16 tables,
-    * testdata embedding width 64) inlined as DuckDB VALUES literals —
-    * the same splitmix64 derivation graft.functions.LshSign evaluates,
-    * via the driver-folded reference [[Llm.hyperplanes]] that LlmSpec
-    * already pins bit-equal to the native expression. */
-  private lazy val lshPlanesValues: String =
-    Llm.hyperplanes(64, 64).zipWithIndex.map { case (w, j) =>
-      w.map(x => if (x > 0) "1" else "-1")
-        .mkString(s"($j, [", ",", "]::DOUBLE[])")
-    }.mkString(",\n        ")
-
+  // ---------------------------------------------------------- shared frames
   /** A named shared subtree: one cached handle per (name, session,
     * dataset), released by [[unpersistShared]] (see [[Shared]]). */
-  private def memoFrame(name: String, s: SparkSession, d: String)
+  private[graft] def memoFrame(name: String, s: SparkSession, d: String)
       (build: => DataFrame): DataFrame =
     Shared.frame(s, (name, d))(build)
 
@@ -140,9 +77,7 @@ object SparkEntry {
     "orderItems" -> (orderItemsF _),
     "itemCooc" -> (itemCooc _),
     "communityEdges" -> (communityEdges _),
-    "lpaCommunities" -> ((s: SparkSession, d: String) =>
-      memoFrame("lpaCommunities", s, d)(
-        Gold.productCommunities(communityEdges(s, d)))),
+    "lpaCommunities" -> (lpaCommunities _),
     "docTf" -> (docTf _),
     "docLogProb" -> (docLogProb _),
     "docBigrams" -> (docBigrams _),
@@ -158,7 +93,7 @@ object SparkEntry {
   /** The fact subtree feeds 9+ queries — cache it (the deliberate
     * improvement over the reference, which re-executes it per sink; see
     * SURVEY §3.4). */
-  private def fact(s: SparkSession, d: String): DataFrame =
+  private[graft] def fact(s: SparkSession, d: String): DataFrame =
     memoFrame("fact", s, d)(Gold.buildFact(
       Tables.orders(s, d), Tables.customer(s, d), Tables.nation(s, d)))
 
@@ -167,21 +102,21 @@ object SparkEntry {
     * built from it. dedup_ngram / dedup_clusters consume the pairs;
     * dedup_incremental reads the persisted index written from the hashes
     * (at production scale the shingle frame IS that index, not a cache). */
-  private def docShingles(s: SparkSession, d: String): DataFrame =
+  private[graft] def docShingles(s: SparkSession, d: String): DataFrame =
     memoFrame("docShingles", s, d)(Llm.shingleHashes(Tables.documents(s, d)))
   // the memo holds the raw pair STATS (doc_a, na, doc_b, nb, inter);
   // Jaccard and containment are thin selects over it, so the pair
   // shuffle runs once for dedup_ngram, dedup_clusters, and
   // dedup_containment together
-  private def ngramStats(s: SparkSession, d: String): DataFrame =
+  private[graft] def ngramStats(s: SparkSession, d: String): DataFrame =
     memoFrame("ngramStats", s, d)(Llm.ngramPairStatsFrom(docShingles(s, d)))
-  private def ngramPairs(s: SparkSession, d: String): DataFrame =
+  private[graft] def ngramPairs(s: SparkSession, d: String): DataFrame =
     Llm.jaccardFromStats(ngramStats(s, d))
 
   /** The parity-encoded co-purchase pair frame both graph queries walk
     * (product_rank's PageRank, copurchase_distance's BFS): the
     * line-grain orders⋈lineitem join + distinct runs once per session. */
-  private def copurchase(s: SparkSession, d: String): DataFrame =
+  private[graft] def copurchase(s: SparkSession, d: String): DataFrame =
     memoFrame("copurchase", s, d)(Gold.copurchasePairs(
       Tables.orders(s, d), Tables.lineitem(s, d)))
 
@@ -191,33 +126,37 @@ object SparkEntry {
     * other two graph queries (product_rank, copurchase_distance) walk
     * the customer–part bipartite [[copurchase]] frame — a DIFFERENT
     * graph; no further sharing exists between the two families. */
-  private def orderItemsF(s: SparkSession, d: String): DataFrame =
+  private[graft] def orderItemsF(s: SparkSession, d: String): DataFrame =
     memoFrame("orderItems", s, d)(Gold.orderItems(Tables.lineitem(s, d)))
-  private def itemCooc(s: SparkSession, d: String): DataFrame =
+  private[graft] def itemCooc(s: SparkSession, d: String): DataFrame =
     memoFrame("itemCooc", s, d)(Gold.itemCooccurrenceFrom(orderItemsF(s, d)))
   /** The support-pruned weighted community graph — ONE frame feeding
     * both the LPA labels and the modularity score (ADVICE r7: a drifted
     * duplicate threshold would silently score a different graph). */
-  private def communityEdges(s: SparkSession, d: String): DataFrame =
+  private[graft] def communityEdges(s: SparkSession, d: String): DataFrame =
     memoFrame("communityEdges", s, d)(Gold.communityEdges(itemCooc(s, d)))
+  /** The LPA partition of that graph: product_communities serves it and
+    * community_modularity scores it. */
+  private[graft] def lpaCommunities(s: SparkSession, d: String): DataFrame =
+    memoFrame("lpaCommunities", s, d)(Gold.productCommunities(communityEdges(s, d)))
 
   /** The (doc_id, word, tf) term-frequency frame the text-ranking
     * queries share (tfidf_top_terms, doc_logprob): one corpus explode +
     * aggregate per session. */
-  private def docTf(s: SparkSession, d: String): DataFrame =
+  private[graft] def docTf(s: SparkSession, d: String): DataFrame =
     memoFrame("docTf", s, d)(Search.docTermFreq(Tables.documents(s, d)))
   /** The unigram-LM quality frame doc_logprob serves and corpus_filter
     * joins — one vocab re-aggregate + postings join per session instead
     * of one per consumer (r17). */
-  private def docLogProb(s: SparkSession, d: String): DataFrame =
+  private[graft] def docLogProb(s: SparkSession, d: String): DataFrame =
     memoFrame("docLogProb", s, d)(Llm.unigramLogProbFrom(docTf(s, d)))
   /** The gap-filled daily revenue series four serving queries reshape
     * (dense, both anomaly tiers, spend_trend) — day-grain, bounded (r17). */
-  private def dailyDenseF(s: SparkSession, d: String): DataFrame =
+  private[graft] def dailyDenseF(s: SparkSession, d: String): DataFrame =
     memoFrame("dailyDense", s, d)(Serving.dailyDense(fact(s, d)))
   /** The cohort-retention triangle its pivot and melt reshape —
     * (cohort, offset)-grain, bounded (r17). */
-  private def cohortRet(s: SparkSession, d: String): DataFrame =
+  private[graft] def cohortRet(s: SparkSession, d: String): DataFrame =
     memoFrame("cohortRet", s, d)(Gold.cohortRetention(Tables.orders(s, d)))
   /** The shingle token-hash frame both decontamination tiers scan — one
     * corpus shingle pass per session (r17). CORPUS-GRAIN, not bounded
@@ -227,27 +166,27 @@ object SparkEntry {
     * deployment shares it as a persisted shingle INDEX (the
     * dedup_incremental posture), not a cache. Bench's timed
     * shared_build phase charges its full build cost. */
-  private def decontamEx(s: SparkSession, d: String): DataFrame =
+  private[graft] def decontamEx(s: SparkSession, d: String): DataFrame =
     memoFrame("decontamEx", s, d)(Llm.decontamHashes(Tables.documents(s, d)))
   /** The batch sessionization frame event_sessions serves and
     * session_overlaps interval-joins — one two-window pass per
     * session (r17). */
-  private def eventSessionsF(s: SparkSession, d: String): DataFrame =
+  private[graft] def eventSessionsF(s: SparkSession, d: String): DataFrame =
     memoFrame("eventSessions", s, d)(Serving.eventSessions(Tables.events(s, d)))
   /** The edit-distance-1 candidate pairs typo_pairs serves and
     * typo_clusters closes transitively — one deletion-neighborhood
     * join + levenshtein verify per session (r17). */
-  private def typoPairsF(s: SparkSession, d: String): DataFrame =
+  private[graft] def typoPairsF(s: SparkSession, d: String): DataFrame =
     memoFrame("typoPairs", s, d)(Llm.typoPairs(Tables.part(s, d), "p_name"))
 
   /** The (doc_id, w1, w2, cnt) order-1 sequence frame the collocation
     * and bigram-LM queries share — one corpus zip/explode/aggregate
     * pass per session (see [[Search.docBigrams]]). */
-  private def docBigrams(s: SparkSession, d: String): DataFrame =
+  private[graft] def docBigrams(s: SparkSession, d: String): DataFrame =
     memoFrame("docBigrams", s, d)(Search.docBigrams(Tables.documents(s, d)))
   /** Corpus vocabulary size (distinct tokens) — the bigram LM's V,
     * folded once per (session, dataset) off the shared tf frame. */
-  private def vocabSize(s: SparkSession, d: String): Long =
+  private[graft] def vocabSize(s: SparkSession, d: String): Long =
     Shared.memo(s, ("vocabSize", d))(docTf(s, d).select("word").distinct().count())
 
   /** The greedy BPE learn loop's (merges, final vocabulary) pair, run
@@ -258,4215 +197,46 @@ object SparkEntry {
     * loop's per-round frames are lazily checkpointed RDDs, so the
     * memo holds handles, not a .cache(); Bench's released rebuild is
     * charged to the first pass-1 consumer like every CacheOnce frame. */
-  private def bpeCore(s: SparkSession, d: String): (DataFrame, DataFrame) =
+  private[graft] def bpeCore(s: SparkSession, d: String): (DataFrame, DataFrame) =
     Shared.memo(s, ("bpe", d))(Llm.bpeLearnCore(docTf(s, d), 5))
 
   /** Quality-family frames shared by their per-metric queries AND the
     * corpus_filter capstone — one text-stats scan and one 3-gram pass
     * per session. */
-  private def textStatsF(s: SparkSession, d: String): DataFrame =
+  private[graft] def textStatsF(s: SparkSession, d: String): DataFrame =
     memoFrame("textStats", s, d)(Llm.textStats(Tables.documents(s, d)))
-  private def repetitionF(s: SparkSession, d: String): DataFrame =
+  private[graft] def repetitionF(s: SparkSession, d: String): DataFrame =
     memoFrame("repetition", s, d)(Llm.repetitionScore(Tables.documents(s, d)))
 
-  private def feats(s: SparkSession, d: String): DataFrame =
+  private[graft] def feats(s: SparkSession, d: String): DataFrame =
     // cached: the threshold percentiles force one execution, scoring a
     // second, and three queries share the chain
     memoFrame("feats", s, d)(Gold.clientFeatures(
       Tables.orders(s, d), Tables.lineitem(s, d),
       Gold.referenceDate(Gold.validOrders(Tables.orders(s, d)))))
-  private def scored(s: SparkSession, d: String): DataFrame =
+  private[graft] def scored(s: SparkSession, d: String): DataFrame =
     // consumed by client_scores, segment_summary and top_risk_clients
     memoFrame("scored", s, d) {
       val f = feats(s, d)
       Gold.scoreClients(f, Gold.scoreThresholds(f))
     }
-  private def scoredApprox(s: SparkSession, d: String): DataFrame =
+  private[graft] def scoredApprox(s: SparkSession, d: String): DataFrame =
     memoFrame("scoredApprox", s, d) {
       val f = feats(s, d)
       Gold.scoreClients(f, Gold.scoreThresholdsApprox(f))
     }
 
-  /** Shared oracle CTE prologue: valid orders, reference date, trailing
-    * window, per-client feature blocks (mirrors Gold.clientFeatures). */
-  private val featsCte = s"""
-    WITH o AS (SELECT * FROM orders WHERE $V),
-    ref AS (SELECT max(o_orderdate) AS r FROM o),
-    win AS (SELECT * FROM o WHERE o_orderdate >= (SELECT r FROM ref) - INTERVAL 365 DAY),
-    pw AS (SELECT o_custkey AS c_custkey, count(o_orderkey) AS freq_12m,
-             ${ms("o_totalprice")} AS monetary_12m,
-             sum(CAST(round(o_totalprice*100) AS BIGINT))/100.0/count(o_orderkey) AS monetary_avg_12m,
-             max(o_orderdate) AS last_purchase, min(o_orderdate) AS first_purchase
-           FROM win GROUP BY 1),
-    dv AS (SELECT o_custkey AS c_custkey, count(DISTINCT l_partkey) AS product_diversity_12m
-           FROM win JOIN lineitem ON o_orderkey = l_orderkey GROUP BY 1),
-    pa AS (SELECT o_custkey AS c_custkey, count(o_orderkey) AS total_orders_all,
-             ${ms("o_totalprice")} AS total_spend_all
-           FROM o GROUP BY 1),
-    feats AS (
-      SELECT b.c_custkey,
-             coalesce(pw.freq_12m, 0) AS freq_12m,
-             coalesce(pw.monetary_12m, 0.0) AS monetary_12m,
-             coalesce(pw.monetary_avg_12m, 0.0) AS monetary_avg_12m,
-             coalesce(dv.product_diversity_12m, 0) AS product_diversity_12m,
-             pw.last_purchase, pw.first_purchase,
-             CAST(CASE WHEN pw.last_purchase IS NOT NULL
-               THEN date_diff('day', CAST(pw.last_purchase AS DATE), CAST((SELECT r FROM ref) AS DATE))
-               ELSE 365 END AS BIGINT) AS recency_days,
-             CAST(CASE WHEN pw.first_purchase IS NOT NULL
-               THEN date_diff('day', CAST(pw.first_purchase AS DATE), CAST((SELECT r FROM ref) AS DATE))
-               ELSE 0 END AS BIGINT) AS tenure_days,
-             pa.total_orders_all, pa.total_spend_all,
-             CASE WHEN pa.total_orders_all > 0 THEN pa.total_spend_all / pa.total_orders_all
-               ELSE 0.0 END AS avg_order_value_all
-      FROM (SELECT DISTINCT o_custkey AS c_custkey FROM o) b
-      LEFT JOIN pw USING (c_custkey)
-      LEFT JOIN dv USING (c_custkey)
-      LEFT JOIN pa USING (c_custkey))"""
-
-  /** Oracle scoring tail over `feats` (mirrors Gold.scoreClients,
-    * including ScoreThresholds' falsy fallbacks: a NULL/zero percentile —
-    * e.g. no orders in the trailing window — falls back exactly as
-    * Gold.scoreThresholds.orElse does, so Spark and the oracle can never
-    * diverge on degenerate data). */
-  /** Exact ANALYZE profile of the orders table (nulls + exact
-    * distincts), shared by the table_profile oracle and the bounded-
-    * error gate of its sketch twin. */
-  private val profileExactBody = """
-        SELECT 'o_orderkey' AS column_name,
-          CAST(count(*) - count(o_orderkey) AS BIGINT) AS n_null,
-          CAST(count(DISTINCT o_orderkey) AS BIGINT) AS n_distinct FROM orders
-        UNION ALL SELECT 'o_custkey', CAST(count(*) - count(o_custkey) AS BIGINT),
-          CAST(count(DISTINCT o_custkey) AS BIGINT) FROM orders
-        UNION ALL SELECT 'o_orderstatus', CAST(count(*) - count(o_orderstatus) AS BIGINT),
-          CAST(count(DISTINCT o_orderstatus) AS BIGINT) FROM orders
-        UNION ALL SELECT 'o_totalprice', CAST(count(*) - count(o_totalprice) AS BIGINT),
-          CAST(count(DISTINCT o_totalprice) AS BIGINT) FROM orders
-        UNION ALL SELECT 'o_orderdate', CAST(count(*) - count(o_orderdate) AS BIGINT),
-          CAST(count(DISTINCT o_orderdate) AS BIGINT) FROM orders
-        UNION ALL SELECT 'o_orderpriority', CAST(count(*) - count(o_orderpriority) AS BIGINT),
-          CAST(count(DISTINCT o_orderpriority) AS BIGINT) FROM orders"""
-
-  private val scoredCte = s"""$featsCte,
-    th0 AS (SELECT quantile_cont(freq_12m, 0.75) AS f75, quantile_cont(freq_12m, 0.95) AS f95,
-             quantile_cont(monetary_12m, 0.75) AS m75, quantile_cont(monetary_12m, 0.95) AS m95,
-             quantile_cont(recency_days, 0.25) AS r25, quantile_cont(recency_days, 0.75) AS r75,
-             greatest(CAST(max(product_diversity_12m) AS DOUBLE), 1.0) AS maxdiv
-           FROM feats),
-    th AS (SELECT
-             CASE WHEN coalesce(f75, 0) = 0
-               THEN CASE WHEN coalesce(f95, 0) = 0 THEN 1.0 ELSE f95 END
-               ELSE f75 END AS f75,
-             CASE WHEN coalesce(f95, 0) = 0 THEN 1.0 ELSE f95 END AS f95,
-             CASE WHEN coalesce(m75, 0) = 0
-               THEN CASE WHEN coalesce(m95, 0) = 0 THEN 1.0 ELSE m95 END
-               ELSE m75 END AS m75,
-             CASE WHEN coalesce(m95, 0) = 0 THEN 1.0 ELSE m95 END AS m95,
-             CASE WHEN coalesce(r25, 0) = 0 THEN 91.25 ELSE r25 END AS r25,
-             CASE WHEN coalesce(r75, 0) = 0 THEN 365.0 ELSE r75 END AS r75,
-             maxdiv
-           FROM th0),
-    s1 AS (SELECT f.*,
-             round(0.45 * (least(CAST(f.freq_12m AS DOUBLE), t.f95) / t.f95)
-                 + 0.30 * (1.0 - least(CAST(f.recency_days AS DOUBLE), 365.0) / 365.0)
-                 + 0.15 * (least(f.monetary_12m, t.m95) / t.m95)
-                 + 0.10 * (CAST(f.product_diversity_12m AS DOUBLE) / t.maxdiv), 6) AS prob_reachat_12m,
-             least(greatest(f.tenure_days / 30.0, 1.0), 365.0 / 30.0) AS months_active,
-             t.m75 AS m75, t.r25 AS r25, t.r75 AS r75, t.f75 AS f75
-           FROM feats f, th t),
-    scored AS (
-      SELECT c_custkey, freq_12m, monetary_12m, monetary_avg_12m, product_diversity_12m,
-             recency_days, tenure_days, total_orders_all, total_spend_all,
-             prob_reachat_12m,
-             round(monetary_12m / months_active * 12.0 * prob_reachat_12m, 2) AS expected_value_12m,
-             round(monetary_12m * (1.0 - prob_reachat_12m), 2) AS value_at_risk_12m,
-             CASE WHEN prob_reachat_12m >= 0.65 AND monetary_12m >= m75 THEN 'VIP'
-                  WHEN prob_reachat_12m >= 0.55 AND recency_days <= r25 THEN 'Actifs'
-                  WHEN monetary_12m >= m75 AND recency_days > r75 THEN 'A relancer'
-                  WHEN freq_12m <= greatest(1.0, f75 * 0.5) AND recency_days > r75 THEN 'Dormants'
-                  ELSE 'A potentiel' END AS segment_label
-      FROM s1)"""
-
-  // ---------------------------------------------------------------- queries
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // -- silver (P1-P9, F1-F5, J4) --
-    "silver_orders" -> ((s, d) =>
-      Silver.cleanOrders(Tables.orders(s, d), Tables.customer(s, d))),
-    "silver_customer" -> ((s, d) =>
-      Silver.cleanCustomers(Tables.customer(s, d))),
-    "quality_counters" -> ((s, d) =>
-      Silver.qualityCounters(Tables.orders(s, d), Tables.customer(s, d))),
-
-    // -- gold star schema (J1-J5, A1-A9, F6-F18) --
-    "fact_achats" -> ((s, d) => fact(s, d).orderBy("o_orderkey")),
-    "dim_clients" -> ((s, d) =>
-      Gold.dimClients(Tables.customer(s, d), Tables.orders(s, d), Tables.lineitem(s, d),
-        Gold.referenceDate(Gold.validOrders(Tables.orders(s, d)))).orderBy("c_custkey")),
-    "client_features" -> ((s, d) => feats(s, d).orderBy("c_custkey")),
-    "client_scores" -> ((s, d) => scored(s, d).orderBy("c_custkey")),
-    // same scoring over t-digest sketch thresholds — the reference's
-    // actual approxQuantile method and the mergeable 100 TB path
-    "client_scores_approx" -> ((s, d) => scoredApprox(s, d).orderBy("c_custkey")),
-    "segment_summary" -> ((s, d) => Gold.segmentSummary(scored(s, d))),
-    "ca_monthly" -> ((s, d) => Gold.caMonthly(fact(s, d))),
-    // incremental gold maintenance: persisted pre-cutoff partial merged
-    // with a delta-only scan; hash-checked against the full recompute
-    "ca_monthly_incremental" -> ((s, d) => Gold.caMonthlyFromPartials(
-      s.read.parquet(caPartialDir(s, d)).unionByName(
-        Gold.caMonthlyPartial(Tables.orders(s, d)
-          .filter(col("o_orderdate") >= lit(IncrementalCutoff).cast("timestamp")))))),
-    // join-VIEW incremental maintenance (delta algebra): the persisted
-    // base join never recomputes; the refresh is three delta-sided
-    // joins key-merged with it — proved against the full-recompute
-    // join oracle
-    "join_view_maintained" -> ((s, d) => {
-      val cut = lit(IncrementalCutoff).cast("timestamp")
-      val newO = Tables.orders(s, d).filter(col("o_orderdate") >= cut)
-      val oldO = Tables.orders(s, d).filter(col("o_orderdate") < cut)
-      val newL = Tables.lineitem(s, d).filter(col("l_shipdate") >= cut)
-      val oldL = Tables.lineitem(s, d).filter(col("l_shipdate") < cut)
-      Gold.orderRevenueFromPartials(
-        s.read.parquet(joinPartialDir(s, d))
-          .unionByName(Gold.orderRevenuePartial(oldO, newL))
-          .unionByName(Gold.orderRevenuePartial(newO, oldL))
-          .unionByName(Gold.orderRevenuePartial(newO, newL)))
-    }),
-    // sketch-merge incremental KPIs: distinct clients refresh by HLL
-    // union of a persisted sketch with the delta's — never an exact
-    // recount over history. Verify runs the fully-exact merge instead
-    // ([[exactTiers]]); the sketch merge's error bound and
-    // split-insensitivity are pinned by GoldSpec.
-    "kpis_incremental" -> ((s, d) => Serving.kpisFromPartials(
-      s.read.parquet(kpisPartialDir(s, d)).unionByName(
-        Serving.kpisPartial(Tables.orders(s, d)
-          .filter(col("o_orderdate") >= lit(IncrementalCutoff).cast("timestamp")))))),
-    // the exact algebraic half of the same refresh (sums/counts in
-    // integer cents merge bit-for-bit) — hash-checked against a full
-    // recompute; only the HLL client estimate stays rows-only above
-    "kpis_incremental_exact" -> ((s, d) => Serving.kpisExactFromPartials(
-      s.read.parquet(kpisPartialDir(s, d)).unionByName(
-        Serving.kpisPartial(Tables.orders(s, d)
-          .filter(col("o_orderdate") >= lit(IncrementalCutoff).cast("timestamp")))))),
-    // streaming form of the same maintenance: orders as a micro-batched
-    // file stream, each batch sum-merged into the persisted partial;
-    // final table hash-checks against the batch ca_monthly oracle.
-    // Bench measures the warm-sink form: history bootstrapped once, the
-    // invocation merges the one-trigger tail delta (see [[warmMaintBase]]).
-    // Verify runs the COLD from-empty 4-batch replay instead
-    // ([[exactTiers]]), so the cross-SF oracle sweep keeps hash-checking
-    // the full bootstrap path, not just the steady-state merge.
-    "ca_monthly_maintained" -> ((s, d) => {
-      val (base, tail) = warmMaintBase(s, d, "camaint")(
-        (src, sink) => { Streams.caMonthlyMaintained(s, src, sink); () })
-      Streams.caMonthlyMaintained(s, tail, scratchSinkCopy(base, "camaint"))
-    }),
-    // streamed maintenance of the top-client BASE state (client-grain
-    // exact partials; top-k on read) — same oracle as top_clients; same
-    // warm-bench / cold-Verify split as ca_monthly_maintained
-    "top_clients_maintained" -> ((s, d) => {
-      val (base, tail) = warmMaintBase(s, d, "topkmaint")(
-        (src, sink) => { Streams.topClientsMaintained(s, src, sink); () })
-      Streams.topClientsMaintained(s, tail, scratchSinkCopy(base, "topkmaint"))
-    }),
-    "ca_country" -> ((s, d) => Gold.caCountry(fact(s, d))),
-    // the hot-key two-stage salted aggregation as a query (same oracle:
-    // exact cents make the salted sum bit-equal to the direct groupBy)
-    "ca_country_salted" -> ((s, d) => Gold.caCountrySalted(fact(s, d))),
-    // the salting DECISION input: top-key share + cumulative share
-    "key_skew_profile" -> ((s, d) =>
-      Skew.keySkewProfile(fact(s, d), "o_custkey")),
-    // dead-letter routing: every raw order row to exactly one
-    // first-match-wins disposition with money at stake
-    "orders_quarantine" -> ((s, d) =>
-      Silver.ordersQuarantine(Tables.orders(s, d), Tables.customer(s, d))),
-    // partition-level restatement: 1996 rewritten (prices doubled) via
-    // dynamic partition overwrite; the aggregate proves the other years
-    // survived untouched AND 1996 changed exactly once
-    "partition_overwrite" -> ((s, d) =>
-      Pipeline.partitionState(s, restatedFactDir(s, d))),
-    // row-level reconciliation of the restated snapshot against the live
-    // fact: full-outer key join, added/removed/changed/same with exact
-    // cents deltas at (annee, status) grain
-    "snapshot_diff" -> ((s, d) =>
-      Layout.snapshotDiff(fact(s, d),
-        Tables.parquetOr(s, restatedFactDir(s, d), fact(s, d).schema))),
-    // year x year customer-overlap matrix: one key-grain self-join
-    "customer_overlap_matrix" -> ((s, d) =>
-      Gold.customerOverlapMatrix(Tables.orders(s, d))),
-    // the EXACT kpis code under the injected optimizer rewrite — the
-    // Rule, not the query text, picks the sketch tier. Correctness is
-    // proved in two halves (the judge-adjudicated decomposition): Verify
-    // runs the query body with the rewrite off against the same oracle
-    // as kpis ([[exactTiers]]); PlanShapeSpec separately pins that the
-    // RULE swaps the plan to HLL and its estimate equals the explicit
-    // approx_count_distinct call. Bench always measures the rewritten
-    // (sketch) plan — the production posture the query exists to prove.
-    "kpis_rewritten" -> ((s, d) => {
-      val c = rewriteSession(s)
-      Serving.kpis(Gold.buildFact(
-        Tables.orders(c, d), Tables.customer(c, d), Tables.nation(c, d)))
-    }),
-    // right-to-be-forgotten: delete one customer by rewriting ONLY the
-    // partitions that contain them; target picked deterministically
-    // (min custkey among single-year customers, mirrored in the oracle)
-    "gdpr_delete" -> ((s, d) => {
-      val dir = Shared.dir(s, "gdpr", d) { p =>
-        fact(s, d).write.mode("overwrite").partitionBy("annee").parquet(p)
-        val kRow = Gold.validOrders(Tables.orders(s, d))
-          .groupBy("o_custkey")
-          .agg(countDistinct(year(col("o_orderdate"))).as("ny"))
-          .filter(col("ny") === 1)
-          .agg(min("o_custkey")).first()
-        val k = if (kRow.isNullAt(0)) -1L else kRow.getLong(0)
-        Pipeline.deleteKey(s, p, k)
-      }
-      Pipeline.partitionState(s, dir)
-    }),
-    // small-files compaction with checksum-proved integrity. The audit
-    // row is oracle-checked: rows, the before/after polynomial digests,
-    // and the ⌈rows/target⌉ output file count all restate in SQL over
-    // the source table, so a compaction that loses, duplicates, or
-    // corrupts one row hash-mismatches DuckDB. files_before is a fixture
-    // parameter (the 48-way fragmented input), SQL-invisible — LayoutSpec
-    // gates that side of the arithmetic.
-    "compact_files" -> ((s, d) => {
-      val base = Shared.dir(s, "compact", d) { base =>
-        Tables.orders(s, d).repartition(48)
-          .write.mode("overwrite").parquet(s"$base/frag")
-      }
-      Layout.compactFiles(s, s"$base/frag", s"$base/out", 5000L)
-        .select("rows_before", "rows_after", "files_after",
-          "checksum_before", "checksum_after")
-    }),
-    // native session_window under a watermark, streamed to completion
-    // (same oracle as the batch native form)
-    "event_sessions_native_stream" -> ((s, d) =>
-      Streams.sessionsNativeStreamed(s, d)),
-    "ca_country_share" -> ((s, d) => Serving.caCountryShare(Gold.caCountry(fact(s, d)))),
-    "ca_product" -> ((s, d) =>
-      Gold.caProduct(Tables.orders(s, d), Tables.lineitem(s, d), Tables.part(s, d))),
-    "cohort_first_purchase" -> ((s, d) => Gold.cohort(fact(s, d))),
-    // retention triangle: per acquisition month, distinct clients active
-    // at each month offset (window-min cohort key, one client shuffle)
-    "cohort_retention" -> ((s, d) => cohortRet(s, d)),
-    // the same triangle PIVOTed wide (explicit value list — no
-    // discovery pass, fixed schema at any scale)
-    "cohort_retention_pivot" -> ((s, d) => Gold.cohortRetentionPivotFrom(cohortRet(s, d))),
-    // ...and UNPIVOTed back: hash-matches cohort_retention's own oracle,
-    // proving the reshapes are mutual inverses
-    "cohort_retention_melt" -> ((s, d) => Gold.cohortRetentionMeltFrom(cohortRet(s, d))),
-    // market-basket association: same-order part pairs scored by lift
-    "basket_pairs" -> ((s, d) =>
-      Gold.basketPairsFrom(orderItemsF(s, d), itemCooc(s, d))),
-    "pricing_summary" -> ((s, d) => Gold.pricingSummary(Tables.lineitem(s, d))),
-    // TPC-H Q3 shape: selective 3-table join, scaled-integer revenue,
-    // customer as LEFT SEMI (membership only, no payload)
-    "shipping_priority" -> ((s, d) => Gold.shippingPriority(
-      Tables.customer(s, d), Tables.orders(s, d), Tables.lineitem(s, d))),
-    // chi-square independence of country x high-ticket flag over the
-    // FULL margin-crossed contingency grid (zero cells kept)
-    "chi2_country_ticket" -> ((s, d) => Gold.chi2CountryTicket(fact(s, d))),
-    "ca_region" -> ((s, d) => Gold.caRegion(Tables.orders(s, d), Tables.customer(s, d),
-      Tables.nation(s, d), Tables.region(s, d))),
-    // per-group top-k: window rank over the (region, product) aggregate
-    "top_products_per_region" -> ((s, d) => Gold.topProductsPerRegion(
-      Tables.orders(s, d), Tables.lineitem(s, d), Tables.part(s, d),
-      Tables.customer(s, d), Tables.nation(s, d), Tables.region(s, d))),
-    "ca_supplier_nation" -> ((s, d) => Gold.caSupplierNation(Tables.lineitem(s, d),
-      Tables.supplier(s, d), Tables.nation(s, d))),
-    // TPC-H Q5 shape: 6-table join whose customer/supplier nation
-    // equality closes a CYCLE in the join graph (not a star)
-    "local_supplier_volume" -> ((s, d) => Gold.localSupplierVolume(
-      Tables.customer(s, d), Tables.orders(s, d), Tables.lineitem(s, d),
-      Tables.supplier(s, d), Tables.nation(s, d), Tables.region(s, d))),
-    // TPC-H Q4 shape: correlated EXISTS as a LEFT SEMI whose condition
-    // mixes the equi-key with a per-order inequality residual
-    "order_priority" -> ((s, d) => Gold.orderPriority(
-      Tables.orders(s, d), Tables.lineitem(s, d))),
-    // TPC-H Q7 shape: nation-pair disjunction as a residual over
-    // IN-pruned dim chains
-    "nation_trade_volume" -> ((s, d) => Gold.nationTradeVolume(
-      Tables.customer(s, d), Tables.orders(s, d), Tables.lineitem(s, d),
-      Tables.supplier(s, d), Tables.nation(s, d))),
-    // TPC-H Q8 shape: conditional-sum market-share ratio out of ONE
-    // grouped pass (no self-join of aggregates)
-    "market_share" -> ((s, d) => Gold.marketShare(
-      Tables.customer(s, d), Tables.orders(s, d), Tables.lineitem(s, d),
-      Tables.supplier(s, d), Tables.nation(s, d), Tables.region(s, d))),
-    // TPC-H Q10 shape: returned-line revenue per customer, dims attached
-    // after the fact-grain reduction, global top-k
-    "returned_item_revenue" -> ((s, d) => Gold.returnedItemRevenue(
-      Tables.customer(s, d), Tables.orders(s, d), Tables.lineitem(s, d),
-      Tables.nation(s, d))),
-    // TPC-H Q19 shape: OR-of-ANDs brand/size/quantity bands; part-side
-    // disjunction distributed out and pushed to the scan
-    "disjunctive_revenue" -> ((s, d) => Gold.disjunctiveRevenue(
-      Tables.lineitem(s, d), Tables.part(s, d))),
-    // TPC-H Q22 shape: exact-cents global average folded to a driver
-    // scalar, NOT EXISTS as LEFT ANTI on keys
-    "idle_customers" -> ((s, d) => Gold.idleCustomers(
-      Tables.customer(s, d), Tables.orders(s, d), Tables.nation(s, d))),
-    // TPC-H Q6 shape: pure filter-scan-sum, all predicates pushed
-    "forecast_revenue" -> ((s, d) => Gold.forecastRevenue(Tables.lineitem(s, d))),
-    // universally-quantified aggregation: share of orders whose EVERY
-    // line met the ship SLA, order-grain reduction first
-    "order_sla" -> ((s, d) => Gold.orderSla(
-      Tables.orders(s, d), Tables.lineitem(s, d))),
-    // supply-side concentration: HHI from exact integer revenue moments
-    "supplier_hhi" -> ((s, d) => Gold.supplierHhi(Tables.lineitem(s, d))),
-    // TPC-H Q12 shape: late-line two-bucket conditional counts over a
-    // fact-fact join with a cross-side date residual
-    "late_priority_lines" -> ((s, d) => Gold.latePriorityLines(
-      Tables.orders(s, d), Tables.lineitem(s, d))),
-    // TPC-H Q14 shape: PROMO revenue share out of one grouped pass
-    "promo_revenue_share" -> ((s, d) => Gold.promoRevenueShare(
-      Tables.lineitem(s, d), Tables.part(s, d))),
-    // TPC-H Q15 shape: max-revenue supplier(s) via exact integer
-    // equality against a two-phase driver scalar
-    "top_supplier" -> ((s, d) => Gold.topSupplier(
-      Tables.lineitem(s, d), Tables.supplier(s, d))),
-    // TPC-H Q17 shape: per-part correlated average, decorrelated to
-    // aggregate + join over the brand-pruned line frame
-    "small_quantity_revenue" -> ((s, d) => Gold.smallQuantityRevenue(
-      Tables.lineitem(s, d), Tables.part(s, d))),
-    // TPC-H Q18 shape: HAVING membership as aggregate-then-join
-    "large_volume_customers" -> ((s, d) => Gold.largeVolumeCustomers(
-      Tables.customer(s, d), Tables.orders(s, d), Tables.lineitem(s, d))),
-
-    // -- serving aggregates (A10-A15, W1, W3, O1-O5) --
-    "gold_daily" -> ((s, d) => Serving.daily(fact(s, d))),
-    // gap-filled dense daily series (generated scaffold, zero-filled)
-    "gold_daily_dense" -> ((s, d) => dailyDenseF(s, d)),
-    // rolling 7-day mean/stddev/z-score anomaly flags over the dense series
-    "gold_daily_anomaly" -> ((s, d) => Serving.dailyAnomalyFrom(dailyDenseF(s, d))),
-    "gold_weekly" -> ((s, d) => Serving.weekly(fact(s, d))),
-    "gold_distribution" -> ((s, d) => Serving.distribution(fact(s, d))),
-    // pd.cut-style interval labels (the serving contract's bucket keys)
-    "gold_distribution_labeled" -> ((s, d) => Serving.distributionLabeled(fact(s, d))),
-    // equi-depth variant: sketch-quantile edges, ~n/k rows per bucket
-    "gold_distribution_quantile" -> ((s, d) => Serving.distributionQuantile(fact(s, d))),
-    "gold_monthly_growth" -> ((s, d) => Serving.monthlyGrowth(Gold.caMonthly(fact(s, d)))),
-    // running total + share-of-total over the month sequence
-    "gold_monthly_cumulative" -> ((s, d) => Serving.monthlyCumulative(Gold.caMonthly(fact(s, d)))),
-    "kpis" -> ((s, d) => Serving.kpis(fact(s, d))),
-    "kpis_approx" -> ((s, d) => Serving.kpisApprox(fact(s, d))),
-    "top_clients" -> ((s, d) => Serving.topClients(fact(s, d))),
-    "client_deciles" -> ((s, d) => Serving.clientDeciles(fact(s, d))),
-    // revenue concentration: exact Gini + top-decile share via the same
-    // distributed global-rank machinery (no 1-partition window)
-    "revenue_gini" -> ((s, d) => Serving.revenueGini(fact(s, d))),
-    // grouped exact percentiles (per-country median/p90 order value)
-    "ca_country_quantiles" -> ((s, d) => Serving.caCountryQuantiles(fact(s, d))),
-    // per-client percent_rank/cume_dist via distributed global ranks
-    "client_percentiles" -> ((s, d) => Serving.clientPercentiles(fact(s, d))),
-    "top_risk_clients" -> ((s, d) => Serving.topRiskClients(scored(s, d))),
-    "repeat_rate" -> ((s, d) => Serving.repeatRate(fact(s, d))),
-
-    // -- events tumbling-window batch aggregate (SURVEY §2.8 extension) --
-    "events_hourly" -> ((s, d) =>
-      Tables.events(s, d)
-        .groupBy(date_trunc("hour", col("ts")).as("heure"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"), round(sum("value"), 2).as("total_value"))
-        .orderBy("heure", "event_type")),
-    // same aggregate as a Structured Streaming job (watermark + window +
-    // memory sink), checked against the same oracle
-    "events_stream" -> ((s, d) => Streams.eventsHourlyStreamed(s, d)),
-    // S1-family completeness: line-delimited JSON SOURCE (the landing-
-    // zone ingest format CSV/parquet don't cover) — events serialized to
-    // .json once per (session, dataset), read back with an explicit
-    // schema (never inference: an inference pass is a full extra scan,
-    // and a malformed row silently widens types), aggregated, and
-    // hash-checked against the parquet path's oracle. Timestamps and
-    // doubles must survive the text round trip exactly or the hash breaks.
-    "events_hourly_json" -> ((s, d) => {
-      val dir = Shared.dir(s, "json", d)(
-        Tables.events(s, d).write.mode("overwrite").json(_))
-      s.read.schema(Tables.events(s, d).schema).json(dir)
-        .groupBy(date_trunc("hour", col("ts")).as("heure"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"), round(sum("value"), 2).as("total_value"))
-        .orderBy("heure", "event_type")
-    }),
-    // stream-stream inner join (event-time range + two-sided watermark):
-    // click->purchase attribution, checked against the batch-join oracle
-    "events_attribution" -> ((s, d) => Streams.attributionStreamed(s, d)),
-    // LEFT OUTER form: every purchase emits (null-click rows flushed by
-    // the watermark heartbeat sentinel), same batch left-join oracle
-    "events_attribution_outer" -> ((s, d) => Streams.attributionOuterStreamed(s, d)),
-    // FULL OUTER completes the stream-stream join family: orphan clicks
-    // (attributed to no purchase) emit per user under a NULL purchase key
-    "events_attribution_full" -> ((s, d) => Streams.attributionFullStreamed(s, d)),
-
-    // -- LLM-pipeline extension: dedup / text analysis (SURVEY §2.10) --
-    "dedup_exact" -> ((s, d) => Llm.dedupExact(Tables.documents(s, d))),
-    "dedup_minhash" -> ((s, d) => Llm.dedupMinhash(Tables.documents(s, d))),
-    "dedup_simhash" -> ((s, d) => Llm.dedupSimhash(Tables.documents(s, d))),
-    "dedup_ngram" -> ((s, d) => Llm.bestNgramMatch(ngramPairs(s, d))),
-    // containment tier of the same pair stats: catches a short doc quoted
-    // wholesale inside a long one (low Jaccard, containment ~ 1)
-    "dedup_containment" -> ((s, d) => Llm.containmentPairsFrom(ngramStats(s, d))),
-    // AllPairs/PPJoin prefix-filter tier: candidates only on the rarity
-    // prefix, exact in-row verify — bit-equal to the all-pairs filter
-    "dedup_ngram_prefix" -> ((s, d) => Llm.ngramJaccardPrefix(docShingles(s, d))),
-    // cluster resolution over the near-dup pair graph: large-star/
-    // small-star connected components -> canonical representative per doc
-    "dedup_clusters" -> ((s, d) =>
-      Llm.dedupClustersFrom(Tables.documents(s, d), ngramPairs(s, d))),
-    // delta-vs-corpus dedup: the corpus side comes from the PERSISTED
-    // parquet index (exact sha2 hashes + shingle hashes, written once at
-    // "ingest" by dedupIndex) — the delta query recomputes nothing from
-    // corpus text; its documents scans carry a pushed doc_id >= 400
-    // filter (gated in PlanShapeSpec)
-    "dedup_incremental" -> ((s, d) => {
-      val idx = dedupIndex(s, d)
-      Llm.dedupIncrementalIndexed(Tables.documents(s, d),
-        s.read.parquet(s"$idx/exact"), s.read.parquet(s"$idx/shingles"))
-    }),
-    // fifth dedup tier: embedding-cosine near-dup — exact O(N²) baseline
-    // (oracle-checked) + the LSH-bucketed scale path (rows-only, pair
-    // recall floor in LlmSpec)
-    "dedup_embedding" -> ((s, d) => Llm.dedupEmbedding(Tables.embeddings(s, d))),
-    "dedup_embedding_lsh" -> ((s, d) => Llm.dedupEmbeddingLsh(Tables.embeddings(s, d))),
-    "text_stats" -> ((s, d) => textStatsF(s, d)),
-    // training-data hygiene: benchmark 3-gram decontamination (broadcast
-    // bench set, corpus never shuffled) + PII detection/redaction stats
-    "decontaminate" -> ((s, d) =>
-      Llm.decontaminateFrom(Tables.documents(s, d), decontamEx(s, d))),
-    // constant-memory bloom tier of the same decontamination (native
-    // BloomFilterAggregate sketch + map-side might_contain probe)
-    "decontaminate_bloom" -> ((s, d) =>
-      Llm.decontaminateBloomFrom(Tables.documents(s, d), decontamEx(s, d))),
-    // training-data prep: deterministic source mixing, hash splits, and
-    // token-window chunking (all map-side, rand()-free)
-    "sample_mix" -> ((s, d) => Prep.sampleMix(Tables.documents(s, d),
-      Map("src0" -> 100, "src1" -> 80, "src2" -> 50, "src3" -> 25),
-      defaultPct = 10)),
-    // Efraimidis-Spirakis weighted priority sample: top-k by u^(1/w),
-    // w = n_chars, u deterministic from the Knuth hash
-    "sample_priority" -> ((s, d) => Prep.samplePriority(Tables.documents(s, d))),
-    // contrastive negatives: k hash-drawn other-docs per doc, map-side,
-    // with the cross-source curation flag
-    "negative_samples" -> ((s, d) => Prep.negativeSamples(Tables.documents(s, d))),
-    "split_assign" -> ((s, d) => Prep.splitAssign(Tables.documents(s, d))),
-    "sample_per_source" -> ((s, d) => Prep.samplePerSource(Tables.documents(s, d))),
-    "doc_chunks" -> ((s, d) => Prep.docChunks(Tables.documents(s, d))),
-    // chunk → fixed-budget training sequences: greedy next-fit packing
-    // manifest within deterministic hash groups
-    "pack_sequences" -> ((s, d) => Prep.packSequences(Tables.documents(s, d))),
-    "pii_scrub" -> ((s, d) => Llm.piiScrub(Tables.documents(s, d))),
-    "lang_id" -> ((s, d) => Llm.langId(Tables.documents(s, d))),
-    // degenerate-text filter: per-doc 3-gram self-repetition
-    "repetition_score" -> ((s, d) => repetitionF(s, d)),
-    // unigram-LM mean token log-prob (the classic cheap corpus-quality filter)
-    "doc_logprob" -> ((s, d) => docLogProb(s, d)),
-    // order-1 sequence family over the shared bigram frame: PMI
-    // collocations (phrase detection) + add-k bigram-LM quality scoring
-    "term_pmi" -> ((s, d) => Search.termPmiFrom(docBigrams(s, d))),
-    // source-grain TF-IDF: each domain's characteristic vocabulary
-    "source_top_terms" -> ((s, d) =>
-      Search.sourceTopTerms(docTf(s, d), Tables.documents(s, d))),
-    "bigram_logprob" -> ((s, d) =>
-      Search.bigramLogProbFrom(docBigrams(s, d), vocabSize(s, d))),
-    // capstone keep/drop decisions with first-match-wins reasons, all
-    // three component frames shared with their per-metric queries
-    "corpus_filter" -> ((s, d) => Llm.corpusFilterFrom(
-      textStatsF(s, d), repetitionF(s, d), docLogProb(s, d))),
-    // winnowing fingerprints — oracle-checked: the native expression's
-    // xxhash64 is restated bit-exactly in DuckDB wrapping arithmetic
-    "doc_fingerprint" -> ((s, d) => Llm.docFingerprint(Tables.documents(s, d))),
-
-    // -- text relevance ranking (TF-IDF keyword extraction, BM25 search) --
-    "tfidf_top_terms" -> ((s, d) =>
-      Search.tfidfTopTermsFrom(docTf(s, d), Tables.documents(s, d).count())),
-    // r17: fed from the shared tf frame — doc length, postings, and df
-    // are all (doc, word)-grain derivations, so the operator's own two
-    // corpus token passes are gone (bit-identical scores)
-    "bm25_search" -> ((s, d) => Search.bm25From(docTf(s, d))),
-
-    // -- similarity search over embeddings --
-    "knn_bruteforce" -> ((s, d) => Llm.knnBruteforce(Tables.embeddings(s, d))),
-    "knn_lsh" -> ((s, d) => Llm.knnLsh(Tables.embeddings(s, d))),
-    // IVF search against the persisted full-corpus quantizer: explicit
-    // argmin assignment + nprobe probing (Ml.knnIvfFrom), hash-checked
-    // since r15 — the oracle reads the same centroid parquet
-    "knn_ivf" -> ((s, d) => memoFrame("ivf", s, d)(
-      Ml.knnIvfFrom(Tables.embeddings(s, d), s.read.parquet(ivfFullIndex(s, d))))),
-    "knn_topk_agg" -> ((s, d) => Llm.knnTopkAgg(Tables.embeddings(s, d))),
-    // incremental IVF maintenance: delta vectors assigned to PERSISTED
-    // centroids — no refit, no indexed-corpus rescan (delta scan carries
-    // a pushed vec_id >= 400 filter, gated in PlanShapeSpec)
-    "knn_ivf_incremental" -> ((s, d) => {
-      val idx = ivfIndex(s, d)
-      Ml.ivfAssignDelta(Tables.embeddings(s, d).filter(col("vec_id") >= 400L),
-        s.read.parquet(idx))
-    }),
-    // int8 scalar-quantized corpus, asymmetric full-precision probes;
-    // hash-checked since r8 — the DuckDB oracle restates the integer
-    // quantization and the codebook fold exactly — and LlmSpec still
-    // gates recall@5 vs knn_bruteforce
-    "knn_quantized" -> ((s, d) => memoFrame("sq", s, d)(
-      Ml.knnQuantized(Tables.embeddings(s, d)))),
-    // per-label centroid aggregation, long form (the IVF-training shape)
-    // PCA decomposition over embeddings; the fitted SIGNED components
-    // persist to the artifacts dir so the DuckDB oracle restates
-    // orthonormality + projection-variance ratios + top loadings from
-    // them (bounded-error oracle — see Ml.embeddingPcaFit)
-    "embedding_pca" -> ((s, d) => memoFrame("pca", s, d) {
-      val (out, comps) = Ml.embeddingPcaFit(Tables.embeddings(s, d))
-      comps.coalesce(1).write.mode("overwrite")
-        .parquet(s"${Tables.oracleArtifactsDir(d)}/pca_components")
-      out
-    }),
-    "label_centroids" -> ((s, d) => Ml.labelCentroids(Tables.embeddings(s, d))),
-    // streaming exact dedup over a deliberately doubled stream —
-    // oracle-checked: event_ids are unique and the doubled copies are
-    // bit-identical rows, so full suppression must reproduce the raw
-    // events table exactly (not just matching counts)
-    "events_dedup_stream" -> ((s, d) => Streams.eventsDedupStreamed(s, d)),
-    // stream-static broadcast join: event stream enriched with the
-    // customer->nation dim, hourly revenue by country
-    "events_stream_enriched" -> ((s, d) => Streams.enrichedHourlyStreamed(s, d)),
-    // update-mode streaming aggregate published through the keyed
-    // foreachBatch upsert sink (reference Mongo ReplaceOne analog);
-    // one sink dir per (session, dataset) — re-upserting into it is
-    // idempotent, and the hook removes it on JVM exit
-    // ANALYZE-style column profile of a table (nulls + exact distincts)
-    "table_profile" -> ((s, d) => Catalog.tableProfile(Tables.orders(s, d),
-      Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        "o_orderdate", "o_orderpriority"))),
-    // the same profile through HLL++ sketches — no Expand, one map-side
-    // pass; the shape tableProfile's doc promises at corpus scale
-    "table_profile_approx" -> ((s, d) => Catalog.tableProfileApprox(Tables.orders(s, d),
-      Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        "o_orderdate", "o_orderpriority"))),
-    // S1 gate with teeth: orders -> CSV -> schema'd PERMISSIVE read ->
-    // aggregate, hash-compared against the parquet-based oracle. min/max
-    // of the timestamp column ride along so a silently null-coerced
-    // parse (the PERMISSIVE failure mode) breaks the hash, not just rows
-    "csv_roundtrip" -> ((s, d) => {
-      // one CSV copy per (session, dataset): the query gates the
-      // reader; rewriting the fixture per bench pass would time the writer
-      val dir = Shared.dir(s, "csv", d)(
-        Tables.orders(s, d).write.mode("overwrite").option("header", "true").csv(_))
-      Tables.readCsv(s, dir, Tables.orders(s, d).schema, "orders_csv")
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"),
-          Tables.moneySum(col("o_totalprice")).as("total"),
-          countDistinct("o_custkey").as("n_customers"),
-          min("o_orderdate").as("first_date"),
-          max("o_orderdate").as("last_date"))
-        .orderBy("o_orderstatus")
-    }),
-    "events_upsert_publish" -> ((s, d) => Streams.userTotalsUpserted(s, d,
-      Shared.dir(s, "upsert_q", d)(_ => ()))),
-
-    // -- multimodal binary-column plumbing (decode stubbed, see module) --
-    "media_meta" -> ((s, d) => Multimodal.mediaMeta(Tables.documents(s, d))),
-    "multimodal_features" -> ((s, d) => Multimodal.multimodalFeatures(Tables.documents(s, d))),
-
-    // partition-pruned year slice off the annee-partitioned fact sink
-    // (the layout Pipeline.run writes): only annee=1995/ is listed/read
-    "fact_year_slice" -> ((s, d) => Gold.yearSlice(
-      Tables.parquetOr(s, factSink(s, d), fact(s, d).schema), 1995)),
-
-    // -- grouping sets / sessionization / export / ml extensions --
-    "ca_rollup" -> ((s, d) => Serving.caRollup(fact(s, d))),
-    "ca_cube" -> ((s, d) => Serving.caCube(fact(s, d))),
-    // explicit GROUPING SETS: only the grains asked for, no grand total
-    "ca_grouping_sets" -> ((s, d) => Serving.caGroupingSets(fact(s, d))),
-    // S-family: ORC source/sink round trip, same gate shape as csv_roundtrip
-    "orc_roundtrip" -> ((s, d) => {
-      val dir = Shared.dir(s, "orc", d)(Tables.orders(s, d).write.mode("overwrite").orc(_))
-      s.read.schema(Tables.orders(s, d).schema).orc(dir)
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"),
-          Tables.moneySum(col("o_totalprice")).as("total"),
-          countDistinct("o_custkey").as("n_customers"),
-          min("o_orderdate").as("first_date"),
-          max("o_orderdate").as("last_date"))
-        .orderBy("o_orderstatus")
-    }),
-    // r17: re-aggregates the shared tf frame (n = Σ tf, docs = row
-    // count) instead of running its own corpus explode — same counts
-    "vocab_top" -> ((s, d) => Llm.vocabTopFrom(docTf(s, d))),
-    // bounded-memory heavy-hitters tier: Misra-Gries candidates + exact
-    // broadcast-filtered recount — same oracle as the exact tier
-    "vocab_top_approx" -> ((s, d) =>
-      Llm.vocabTopApproxFrom(Tables.documents(s, d), docTf(s, d))),
-    // deterministic epoch shuffle + shard manifest (rand()-free, resumable)
-    "shuffle_deterministic" -> ((s, d) => Prep.shuffleDeterministic(Tables.documents(s, d))),
-    // edit-distance-1 similarity join over product-name vocabulary via
-    // deletion-neighborhood candidates + exact levenshtein verify
-    "typo_pairs" -> ((s, d) => typoPairsF(s, d)),
-    // entity-resolution transitive closure over the typo candidate graph:
-    // string-keyed connected components, cluster = min member
-    "typo_clusters" -> ((s, d) => Llm.typoClustersFrom(typoPairsF(s, d))),
-    // C4-style duplicated-span removal: keep-first across the corpus,
-    // documents re-assembled from surviving blocks
-    "span_dedup" -> ((s, d) => Llm.spanDedup(Tables.documents(s, d))),
-    // co-purchase PageRank — oracle-checked: 5 fixed power-iteration
-    // rounds restated as unrolled DuckDB CTEs, compared on 9dp ranks
-    // (see the prRounds float-parity note); GraphSpec pins values too
-    "product_rank" -> ((s, d) => Gold.productRankFrom(copurchase(s, d))),
-    // single-source BFS over the co-purchase graph — the oracle-checked
-    // iterative graph op (exact distances vs a recursive CTE)
-    "copurchase_distance" -> ((s, d) =>
-      Gold.copurchaseDistanceFrom(copurchase(s, d))),
-    "event_sessions" -> ((s, d) => eventSessionsF(s, d)),
-    // strict ordered funnel: view -> first later click -> first later purchase
-    "event_funnel" -> ((s, d) => Serving.eventFunnel(Tables.events(s, d))),
-    // first-order event-type transition matrix (Markov bigrams)
-    "event_transitions" -> ((s, d) => Serving.eventTransitions(Tables.events(s, d))),
-    // top per-session event-type paths (journey analysis)
-    "session_paths" -> ((s, d) => Serving.sessionPaths(Tables.events(s, d))),
-    // gaps-and-islands -> SCD2 validity intervals (single exchange)
-    "user_state_intervals" -> ((s, d) =>
-      Serving.userStateIntervals(Tables.events(s, d))),
-    // RANGE-frame rolling 7 calendar days over sparse daily pre-aggregates
-    "events_rolling_range" -> ((s, d) =>
-      Serving.eventsRollingRange(Tables.events(s, d))),
-    // batch MERGE INTO: keyed changeset (U/D ops) applied to a base
-    // snapshot via one key-unique full-outer join
-    "merge_upsert" -> ((s, d) => Gold.mergeUpsert(
-      Gold.mergeBase(Tables.orders(s, d), "1995-12-31"),
-      Gold.mergeChanges(Tables.orders(s, d), "1995-12-31"))),
-    // triangle membership over the part-part co-occurrence graph
-    // (ordered-wedge enumeration; rank/reach/cohesion triple complete)
-    // runs on [[triangleSession]] (AQE SHJ conversion off): the endpoint
-    // joins' array payloads must never hash-build — sf1 OOM otherwise
-    "copurchase_triangles" -> ((s, d) =>
-      Gold.copurchaseTrianglesFrom(
-        itemCooc(triangleSession(s), d)
-          .select(col("p1").as("a"), col("p2").as("b")))),
-    // DOULION edge-sparsified tier of the same counting core: keep each
-    // edge by a deterministic hash coin (p=1/2), scale counts by invP³ —
-    // the wedge stage (the exact tier's quadratic-in-degree scaler) runs
-    // on ~1/4 the wedges. Rows-gated: estimates, not exact counts
-    // (GoldSpec pins the relative-error floor vs the exact tier)
-    "copurchase_triangles_approx" -> ((s, d) =>
-      Gold.copurchaseTrianglesApprox(
-        itemCooc(triangleSession(s), d)
-          .select(col("p1").as("a"), col("p2").as("b")))),
-    // weighted label-propagation communities over the same shared
-    // co-occurrence frame; memoized — the modularity query reads the
-    // same partition. Oracle-checked: 5 unrolled exact-integer-argmax
-    // LPA rounds restated as DuckDB CTEs
-    "product_communities" -> ((s, d) => memoFrame("lpaCommunities", s, d)(
-      Gold.productCommunities(communityEdges(s, d)))),
-    // cohesive-subgraph extraction: 3-core of the same pruned graph via
-    // iterative peel (16-round contract, early stop at the fixpoint)
-    "product_kcore" -> ((s, d) =>
-      Graph.kCore(communityEdges(s, d)).withColumnRenamed("v", "p_partkey")),
-    // partition quality: Newman modularity of the LPA communities over
-    // the SAME support-pruned edge frame (one builder feeds both calls,
-    // so the two can never drift onto different graphs); Q folds to
-    // A/m - B/(4m^2) from exact integer sums -> oracle-checked
-    "community_modularity" -> ((s, d) => Gold.communityModularity(
-      communityEdges(s, d),
-      memoFrame("lpaCommunities", s, d)(
-        Gold.productCommunities(communityEdges(s, d)))
-        .select(col("p_partkey").as("v"), col("community").as("label")))),
-    // first BPE merge round: char-pair counts at VOCAB grain off the
-    // shared term-frequency frame (pair expansion never sees the corpus)
-    "bpe_pairs" -> ((s, d) => Llm.bpePairsFrom(docTf(s, d))),
-    // iterated greedy merge learning — oracle-checked: the merge fold
-    // restates positionally (run-parity rule, see bpeRounds) so all 5
-    // rounds cross-check in DuckDB; LlmSpec hand-computes the table too
-    "bpe_learn" -> ((s, d) => bpeCore(s, d)._1),
-    // the encode pass: corpus token counts under the learned merges
-    // (oracle-checked via the same unrolled rounds) — reuses the
-    // session-shared learn loop's final vocabulary (see bpeCore)
-    "bpe_tokenize" -> ((s, d) => Llm.bpeTokenizeFrom(bpeCore(s, d)._2)),
-    // temperature-weighted domain-mixing plan (shares ∝ n^0.7)
-    "sample_temperature" -> ((s, d) => Prep.sampleTemperature(Tables.documents(s, d))),
-    // order-independent modular row checksum (migration validation: one
-    // scan, commutative combine, no sort)
-    "table_checksum" -> ((s, d) => Catalog.tableChecksum(Tables.orders(s, d))),
-    // the sampling capstone: EXECUTE the temperature plan (broadcast the
-    // |sources|-row rate table, ppm-hash keep decision per row)
-    "sample_mix_temperature" -> ((s, d) =>
-      Prep.sampleMixTemperature(Tables.documents(s, d))),
-    // OLS trend from exact mergeable moments (no solver, one pass)
-    "spend_trend" -> ((s, d) => Serving.spendTrendFrom(dailyDenseF(s, d))),
-    // Pearson correlations from exact decimal moment sums (mergeable form)
-    "feature_corr" -> ((s, d) => Gold.featureCorr(feats(s, d))),
-    // deterministic 50/50 experiment read-out with Welch's t
-    "ab_metrics" -> ((s, d) => Gold.abMetrics(Tables.orders(s, d))),
-    // robust (median/MAD) twin of gold_daily_anomaly
-    "gold_daily_anomaly_robust" -> ((s, d) =>
-      Serving.dailyAnomalyRobustFrom(dailyDenseF(s, d))),
-    // drift check: PSI of the 1997 amount distribution against 1996's
-    // exact decile edges, per-bucket terms from exact counts
-    "spend_psi" -> ((s, d) => Serving.spendPsi(Tables.orders(s, d))),
-    // drift check: exact two-sample KS via all-integer CDF gaps over the
-    // distributed-rank machinery (no single-partition window)
-    "spend_ks" -> ((s, d) => Serving.spendKs(Tables.orders(s, d))),
-    // schema evolution: v1 files lack o_orderdate; the mergeSchema read
-    // must surface it as null for v1 rows and aggregate across both
-    "schema_evolution" -> ((s, d) => {
-      val base = Shared.dir(s, "evo", d) { base =>
-        val o = Tables.orders(s, d)
-        o.filter(year(col("o_orderdate")) <= 1995).drop("o_orderdate")
-          .write.mode("overwrite").parquet(s"$base/v1")
-        o.filter(year(col("o_orderdate")) > 1995)
-          .write.mode("overwrite").parquet(s"$base/v2")
-      }
-      s.read.option("mergeSchema", "true").parquet(s"$base/v1", s"$base/v2")
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"),
-          Tables.moneySum(col("o_totalprice")).as("total"),
-          count(col("o_orderdate")).as("n_dated"),
-          min("o_orderdate").as("first_date"),
-          max("o_orderdate").as("last_date"))
-        .orderBy("o_orderstatus")
-    }),
-    // co-located join over bucketed twins of orders/lineitem: the write
-    // (memoized, the amortized one-time cost) buckets both sides on the
-    // order key, so the per-run join plans with ZERO shuffle exchanges
-    // (BucketingSpec pins the plan); the agg proves the join's content
-    // against the plain-join oracle
-    "bucketed_join" -> ((s, d) => {
-      // catalog table names are session-global, so they carry a dir-hash
-      // suffix — a second data dir in the same session writes its OWN
-      // tables instead of silently repointing the first dir's. SHA-256
-      // prefix, not String.hashCode: correctness (not just caching) rests
-      // on collision-freedom here
-      val sfx = "_" + java.security.MessageDigest.getInstance("SHA-256")
-        .digest(d.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      // external-path location for the bucketed twins; the write is the
-      // one-time amortized cost, the per-run query is the shuffle-free
-      // join it buys
-      Shared.dir(s, "bucket", d)(base =>
-        Bucketing.cooLocatedOrderLines(s, d, path = Some(base), suffix = sfx))
-      s.table(s"graft_orders_b$sfx").join(s.table(s"graft_lineitem_b$sfx"), Seq("key"))
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n_lines"),
-          Tables.moneySum(col("l_extendedprice")).as("ca"))
-        .orderBy("o_orderstatus")
-    }),
-    // batch hopping-window aggregate (hourly totals every 15 min)
-    "events_hopping" -> ((s, d) => Serving.eventsHopping(Tables.events(s, d))),
-    // semi-structured: typed from_json extraction of the props column
-    "events_props" -> ((s, d) => Serving.eventsPropsAgg(Tables.events(s, d))),
-    // streaming twin of events_hopping (same oracle): sliding window
-    // under a watermark, state = slide-ratio x live windows
-    "events_hopping_stream" -> ((s, d) => Streams.eventsHoppingStreamed(s, d)),
-    // interval-overlap self-join: concurrent user-session pairs via
-    // hour-bin candidates + exact overlap verify + pair-key dedup
-    "session_overlaps" -> ((s, d) =>
-      Serving.sessionOverlapsFrom(eventSessionsF(s, d))),
-    // growth accounting: first-month contribution + running total
-    "customers_cumulative" -> ((s, d) =>
-      Serving.customersCumulative(Tables.orders(s, d))),
-    // MoM active/retained/new/churned via mi-1 equi-joins (gap-safe)
-    "customer_churn_monthly" -> ((s, d) =>
-      Serving.customerChurnMonthly(Tables.orders(s, d))),
-    // sliding 6h distinct users hourly — exact (6x event expansion)…
-    "events_sliding_uniques" -> ((s, d) =>
-      Serving.eventsSlidingUniques(Tables.events(s, d))),
-    // …and the mergeable tier: hour-grain HLL sketches, 6-way unions
-    // (expansion moves to the 24-rows/day sketch frame; one corpus pass)
-    "events_sliding_uniques_approx" -> ((s, d) =>
-      Serving.eventsSlidingUniquesApprox(Tables.events(s, d))),
-    // the SQL surface as a first-class API: the ca_monthly semantics as
-    // pure SQL TEXT over the registered views (Catalyst plans it to the
-    // same shape as the DataFrame form; same oracle)
-    "sql_ca_monthly" -> ((s, d) => {
-      Catalog.registerTables(s, d)
-      s.sql(s"""
-        SELECT date_format(o_orderdate, 'yyyy-MM') AS mois,
-               -- 100.0D: a bare 100.0 parses as DECIMAL in SQL text (unlike
-               -- the DataFrame API's lit(100.0)) and would change ca's type
-               sum(CAST(round(o_totalprice * 100) AS BIGINT)) / 100.0D AS ca
-        FROM orders
-        WHERE o_totalprice > 0 AND o_totalprice <= ${Gold.MaxAmount}
-        GROUP BY 1 ORDER BY mois""")
-    }),
-    // set-operation family: year-over-year customer overlap — fused
-    // one-pass flags, the Intersect/Except operator form (same oracle),
-    // and the mergeable-sketch tier (rows-only + error-bound spec)
-    "customer_overlap" -> ((s, d) => Gold.customerOverlap(Tables.orders(s, d))),
-    "customer_overlap_sets" -> ((s, d) => Gold.customerOverlapSets(Tables.orders(s, d))),
-    "customer_overlap_approx" -> ((s, d) => Gold.customerOverlapApprox(Tables.orders(s, d))),
-    // time-range join (interval predicate family): per-purchase trailing-
-    // hour click count via window-sized time bins as the equi-join key
-    "events_range_join" -> ((s, d) => Serving.clicksBeforePurchase(Tables.events(s, d))),
-    // multi-touch attribution: linear + integer-weight time-decay credit
-    // per (purchase, click) over the same bin-quantized range join
-    "attribution_credit" -> ((s, d) =>
-      Serving.attributionCredit(Tables.events(s, d))),
-    // raw-log text source: write events as log lines (memoized), parse
-    // them back via regexp_extract, prove the roundtrip against the
-    // parquet truth
-    "textlog_roundtrip" -> ((s, d) => {
-      val dir = Shared.dir(s, "textlog", d)(
-        Tables.eventLogLines(Tables.events(s, d)).write.mode("overwrite").text(_))
-      Tables.parseEventLog(s, dir)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          countDistinct("user_id").as("n_users"),
-          (sum("value_cents") / 100.0).as("total_value"),
-          min("ts").as("first_ts"), max("ts").as("last_ts"))
-        .orderBy("event_type")
-    }),
-    "events_asof_price" -> ((s, d) =>
-      Serving.eventsAsofOrderPrice(Tables.events(s, d), Tables.orders(s, d))),
-    // same as-of semantics through the custom whole-operator plan
-    // (AsOfJoinNode -> AsOfJoinStrategy -> sort-merge AsOfJoinExec) —
-    // hash-checked against the SAME oracle as the composed version
-    "events_asof_custom" -> ((s, d) =>
-      graft.plans.AsOf.joinAsOf(
-        Tables.events(s, d).select(col("event_id"), col("user_id"), col("ts")),
-        Tables.orders(s, d),
-        leftKey = "user_id", rightKey = "o_custkey",
-        leftTs = "ts", rightTs = "o_orderdate",
-        payload = Seq("o_totalprice"), rightTie = Seq("o_orderkey"))
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("o_totalprice").as("last_order_price"))
-        .orderBy("event_id")),
-    // tolerance-bounded as-of (pandas merge_asof tolerance): orders older
-    // than 30 days at event time yield NULL instead of a stale price
-    "events_asof_tolerance" -> ((s, d) =>
-      graft.plans.AsOf.joinAsOf(
-        Tables.events(s, d).select(col("event_id"), col("user_id"), col("ts")),
-        Tables.orders(s, d),
-        leftKey = "user_id", rightKey = "o_custkey",
-        leftTs = "ts", rightTs = "o_orderdate",
-        payload = Seq("o_totalprice"), rightTie = Seq("o_orderkey"),
-        tolerance = Some(30L * 86400 * 1000000L)) // 30 days in µs
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("o_totalprice").as("last_order_price"))
-        .orderBy("event_id")),
-    "event_sessions_native" -> ((s, d) => Serving.eventSessionsNative(Tables.events(s, d))),
-    "event_sessions_stream" -> ((s, d) => Streams.eventSessionsStreamed(s, d)),
-    // ca as DECIMAL(18,2) before serializing: both engines render a
-    // scale-2 decimal as plain "123.40", where doubles diverge (Java
-    // flips to scientific notation past 1e7, DuckDB never does) — this
-    // is what makes the JSON strings oracle-hashable
-    "json_export" -> ((s, d) => Serving.toJsonRecords(
-      Gold.caMonthly(fact(s, d)).withColumn("ca", col("ca").cast("decimal(18,2)")))),
-    // smoothed target encoding of the country category against order
-    // totals — exact-cents means, so oracle-hashable unlike most ML prep
-    "target_encode" -> ((s, d) => Ml.targetEncode(fact(s, d))),
-    "kmeans_segments" -> ((s, d) => memoFrame("kmeans", s, d)(
-      Ml.segmentsOf(kmeansAssigned(s, d)))),
-    // cluster-quality metric the reference's advisor publishes
-    // (reference scripts/train_advisor.py:123,321): mean silhouette of the
-    // seed-pinned k=5 assignment, squared-Euclidean sufficient statistics
-    "kmeans_silhouette" -> ((s, d) => memoFrame("silhouette", s, d)(
-      Ml.silhouetteOf(kmeansAssigned(s, d)))),
-    // supervised repurchase propensity: cutoff-time features, LR-learned
-    // weights instead of the reference's hard-coded heuristic blend;
-    // trained on the window BEFORE the one it scores (temporal holdout)
-    "propensity_model" -> ((s, d) => propensityPair(s, d)._1),
-    // the backtest record: train/holdout sizes, in-sample vs held-out AUC
-    "propensity_backtest" -> ((s, d) => propensityPair(s, d)._2)
-  )
-
   /** One deterministic Lloyd's fit serves both kmeans queries (the
     * segments projection and the silhouette score derive from the same
     * cached assignment frame). */
-  private def kmeansAssigned(s: SparkSession, d: String): DataFrame =
+  private[graft] def kmeansAssigned(s: SparkSession, d: String): DataFrame =
     memoFrame("kmeans_fit", s, d)(Ml.kmeansFit(feats(s, d)))
 
   /** One LR fit serves both propensity queries: the scored-holdout frame
     * and the 1-row backtest metrics frame are built together and memoized
     * under separate keys. */
-  private def propensityPair(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+  private[graft] def propensityPair(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     lazy val fit = Ml.propensityBacktest(Tables.orders(s, d), Tables.lineitem(s, d))
     (memoFrame("propensity", s, d)(fit._1), memoFrame("propensity_bt", s, d)(fit._2))
   }
-
-  /** The annee-partitioned fact sink (what Pipeline.run stages for
-    * fact_achats), written once per session for the pruning-dependent
-    * readers. */
-  private def factSink(s: SparkSession, d: String): String =
-    Shared.dir(s, "fact_sink", d)(
-      fact(s, d).write.mode("overwrite").partitionBy("annee").parquet(_))
-
-  /** Annee-partitioned fact copy that the dynamic-overwrite restatement
-    * mutates (factSink stays pristine for the pruning queries); shared by
-    * partition_overwrite (end-state proof) and snapshot_diff (row-level
-    * reconciliation of the same restatement). */
-  private def restatedFactDir(s: SparkSession, d: String): String =
-    Shared.dir(s, "dyn_overwrite", d) { p =>
-      fact(s, d).write.mode("overwrite").partitionBy("annee").parquet(p)
-      Pipeline.overwritePartition(s, p,
-        fact(s, d).filter(col("annee") === 1996)
-          .withColumn("o_totalprice", col("o_totalprice") * 2))
-    }
-
-  /** Cloned session carrying the opt-in approx-distinct rewrite —
-    * ISOLATED from the main session on purpose: the flag lives in
-    * session conf, and Verify optimizes queries concurrently, so
-    * toggling it on the shared session would nondeterministically
-    * rewrite the exact-gated queries mid-flight. */
-  private def rewriteSession(s: SparkSession): SparkSession =
-    Shared.session(s, "rewriteSession") {
-      val ns = s.newSession()
-      ns.conf.set("graft.rewrite.approxDistinct", "true")
-      org.apache.spark.sql.graftbridge.Bridge.addOptimizerRule(
-        ns, graft.plans.ApproxDistinctRewrite)
-      ns
-    }
-
-  /** Cloned session for the triangle tiers with AQE's SMJ→SHJ conversion
-    * left at Spark's default (off). The bench-wide 64 MB threshold keys
-    * on COMPRESSED post-shuffle bytes, but the triangle endpoint joins
-    * carry packed adjacency ARRAYS that a ShuffledHashJoin pins UNPACKED
-    * in its build relation — measured at sf1 as a hash-relation OOM
-    * ("Can't acquire 268435456 bytes to build hash relation"). With the
-    * conversion off, AQE still broadcasts a genuinely small adjacency
-    * (keeps the local shape), and once it outgrows broadcast the join
-    * stays sort-merge, which SPILLS instead of pinning. Join strategy
-    * only — results unchanged; shared frames built on the parent session
-    * are reused here through the SharedState CacheManager's
-    * canonical-plan matching. (The alternative, merge hints on the two
-    * joins, also kills the legitimate small-scale broadcast: +65%
-    * at sf0.1.) */
-  private def triangleSession(s: SparkSession): SparkSession =
-    Shared.session(s, "triangleSession") {
-      val ns = s.newSession()
-      ns.conf.set("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "0")
-      ns
-    }
-
-  /** The corpus-half dedup index (what a production ingest job maintains):
-    * doc-level sha2 hashes and (doc_id, n, shingle-hash) rows for
-    * documents below the delta boundary, written once per (session,
-    * dataset). dedup_incremental only READS this — re-deriving the corpus
-    * frames from text per delta batch is exactly what an incremental
-    * design must not do at 100 TB. (On a cluster the shingle index would
-    * be bucketed by `h` so the delta join co-locates without shuffling
-    * the index; local parquet keeps the same read path.) */
-  private def dedupIndex(s: SparkSession, d: String, oldDocs: Long = 400): String =
-    Shared.dir(s, "dedup_idx", d) { p =>
-      Tables.documents(s, d).filter(col("doc_id") < oldDocs)
-        .select(sha2(col("text"), 256).as("h"))
-        .write.mode("overwrite").parquet(s"$p/exact")
-      docShingles(s, d).filter(col("doc_id") < oldDocs)
-        .write.mode("overwrite").parquet(s"$p/shingles")
-    }
-
-  /** Persisted IVF coarse-quantizer centroids over the already-indexed
-    * vectors (vec_id < 400) — the ANN analog of [[dedupIndex]]: written
-    * once per (session, dataset); knn_ivf_incremental only READS this
-    * and scans the post-cutoff delta, never refitting KMeans or
-    * rescanning indexed vectors. */
-  private def ivfIndex(s: SparkSession, d: String, oldVecs: Long = 400): String =
-    Shared.session(s, ("ivfIndex", d)) {
-      // artifacts dir, NOT a temp dir: the DuckDB oracle re-derives the
-      // argmin assignment from this exact parquet after the JVM exits
-      val p = s"${Tables.oracleArtifactsDir(d)}/ivf_idx"
-      Ml.ivfCentroids(Tables.embeddings(s, d).filter(col("vec_id") < oldVecs))
-        .write.mode("overwrite").parquet(p)
-      p
-    }
-
-  /** Full-corpus IVF coarse-quantizer centroids for [[knn_ivf]]'s
-    * search path — persisted to the same oracle-artifacts dir so the
-    * DuckDB oracle restates assignment, probing, and the cosine top-k
-    * from the identical centroid values the Spark plan folded. */
-  private def ivfFullIndex(s: SparkSession, d: String): String =
-    Shared.session(s, ("ivfFullIndex", d)) {
-      val p = s"${Tables.oracleArtifactsDir(d)}/ivf_full"
-      Ml.ivfCentroids(Tables.embeddings(s, d))
-        .write.mode("overwrite").parquet(p)
-      p
-    }
-
-  /** Persisted per-month revenue partial up to the refresh cutoff (what
-    * the last gold refresh left behind): written once per (session,
-    * dataset) in mergeable integer-cents form. ca_monthly_incremental
-    * only READS this and scans the post-cutoff delta — the historical
-    * orders are never rescanned, the refresh shape a 100 TB fact table
-    * requires (the reference instead re-runs the whole pipeline,
-    * tools/run.py:131-146). */
-  val IncrementalCutoff = "1997-01-01 00:00:00"
-  private def caPartialDir(s: SparkSession, d: String): String =
-    Shared.dir(s, "ca_partial", d)(
-      Gold.caMonthlyPartial(Tables.orders(s, d)
-          .filter(col("o_orderdate") < lit(IncrementalCutoff).cast("timestamp")))
-        .write.mode("overwrite").parquet(_))
-
-  /** Persisted base of the order-revenue JOIN view: the pre-cutoff
-    * orders ⋈ pre-cutoff lines partial, written once — refreshes merge
-    * against it by key, never re-join it. Same lifecycle as
-    * [[caPartialDir]]. */
-  private def joinPartialDir(s: SparkSession, d: String): String =
-    Shared.dir(s, "join_partial", d) { p =>
-      val cut = lit(IncrementalCutoff).cast("timestamp")
-      Gold.orderRevenuePartial(
-          Tables.orders(s, d).filter(col("o_orderdate") < cut),
-          Tables.lineitem(s, d).filter(col("l_shipdate") < cut))
-        .write.mode("overwrite").parquet(p)
-    }
-
-  /** Persisted KPI partial (pre-cutoff): algebraic fields + a binary
-    * DataSketches HLL sketch of client keys — the merge-not-recount form
-    * of a distinct count. Same cutoff and lifecycle as [[caPartialDir]]. */
-  private def kpisPartialDir(s: SparkSession, d: String): String =
-    Shared.dir(s, "kpi_partial", d)(
-      Serving.kpisPartial(Tables.orders(s, d)
-          .filter(col("o_orderdate") < lit(IncrementalCutoff).cast("timestamp")))
-        .write.mode("overwrite").parquet(_))
-
-  /** Persisted exact client-key set (pre-cutoff) for the exact tier of
-    * the incremental KPI refresh — the structure an exact incremental
-    * distinct count maintains instead of an HLL sketch. Same cutoff and
-    * lifecycle as [[kpisPartialDir]]. */
-  private def kpisKeysDir(s: SparkSession, d: String): String =
-    Shared.dir(s, "kpi_keys", d)(
-      Gold.validOrders(Tables.orders(s, d)
-          .filter(col("o_orderdate") < lit(IncrementalCutoff).cast("timestamp")))
-        .select("o_custkey").distinct()
-        .write.mode("overwrite").parquet(_))
-
-  /** Multi-file orders fixture for the streaming-maintenance query: 8
-    * parquet files so AvailableNow at 2 files/trigger yields 4 real
-    * micro-batches (the single testdata file would collapse to one).
-    * Shared per (session, dataset); the SINK is fresh per invocation —
-    * sum-merge is deliberately not idempotent, so a re-run must start
-    * from an empty partial, exactly as a fresh deployment would. */
-  private def ordersStreamDir(s: SparkSession, d: String): String =
-    Shared.dir(s, "orders_stream", d)(
-      Tables.orders(s, d).repartition(8).write.mode("overwrite").parquet(_))
-
-  /** Warm maintained-view scaffolding. A maintained view's steady-state
-    * unit of work is "merge ONE arriving delta into the standing sink" —
-    * not "replay the whole history into an empty sink", which is what a
-    * fresh-sink invocation measures (4 micro-batches × a full
-    * sink-generation rewrite each, all of it one-time bootstrap cost in
-    * production). So: split the 8-chunk stream fixture into history (6
-    * files) and a one-trigger tail delta (2 files), bootstrap the view
-    * over the history into a BASE sink once per (session, dataset), and
-    * let every invocation merge only the tail. The final state covers the
-    * full history either way, so the oracle hash is unchanged; the cold
-    * from-empty path (and its crash/redelivery machinery) stays covered
-    * by StreamsSpec/SinkDurabilitySpec, which call Streams.* directly. */
-  private def warmMaintBase(s: SparkSession, d: String, kind: String)
-      (maintain: (String, String) => Unit): (String, String) =
-    Shared.session(s, ("warmMaintBase", d, kind)) {
-      def tmp(tag: String) = Shared.tempDir(s"graft_${kind}_$tag")
-      val parts = new java.io.File(ordersStreamDir(s, d)).listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      val (hist, tail, base) = (tmp("hist"), tmp("tail"), tmp("base"))
-      // an EMPTY source writes a single part file, not 8 — degrade to "no
-      // history" (everything is the tail, no bootstrap runs, the merge
-      // starts from the empty base sink = the cold path)
-      val (h, t) = parts.splitAt(math.max(0, parts.length - 2))
-      h.foreach(f => java.nio.file.Files.createLink(hist.resolve(f.getName), f.toPath))
-      t.foreach(f => java.nio.file.Files.createLink(tail.resolve(f.getName), f.toPath))
-      if (h.nonEmpty) maintain(hist.toString, base.toString)
-      (base.toString, tail.toString)
-    }
-
-  /** Copy the committed base sink to a fresh scratch dir so each timed
-    * invocation merges the tail delta into ITS OWN warm sink — passes
-    * stay independent (sum-merge is not idempotent) while the measured
-    * cost is the per-trigger merge. The copy is bench scaffolding, not
-    * operator cost: the sink is view-grain (months / top clients), a
-    * handful of small files at any corpus scale. */
-  private def scratchSinkCopy(baseSink: String, kind: String): String = {
-    val scratch = Shared.tempDir(s"graft_${kind}_scratch")
-    val basePath = java.nio.file.Paths.get(baseSink)
-    val walk = java.nio.file.Files.walk(basePath)
-    try walk.forEach { p =>
-      val dst = scratch.resolve(basePath.relativize(p).toString)
-      if (java.nio.file.Files.isDirectory(p))
-        java.nio.file.Files.createDirectories(dst)
-      else java.nio.file.Files.copy(p, dst,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } finally walk.close()
-    scratch.toString
-  }
-
-  /** Fresh empty sink dir for a Verify-mode cold maintained-view replay. */
-  private def coldSink(kind: String): String =
-    Shared.tempDir(s"graft_${kind}_cold").toString
-
-  // ------------------------------------------------------------- oracle SQL
-
-    // quality-family oracle bodies, shared with the corpus_filter capstone
-  private val textStatsSql = """
-      WITH s AS (
-        SELECT doc_id,
-          CAST(length(text) AS BIGINT) AS n_chars,
-          CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_words,
-          CAST(len(regexp_extract_all(text, '[A-Za-z]')) AS BIGINT) AS n_letters,
-          CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS BIGINT) AS n_punct,
-          CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS n_tokens,
-          CAST(len(regexp_extract_all(lower(text), '\b(the|a|an|and|or|of|to|in|is|it)\b')) AS BIGINT) AS n_stopwords
-        FROM documents),
-      s2 AS (
-        SELECT *,
-          round(n_punct * 1.0 / greatest(n_chars, 1), 6) AS punct_ratio,
-          round(n_stopwords * 1.0 / greatest(n_words, 1), 6) AS stopword_ratio,
-          round(n_letters * 1.0 / greatest(n_words, 1), 6) AS avg_word_len
-        FROM s)
-      SELECT *,
-        (4000 * least(n_words, 100)
-         + least((1500000 * n_stopwords) // greatest(n_words, 1), 300000)
-         + (300000 - least((3000000 * n_punct) // greatest(n_chars, 1), 300000))
-        ) / CAST(1000000 AS DOUBLE) AS quality_score
-      FROM s2 ORDER BY doc_id"""
-  private val repetitionSql = """
-      WITH w AS (SELECT doc_id, string_split_regex(lower(text), '\s+') AS ws FROM documents),
-      sh AS (SELECT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-             FROM w, unnest(range(1, greatest(len(ws) - 1, 1))) AS t(i)
-             WHERE len(ws) >= 3),
-      g AS (SELECT doc_id, s, count(*) AS c FROM sh GROUP BY 1, 2),
-      a AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_ngrams,
-                   CAST(count(*) AS BIGINT) AS n_distinct,
-                   CAST(max(c) AS BIGINT) AS max_repeat
-            FROM g GROUP BY 1)
-      SELECT d.doc_id,
-        coalesce(a.n_ngrams, 0) AS n_ngrams,
-        coalesce(a.n_distinct, 0) AS n_distinct,
-        coalesce(a.max_repeat, 0) AS max_repeat,
-        CASE WHEN coalesce(a.n_ngrams, 0) > 0
-             THEN round(1.0 - a.n_distinct * 1.0 / a.n_ngrams, 6)
-             ELSE 0.0 END AS repeat_frac
-      FROM documents d LEFT JOIN a ON d.doc_id = a.doc_id
-      ORDER BY d.doc_id"""
-  private val logProbSql = """
-      WITH tf AS (SELECT doc_id, word, count(*) AS tf
-                  FROM (SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS word
-                        FROM documents)
-                  WHERE word <> '' GROUP BY 1, 2),
-      uni AS (SELECT word, sum(tf) AS n FROM tf GROUP BY 1),
-      tot AS (SELECT sum(n) AS total FROM uni)
-      SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
-             round(sum(tf * (ln(n) - ln(total))) / sum(tf), 6) AS avg_logprob
-      FROM tf JOIN uni USING (word) CROSS JOIN tot
-      GROUP BY 1 ORDER BY doc_id"""
-
-  /** Shared CTE prefix for the community-family oracles: the support-
-    * pruned co-occurrence graph plus graft.Graph.labelPropagation's 5
-    * fixed rounds unrolled (each round is an exact integer-weight argmax
-    * with a (wt DESC, label ASC) tie-break — deterministic, so the label
-    * dynamics ARE SQL-stateable despite being iterative). */
-  private val lpaRounds = (1 to 5).map { i =>
-    s"""l$i AS (SELECT src AS v, label FROM (
-        SELECT src, label,
-               row_number() OVER (PARTITION BY src ORDER BY wt DESC, label) AS rn
-        FROM (SELECT s.src, l.label, CAST(sum(s.w) AS BIGINT) AS wt
-              FROM sym s JOIN l${i - 1} l ON s.dst = l.v GROUP BY 1, 2))
-        WHERE rn = 1)"""
-  }.mkString(",\n      ")
-  private val lpaSql = s"""
-      WITH items AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
-      cooc AS (SELECT a.p AS p1, b.p AS p2, CAST(count(*) AS BIGINT) AS w
-               FROM items a JOIN items b ON a.ok = b.ok AND a.p < b.p
-               GROUP BY 1, 2 HAVING count(*) >= ${Gold.CommunityMinSupport}),
-      sym AS (SELECT p1 AS src, p2 AS dst, w FROM cooc
-              UNION ALL SELECT p2, p1, w FROM cooc),
-      l0 AS (SELECT DISTINCT src AS v, src AS label FROM sym),
-      $lpaRounds"""
-
-  /** graft.Graph.pageRank's 5 fixed power-iteration rounds unrolled for
-    * the product_rank oracle. Float-parity discipline: the damping
-    * constants are forced to DOUBLE before arithmetic so DuckDB computes
-    * the same `1 - 0.85 = 0.15000000000000002` the Scala driver does
-    * (DuckDB would otherwise subtract in DECIMAL and get exact 0.15 —
-    * a different double); contribution sums are double in both engines
-    * and the 9dp output rounding absorbs their order-of-addition noise
-    * (~1e-15 relative vs a 1e-9 grid). */
-  /** graft.Graph.kCore's peel unrolled to the 16-round contract for the
-    * product_kcore oracle: each round recomputes degrees over the
-    * surviving edges and keeps both endpoints only if they clear k=3.
-    * The Spark side's early stop fires only at a true fixpoint, where
-    * the remaining unrolled rounds are no-ops — identical frames either
-    * way. */
-  // AS MATERIALIZED is load-bearing: DuckDB inlines plain CTEs, and each
-  // round references its predecessor three times — 3^16 scan blowup
-  private val kcoreRounds = (1 to 16).map { i =>
-    s"""k$i AS MATERIALIZED (SELECT v FROM (
-          SELECT v, count(*) AS deg FROM (
-            SELECT a AS v FROM e${i - 1} UNION ALL SELECT b FROM e${i - 1})
-          GROUP BY 1) WHERE deg >= 3),
-      e$i AS MATERIALIZED (SELECT a, b FROM e${i - 1}
-              WHERE a IN (SELECT v FROM k$i) AND b IN (SELECT v FROM k$i))"""
-  }.mkString(",\n      ")
-
-  private val prRounds = (1 to 5).map { i =>
-    s"""r$i AS (SELECT d.src AS id,
-          (1 - CAST(0.85 AS DOUBLE)) / (SELECT n FROM nn)
-            + CAST(0.85 AS DOUBLE) * coalesce(s.contrib, 0) AS rank
-        FROM deg d LEFT JOIN (
-          SELECT ew.dst AS id, sum(r.rank / ew.deg) AS contrib
-          FROM ew JOIN r${i - 1} r ON ew.src = r.id GROUP BY 1) s
-          ON d.src = s.id)"""
-  }.mkString(",\n      ")
-
-  /** graft.Llm.bpeLearn's 5 greedy merge rounds unrolled for the BPE
-    * oracles. The left-to-right non-overlapping merge fold IS
-    * SQL-stateable without recursion via a positional rule: an adjacent
-    * (x,y) occurrence merges iff x≠y (occurrences can never overlap —
-    * overlap forces x=y) or its offset inside its maximal run of x is
-    * even (the greedy pairing inside "aaaa…"). Reassembly keeps merged
-    * positions and drops each merge's consumed right neighbor. Pair
-    * stats, winner pick (count desc, pair asc) and the rewrite are all
-    * exact integer/string operations at VOCABULARY grain, so the whole
-    * iterative tokenizer build cross-checks bit-for-bit. */
-  private val bpeRounds = (1 to 5).map { r =>
-    s"""p$r AS (SELECT syms[i] AS x, syms[i+1] AS y, CAST(sum(n) AS BIGINT) AS c
-           FROM v${r - 1}, unnest(range(1, len(syms))) AS t(i)
-           GROUP BY 1, 2),
-      m$r AS (SELECT x, y, c FROM p$r ORDER BY c DESC, x, y LIMIT 1),
-      e$r AS (SELECT word, n, i, syms[i] AS s,
-                (SELECT x FROM m$r) AS mx, (SELECT y FROM m$r) AS my,
-                CASE WHEN i < len(syms) THEN syms[i+1] END AS nxt
-           FROM v${r - 1}, unnest(range(1, len(syms)+1)) AS t(i)),
-      f$r AS (SELECT *,
-           coalesce(max(CASE WHEN s <> mx THEN i END)
-             OVER (PARTITION BY word ORDER BY i
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + 1
-             AS run_start
-         FROM e$r),
-      g$r AS (SELECT *, (s = mx AND nxt = my
-                AND (mx <> my OR (i - run_start) % 2 = 0)) AS ms FROM f$r),
-      h$r AS (SELECT *, coalesce(lag(ms) OVER (PARTITION BY word ORDER BY i),
-                false) AS prev_ms FROM g$r),
-      v$r AS (SELECT word, any_value(n) AS n,
-                list(CASE WHEN ms THEN mx || my ELSE s END ORDER BY i)
-                  FILTER (WHERE ms OR NOT prev_ms) AS syms
-         FROM h$r GROUP BY word)"""
-  }.mkString(",\n      ")
-  private val bpeSql = s"""
-      WITH tf AS (SELECT word, count(*) AS tf
-            FROM (SELECT unnest(string_split_regex(lower(text), '\\s+')) AS word
-                  FROM documents)
-            WHERE word <> '' GROUP BY 1),
-      v0 AS (SELECT word, CAST(tf AS BIGINT) AS n,
-               list_transform(range(1, length(word)+1), i -> word[i]) AS syms
-             FROM tf),
-      $bpeRounds"""
-
-  /** 64-bit wrapping arithmetic restated for DuckDB (HUGEINT domain,
-    * values kept in [0, 2^64)): the building blocks that let the
-    * doc_fingerprint oracle reproduce Spark's xxhash64 (XXH64, seed 42)
-    * bit-for-bit in SQL. A full 64x64 product overflows HUGEINT
-    * (~1.7e38 < (2^64)^2), so the wrapping multiply splits the left
-    * operand at 2^32 — only the low 32 bits of the high-half partial
-    * product survive mod 2^64. XOR hops through signed BIGINT (bitwise
-    * identical) and back. */
-  private val XxM = "18446744073709551616" // 2^64
-  private def xxMul(a: String, b: String): String =
-    s"((($a) % 4294967296) * $b + (((($a) // 4294967296) * ($b % 4294967296))" +
-      s" % 4294967296) * 4294967296) % $XxM"
-  private def xxRotl(a: String, r: Int): String =
-    s"((($a) % ${BigInt(1) << (64 - r)}) * ${BigInt(1) << r} + ($a) // ${BigInt(1) << (64 - r)})"
-  private def xxSigned(a: String): String =
-    s"CAST(CASE WHEN ($a) >= 9223372036854775808 THEN ($a) - $XxM ELSE ($a) END AS BIGINT)"
-  private def xxXor(a: String, b: String): String =
-    s"(CAST(xor(${xxSigned(a)}, ${xxSigned(b)}) AS HUGEINT) + " +
-      s"CASE WHEN xor(${xxSigned(a)}, ${xxSigned(b)}) < 0 THEN $XxM::HUGEINT ELSE 0 END)"
-  private def xxShr(a: String, r: Int): String = s"(($a) // ${BigInt(1) << r})"
-  // XXH64 primes and the precomputed 8-byte-input seed state (42 + P5 + 8)
-  private val XxP1 = "11400714785074694791"
-  private val XxP2 = "14029467366897019727"
-  private val XxP3 = "1609587929392839161"
-  private val XxP4 = "9650029242287828579"
-  private val XxH0 = "2870177450012600311"
-  private val XxP5plus8 = "2870177450012600269" // P5 + 8
-
-  /** CTE chain for ONE XXH64 8-byte-input step, `out` = XXH64_long(`in`,
-    * `seed`) — Spark's `xxhash64(c1, c2, …)` folds its inputs through
-    * exactly this step left-to-right with the previous hash as the next
-    * seed (seed 42 at the start), so chaining these CTEs restates a
-    * multi-column xxhash64 bit-for-bit (validated against Spark on
-    * literal probes, r15). `in`/`seed` are HUGEINT [0,2^64) expressions
-    * over `src`'s columns; `keep` columns ride through. Every stage is
-    * AS MATERIALIZED: each stage expression reads its predecessor's
-    * column up to ~6 times, so DuckDB's default CTE inlining would grow
-    * the expression tree exponentially across the 9×3 chained stages
-    * (the un-materialized form hung the planner; measured r15). */
-  private def xxLong(name: String, src: String, keep: String,
-      in: String, seed: String, out: String): String =
-    s"""${name}_0 AS MATERIALIZED (SELECT $keep, ((($seed) + $XxP5plus8) % $XxM) AS h0,
-             ${xxMul(in, XxP2)} AS k FROM $src),
-      ${name}_1 AS MATERIALIZED (SELECT $keep, h0, ${xxMul(xxRotl("k", 31), XxP1)} AS kk FROM ${name}_0),
-      ${name}_2 AS MATERIALIZED (SELECT $keep, ${xxXor("h0", "kk")} AS hx FROM ${name}_1),
-      ${name}_3 AS MATERIALIZED (SELECT $keep, (${xxMul(xxRotl("hx", 27), XxP1)} + $XxP4) % $XxM AS f FROM ${name}_2),
-      ${name}_4 AS MATERIALIZED (SELECT $keep, ${xxXor("f", xxShr("f", 33))} AS g1 FROM ${name}_3),
-      ${name}_5 AS MATERIALIZED (SELECT $keep, ${xxMul("g1", XxP2)} AS g2 FROM ${name}_4),
-      ${name}_6 AS MATERIALIZED (SELECT $keep, ${xxXor("g2", xxShr("g2", 29))} AS g3 FROM ${name}_5),
-      ${name}_7 AS MATERIALIZED (SELECT $keep, ${xxMul("g3", XxP3)} AS g4 FROM ${name}_6),
-      $name AS MATERIALIZED (SELECT $keep, ${xxXor("g4", xxShr("g4", 32))} AS $out FROM ${name}_7)"""
-
-  /** Murmur3_x86_32-over-a-long restated for DuckDB — the hash under
-    * Spark's BloomFilter V2 bit placement (sketch module: two chained
-    * `hashLong` rounds give (h1, h2), then k probes of
-    * h1·(2³¹−1) + i·h2 with a complement-flip and mod-bitSize; see
-    * Llm.decontaminateBloom's scaladoc). 32-bit wrapping arithmetic in
-    * HUGEINT [0, 2^32): products are reduced mod 2^32, rotations split
-    * at the rotate point, XOR hops through BIGINT (values < 2^32 are
-    * sign-safe there). SketchProps pins this arithmetic against the
-    * real BloomFilter on fuzzed keys, false-positive agreement
-    * included. */
-  private val Mm32 = "4294967296" // 2^32
-  private def mmMul(a: String, b: String): String =
-    s"((($a)::HUGEINT * ($b)) % $Mm32)"
-  private def mmRotl(a: String, r: Int): String =
-    s"((($a) % ${BigInt(1) << (32 - r)}) * ${BigInt(1) << r} + ($a) // ${BigInt(1) << (32 - r)})"
-  private def mmXor(a: String, b: String): String =
-    s"CAST(xor(($a)::BIGINT, ($b)::BIGINT) AS HUGEINT)"
-  private def mmShr(a: String, r: Int): String = s"(($a) // ${BigInt(1) << r})"
-  /** Unsigned [0,2^32) HUGEINT -> the bit-identical signed Java int (as
-    * BIGINT). */
-  private def mmSigned(a: String): String =
-    s"(CASE WHEN ($a) >= 2147483648 THEN ($a)::BIGINT - $Mm32 ELSE ($a)::BIGINT END)"
-
-  /** CTE chain for `out` = Murmur3_x86_32.hashLong(`in`, `seed`):
-    * mixK1/mixH1 over the long's low then high 32-bit word, fmix with
-    * len 8. `in` is HUGEINT [0,2^64), `seed` HUGEINT [0,2^32); `keep`
-    * columns ride through. Stages are MATERIALIZED for the same
-    * planner-blowup reason as [[xxLong]]. */
-  private def mmLong(name: String, src: String, keep: String,
-      in: String, seed: String, out: String): String =
-    s"""${name}_0 AS MATERIALIZED (SELECT $keep, ($seed) AS h0,
-             (($in) % $Mm32) AS kl, (($in) // $Mm32) AS kh FROM $src),
-      ${name}_1 AS MATERIALIZED (SELECT $keep, h0, kh, ${mmMul("kl", "3432918353")} AS k1 FROM ${name}_0),
-      ${name}_2 AS MATERIALIZED (SELECT $keep, h0, kh, ${mmMul(mmRotl("k1", 15), "461845907")} AS k2 FROM ${name}_1),
-      ${name}_3 AS MATERIALIZED (SELECT $keep, kh, ${mmXor("h0", "k2")} AS hx FROM ${name}_2),
-      ${name}_4 AS MATERIALIZED (SELECT $keep, kh, (${mmMul(mmRotl("hx", 13), "5")} + 3864292196) % $Mm32 AS ha FROM ${name}_3),
-      ${name}_5 AS MATERIALIZED (SELECT $keep, ha, ${mmMul("kh", "3432918353")} AS k3 FROM ${name}_4),
-      ${name}_6 AS MATERIALIZED (SELECT $keep, ha, ${mmMul(mmRotl("k3", 15), "461845907")} AS k4 FROM ${name}_5),
-      ${name}_7 AS MATERIALIZED (SELECT $keep, ${mmXor("ha", "k4")} AS hy FROM ${name}_6),
-      ${name}_8 AS MATERIALIZED (SELECT $keep, (${mmMul(mmRotl("hy", 13), "5")} + 3864292196) % $Mm32 AS hb FROM ${name}_7),
-      ${name}_9 AS MATERIALIZED (SELECT $keep, ${mmXor("hb", "8")} AS f0 FROM ${name}_8),
-      ${name}_10 AS MATERIALIZED (SELECT $keep, ${mmXor("f0", mmShr("f0", 16))} AS f1 FROM ${name}_9),
-      ${name}_11 AS MATERIALIZED (SELECT $keep, ${mmMul("f1", "2246822507")} AS f2 FROM ${name}_10),
-      ${name}_12 AS MATERIALIZED (SELECT $keep, ${mmXor("f2", mmShr("f2", 13))} AS f3 FROM ${name}_11),
-      ${name}_13 AS MATERIALIZED (SELECT $keep, ${mmMul("f3", "3266489909")} AS f4 FROM ${name}_12),
-      $name AS MATERIALIZED (SELECT $keep, ${mmXor("f4", mmShr("f4", 16))} AS $out FROM ${name}_13)"""
-
-  /** splitmix64 restated for DuckDB, mirroring Sketches.splitmix64 /
-    * tokenHash (the SimHash/MinHash signature arithmetic). Values live
-    * in HUGEINT [0, 2^64); the wrapping multiply splits the CONSTANT at
-    * 2^32 so no partial product exceeds 2^96. [[smChain]] emits the
-    * finalizer as four chained CTE stages (inlining would cube the
-    * expression size — each stage reads its predecessor three times). */
-  private val SmMask = "18446744073709551615::HUGEINT" // 2^64 - 1
-  private val SmGolden = "11400714819323198485::HUGEINT" // 0x9E3779B97F4A7C15
-  private def smMul(a: String, c: BigInt): String = {
-    val ch = c >> 32; val cl = c & 0xFFFFFFFFL
-    s"((($a) * $cl::HUGEINT + (((($a) * $ch::HUGEINT) & 4294967295::HUGEINT) << 32)) & $SmMask)"
-  }
-  /** CTE stages `<name>_a,<name>_b,<name>_c,<name>`: `<name>` selects
-    * `keep` plus splitmix64(`in`) AS `out` from `src`. */
-  private def smChain(name: String, src: String, keep: String,
-      in: String, out: String): String =
-    s"""${name}_a AS (SELECT $keep, (($in + $SmGolden) & $SmMask) AS z FROM $src),
-      ${name}_b AS (SELECT $keep, ${smMul("xor(z, z >> 30)", BigInt("BF58476D1CE4E5B9", 16))} AS z FROM ${name}_a),
-      ${name}_c AS (SELECT $keep, ${smMul("xor(z, z >> 27)", BigInt("94D049BB133111EB", 16))} AS z FROM ${name}_b),
-      $name AS (SELECT $keep, xor(z, z >> 31) AS $out FROM ${name}_c)"""
-  /** Unsigned [0,2^64) HUGEINT -> the bit-identical signed BIGINT. */
-  private def smSigned(a: String): String =
-    s"(CASE WHEN ($a) >= 9223372036854775808::HUGEINT THEN (($a) - 18446744073709551616::HUGEINT)::BIGINT ELSE ($a)::BIGINT END)"
-  private def smUnsigned(a: String): String =
-    s"(CASE WHEN ($a) < 0 THEN ($a)::HUGEINT + 18446744073709551616::HUGEINT ELSE ($a)::HUGEINT END)"
-  /** The poly31-over-codepoints accumulator ([[Sketches.tokenHash]]'s
-    * pre-finalizer state) of string column `s`. */
-  private def smPoly(s: String): String =
-    s"""list_reduce(list_prepend(0::HUGEINT,
-          list_transform(range(1, length($s)+1), i -> unicode(substr($s, i, 1))::HUGEINT)),
-          (a, c) -> (a * 31 + c) & $SmMask)"""
-
-  def oracleSql: Map[String, String] = Map(
-    // winnowing fingerprints: per-position xxhash64 of the 8-char
-    // shingle (XXH64 tail round + fmix, restated in wrapping HUGEINT
-    // arithmetic — ASCII text, so chars are the hashed UTF-8 bytes),
-    // window-4 sliding minima, distinct count + global min per doc
-    "doc_fingerprint" -> s"""
-      WITH d0 AS (SELECT doc_id, length(text) AS L,
-              list_transform(range(1, length(text)+1),
-                j -> CAST(ord(text[j]) AS HUGEINT)) AS cs
-            FROM documents WHERE length(text) >= 11),
-      pos AS (SELECT doc_id, L, i,
-          cs[i] + cs[i+1]*256 + cs[i+2]*65536 + cs[i+3]*16777216
-          + cs[i+4]*4294967296 + cs[i+5]*1099511627776
-          + cs[i+6]*281474976710656 + cs[i+7]*72057594037927936 AS k1
-        FROM d0, unnest(range(1, L - 6)) AS t(i)),
-      s1 AS (SELECT doc_id, L, i, ${xxMul("k1", XxP2)} AS a FROM pos),
-      s2 AS (SELECT doc_id, L, i, ${xxMul(xxRotl("a", 31), XxP1)} AS b FROM s1),
-      s3 AS (SELECT doc_id, L, i, ${xxXor(XxH0, "b")} AS h1 FROM s2),
-      s4 AS (SELECT doc_id, L, i,
-               (${xxMul(xxRotl("h1", 27), XxP1)} + $XxP4) % $XxM AS f FROM s3),
-      s5 AS (SELECT doc_id, L, i, ${xxXor("f", xxShr("f", 33))} AS g1 FROM s4),
-      s6 AS (SELECT doc_id, L, i, ${xxMul("g1", XxP2)} AS g2 FROM s5),
-      s7 AS (SELECT doc_id, L, i, ${xxXor("g2", xxShr("g2", 29))} AS g3 FROM s6),
-      s8 AS (SELECT doc_id, L, i, ${xxMul("g3", XxP3)} AS g4 FROM s7),
-      hs AS (SELECT doc_id, L, i,
-               ${xxSigned(xxXor("g4", xxShr("g4", 32)))} AS h FROM s8),
-      w AS (SELECT doc_id, i,
-        min(h) OVER (PARTITION BY doc_id ORDER BY i
-                     ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS wmin,
-        L - 7 - 3 AS m
-      FROM hs)
-      SELECT doc_id, CAST(count(DISTINCT wmin) AS BIGINT) AS n_fingerprints,
-             min(wmin) AS min_fp
-      FROM w WHERE i <= m GROUP BY doc_id ORDER BY doc_id""",
-
-    // the full iterative BPE build: greedy merge picks are exact integer
-    // argmax + deterministic tie-break, the rewrite is the positional
-    // run-parity rule — see bpeRounds
-    "bpe_learn" -> s"""$bpeSql
-      SELECT r AS round, x, y, c AS n FROM (
-        SELECT 1 AS r, * FROM m1 UNION ALL SELECT 2, * FROM m2
-        UNION ALL SELECT 3, * FROM m3 UNION ALL SELECT 4, * FROM m4
-        UNION ALL SELECT 5, * FROM m5)
-      ORDER BY round""",
-
-    // the encode pass under the same learned merges: corpus token
-    // counts over the round-5 vocabulary
-    "bpe_tokenize" -> s"""$bpeSql
-      SELECT token, CAST(sum(n) AS BIGINT) AS n FROM (
-        SELECT unnest(syms) AS token, n FROM v5)
-      GROUP BY 1 ORDER BY n DESC, token LIMIT 30""",
-
-    // fixed-iteration PageRank over the parity-encoded customer-part
-    // bipartite graph: 5 unrolled power-iteration rounds, 9dp ranks
-    "product_rank" -> s"""
-      WITH cp AS (SELECT DISTINCT o_custkey * 2 AS c, l_partkey * 2 + 1 AS p
-                  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-                  WHERE $V),
-      e AS (SELECT c AS src, p AS dst FROM cp UNION ALL SELECT p, c FROM cp),
-      deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY 1),
-      nn AS (SELECT count(*) AS n FROM deg),
-      ew AS (SELECT e.src, e.dst, d.deg FROM e JOIN deg d USING (src)),
-      r0 AS (SELECT src AS id, 1.0 / (SELECT n FROM nn) AS rank FROM deg),
-      $prRounds
-      SELECT (id - 1) // 2 AS p_partkey, round(rank, 9) AS rank
-      FROM r5 WHERE id % 2 = 1
-      ORDER BY rank DESC, p_partkey LIMIT 50""",
-
-    // 16 unrolled peel rounds over the same support-pruned graph; the
-    // final degrees are the in-core degrees
-    "product_kcore" -> s"""
-      WITH items AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
-      cooc AS (SELECT a.p AS p1, b.p AS p2
-               FROM items a JOIN items b ON a.ok = b.ok AND a.p < b.p
-               GROUP BY 1, 2 HAVING count(*) >= ${Gold.CommunityMinSupport}),
-      e0 AS (SELECT p1 AS a, p2 AS b FROM cooc),
-      $kcoreRounds
-      SELECT v AS p_partkey, CAST(count(*) AS BIGINT) AS core_deg
-      FROM (SELECT a AS v FROM e16 UNION ALL SELECT b FROM e16)
-      GROUP BY 1 ORDER BY 1""",
-
-    // 5 unrolled deterministic LPA rounds over the support-pruned
-    // co-purchase graph — integer weights, total-order tie-break
-    "product_communities" -> s"""$lpaSql,
-      sizes AS (SELECT label, CAST(count(*) AS BIGINT) AS community_size
-                FROM l5 GROUP BY 1)
-      SELECT l.v AS p_partkey, l.label AS community, s.community_size
-      FROM l5 l JOIN sizes s USING (label)
-      ORDER BY p_partkey""",
-
-    // Newman Q = A/m - B/(4m^2) from exact integer sums over the SAME
-    // pruned edges + LPA labels; the single float expression is
-    // evaluated identically by both engines on the same three integers
-    "community_modularity" -> s"""$lpaSql,
-      j AS (SELECT e.w, la.label AS ca, lb.label AS cb
-            FROM cooc e JOIN l5 la ON e.p1 = la.v JOIN l5 lb ON e.p2 = lb.v),
-      deg AS (SELECT c, CAST(sum(w) AS BIGINT) AS d
-              FROM (SELECT ca AS c, w FROM j UNION ALL SELECT cb, w FROM j)
-              GROUP BY 1),
-      intra AS (SELECT ca AS c, CAST(sum(w) AS BIGINT) AS win
-                FROM j WHERE ca = cb GROUP BY 1),
-      agg AS (SELECT CAST(sum(coalesce(i.win, 0)) AS BIGINT) AS a,
-                     CAST(sum(CAST(d.d AS HUGEINT) * d.d) AS DOUBLE) AS b,
-                     CAST(sum(d.d) AS BIGINT) // 2 AS m
-              FROM deg d LEFT JOIN intra i USING (c))
-      SELECT CAST((SELECT count(DISTINCT label) FROM l5) AS BIGINT) AS n_communities,
-             round(a / m - b / (4.0 * m * m), 6) AS modularity
-      FROM agg""",
-
-    "silver_orders" -> s"""
-      SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate, o_orderpriority
-      FROM (SELECT *, row_number() OVER (PARTITION BY o_orderkey ORDER BY o_orderdate, o_custkey) AS rn
-            FROM orders
-            WHERE o_orderkey IS NOT NULL AND o_custkey IS NOT NULL
-              AND o_orderdate IS NOT NULL AND o_totalprice IS NOT NULL
-              AND o_orderdate >= TIMESTAMP '${Silver.MinDate} 00:00:00'
-              AND $V)
-      WHERE rn = 1 AND o_custkey IN (SELECT c_custkey FROM customer)
-      ORDER BY o_orderkey""",
-
-    // first-match-wins dispositions in cleanOrders' rule order; the
-    // duplicate window sorts rule-passing rows first so rn counts
-    // position among THEM (mirrors Silver.ordersQuarantine)
-    "orders_quarantine" -> s"""
-      WITH f AS (SELECT *,
-          (o_orderkey IS NULL OR o_custkey IS NULL OR o_orderdate IS NULL
-           OR o_totalprice IS NULL) AS missing,
-          (o_orderdate < TIMESTAMP '${Silver.MinDate} 00:00:00') AS bad_date,
-          (o_totalprice <= 0 OR o_totalprice > ${Gold.MaxAmount}) AS bad_amount
-        FROM orders),
-      r AS (SELECT *, row_number() OVER (PARTITION BY o_orderkey
-              ORDER BY CASE WHEN NOT coalesce(missing, false)
-                             AND NOT coalesce(bad_date, false)
-                             AND NOT coalesce(bad_amount, false)
-                        THEN 0 ELSE 1 END, o_orderdate, o_custkey, o_totalprice) AS rn
-            FROM f),
-      q AS (SELECT CASE WHEN missing THEN 'missing'
-                WHEN bad_date THEN 'invalid_date'
-                WHEN bad_amount THEN 'bad_amount'
-                WHEN rn > 1 THEN 'duplicate'
-                WHEN o_custkey NOT IN (SELECT c_custkey FROM customer
-                                       WHERE c_custkey IS NOT NULL)
-                  THEN 'orphan_customer'
-                ELSE 'valid' END AS disposition,
-              coalesce(o_totalprice, 0) AS p
-            FROM r)
-      SELECT disposition, count(*) AS n,
-             sum(CAST(round(p*100) AS BIGINT))/100.0 AS amount
-      FROM q GROUP BY 1 ORDER BY disposition""",
-
-    // top-20 heaviest keys with share + cumulative share of all rows
-    "key_skew_profile" -> s"""
-      WITH c AS (SELECT o_custkey AS key, count(*) AS n
-                 FROM orders WHERE $V GROUP BY 1),
-      t AS (SELECT CAST(sum(n) AS BIGINT) AS tot FROM c),
-      top AS (SELECT key, n FROM c ORDER BY n DESC, key LIMIT 20)
-      SELECT key, n, round(n / (SELECT tot FROM t), 6) AS share,
-             round(sum(n) OVER (ORDER BY n DESC, key
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   / (SELECT tot FROM t), 6) AS cum_share
-      FROM top ORDER BY n DESC, key""",
-
-    "silver_customer" -> """
-      SELECT c_custkey, c_name, c_nationkey, c_acctbal,
-             upper(substr(seg, 1, 1)) || substr(seg, 2) AS c_mktsegment
-      FROM (SELECT c_custkey, trim(c_name) AS c_name, c_nationkey, c_acctbal,
-                   lower(trim(c_mktsegment)) AS seg,
-                   row_number() OVER (PARTITION BY c_custkey ORDER BY trim(c_name)) AS rn
-            FROM customer
-            WHERE c_custkey IS NOT NULL AND contains(trim(c_name), '#'))
-      WHERE rn = 1
-      ORDER BY c_custkey""",
-
-    "quality_counters" -> s"""
-      SELECT (SELECT count(*) FROM orders) AS initial_rows,
-             (SELECT count(*) FROM orders
-              WHERE o_orderkey IS NULL OR o_custkey IS NULL
-                 OR o_orderdate IS NULL OR o_totalprice IS NULL) AS dropped_missing,
-             (SELECT count(*) FROM orders
-              WHERE o_orderdate < TIMESTAMP '${Silver.MinDate} 00:00:00') AS dropped_invalid_date,
-             (SELECT count(*) FROM orders
-              WHERE o_totalprice <= 0 OR o_totalprice > ${Gold.MaxAmount}) AS dropped_bad_amount,
-             (SELECT count(*) FROM orders o
-              WHERE NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)) AS dropped_orphan_client,
-             (SELECT count(*) FROM customer) AS cust_initial_rows,
-             (SELECT count(*) FROM customer WHERE c_custkey IS NULL) AS cust_dropped_invalid_id,
-             (SELECT count(*) FROM customer
-              WHERE c_custkey IS NOT NULL
-                AND NOT coalesce(contains(trim(c_name), '#'), false)) AS cust_dropped_invalid_name,
-             (SELECT count(*) - count(DISTINCT c_custkey) FROM customer
-              WHERE c_custkey IS NOT NULL
-                AND coalesce(contains(trim(c_name), '#'), false)) AS cust_dropped_duplicates""",
-
-    "fact_achats" -> s"""
-      SELECT o_orderkey, o_custkey, o_orderdate, o_totalprice,
-             coalesce(n_name, 'Inconnu') AS pays,
-             CAST(o_orderdate AS DATE) AS jour,
-             strftime(o_orderdate, '%Y-%m') AS mois,
-             CAST(year(o_orderdate) AS BIGINT) AS annee
-      FROM orders
-      LEFT JOIN customer ON o_custkey = c_custkey
-      LEFT JOIN nation ON c_nationkey = n_nationkey
-      WHERE $V
-      ORDER BY o_orderkey""",
-
-    "dim_clients" -> s"""
-      WITH o AS (SELECT * FROM orders WHERE $V),
-      ref AS (SELECT max(o_orderdate) AS r FROM o),
-      agg AS (SELECT o_custkey AS c_custkey,
-                min(o_orderdate) AS first_purchase, max(o_orderdate) AS last_purchase,
-                count(o_orderkey) AS total_orders,
-                ${ms("o_totalprice")} AS total_spend
-              FROM o GROUP BY 1),
-      parts AS (SELECT o_custkey AS c_custkey, count(DISTINCT l_partkey) AS product_count
-                FROM o JOIN lineitem ON o_orderkey = l_orderkey GROUP BY 1)
-      SELECT c.c_custkey, c.c_name, a.first_purchase, a.last_purchase,
-             CAST(coalesce(date_diff('day', CAST(a.last_purchase AS DATE), CAST((SELECT r FROM ref) AS DATE)), 365) AS BIGINT) AS recency_days,
-             CAST(coalesce(date_diff('day', CAST(a.first_purchase AS DATE), CAST((SELECT r FROM ref) AS DATE)), 0) AS BIGINT) AS tenure_days,
-             coalesce(a.total_orders, 0) AS total_orders,
-             coalesce(a.total_spend, 0.0) AS total_spend,
-             CASE WHEN coalesce(a.total_orders, 0) > 0 THEN a.total_spend / a.total_orders ELSE 0.0 END AS avg_order_value,
-             coalesce(p.product_count, 0) AS product_count
-      FROM customer c
-      LEFT JOIN agg a USING (c_custkey)
-      LEFT JOIN parts p USING (c_custkey)
-      ORDER BY c.c_custkey""",
-
-    "client_features" -> s"""$featsCte
-      SELECT c_custkey, freq_12m, monetary_12m, monetary_avg_12m, product_diversity_12m,
-             last_purchase, first_purchase, recency_days, tenure_days,
-             total_orders_all, total_spend_all, avg_order_value_all,
-             (SELECT r FROM ref) AS reference_date
-      FROM feats ORDER BY c_custkey""",
-
-    "client_scores" -> s"""$scoredCte
-      SELECT * FROM scored ORDER BY c_custkey""",
-
-    // bounded-error oracle for the t-digest-threshold scoring: the
-    // feature columns are exact (equality-gated against the exact CTE);
-    // the score uses approx-quantile thresholds (accuracy 10000) whose
-    // rank error is ≤ n/10000 — measured max |Δprob| 7e-5 at sf0.01,
-    // gated at 0.02 (≈300× safety); EV/VaR propagate the prob bound
-    // through their own monetary scale (+0.011 for their 2dp rounding).
-    // The gate accepts the estimate against EITHER standard quantile
-    // semantic: the interpolating twin (`scored`, quantile_cont — the
-    // exact `percentile` the batch tier uses) or the discrete twin
-    // (`scored_d`, quantile_disc — a data ELEMENT, which is what
-    // approx_percentile's GK sketch returns in its exact regime). The
-    // two semantics legitimately diverge by a whole inter-element gap
-    // at small n — at sf0.001 (150 clients) freq95 is 3.55 interpolated
-    // vs the element 4, a |Δprob| of 0.043 for every freq-3 client —
-    // while a broken threshold pipeline still fails BOTH twins.
-    // segment_label is echoed: first-match-wins boundary flips under a
-    // one-rank threshold shift are legitimate (2/1500 at sf0.01) and
-    // spec-bounded, while the numeric gates catch any broken threshold
-    // pipeline.
-    "client_scores_approx" -> s"""$scoredCte,
-      thd0 AS (SELECT CAST(quantile_disc(freq_12m, 0.75) AS DOUBLE) AS f75,
-               CAST(quantile_disc(freq_12m, 0.95) AS DOUBLE) AS f95,
-               CAST(quantile_disc(monetary_12m, 0.75) AS DOUBLE) AS m75,
-               CAST(quantile_disc(monetary_12m, 0.95) AS DOUBLE) AS m95,
-               greatest(CAST(max(product_diversity_12m) AS DOUBLE), 1.0) AS maxdiv
-             FROM feats),
-      thd AS (SELECT
-               CASE WHEN coalesce(f95, 0) = 0 THEN 1.0 ELSE f95 END AS f95,
-               CASE WHEN coalesce(m95, 0) = 0 THEN 1.0 ELSE m95 END AS m95,
-               maxdiv
-             FROM thd0),
-      scored_d AS (SELECT f.c_custkey,
-               round(0.45 * (least(CAST(f.freq_12m AS DOUBLE), t.f95) / t.f95)
-                   + 0.30 * (1.0 - least(CAST(f.recency_days AS DOUBLE), 365.0) / 365.0)
-                   + 0.15 * (least(f.monetary_12m, t.m95) / t.m95)
-                   + 0.10 * (CAST(f.product_diversity_12m AS DOUBLE) / t.maxdiv), 6) AS prob_d,
-               f.monetary_12m,
-               least(greatest(f.tenure_days / 30.0, 1.0), 365.0 / 30.0) AS months_active
-             FROM feats f, thd t),
-      scored_d2 AS (SELECT c_custkey, prob_d,
-               round(monetary_12m / months_active * 12.0 * prob_d, 2) AS ev_d,
-               round(monetary_12m * (1.0 - prob_d), 2) AS var_d
-             FROM scored_d),
-      est AS (SELECT * FROM read_parquet('$OutDirToken/client_scores_approx/*.parquet'))
-      SELECT c_custkey,
-        CASE WHEN e.freq_12m = s.freq_12m THEN e.freq_12m ELSE -1 END AS freq_12m,
-        CASE WHEN e.monetary_12m = s.monetary_12m THEN e.monetary_12m ELSE -1.0 END AS monetary_12m,
-        CASE WHEN e.monetary_avg_12m = s.monetary_avg_12m THEN e.monetary_avg_12m ELSE -1.0 END AS monetary_avg_12m,
-        CASE WHEN e.product_diversity_12m = s.product_diversity_12m THEN e.product_diversity_12m ELSE -1 END AS product_diversity_12m,
-        CASE WHEN e.recency_days = s.recency_days THEN e.recency_days ELSE -1 END AS recency_days,
-        CASE WHEN e.tenure_days = s.tenure_days THEN e.tenure_days ELSE -1 END AS tenure_days,
-        CASE WHEN e.total_orders_all = s.total_orders_all THEN e.total_orders_all ELSE -1 END AS total_orders_all,
-        CASE WHEN e.total_spend_all = s.total_spend_all THEN e.total_spend_all ELSE -1.0 END AS total_spend_all,
-        CASE WHEN abs(e.prob_reachat_12m - s.prob_reachat_12m) <= 0.02
-               OR abs(e.prob_reachat_12m - d.prob_d) <= 0.02
-             THEN e.prob_reachat_12m ELSE -1.0 END AS prob_reachat_12m,
-        CASE WHEN abs(e.expected_value_12m - s.expected_value_12m)
-                  <= 0.02 * s.monetary_12m / least(greatest(s.tenure_days / 30.0, 1.0), 365.0 / 30.0) * 12.0 + 0.011
-               OR abs(e.expected_value_12m - d.ev_d)
-                  <= 0.02 * s.monetary_12m / least(greatest(s.tenure_days / 30.0, 1.0), 365.0 / 30.0) * 12.0 + 0.011
-             THEN e.expected_value_12m ELSE -1.0 END AS expected_value_12m,
-        CASE WHEN abs(e.value_at_risk_12m - s.value_at_risk_12m) <= 0.02 * s.monetary_12m + 0.011
-               OR abs(e.value_at_risk_12m - d.var_d) <= 0.02 * s.monetary_12m + 0.011
-             THEN e.value_at_risk_12m ELSE -1.0 END AS value_at_risk_12m,
-        e.segment_label
-      FROM est e JOIN scored s USING (c_custkey) JOIN scored_d2 d USING (c_custkey)
-      ORDER BY c_custkey""",
-
-    "segment_summary" -> s"""$scoredCte
-      SELECT segment_label, count(c_custkey) AS clients,
-             round(sum(monetary_12m), 2) AS ca_12m,
-             round(sum(expected_value_12m), 2) AS expected_value_12m,
-             round(sum(value_at_risk_12m), 2) AS value_at_risk_12m,
-             quantile_cont(freq_12m, 0.5) AS freq_med,
-             quantile_cont(recency_days, 0.5) AS recency_med
-      FROM scored GROUP BY 1 ORDER BY segment_label""",
-
-    "ca_monthly" -> s"""
-      SELECT strftime(o_orderdate, '%Y-%m') AS mois, ${ms("o_totalprice")} AS ca
-      FROM orders WHERE $V GROUP BY 1 ORDER BY mois""",
-
-    "fact_year_slice" -> s"""
-      SELECT strftime(o_orderdate, '%Y-%m') AS mois, ${ms("o_totalprice")} AS ca,
-             count(*) AS n_orders
-      FROM orders WHERE $V AND year(o_orderdate) = 1995
-      GROUP BY 1 ORDER BY mois""",
-
-    "ca_country" -> s"""
-      SELECT coalesce(n_name, 'Inconnu') AS pays, ${ms("o_totalprice")} AS ca
-      FROM orders
-      LEFT JOIN customer ON o_custkey = c_custkey
-      LEFT JOIN nation ON c_nationkey = n_nationkey
-      WHERE $V GROUP BY 1 ORDER BY ca DESC, pays""",
-
-    // the salted two-stage sum is bit-equal to the direct groupBy (exact
-    // cents), so it answers to the identical statement
-    "ca_country_salted" -> s"""
-      SELECT coalesce(n_name, 'Inconnu') AS pays, ${ms("o_totalprice")} AS ca
-      FROM orders
-      LEFT JOIN customer ON o_custkey = c_custkey
-      LEFT JOIN nation ON c_nationkey = n_nationkey
-      WHERE $V GROUP BY 1 ORDER BY ca DESC, pays""",
-
-    "ca_country_share" -> s"""
-      WITH cc AS (
-        SELECT coalesce(n_name, 'Inconnu') AS pays, ${ms("o_totalprice")} AS ca
-        FROM orders
-        LEFT JOIN customer ON o_custkey = c_custkey
-        LEFT JOIN nation ON c_nationkey = n_nationkey
-        WHERE $V GROUP BY 1)
-      SELECT pays, ca, round(ca / sum(ca) OVER (ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING), 6) AS share
-      FROM cc ORDER BY ca DESC, pays""",
-
-    "ca_product" -> s"""
-      SELECT p_name AS produit, ${ms("l_extendedprice")} AS ca
-      FROM orders
-      JOIN lineitem ON o_orderkey = l_orderkey
-      JOIN part ON l_partkey = p_partkey
-      WHERE $V GROUP BY 1 ORDER BY ca DESC, produit""",
-
-    "cohort_first_purchase" -> s"""
-      WITH o AS (SELECT * FROM orders WHERE $V),
-      fp AS (SELECT o_custkey, min(o_orderdate) AS fp FROM o GROUP BY 1)
-      SELECT strftime(fp.fp, '%Y-%m') AS first_purchase_month,
-             count(DISTINCT o.o_custkey) AS clients,
-             ${ms("o_totalprice")} AS ca
-      FROM o LEFT JOIN fp ON o.o_custkey = fp.o_custkey
-      GROUP BY 1 ORDER BY first_purchase_month""",
-
-    "pricing_summary" -> """
-      SELECT l_returnflag, l_linestatus,
-             sum(CAST(round(l_quantity*100) AS BIGINT))/100.0 AS sum_qty,
-             sum(CAST(round(l_extendedprice*100) AS BIGINT))/100.0 AS sum_base_price,
-             sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000) AS BIGINT))/10000.0 AS sum_disc_price,
-             sum(CAST(round(l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax) * 1000000) AS BIGINT))/1000000.0 AS sum_charge,
-             sum(CAST(round(l_quantity*100) AS BIGINT))/100.0/count(*) AS avg_qty,
-             sum(CAST(round(l_extendedprice*100) AS BIGINT))/100.0/count(*) AS avg_price,
-             count(*) AS count_order
-      FROM lineitem
-      WHERE l_shipdate <= TIMESTAMP '2001-09-01 00:00:00'
-      GROUP BY 1, 2 ORDER BY l_returnflag, l_linestatus""",
-
-    // TPC-H Q3 restated (o_orderpriority for the missing o_shippriority);
-    // scaled-integer revenue matches Gold.shippingPriority's rev4 sums
-    "shipping_priority" -> """
-      SELECT l_orderkey,
-             sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000) AS BIGINT))/10000.0 AS revenue,
-             CAST(o_orderdate AS DATE) AS o_orderdate, o_orderpriority
-      FROM customer, orders, lineitem
-      WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey
-        AND l_orderkey = o_orderkey
-        AND o_orderdate < TIMESTAMP '1995-03-15 00:00:00'
-        AND l_shipdate > TIMESTAMP '1995-03-15 00:00:00'
-      GROUP BY l_orderkey, CAST(o_orderdate AS DATE), o_orderpriority
-      ORDER BY revenue DESC, o_orderdate, l_orderkey LIMIT 10""",
-
-    // full margin-crossed grid incl. zero cells; expected-count and chi2
-    // float ops in the same order as Gold.chi2CountryTicket
-    "chi2_country_ticket" -> s"""
-      WITH f AS (SELECT coalesce(n_name, 'Inconnu') AS pays,
-                        CAST(o_totalprice > 150000.0 AS BIGINT) AS hi
-                 FROM orders
-                 LEFT JOIN customer ON o_custkey = c_custkey
-                 LEFT JOIN nation ON c_nationkey = n_nationkey
-                 WHERE $V),
-      cells AS (SELECT pays, hi, count(*) AS o FROM f GROUP BY 1, 2),
-      rt AS (SELECT pays, CAST(sum(o) AS BIGINT) AS r FROM cells GROUP BY 1),
-      ct AS (SELECT hi, CAST(sum(o) AS BIGINT) AS c FROM cells GROUP BY 1),
-      n AS (SELECT CAST(sum(o) AS BIGINT) AS tot FROM cells),
-      grid AS (SELECT rt.pays, ct.hi, r, c, coalesce(o, 0) AS o
-               FROM rt CROSS JOIN ct
-               LEFT JOIN cells ON cells.pays = rt.pays AND cells.hi = ct.hi),
-      terms AS (SELECT o, CAST(r AS DOUBLE) * c / (SELECT tot FROM n) AS e FROM grid)
-      SELECT (SELECT count(*) FROM rt) AS n_countries,
-             ((SELECT count(*) FROM rt) - 1) * ((SELECT count(*) FROM ct) - 1) AS dof,
-             round(sum((o - e) * (o - e) / e), 6) AS chi2
-      FROM terms""",
-
-    // TPC-H Q5 restated; revenue in scaled integers like the Spark side
-    "local_supplier_volume" -> """
-      SELECT n_name,
-             sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000) AS BIGINT))/10000.0 AS revenue
-      FROM customer, orders, lineitem, supplier, nation, region
-      WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-        AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-        AND r_name = 'ASIA'
-        AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-      GROUP BY 1 ORDER BY revenue DESC, n_name""",
-
-    // TPC-H Q4 restated (late-ship correlate for the missing
-    // commit/receipt dates); the EXISTS matches the Spark LEFT SEMI
-    "order_priority" -> """
-      SELECT o_orderpriority, count(*) AS order_count
-      FROM orders
-      WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        AND o_orderdate < TIMESTAMP '1996-04-01 00:00:00'
-        AND EXISTS (SELECT 1 FROM lineitem
-                    WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
-      GROUP BY 1 ORDER BY 1""",
-
-    // TPC-H Q7 restated; scaled-integer revenue, nation-pair disjunction
-    "nation_trade_volume" -> """
-      SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-             year(l_shipdate) AS l_year,
-             sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000) AS BIGINT))/10000.0 AS revenue
-      FROM supplier, lineitem, orders, customer, nation n1, nation n2
-      WHERE s_suppkey = l_suppkey AND o_orderkey = l_orderkey
-        AND c_custkey = o_custkey
-        AND s_nationkey = n1.n_nationkey AND c_nationkey = n2.n_nationkey
-        AND ((n1.n_name = 'NATION_9' AND n2.n_name = 'NATION_10')
-          OR (n1.n_name = 'NATION_10' AND n2.n_name = 'NATION_9'))
-        AND l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-      GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""",
-
-    // TPC-H Q8 restated: conditional-sum ratio out of one grouped pass,
-    // scaled-integer numerator/denominator, one 6dp float divide
-    "market_share" -> """
-      WITH t AS (
-        SELECT year(o_orderdate) AS o_year,
-               CASE WHEN n2.n_name = 'NATION_7'
-                    THEN CAST(round(l_extendedprice * (1.0 - l_discount) * 10000) AS BIGINT)
-                    ELSE 0 END AS num4,
-               CAST(round(l_extendedprice * (1.0 - l_discount) * 10000) AS BIGINT) AS rev4
-        FROM lineitem, orders, customer, supplier, nation n1, region, nation n2
-        WHERE l_orderkey = o_orderkey AND o_custkey = c_custkey
-          AND c_nationkey = n1.n_nationkey AND n1.n_regionkey = r_regionkey
-          AND r_name = 'EUROPE'
-          AND l_suppkey = s_suppkey AND s_nationkey = n2.n_nationkey
-          AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-          AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00')
-      SELECT o_year,
-             round(sum(num4) / CAST(sum(rev4) AS DOUBLE), 6) AS mkt_share
-      FROM t GROUP BY 1 ORDER BY 1""",
-
-    // TPC-H Q10 restated: per-customer returned-line revenue, dims after
-    // the reduction, deterministic top-20
-    "returned_item_revenue" -> """
-      WITH rev AS (
-        SELECT o_custkey,
-               sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000) AS BIGINT))/10000.0 AS revenue
-        FROM orders, lineitem
-        WHERE o_orderkey = l_orderkey AND l_returnflag = 'R'
-          AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-          AND o_orderdate < TIMESTAMP '1996-04-01 00:00:00'
-        GROUP BY 1)
-      SELECT c_custkey, c_name, round(c_acctbal, 2) AS c_acctbal,
-             coalesce(n_name, 'Inconnu') AS pays, revenue
-      FROM rev
-      JOIN customer ON o_custkey = c_custkey
-      LEFT JOIN nation ON c_nationkey = n_nationkey
-      ORDER BY revenue DESC, c_custkey LIMIT 20""",
-
-    // TPC-H Q19 restated: the conjunctive per-branch form — equivalent
-    // to the Spark side's pushed part-filter + residual because each
-    // branch is keyed by a distinct brand
-    "disjunctive_revenue" -> """
-      SELECT sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000) AS BIGINT))/10000.0 AS revenue
-      FROM lineitem, part
-      WHERE p_partkey = l_partkey AND (
-        (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5 AND l_quantity BETWEEN 1 AND 11) OR
-        (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 10 AND 20) OR
-        (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 20 AND 30))""",
-
-    // TPC-H Q22 restated: exact-cents average threshold in the same
-    // expression order as the Spark driver scalar; NOT EXISTS ≙ LEFT ANTI
-    "idle_customers" -> """
-      WITH avg_bal AS (
-        SELECT sum(CAST(round(c_acctbal*100) AS BIGINT))/100.0/count(*) AS t
-        FROM customer WHERE c_acctbal > 0)
-      SELECT coalesce(n_name, 'Inconnu') AS pays, count(*) AS numcust,
-             sum(CAST(round(c_acctbal*100) AS BIGINT))/100.0 AS totacctbal
-      FROM customer LEFT JOIN nation ON c_nationkey = n_nationkey
-      WHERE c_acctbal > (SELECT t FROM avg_bal)
-        AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-                        AND o_orderdate >= TIMESTAMP '2000-01-01 00:00:00')
-      GROUP BY 1 ORDER BY 1""",
-
-    // per-order max lag then month-grain conditional share
-    "order_sla" -> """
-      WITH w AS (
-        SELECT o_orderkey, strftime(o_orderdate, '%Y-%m') AS mois,
-               max(date_diff('day', CAST(o_orderdate AS DATE),
-                             CAST(l_shipdate AS DATE))) AS worst_lag
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        GROUP BY 1, 2)
-      SELECT mois, count(*) AS n_orders,
-             CAST(sum(CASE WHEN worst_lag <= 90 THEN 1 ELSE 0 END) AS BIGINT) AS n_met,
-             round(CAST(sum(CASE WHEN worst_lag <= 90 THEN 1 ELSE 0 END) AS BIGINT)
-                   / CAST(count(*) AS DOUBLE), 6) AS sla_share
-      FROM w GROUP BY 1 ORDER BY mois""",
-
-    // HHI = sum(rev^2)/(sum rev)^2 from exact integer supplier revenues
-    "supplier_hhi" -> """
-      WITH bySupp AS (
-        SELECT strftime(l_shipdate, '%Y-%m') AS mois, l_suppkey,
-               CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000) AS BIGINT)) AS HUGEINT) AS rev4
-        FROM lineitem GROUP BY 1, 2)
-      SELECT mois, count(*) AS n_suppliers,
-             round(CAST(sum(rev4 * rev4) AS DOUBLE)
-                   / (CAST(sum(rev4) AS DOUBLE) * CAST(sum(rev4) AS DOUBLE)), 6) AS hhi
-      FROM bySupp GROUP BY 1 ORDER BY mois""",
-
-    // TPC-H Q6 restated: one filter-scan-sum, scaled-integer product
-    "forecast_revenue" -> """
-      SELECT sum(CAST(round(l_extendedprice * l_discount * 10000) AS BIGINT))/10000.0 AS revenue
-      FROM lineitem
-      WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""",
-
-    // TPC-H Q12 restated (returnflag for the missing shipmode; lateness
-    // = shipped > 30 days after the order date)
-    "late_priority_lines" -> """
-      SELECT l_returnflag,
-             CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                 THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-             CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                 THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        AND l_shipdate > o_orderdate + INTERVAL 30 DAY
-      GROUP BY 1 ORDER BY 1""",
-
-    // TPC-H Q14 restated: conditional-sum ratio, one grouped pass
-    "promo_revenue_share" -> """
-      SELECT round(100.0 * sum(CASE WHEN p_type = 'PROMO'
-                   THEN CAST(round(l_extendedprice * (1.0 - l_discount) * 10000) AS BIGINT)
-                   ELSE 0 END)
-             / CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000) AS BIGINT)) AS DOUBLE), 6) AS promo_share
-      FROM lineitem JOIN part ON l_partkey = p_partkey
-      WHERE l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
-        AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'""",
-
-    // TPC-H Q15 restated: exact integer revenue equality against the max
-    "top_supplier" -> """
-      WITH r AS (
-        SELECT l_suppkey,
-               CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000) AS BIGINT)) AS BIGINT) AS rev4
-        FROM lineitem
-        WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-          AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'
-        GROUP BY 1)
-      SELECT s_suppkey, s_name, rev4/10000.0 AS total_revenue
-      FROM r JOIN supplier ON l_suppkey = s_suppkey
-      WHERE rev4 = (SELECT max(rev4) FROM r)
-      ORDER BY s_suppkey""",
-
-    // TPC-H Q17 restated: correlated per-part average decorrelated to
-    // aggregate + join; threshold arithmetic in the Spark expression order
-    "small_quantity_revenue" -> """
-      WITH lines AS (
-        SELECT l_partkey, l_quantity,
-               CAST(round(l_extendedprice * 100) AS BIGINT) AS price2
-        FROM lineitem
-        WHERE EXISTS (SELECT 1 FROM part
-                      WHERE p_partkey = l_partkey AND p_brand = 'Brand#23')),
-      thr AS (
-        SELECT l_partkey AS t_partkey,
-               0.2 * (sum(CAST(round(l_quantity*100) AS BIGINT))/100.0/count(*)) AS qty_threshold
-        FROM lines GROUP BY 1)
-      SELECT round(sum(price2)/100.0/7.0, 6) AS avg_yearly
-      FROM lines JOIN thr ON l_partkey = t_partkey
-      WHERE l_quantity < qty_threshold""",
-
-    // TPC-H Q18 restated: HAVING membership as aggregate-then-join,
-    // exact-cents quantity totals, deterministic top-50
-    "large_volume_customers" -> """
-      WITH big AS (
-        SELECT l_orderkey,
-               sum(CAST(round(l_quantity*100) AS BIGINT))/100.0 AS total_qty
-        FROM lineitem GROUP BY 1
-        HAVING sum(CAST(round(l_quantity*100) AS BIGINT))/100.0 > 180.0)
-      SELECT c_custkey, c_name, o_orderkey,
-             CAST(o_orderdate AS DATE) AS o_orderdate,
-             round(o_totalprice, 2) AS o_totalprice, total_qty
-      FROM big
-      JOIN orders ON o_orderkey = l_orderkey
-      JOIN customer ON o_custkey = c_custkey
-      ORDER BY o_totalprice DESC, o_orderkey LIMIT 50""",
-
-    // the bucketed twins must agree with the PLAIN join of the source
-    // tables — bucketing is a layout property, never a semantic one
-    "bucketed_join" -> """
-      SELECT o_orderstatus, count(*) AS n_lines,
-             sum(CAST(round(l_extendedprice*100) AS BIGINT))/100.0 AS ca
-      FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      GROUP BY 1 ORDER BY 1""",
-
-    // manual (rk-1)/(n-1) and rk/n over the (spend, custkey) TOTAL order
-    // — rank == row_number by construction, so tie semantics can't
-    // diverge between engines
-    "client_percentiles" -> s"""
-      WITH pc AS (SELECT o_custkey AS c_custkey, ${ms("o_totalprice")} AS total_spend
-                  FROM orders WHERE $V GROUP BY 1),
-      r AS (SELECT *, row_number() OVER (ORDER BY total_spend, c_custkey) AS rk FROM pc),
-      nn AS (SELECT count(*) AS n FROM pc)
-      SELECT c_custkey, total_spend,
-             round((rk - 1) / ((SELECT n FROM nn) - 1.0), 6) AS pct_rank,
-             round(rk / CAST((SELECT n FROM nn) AS DOUBLE), 6) AS cume_dist
-      FROM r ORDER BY c_custkey""",
-
-    // grouped exact percentiles: quantile_cont == Spark's percentile
-    "ca_country_quantiles" -> s"""
-      SELECT coalesce(n_name, 'Inconnu') AS pays, count(*) AS n,
-             round(quantile_cont(o_totalprice, 0.5), 6) AS p50,
-             round(quantile_cont(o_totalprice, 0.9), 6) AS p90
-      FROM orders
-      LEFT JOIN customer ON o_custkey = c_custkey
-      LEFT JOIN nation ON c_nationkey = n_nationkey
-      WHERE $V GROUP BY 1 ORDER BY pays""",
-
-    "ca_region" -> s"""
-      SELECT coalesce(r_name, 'Inconnu') AS region, ${ms("o_totalprice")} AS ca
-      FROM orders
-      LEFT JOIN customer ON o_custkey = c_custkey
-      LEFT JOIN nation ON c_nationkey = n_nationkey
-      LEFT JOIN region ON n_regionkey = r_regionkey
-      WHERE $V GROUP BY 1 ORDER BY ca DESC, region""",
-
-    "top_products_per_region" -> s"""
-      WITH bp AS (
-        SELECT coalesce(r_name, 'Inconnu') AS region, p_name AS produit,
-               ${ms("l_extendedprice")} AS ca
-        FROM orders
-        JOIN lineitem ON o_orderkey = l_orderkey
-        JOIN part ON l_partkey = p_partkey
-        LEFT JOIN customer ON o_custkey = c_custkey
-        LEFT JOIN nation ON c_nationkey = n_nationkey
-        LEFT JOIN region ON n_regionkey = r_regionkey
-        WHERE $V GROUP BY 1, 2)
-      SELECT region, produit, ca, rang FROM (
-        SELECT *, CAST(row_number() OVER (PARTITION BY region
-                         ORDER BY ca DESC, produit) AS INTEGER) AS rang
-        FROM bp)
-      WHERE rang <= 3 ORDER BY region, rang""",
-
-    "ca_supplier_nation" -> s"""
-      SELECT n_name AS supplier_nation, ${ms("l_extendedprice")} AS ca
-      FROM lineitem
-      JOIN supplier ON l_suppkey = s_suppkey
-      JOIN nation ON s_nationkey = n_nationkey
-      GROUP BY 1 ORDER BY ca DESC, supplier_nation""",
-
-    "gold_daily" -> s"""
-      SELECT CAST(o_orderdate AS DATE) AS jour, ${ms("o_totalprice")} AS ca,
-             count(o_orderkey) AS achats
-      FROM orders WHERE $V GROUP BY 1 ORDER BY jour""",
-
-    "gold_daily_dense" -> s"""
-      WITH d AS (
-        SELECT CAST(o_orderdate AS DATE) AS jour, ${ms("o_totalprice")} AS ca,
-               count(o_orderkey) AS achats
-        FROM orders WHERE $V GROUP BY 1),
-      b AS (SELECT min(jour) AS lo, max(jour) AS hi FROM d),
-      m AS (SELECT CAST(unnest(generate_series(CAST(lo AS TIMESTAMP),
-                                               CAST(hi AS TIMESTAMP),
-                                               INTERVAL 1 DAY)) AS DATE) AS jour
-            FROM b)
-      SELECT m.jour, coalesce(d.ca, 0.0) AS ca, coalesce(d.achats, 0) AS achats
-      FROM m LEFT JOIN d ON m.jour = d.jour ORDER BY m.jour""",
-
-    "gold_daily_anomaly" -> s"""
-      WITH d AS (
-        SELECT CAST(o_orderdate AS DATE) AS jour, ${ms("o_totalprice")} AS ca
-        FROM orders WHERE $V GROUP BY 1),
-      b AS (SELECT min(jour) AS lo, max(jour) AS hi FROM d),
-      m AS (SELECT CAST(unnest(generate_series(CAST(lo AS TIMESTAMP),
-                                               CAST(hi AS TIMESTAMP),
-                                               INTERVAL 1 DAY)) AS DATE) AS jour
-            FROM b),
-      dense AS (SELECT m.jour, coalesce(d.ca, 0.0) AS ca
-                FROM m LEFT JOIN d ON m.jour = d.jour),
-      dc AS (SELECT jour, ca, CAST(round(ca * 100) AS BIGINT) AS c FROM dense),
-      roll AS (
-        SELECT jour, ca,
-               CAST(count(c) OVER w AS BIGINT) AS n7,
-               CAST(sum(c) OVER w AS HUGEINT) AS s7,
-               CAST(sum(CAST(c AS HUGEINT) * c) OVER w AS HUGEINT) AS q7
-        FROM dc
-        WINDOW w AS (ORDER BY jour ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)),
-      calc AS (
-        SELECT jour, ca,
-               round(CAST(s7 AS DOUBLE) / n7 / 100.0, 6) AS ma7,
-               CASE WHEN n7 >= 2 THEN
-                 round(sqrt(CAST(n7 * q7 - s7 * s7 AS DOUBLE)
-                            / (n7 * (n7 - 1))) / 100.0, 6)
-               END AS sd7
-        FROM roll)
-      SELECT jour, ca, ma7, sd7,
-             round((ca - ma7) / nullif(sd7, 0.0), 6) AS z,
-             coalesce(abs(round((ca - ma7) / nullif(sd7, 0.0), 6)) > 3.0, false) AS is_anomaly
-      FROM calc ORDER BY jour""",
-
-    "gold_weekly" -> s"""
-      SELECT CAST(date_trunc('week', o_orderdate) AS DATE) AS semaine,
-             ${ms("o_totalprice")} AS ca, count(o_orderkey) AS achats
-      FROM orders WHERE $V GROUP BY 1 ORDER BY semaine""",
-
-    // step guard mirrors Serving.distribution's mx==mn branch (step would
-    // be 0 on a constant-price fact and every bucket NaN)
-    "gold_distribution" -> s"""
-      WITH o AS (SELECT o_totalprice FROM orders WHERE $V),
-      mm AS (SELECT min(o_totalprice) AS mn, max(o_totalprice) AS mx,
-                    CASE WHEN max(o_totalprice) > min(o_totalprice)
-                         THEN (max(o_totalprice) - min(o_totalprice)) / 12
-                         ELSE 1.0 END AS step FROM o)
-      SELECT CAST(least(floor((o_totalprice - (SELECT mn FROM mm)) / (SELECT step FROM mm)), 11) AS BIGINT) AS bucket,
-             count(*) AS count
-      FROM o GROUP BY 1 ORDER BY bucket""",
-
-    // same step guard as gold_distribution (Serving.distributionLabeled
-    // uses step=1.0 when mx==mn)
-    "gold_distribution_labeled" -> s"""
-      WITH o AS (SELECT o_totalprice FROM orders WHERE $V),
-      mm AS (SELECT min(o_totalprice) AS mn, max(o_totalprice) AS mx,
-                    CASE WHEN max(o_totalprice) > min(o_totalprice)
-                         THEN (max(o_totalprice) - min(o_totalprice)) / 12
-                         ELSE 1.0 END AS step FROM o),
-      g AS (SELECT CAST(least(floor((o_totalprice - (SELECT mn FROM mm)) / (SELECT step FROM mm)), 11) AS BIGINT) AS bucket,
-                   count(*) AS count
-            FROM o GROUP BY 1),
-      e AS (SELECT bucket, count,
-              CAST(round(((SELECT mn FROM mm) + bucket * (SELECT step FROM mm)) * 100) AS BIGINT) AS lo,
-              CAST(CASE WHEN bucket = 11 THEN round((SELECT mx FROM mm) * 100)
-                   ELSE round(((SELECT mn FROM mm) + (bucket + 1) * (SELECT step FROM mm)) * 100) END AS BIGINT) AS hi
-            FROM g)
-      SELECT bucket,
-             '[' || CAST(lo // 100 AS VARCHAR) || '.' || lpad(CAST(lo % 100 AS VARCHAR), 2, '0') || ', '
-                 || CAST(hi // 100 AS VARCHAR) || '.' || lpad(CAST(hi % 100 AS VARCHAR), 2, '0')
-                 || CASE WHEN bucket = 11 THEN ']' ELSE ')' END AS label,
-             count
-      FROM e ORDER BY bucket""",
-
-    // edges via exact quantile_cont == Spark's exact `percentile` (same
-    // pairing as the client_scores thresholds); interior edges ed[2:10]
-    // are 1-based-inclusive = Spark's edges.slice(1, 10)
-    "gold_distribution_quantile" -> s"""
-      WITH o AS (SELECT o_totalprice FROM orders WHERE $V),
-      e AS (SELECT quantile_cont(o_totalprice,
-              [0.0, 0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9, 1.0]) AS ed
-            FROM o),
-      b AS (SELECT CAST(len(list_filter((SELECT ed[2:10] FROM e),
-                                        x -> o_totalprice >= x)) AS BIGINT) AS bucket
-            FROM o)
-      SELECT bucket,
-             round((SELECT ed FROM e)[CAST(bucket AS INT) + 1], 2) AS lo,
-             round((SELECT ed FROM e)[CAST(bucket AS INT) + 2], 2) AS hi,
-             count(*) AS count
-      FROM b GROUP BY 1 ORDER BY bucket""",
-
-    // hand-built JSON matches Spark's to_json byte-for-byte because every
-    // field renders engine-independently: quoted string, scale-2 decimal,
-    // bigint — field order is the struct order (mois, ca, achats)
-    "json_export" -> s"""
-      WITH cm AS (SELECT strftime(o_orderdate, '%Y-%m') AS mois,
-                         ${ms("o_totalprice")} AS ca
-                  FROM orders WHERE $V GROUP BY 1)
-      SELECT '{"mois":"' || mois || '","ca":'
-             || CAST(CAST(ca AS DECIMAL(18,2)) AS VARCHAR) || '}' AS json
-      FROM cm ORDER BY mois""",
-
-    "gold_monthly_growth" -> s"""
-      WITH cm AS (SELECT strftime(o_orderdate, '%Y-%m') AS mois, ${ms("o_totalprice")} AS ca
-                  FROM orders WHERE $V GROUP BY 1),
-      lagged AS (SELECT mois, ca, lag(ca) OVER (ORDER BY mois) AS prev_ca FROM cm)
-      SELECT mois, ca, prev_ca,
-             round(ca - prev_ca, 2) AS growth_abs,
-             CASE WHEN prev_ca IS NULL OR prev_ca = 0 THEN NULL
-                  ELSE round((ca - prev_ca) / prev_ca, 6) END AS growth_pct
-      FROM lagged ORDER BY mois""",
-
-    "gold_monthly_cumulative" -> s"""
-      WITH cm AS (SELECT strftime(o_orderdate, '%Y-%m') AS mois, ${ms("o_totalprice")} AS ca
-                  FROM orders WHERE $V GROUP BY 1)
-      SELECT mois, ca,
-             round(sum(ca) OVER (ORDER BY mois ROWS UNBOUNDED PRECEDING), 2) AS ca_cumulative,
-             round(sum(ca) OVER (ORDER BY mois ROWS UNBOUNDED PRECEDING)
-                   / sum(ca) OVER (ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING), 6) AS share_of_total
-      FROM cm ORDER BY mois""",
-
-    "kpis" -> s"""
-      SELECT ca_total, nb_achats, nb_clients, round(ca_total / nb_achats, 2) AS panier_moyen
-      FROM (SELECT ${ms("o_totalprice")} AS ca_total, count(o_orderkey) AS nb_achats,
-                   count(DISTINCT o_custkey) AS nb_clients
-            FROM orders WHERE $V)""",
-
-    // bounded-error oracle (r16 judge item 5): the algebraic fields are
-    // re-derived exactly and gated on equality; the HLL++ estimate is
-    // read back from the dump and echoed only inside its published
-    // bound (rsd 0.01 × 5σ = 0.05), else poisoned — hash equality with
-    // the dump IS the accuracy gate
-    "kpis_approx" -> s"""
-      WITH est AS (SELECT * FROM read_parquet('$OutDirToken/kpis_approx/*.parquet')),
-      x AS (SELECT ${ms("o_totalprice")} AS ca_total, count(o_orderkey) AS nb_achats,
-                   count(DISTINCT o_custkey) AS nb_clients
-            FROM orders WHERE $V)
-      SELECT CASE WHEN est.ca_total = x.ca_total THEN est.ca_total ELSE -1.0 END AS ca_total,
-             CASE WHEN est.nb_achats = x.nb_achats THEN est.nb_achats ELSE -1 END AS nb_achats,
-             CASE WHEN abs(est.nb_clients_approx - x.nb_clients) <= 0.05 * x.nb_clients
-                  THEN est.nb_clients_approx ELSE -1 END AS nb_clients_approx,
-             CASE WHEN est.panier_moyen = round(x.ca_total / x.nb_achats, 2)
-                  THEN est.panier_moyen ELSE -1.0 END AS panier_moyen
-      FROM est, x""",
-
-    // kpis_rewritten runs the exact kpis body at verify time (the
-    // optimizer-rule sketch tier is pinned by PlanShapeSpec) — same oracle
-    "kpis_rewritten" -> s"""
-      SELECT ca_total, nb_achats, nb_clients, round(ca_total / nb_achats, 2) AS panier_moyen
-      FROM (SELECT ${ms("o_totalprice")} AS ca_total, count(o_orderkey) AS nb_achats,
-                   count(DISTINCT o_custkey) AS nb_clients
-            FROM orders WHERE $V)""",
-
-    // kpis_incremental runs its fully-exact merge tier at verify time
-    // (persisted algebraic partial + exact key set; the HLL sketch tier
-    // is pinned by GoldSpec) — same truth as the kpis oracle, with the
-    // exact distinct under the sketch tier's column name
-    "kpis_incremental" -> s"""
-      SELECT ca_total, nb_achats, nb_clients_approx,
-             round(ca_total / nb_achats, 2) AS panier_moyen
-      FROM (SELECT ${ms("o_totalprice")} AS ca_total, count(o_orderkey) AS nb_achats,
-                   count(DISTINCT o_custkey) AS nb_clients_approx
-            FROM orders WHERE $V)""",
-
-    // the incremental refresh's exact fields vs a FULL recompute: the
-    // partial+delta merge must be indistinguishable from one pass
-    "kpis_incremental_exact" -> s"""
-      SELECT ca_total, nb_achats, round(ca_total / nb_achats, 2) AS panier_moyen
-      FROM (SELECT ${ms("o_totalprice")} AS ca_total, count(o_orderkey) AS nb_achats
-            FROM orders WHERE $V)""",
-
-    // the maintained base state converges to the same ranking
-    "top_clients_maintained" -> s"""
-      SELECT o_custkey AS c_custkey, ${ms("o_totalprice")} AS total_spend,
-             count(o_orderkey) AS total_orders
-      FROM orders WHERE $V GROUP BY 1
-      ORDER BY total_spend DESC, c_custkey LIMIT 20""",
-
-    "top_clients" -> s"""
-      SELECT o_custkey AS c_custkey, ${ms("o_totalprice")} AS total_spend,
-             count(o_orderkey) AS total_orders
-      FROM orders WHERE $V GROUP BY 1
-      ORDER BY total_spend DESC, c_custkey LIMIT 20""",
-
-    "client_deciles" -> s"""
-      WITH pc AS (SELECT o_custkey AS c_custkey, ${ms("o_totalprice")} AS total_spend
-                  FROM orders WHERE $V GROUP BY 1),
-      d AS (SELECT *, CAST(ntile(10) OVER (ORDER BY total_spend DESC, c_custkey) AS BIGINT) AS decile
-            FROM pc)
-      SELECT decile, count(*) AS clients, round(sum(total_spend), 2) AS ca,
-             min(total_spend) AS min_spend, max(total_spend) AS max_spend
-      FROM d GROUP BY 1 ORDER BY decile""",
-
-    // rank-formula Gini over ascending exact-cents spend; rank*cents
-    // accumulates in DECIMAL(38,0) on both engines, scalar float ops in
-    // the same order as Serving.revenueGini's driver fold
-    "revenue_gini" -> s"""
-      WITH pc AS (SELECT o_custkey, sum(CAST(round(o_totalprice*100) AS BIGINT)) AS cents
-                  FROM orders WHERE $V GROUP BY 1),
-      r AS (SELECT cents, row_number() OVER (ORDER BY cents, o_custkey) AS rk FROM pc),
-      nn AS (SELECT count(*) AS n FROM pc),
-      g AS (SELECT sum(CAST(rk AS DECIMAL(38,0)) * cents) AS rx,
-                   sum(CAST(cents AS DECIMAL(38,0))) AS sx,
-                   sum(CASE WHEN rk > (SELECT n FROM nn) - (SELECT n FROM nn) // 10
-                            THEN CAST(cents AS DECIMAL(38,0)) ELSE 0 END) AS topx
-            FROM r)
-      SELECT (SELECT n FROM nn) AS n_clients,
-             round(2.0 * CAST(rx AS DOUBLE) / ((SELECT n FROM nn) * CAST(sx AS DOUBLE))
-                   - ((SELECT n FROM nn) + 1.0) / (SELECT n FROM nn), 6) AS gini,
-             round(CAST(topx AS DOUBLE) / CAST(sx AS DOUBLE), 6) AS top10_share
-      FROM g""",
-
-    "top_risk_clients" -> s"""$scoredCte
-      SELECT c_custkey, value_at_risk_12m, recency_days, monetary_12m
-      FROM scored
-      ORDER BY value_at_risk_12m DESC, recency_days DESC, c_custkey LIMIT 20""",
-
-    "repeat_rate" -> s"""
-      SELECT round(avg(CASE WHEN cnt > 1 THEN 1.0 ELSE 0.0 END), 6) AS repeat_rate
-      FROM (SELECT o_custkey, count(o_orderkey) AS cnt FROM orders WHERE $V GROUP BY 1)""",
-
-    "events_hourly" -> """
-      SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS heure, event_type,
-             count(*) AS n_events, round(sum(value), 2) AS total_value
-      FROM events GROUP BY 1, 2 ORDER BY heure, event_type""",
-
-    "events_stream" -> """
-      SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS heure, event_type,
-             count(*) AS n_events, round(sum(value), 2) AS total_value
-      FROM events GROUP BY 1, 2 ORDER BY heure, event_type""",
-
-    // watermarked dedup of the doubled stream == the raw table: ids are
-    // unique, duplicate copies identical, so survival is deterministic
-    "events_dedup_stream" -> """
-      SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type,
-             value, props
-      FROM events ORDER BY event_id""",
-
-    // the JSON ingest path must agree with the parquet path exactly
-    "events_hourly_json" -> """
-      SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS heure, event_type,
-             count(*) AS n_events, round(sum(value), 2) AS total_value
-      FROM events GROUP BY 1, 2 ORDER BY heure, event_type""",
-
-    "events_attribution" -> """
-      WITH c AS (SELECT user_id, ts AS click_ts, value FROM events
-                 WHERE event_type = 'click'),
-      p AS (SELECT event_id AS purchase_id, user_id, ts AS purchase_ts
-            FROM events WHERE event_type = 'purchase')
-      SELECT p.purchase_id, p.user_id, p.purchase_ts,
-        count(*) AS n_clicks,
-        sum(CAST(round(c.value * 100) AS BIGINT)) / 100.0 AS click_value
-      FROM p JOIN c ON c.user_id = p.user_id
-        AND c.click_ts >= p.purchase_ts - INTERVAL 1 HOUR
-        AND c.click_ts < p.purchase_ts
-      GROUP BY 1, 2, 3
-      ORDER BY purchase_id""",
-
-    // LEFT JOIN twin of events_attribution: zero-click purchases keep a
-    // row with n_clicks 0 and NULL click_value on both engines
-    "events_attribution_outer" -> """
-      WITH c AS (SELECT user_id, ts AS click_ts, value FROM events
-                 WHERE event_type = 'click'),
-      p AS (SELECT event_id AS purchase_id, user_id, ts AS purchase_ts
-            FROM events WHERE event_type = 'purchase')
-      SELECT p.purchase_id, p.user_id, p.purchase_ts,
-        count(c.user_id) AS n_clicks,
-        sum(CAST(round(c.value * 100) AS BIGINT)) / 100.0 AS click_value
-      FROM p LEFT JOIN c ON c.user_id = p.user_id
-        AND c.click_ts >= p.purchase_ts - INTERVAL 1 HOUR
-        AND c.click_ts < p.purchase_ts
-      GROUP BY 1, 2, 3
-      ORDER BY purchase_id""",
-
-    // FULL JOIN twin: orphan clicks (no purchase within the window)
-    // aggregate per user under a NULL purchase key
-    "events_attribution_full" -> """
-      WITH c AS (SELECT user_id, ts AS click_ts, value FROM events
-                 WHERE event_type = 'click'),
-      p AS (SELECT event_id AS purchase_id, user_id, ts AS purchase_ts
-            FROM events WHERE event_type = 'purchase')
-      SELECT p.purchase_id, coalesce(p.user_id, c.user_id) AS user_id,
-        p.purchase_ts,
-        count(c.user_id) AS n_clicks,
-        sum(CAST(round(c.value * 100) AS BIGINT)) / 100.0 AS click_value
-      FROM p FULL JOIN c ON c.user_id = p.user_id
-        AND c.click_ts >= p.purchase_ts - INTERVAL 1 HOUR
-        AND c.click_ts < p.purchase_ts
-      GROUP BY 1, 2, 3
-      ORDER BY purchase_id, user_id""",
-
-    "events_upsert_publish" -> """
-      SELECT user_id, count(*) AS n_events, round(sum(value), 2) AS total_value
-      FROM events GROUP BY 1 ORDER BY user_id""",
-
-    "dedup_exact" -> """
-      SELECT min(doc_id) AS doc_id, count(*) AS dup_count
-      FROM documents GROUP BY text ORDER BY doc_id""",
-
-    // same 6dp-rounded cosine recipe as knn_bruteforce; a vector with no
-    // near-dup keeps n_near 0 and a NULL max_cos on both sides
-    "dedup_embedding" -> """
-      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-      p AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-              round(list_cosine_similarity(a.emb, b.emb), 6) AS sim
-            FROM e a JOIN e b ON a.vec_id < b.vec_id),
-      q AS (SELECT * FROM p WHERE sim >= 0.35),
-      u AS (SELECT vec_a AS vec_id, sim FROM q
-            UNION ALL SELECT vec_b, sim FROM q),
-      g AS (SELECT vec_id, count(*) AS n_near, max(sim) AS max_cos FROM u GROUP BY 1)
-      SELECT e.vec_id, coalesce(g.n_near, 0) AS n_near, g.max_cos
-      FROM e LEFT JOIN g USING (vec_id) ORDER BY e.vec_id""",
-
-    // the LSH twin restated whole, same inlined-hyperplane recipe as
-    // knn_lsh: bucket-mate candidate pairs (a < b), 6dp cosine over the
-    // candidates only, threshold, then the dedup_embedding summary shape
-    "dedup_embedding_lsh" -> s"""
-      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-      planes(j, w) AS (VALUES $lshPlanesValues),
-      bits AS (SELECT e.vec_id, p.j // 4 AS tbl,
-                      CASE WHEN list_dot_product(e.emb, p.w) >= 0
-                           THEN 1 << (p.j % 4) ELSE 0 END AS bit
-               FROM e CROSS JOIN planes p),
-      b AS (SELECT vec_id, tbl, CAST(sum(bit) AS BIGINT) AS bucket
-            FROM bits GROUP BY 1, 2),
-      cand AS (SELECT DISTINCT b1.vec_id AS vec_a, b2.vec_id AS vec_b
-               FROM b b1 JOIN b b2 ON b1.tbl = b2.tbl AND b1.bucket = b2.bucket
-               WHERE b1.vec_id < b2.vec_id),
-      q AS (SELECT c.vec_a, c.vec_b,
-                   round(list_cosine_similarity(a.emb, bb.emb), 6) AS sim
-            FROM cand c
-            JOIN e a ON a.vec_id = c.vec_a
-            JOIN e bb ON bb.vec_id = c.vec_b
-            WHERE round(list_cosine_similarity(a.emb, bb.emb), 6) >= 0.35),
-      u AS (SELECT vec_a AS vec_id, sim FROM q
-            UNION ALL SELECT vec_b, sim FROM q),
-      g AS (SELECT vec_id, count(*) AS n_near, max(sim) AS max_cos FROM u GROUP BY 1)
-      SELECT e.vec_id, coalesce(g.n_near, 0) AS n_near, g.max_cos
-      FROM e LEFT JOIN g USING (vec_id) ORDER BY e.vec_id""",
-
-    // MinHash restated end-to-end: distinct 3-word shingles (whole-text
-    // fallback) -> per-shingle tokenHash -> 16-member splitmix64 hash
-    // family -> signed-min signatures -> position-salted band folds ->
-    // band-equality candidates -> signature-match Jaccard estimates.
-    // Every stage is the same 64-bit integer arithmetic as the native
-    // expression, so sig, bands, candidate set and estimates all
-    // cross-check bit-for-bit
-    "dedup_minhash" -> s"""
-      WITH w AS (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS ws FROM documents),
-      sh AS (
-        SELECT DISTINCT doc_id, shingle FROM (
-          SELECT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS shingle
-          FROM w, unnest(range(1, greatest(len(ws) - 1, 1))) AS t(i)
-          WHERE len(ws) >= 3
-          UNION ALL
-          SELECT doc_id, array_to_string(ws, ' ') AS shingle
-          FROM w WHERE len(ws) < 3) u),
-      poly AS (SELECT doc_id, shingle, ${smPoly("shingle")} AS h0 FROM sh),
-      ${smChain("hh", "poly", "doc_id, shingle", "h0", "h")},
-      six AS (SELECT doc_id, h,
-                ((h + ((i::HUGEINT * $SmGolden) & $SmMask)) & $SmMask) AS hi, i
-              FROM hh CROSS JOIN range(0, ${Llm.MinhashHashes}) r(i)),
-      ${smChain("sv", "six", "doc_id, i", "hi", "v")},
-      sig AS (SELECT doc_id, i, min(${smSigned("v")}) AS s
-              FROM sv GROUP BY doc_id, i),
-      bq AS (SELECT doc_id, i // ${Llm.MinhashHashes / Llm.MinhashBands} AS j,
-               ((${smUnsigned("s")} + (((i % ${Llm.MinhashHashes / Llm.MinhashBands} + 1)::HUGEINT * $SmGolden) & $SmMask)) & $SmMask) AS bin
-             FROM sig),
-      ${smChain("bu", "bq", "doc_id, j", "bin", "u")},
-      bacc AS (SELECT doc_id, j,
-                 ((sum(u)::HUGEINT + ((j::HUGEINT * $SmGolden) & $SmMask)) & $SmMask) AS acc
-               FROM bu GROUP BY doc_id, j),
-      ${smChain("bb", "bacc", "doc_id, j", "acc", "bv")},
-      cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-               FROM bb a JOIN bb b
-                 ON a.j = b.j AND a.bv = b.bv AND a.doc_id < b.doc_id),
-      mt AS (SELECT c.doc_a, c.doc_b,
-               sum(CASE WHEN sa.s = sb.s THEN 1 ELSE 0 END) / ${Llm.MinhashHashes}.0 AS est
-             FROM cand c
-             JOIN sig sa ON sa.doc_id = c.doc_a
-             JOIN sig sb ON sb.doc_id = c.doc_b AND sb.i = sa.i
-             GROUP BY 1, 2),
-      perdoc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_candidates,
-                   round(max(est), 4) AS max_est_jaccard
-                 FROM (SELECT doc_a AS doc_id, est FROM mt
-                       UNION ALL SELECT doc_b, est FROM mt) u2 GROUP BY 1),
-      nsh AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shingles
-              FROM sh GROUP BY 1)
-      SELECT n.doc_id, n.n_shingles, coalesce(p.n_candidates, 0) AS n_candidates,
-             p.max_est_jaccard
-      FROM nsh n LEFT JOIN perdoc p USING (doc_id) ORDER BY n.doc_id""",
-
-    // SimHash restated end-to-end in 64-bit integer SQL (the
-    // knn_quantized precedent): per-token poly31-over-codepoints +
-    // splitmix64 via the shared smPoly/smChain helpers (one restatement
-    // of the cross-engine hash, reused by dedup_minhash), then the 64
-    // bit-votes, the 4x16-bit band blocking and the hamming<=12 verify,
-    // matching Llm.dedupSimhash bit-for-bit
-    "dedup_simhash" -> s"""
-      WITH toks AS (
-        SELECT doc_id, unnest(string_split_regex(lower(text), '\\s+')) AS tok
-        FROM documents),
-      poly AS (SELECT doc_id, ${smPoly("tok")} AS h0 FROM toks),
-      ${smChain("th", "poly", "doc_id", "h0", "h")},
-      votes AS (
-        SELECT doc_id, k,
-               sum(CASE WHEN (h >> k) & 1::HUGEINT = 1::HUGEINT
-                   THEN 1 ELSE -1 END) AS v
-        FROM th CROSS JOIN range(0, 64) r(k) GROUP BY doc_id, k),
-      fp AS (
-        SELECT doc_id,
-               sum(CASE WHEN v >= 0 THEN 1::HUGEINT << k
-                   ELSE 0::HUGEINT END)::HUGEINT AS fpu
-        FROM votes GROUP BY doc_id),
-      sh AS (SELECT doc_id, fpu, ${smSigned("fpu")} AS simhash FROM fp),
-      banded AS (
-        SELECT doc_id, simhash, j,
-               ((fpu >> (16 * j)) & 65535::HUGEINT)::BIGINT AS band
-        FROM sh CROSS JOIN range(0, 4) rb(j)),
-      pairs AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-               a.simhash AS sh_a, b.simhash AS sh_b
-        FROM banded a JOIN banded b
-          ON a.j = b.j AND a.band = b.band AND a.doc_id < b.doc_id),
-      near AS (
-        SELECT doc_a, doc_b FROM pairs
-        WHERE bit_count(xor(sh_a, sh_b)) <= 12),
-      cnt AS (
-        SELECT doc_id, count(*) AS n_near FROM (
-          SELECT doc_a AS doc_id FROM near
-          UNION ALL SELECT doc_b FROM near) u GROUP BY doc_id)
-      SELECT s.doc_id, s.simhash, coalesce(c.n_near, 0) AS n_near
-      FROM sh s LEFT JOIN cnt c USING (doc_id) ORDER BY s.doc_id""",
-
-    // same shingle idiom as dedup_ngram; bench set = doc_id < 10
-    "decontaminate" -> """
-      WITH w AS (SELECT doc_id, string_split_regex(lower(text), '\s+') AS ws FROM documents),
-      sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-             FROM w, unnest(range(1, greatest(len(ws) - 1, 1))) AS t(i)
-             WHERE len(ws) >= 3),
-      bench AS (SELECT DISTINCT s FROM sh WHERE doc_id < 10),
-      hits AS (SELECT doc_id, count(DISTINCT s) AS n_contaminated
-               FROM sh JOIN bench USING (s) WHERE doc_id >= 10 GROUP BY 1)
-      SELECT d.doc_id, coalesce(h.n_contaminated, 0) AS n_contaminated,
-             coalesce(h.n_contaminated, 0) > 0 AS is_contaminated
-      FROM (SELECT doc_id FROM documents WHERE doc_id >= 10) d
-      LEFT JOIN hits h USING (doc_id) ORDER BY d.doc_id""",
-
-    // the bloom tier END-TO-END, false positives included: shingle ->
-    // tokenHash (smPoly/smChain, the cross-engine hash), then Spark's
-    // BloomFilter V2 bit placement (two chained Murmur3_x86_32 rounds
-    // via mmLong, k=6 probes of h1*(2^31-1) + i*h2, complement-flip,
-    // mod 524288) re-derives the bench bit set AND each corpus probe —
-    // a doc is flagged iff >=1 shingle has all 6 bits set, exactly the
-    // BloomFilterMightContain semantics. Geometry is pinned EXPLICITLY
-    // on the Spark side (3-arg BloomFilterAggregate constructor):
-    // numBits = 8 * expectedShingles (1<<16) = 524288 (already a
-    // multiple of 64), k = round(8*ln2) = 6, seed 0. The 2-arg
-    // constructor would instead derive a conf-dependent
-    // optimalNumOfBits geometry (1039168/k=11 under defaults) and
-    // silently diverge from this restatement — see the scaladoc on
-    // Llm.decontaminateBloom and SketchProps' geometry pin.
-    "decontaminate_bloom" -> s"""
-      WITH w AS (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS ws FROM documents),
-      sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-             FROM w, unnest(range(1, greatest(len(ws) - 1, 1))) AS t(i)
-             WHERE len(ws) >= 3),
-      hp AS (SELECT doc_id, ${smPoly("s")} AS ph FROM sh),
-      ${smChain("th", "hp", "doc_id", "ph", "h")},
-      hs AS MATERIALIZED (SELECT DISTINCT h FROM th),
-      ${mmLong("mA", "hs", "h", "h", "0::HUGEINT", "h1")},
-      ${mmLong("mB", "mA", "h, h1", "h", "h1", "h2")},
-      pos AS MATERIALIZED (
-        SELECT h, (CASE WHEN a < 0 THEN -a - 1 ELSE a END) % 524288 AS pos
-        FROM (SELECT h,
-                ${mmSigned("h1")} * 2147483647 + i * ${mmSigned("h2")} AS a
-              FROM mB CROSS JOIN range(1, 7) t(i))),
-      benchbits AS (SELECT DISTINCT pos FROM pos
-                    JOIN (SELECT DISTINCT h FROM th WHERE doc_id < 10) b USING (h)),
-      flagged AS (SELECT p.h FROM pos p LEFT JOIN benchbits b USING (pos)
-                  GROUP BY p.h HAVING bool_and(b.pos IS NOT NULL)),
-      hits AS (SELECT doc_id, count(DISTINCT h) AS n_flagged
-               FROM th JOIN flagged USING (h) WHERE doc_id >= 10 GROUP BY 1)
-      SELECT d.doc_id, coalesce(h.n_flagged, 0) AS n_flagged,
-             coalesce(h.n_flagged, 0) > 0 AS is_flagged
-      FROM (SELECT doc_id FROM documents WHERE doc_id >= 10) d
-      LEFT JOIN hits h USING (doc_id) ORDER BY d.doc_id""",
-
-    "pii_scrub" -> """
-      SELECT doc_id,
-        CAST(len(regexp_extract_all(text, '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}')) AS BIGINT) AS n_emails,
-        CAST(len(regexp_extract_all(text, '\(?[0-9]{3}\)?[-. ][0-9]{3}[-. ][0-9]{4}')) AS BIGINT) AS n_phones,
-        CAST(length(regexp_replace(regexp_replace(text,
-          '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}', '<EMAIL>', 'g'),
-          '\(?[0-9]{3}\)?[-. ][0-9]{3}[-. ][0-9]{4}', '<PHONE>', 'g')) AS BIGINT) AS scrubbed_len
-      FROM documents ORDER BY doc_id""",
-
-    "dedup_ngram" -> """
-      WITH w AS (SELECT doc_id, string_split_regex(lower(text), '\s+') AS ws FROM documents),
-      sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS shingle
-             FROM w, unnest(range(1, greatest(len(ws) - 1, 1))) AS t(i)
-             WHERE len(ws) >= 3),
-      sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-      p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-            FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2),
-      j AS (SELECT doc_a, doc_b,
-              round(inter * 1.0 / (sa.n + sb.n - inter), 6) AS jaccard
-            FROM p JOIN sz sa ON p.doc_a = sa.doc_id JOIN sz sb ON p.doc_b = sb.doc_id)
-      SELECT doc_a AS doc_id, doc_b AS best_match, jaccard
-      FROM j
-      QUALIFY row_number() OVER (PARTITION BY doc_a ORDER BY jaccard DESC, doc_b) = 1
-      ORDER BY doc_id""",
-
-    // transitive closure via recursive CTE == the Spark side's
-    // the prefix tier answers to the PLAIN all-pairs statement at the
-    // same threshold — completeness of the candidate scheme is the claim
-    "dedup_ngram_prefix" -> """
-      WITH w AS (SELECT doc_id, string_split_regex(lower(text), '\s+') AS ws FROM documents),
-      sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS shingle
-             FROM w, unnest(range(1, greatest(len(ws) - 1, 1))) AS t(i)
-             WHERE len(ws) >= 3),
-      sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-      p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-            FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2)
-      SELECT doc_a, doc_b,
-             round(inter * 1.0 / (sa.n + sb.n - inter), 6) AS jaccard
-      FROM p JOIN sz sa ON p.doc_a = sa.doc_id JOIN sz sb ON p.doc_b = sb.doc_id
-      WHERE round(inter * 1.0 / (sa.n + sb.n - inter), 6) >= 0.5
-      ORDER BY doc_a, doc_b""",
-
-    // containment C = inter/min(na,nb); inner = the smaller side
-    // (tie -> higher doc_id), mirroring Llm.containmentPairsFrom
-    "dedup_containment" -> """
-      WITH w AS (SELECT doc_id, string_split_regex(lower(text), '\s+') AS ws FROM documents),
-      sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS shingle
-             FROM w, unnest(range(1, greatest(len(ws) - 1, 1))) AS t(i)
-             WHERE len(ws) >= 3),
-      sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-      p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-            FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2),
-      c AS (SELECT doc_a, doc_b, sa.n AS na, sb.n AS nb,
-              round(inter * 1.0 / least(sa.n, sb.n), 6) AS containment
-            FROM p JOIN sz sa ON p.doc_a = sa.doc_id JOIN sz sb ON p.doc_b = sb.doc_id)
-      SELECT CASE WHEN na < nb THEN doc_a WHEN nb < na THEN doc_b
-                  ELSE greatest(doc_a, doc_b) END AS inner_doc,
-             CASE WHEN na < nb THEN doc_b WHEN nb < na THEN doc_a
-                  ELSE least(doc_a, doc_b) END AS outer_doc,
-             containment
-      FROM c WHERE containment >= 0.8
-      ORDER BY inner_doc, outer_doc""",
-
-    // large-star/small-star component labels (min doc_id per component)
-    "dedup_clusters" -> """
-      WITH RECURSIVE
-      w AS (SELECT doc_id, string_split_regex(lower(text), '\s+') AS ws FROM documents),
-      sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS shingle
-             FROM w, unnest(range(1, greatest(len(ws) - 1, 1))) AS t(i)
-             WHERE len(ws) >= 3),
-      sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-      p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-            FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2),
-      j AS (SELECT doc_a, doc_b,
-              round(inter * 1.0 / (sa.n + sb.n - inter), 6) AS jaccard
-            FROM p JOIN sz sa ON p.doc_a = sa.doc_id JOIN sz sb ON p.doc_b = sb.doc_id),
-      und AS (SELECT doc_a AS a, doc_b AS b FROM j WHERE jaccard >= 0.5
-              UNION SELECT doc_b, doc_a FROM j WHERE jaccard >= 0.5),
-      reach AS (
-        SELECT doc_id AS node, doc_id AS r FROM documents
-        UNION
-        SELECT u.b AS node, reach.r FROM reach JOIN und u ON u.a = reach.node),
-      lab AS (SELECT node AS doc_id, min(r) AS cluster_id FROM reach GROUP BY 1)
-      SELECT l.doc_id, l.cluster_id, c.cluster_size
-      FROM lab l JOIN (SELECT cluster_id, count(*) AS cluster_size
-                       FROM lab GROUP BY 1) c USING (cluster_id)
-      ORDER BY doc_id""",
-
-    // hash-percentile arithmetic must match Prep.hashPct bit-for-bit:
-    // high bits of a Knuth multiplicative hash, floor over exact doubles
-    // exact tier joins on text equality (== the Spark side's sha2 join,
-    // collisions aside); near tier mirrors the shingle-intersection join
-    "dedup_incremental" -> """
-      WITH w AS (SELECT doc_id, string_split_regex(lower(text), '\s+') AS ws FROM documents),
-      sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-             FROM w, unnest(range(1, greatest(len(ws) - 1, 1))) AS t(i)
-             WHERE len(ws) >= 3),
-      sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-      inter AS (SELECT a.doc_id AS new_id, b.doc_id AS old_id, count(*) AS inter
-                FROM sh a JOIN sh b ON a.s = b.s
-                WHERE a.doc_id >= 400 AND b.doc_id < 400
-                GROUP BY 1, 2),
-      near AS (SELECT new_id AS doc_id, count(*) AS n_near_dups
-               FROM inter JOIN sz sn ON inter.new_id = sn.doc_id
-                          JOIN sz so ON inter.old_id = so.doc_id
-               WHERE round(inter * 1.0 / (sn.n + so.n - inter), 6) >= 0.5
-               GROUP BY 1),
-      ex AS (SELECT DISTINCT n.doc_id
-             FROM documents n JOIN documents o ON n.text = o.text
-             WHERE n.doc_id >= 400 AND o.doc_id < 400)
-      SELECT d.doc_id,
-        (ex.doc_id IS NOT NULL) AS is_exact_dup,
-        coalesce(near.n_near_dups, 0) AS n_near_dups
-      FROM documents d
-      LEFT JOIN ex ON d.doc_id = ex.doc_id
-      LEFT JOIN near ON d.doc_id = near.doc_id
-      WHERE d.doc_id >= 400
-      ORDER BY d.doc_id""",
-
-    "csv_roundtrip" -> s"""
-      SELECT o_orderstatus, count(*) AS n,
-        ${ms("o_totalprice")} AS total,
-        count(DISTINCT o_custkey) AS n_customers,
-        min(o_orderdate) AS first_date,
-        max(o_orderdate) AS last_date
-      FROM orders GROUP BY 1 ORDER BY 1""",
-
-    // the ORC reader must reproduce the parquet-path aggregate exactly
-    "orc_roundtrip" -> s"""
-      SELECT o_orderstatus, count(*) AS n,
-        ${ms("o_totalprice")} AS total,
-        count(DISTINCT o_custkey) AS n_customers,
-        min(o_orderdate) AS first_date,
-        max(o_orderdate) AS last_date
-      FROM orders GROUP BY 1 ORDER BY 1""",
-
-    "ca_grouping_sets" -> s"""
-      WITH f AS (
-        SELECT coalesce(n_name, 'Inconnu') AS pays,
-               year(o_orderdate) AS annee, o_totalprice
-        FROM orders
-        LEFT JOIN customer ON o_custkey = c_custkey
-        LEFT JOIN nation ON c_nationkey = n_nationkey
-        WHERE $V)
-      SELECT coalesce(pays, 'ALL') AS pays,
-             CAST(coalesce(annee, -1) AS BIGINT) AS annee,
-             ${ms("o_totalprice")} AS ca
-      FROM f GROUP BY GROUPING SETS ((pays, annee), (pays), (annee))
-      ORDER BY pays, annee""",
-
-    "table_profile" -> s"""
-      SELECT * FROM ($profileExactBody)
-      ORDER BY column_name""",
-
-    // bounded-error oracle: exact null counts gated on equality, HLL++
-    // distincts (rsd 0.02 × 5σ = 0.10, absolute floor 1 for the tiny
-    // enum columns) echoed inside the bound, else poisoned
-    "table_profile_approx" -> s"""
-      WITH est AS (SELECT * FROM read_parquet('$OutDirToken/table_profile_approx/*.parquet')),
-      ex AS ($profileExactBody)
-      SELECT ex.column_name,
-             CASE WHEN est.n_null = ex.n_null THEN est.n_null ELSE -1 END AS n_null,
-             CASE WHEN abs(est.n_distinct - ex.n_distinct) <= greatest(0.10 * ex.n_distinct, 1)
-                  THEN est.n_distinct ELSE -1 END AS n_distinct
-      FROM ex JOIN est USING (column_name)
-      ORDER BY column_name""",
-
-    "repetition_score" -> repetitionSql,
-
-    // A-ES priority u^(1/n_chars): u from the ppm-granularity Knuth
-    // hash (seed 13 — independent of sample_mix's 7 and split_assign's
-    // 11), +0.5 to stay inside (0,1); 9dp-rounded rank, doc_id ties
-    // high-bits reduction + skip-self map, restated verbatim; the join
-    // annotates each negative's source
-    "negative_samples" -> """
-      WITH nn AS (SELECT count(DISTINCT doc_id) AS n FROM documents),
-      base AS (SELECT doc_id, source FROM documents),
-      d AS (SELECT doc_id, source AS src_a, j AS neg_rank,
-              ((doc_id * 31 + j + 29) * 2654435761) % 4294967296 AS h
-            FROM base CROSS JOIN (SELECT unnest([1, 2, 3]) AS j)),
-      r AS (SELECT doc_id, src_a, neg_rank,
-              CAST(floor(h * ((SELECT n FROM nn) - 1) / 4294967296) AS BIGINT) AS r
-            FROM d),
-      x AS (SELECT doc_id, neg_rank,
-              CASE WHEN r >= doc_id THEN r + 1 ELSE r END AS neg_id, src_a
-            FROM r)
-      SELECT x.doc_id, CAST(x.neg_rank AS BIGINT) AS neg_rank, x.neg_id,
-             (x.src_a = b.source) AS same_source
-      FROM x JOIN base b ON x.neg_id = b.doc_id
-      ORDER BY x.doc_id, x.neg_rank""",
-
-    "sample_priority" -> """
-      WITH s AS (SELECT doc_id, source, n_chars,
-        (CAST(floor(((doc_id + 13) * 2654435761) % 4294967296 * 1000000
-                    / 4294967296) AS BIGINT) + 0.5) / 1000000.0 AS u
-        FROM documents)
-      SELECT doc_id, source, n_chars,
-             CASE WHEN n_chars > 0 THEN round(pow(u, 1.0 / n_chars), 9)
-                  ELSE 0.0 END AS priority
-      FROM s ORDER BY priority DESC, doc_id LIMIT 100""",
-
-    "sample_mix" -> """
-      WITH s AS (SELECT doc_id, source,
-        CAST(floor(((doc_id + 7) * 2654435761) % 4294967296 * 100
-                   / 4294967296) AS BIGINT) AS pct
-        FROM documents)
-      SELECT doc_id, source, pct FROM s
-      WHERE pct < CASE WHEN source = 'src0' THEN 100
-                       WHEN source = 'src1' THEN 80
-                       WHEN source = 'src2' THEN 50
-                       WHEN source = 'src3' THEN 25
-                       ELSE 10 END
-      ORDER BY doc_id""",
-
-    "split_assign" -> """
-      WITH s AS (SELECT source,
-        CAST(floor(((doc_id + 11) * 2654435761) % 4294967296 * 100
-                   / 4294967296) AS BIGINT) AS pct
-        FROM documents)
-      SELECT source,
-        CAST(sum(CASE WHEN pct < 90 THEN 1 ELSE 0 END) AS BIGINT) AS n_train,
-        CAST(sum(CASE WHEN pct >= 90 AND pct < 95 THEN 1 ELSE 0 END) AS BIGINT) AS n_val,
-        CAST(sum(CASE WHEN pct >= 95 THEN 1 ELSE 0 END) AS BIGINT) AS n_test
-      FROM s GROUP BY source ORDER BY source""",
-
-    "sample_per_source" -> """
-      WITH r AS (SELECT source, doc_id,
-        row_number() OVER (PARTITION BY source
-          ORDER BY ((doc_id + 13) * 2654435761) % 4294967296, doc_id)
-          AS rank
-        FROM documents)
-      SELECT source, doc_id, CAST(rank AS BIGINT) AS rank FROM r
-      WHERE rank <= 5
-      ORDER BY source, rank""",
-
-    "doc_chunks" -> """
-      WITH w AS (SELECT doc_id, string_split_regex(text, '\s+') AS ws FROM documents),
-      k AS (SELECT doc_id, ws, 1 + CASE WHEN len(ws) > 32
-              THEN CAST(ceil((len(ws) - 32) / 24.0) AS BIGINT)
-              ELSE 0 END AS n_chunks FROM w),
-      c AS (SELECT doc_id, i AS chunk_idx,
-              list_slice(ws, i * 24 + 1, i * 24 + 32) AS toks
-            FROM k, unnest(range(0, n_chunks)) AS t(i))
-      SELECT doc_id, chunk_idx,
-        CAST(len(toks) AS BIGINT) AS n_tokens,
-        array_to_string(toks, ' ') AS chunk_text
-      FROM c
-      ORDER BY doc_id, chunk_idx""",
-
-    "pack_sequences" -> """
-      WITH RECURSIVE w AS (SELECT doc_id, string_split_regex(text, '\s+') AS ws FROM documents),
-      k AS (SELECT doc_id, ws, 1 + CASE WHEN len(ws) > 32
-              THEN CAST(ceil((len(ws) - 32) / 24.0) AS BIGINT)
-              ELSE 0 END AS n_chunks FROM w),
-      c AS (SELECT doc_id, i AS chunk_idx,
-              CAST(len(list_slice(ws, i * 24 + 1, i * 24 + 32)) AS BIGINT) AS n_tokens,
-              ((doc_id + 17) * 2654435761) % 4294967296 AS h
-            FROM k, unnest(range(0, n_chunks)) AS t(i)),
-      o AS (SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx, n_tokens,
-              CAST(floor(h * 8 / 4294967296) AS BIGINT) AS grp,
-              row_number() OVER (
-                PARTITION BY CAST(floor(h * 8 / 4294967296) AS BIGINT)
-                ORDER BY h, doc_id, chunk_idx) AS rk
-            FROM c),
-      pack AS (
-        SELECT grp, rk, doc_id, chunk_idx, n_tokens,
-               CAST(0 AS BIGINT) AS seq_id, n_tokens AS fill
-        FROM o WHERE rk = 1
-        UNION ALL
-        SELECT o.grp, o.rk, o.doc_id, o.chunk_idx, o.n_tokens,
-          CASE WHEN p.fill + o.n_tokens > 64 THEN p.seq_id + 1 ELSE p.seq_id END,
-          CASE WHEN p.fill + o.n_tokens > 64 THEN o.n_tokens ELSE p.fill + o.n_tokens END
-        FROM pack p JOIN o ON o.grp = p.grp AND o.rk = p.rk + 1)
-      SELECT grp, seq_id, doc_id, chunk_idx, n_tokens,
-        fill - n_tokens AS tok_offset
-      FROM pack ORDER BY grp, seq_id, tok_offset""",
-
-    "text_stats" -> textStatsSql,
-
-    "lang_id" -> """
-      WITH h AS (
-        SELECT doc_id, lang,
-          CAST(len(regexp_extract_all(lower(text), '\b(the|and|of|is|in|to)\b')) AS BIGINT) AS en_hits,
-          CAST(len(regexp_extract_all(lower(text), '\b(le|la|les|et|des|une)\b')) AS BIGINT) AS fr_hits,
-          CAST(len(regexp_extract_all(lower(text), '\b(der|die|und|das|ist|ein)\b')) AS BIGINT) AS de_hits,
-          CAST(len(regexp_extract_all(lower(text), '\b(el|los|que|una|es)\b')) AS BIGINT) AS es_hits,
-          CAST(len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) AS BIGINT) AS zh_hits
-        FROM documents),
-      h2 AS (
-        SELECT *,
-          CASE WHEN zh_hits > 0 THEN 'zh'
-               WHEN fr_hits > en_hits AND fr_hits >= de_hits AND fr_hits >= es_hits THEN 'fr'
-               WHEN de_hits > en_hits AND de_hits >= es_hits THEN 'de'
-               WHEN es_hits > en_hits THEN 'es'
-               ELSE 'en' END AS lang_pred
-        FROM h)
-      SELECT *, (lang_pred = lang) AS is_correct FROM h2 ORDER BY doc_id""",
-
-    "knn_bruteforce" -> """
-      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-      p AS (SELECT vec_id AS probe_id, emb AS pemb FROM e WHERE vec_id < 10),
-      s AS (SELECT probe_id, e.vec_id AS neighbor_id,
-              round(list_cosine_similarity(pemb, emb), 6) AS sim
-            FROM p CROSS JOIN e WHERE e.vec_id <> p.probe_id),
-      r AS (SELECT probe_id, neighbor_id, sim,
-              CAST(row_number() OVER (PARTITION BY probe_id ORDER BY sim DESC, neighbor_id) AS BIGINT) AS rank
-            FROM s)
-      SELECT probe_id, neighbor_id, rank, sim FROM r
-      WHERE rank <= 5 ORDER BY probe_id, rank""",
-
-    // sign-LSH ANN restated whole: the ±1 hyperplanes are deterministic
-    // (splitmix64 of plane*4096+dim), so they inline as literals and
-    // DuckDB re-derives the per-table bucket ids, the bucket-mate
-    // candidate union, and the cosine top-k over candidates — the full
-    // ranked result, not just the candidate set. Sign decisions are
-    // float-safe cross-engine: the minimum |dot| margin over every
-    // (vector, plane) at all three SFs is ~5e-6, eight orders above
-    // double accumulation noise (measured round 14).
-    "knn_lsh" -> s"""
-      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-      planes(j, w) AS (VALUES $lshPlanesValues),
-      bits AS (SELECT e.vec_id, p.j // 4 AS tbl,
-                      CASE WHEN list_dot_product(e.emb, p.w) >= 0
-                           THEN 1 << (p.j % 4) ELSE 0 END AS bit
-               FROM e CROSS JOIN planes p),
-      b AS (SELECT vec_id, tbl, CAST(sum(bit) AS BIGINT) AS bucket
-            FROM bits GROUP BY 1, 2),
-      cand AS (SELECT DISTINCT pb.vec_id AS probe_id, b2.vec_id
-               FROM b pb JOIN b b2 ON pb.tbl = b2.tbl AND pb.bucket = b2.bucket
-               WHERE pb.vec_id < 10 AND b2.vec_id <> pb.vec_id),
-      s AS (SELECT c.probe_id, c.vec_id AS neighbor_id,
-                   round(list_cosine_similarity(ep.emb, en.emb), 6) AS sim
-            FROM cand c
-            JOIN e ep ON ep.vec_id = c.probe_id
-            JOIN e en ON en.vec_id = c.vec_id),
-      r AS (SELECT probe_id, neighbor_id, sim,
-              CAST(row_number() OVER (PARTITION BY probe_id ORDER BY sim DESC, neighbor_id) AS BIGINT) AS rank
-            FROM s)
-      SELECT probe_id, neighbor_id, rank, sim FROM r
-      WHERE rank <= 5 ORDER BY probe_id, rank""",
-
-    // int8 scalar quantization restated: same affine codebook (per-dim
-    // min/span), same quantize/dequantize expression order, then the
-    // knn_bruteforce scoring contract over the reconstructed vectors —
-    // promoted from rows-only because every step is deterministic float
-    // arithmetic both engines execute identically
-    "knn_quantized" -> """
-      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-      x AS (SELECT unnest(emb) AS x, unnest(range(len(emb))) AS pos FROM e),
-      d AS (SELECT pos, min(x) AS lo, max(x) AS hi FROM x GROUP BY 1),
-      cb AS (SELECT list(lo ORDER BY pos) AS clo,
-                    list(CASE WHEN hi - lo > 0 THEN hi - lo ELSE 1.0 END ORDER BY pos) AS cspan
-             FROM d),
-      deq AS (SELECT vec_id,
-                list_transform(range(len(emb)), i ->
-                  clo[i+1]
-                  + (least(floor((emb[i+1] - clo[i+1]) / cspan[i+1] * 256), CAST(255 AS DOUBLE)) + 0.5)
-                    * cspan[i+1] / 256.0) AS emb
-              FROM e CROSS JOIN cb),
-      p AS (SELECT vec_id AS probe_id, emb AS pemb FROM e WHERE vec_id < 10),
-      s AS (SELECT probe_id, deq.vec_id AS neighbor_id,
-              round(list_cosine_similarity(pemb, deq.emb), 6) AS sim
-            FROM p CROSS JOIN deq WHERE deq.vec_id <> p.probe_id),
-      r AS (SELECT probe_id, neighbor_id, sim,
-              CAST(row_number() OVER (PARTITION BY probe_id ORDER BY sim DESC, neighbor_id) AS BIGINT) AS rank
-            FROM s)
-      SELECT probe_id, neighbor_id, rank, sim FROM r
-      WHERE rank <= 5 ORDER BY probe_id, rank""",
-
-    // IVF search restated end-to-end from the PERSISTED coarse-quantizer
-    // centroids (Verify substitutes ArtifactsToken with the real path at
-    // dump time): squared-L2 argmin cell assignment with ties to the
-    // lower cell, nprobe=8 nearest-cell probing per probe vector, then
-    // the shared 6dp-cosine top-k contract over cell-mates. Assignment
-    // margins are float-safe cross-engine: the Spark side evaluates the
-    // same explicit (x-c)² fold, not MLlib's norm-trick distance
-    "knn_ivf" -> s"""
-      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-      cen AS (SELECT cell, centroid FROM read_parquet('$ArtifactsToken/ivf_full/*.parquet')),
-      d AS (SELECT e.vec_id, cen.cell, e.emb,
-              list_sum(list_transform(range(1, len(e.emb)+1),
-                i -> (e.emb[i]-cen.centroid[i])*(e.emb[i]-cen.centroid[i]))) AS d2,
-              row_number() OVER (PARTITION BY e.vec_id
-                ORDER BY list_sum(list_transform(range(1, len(e.emb)+1),
-                  i -> (e.emb[i]-cen.centroid[i])*(e.emb[i]-cen.centroid[i]))), cen.cell) AS rn
-            FROM e CROSS JOIN cen),
-      a AS (SELECT vec_id, cell, emb FROM d WHERE rn = 1),
-      p AS (SELECT vec_id AS probe_id, emb AS pemb, cell FROM d
-            WHERE vec_id < 10 AND rn <= 8),
-      s AS (SELECT p.probe_id, a.vec_id AS neighbor_id,
-              round(list_cosine_similarity(p.pemb, a.emb), 6) AS sim
-            FROM p JOIN a USING (cell) WHERE a.vec_id <> p.probe_id),
-      r AS (SELECT probe_id, neighbor_id, sim,
-              CAST(row_number() OVER (PARTITION BY probe_id ORDER BY sim DESC, neighbor_id) AS BIGINT) AS rank
-            FROM s)
-      SELECT probe_id, neighbor_id, rank, sim FROM r
-      WHERE rank <= 5 ORDER BY probe_id, rank""",
-
-    // bounded-error oracle from the persisted SIGNED components: gate
-    // (a) pairwise orthonormality of the component vectors (≤1e-6
-    // deviation), (b) the explained-variance ratio as var_samp of the
-    // row projections over the summed per-dimension var_samp (vᵀΣv /
-    // trace Σ; n-vs-n−1 cancels; estimate rounded 4dp → 1e-4 bound),
-    // (c) the top-|loading| dimension exactly and its 3dp-rounded
-    // loading (5.1e-4 bound covers rint-vs-round edges)
-    "embedding_pca" -> s"""
-      WITH est AS (SELECT * FROM read_parquet('$OutDirToken/embedding_pca/*.parquet')),
-      comp AS (SELECT component, loading FROM read_parquet('$ArtifactsToken/pca_components/*.parquet')),
-      e AS (SELECT CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-      ortho AS (SELECT max(abs(
-          list_sum(list_transform(range(1, len(a.loading)+1),
-            i -> a.loading[i] * b.loading[i]))
-          - CASE WHEN a.component = b.component THEN 1.0 ELSE 0.0 END)) AS dev
-        FROM comp a CROSS JOIN comp b),
-      proj AS (SELECT c.component,
-          var_samp(list_sum(list_transform(range(1, len(e.emb)+1),
-            i -> e.emb[i] * c.loading[i]))) AS lam
-        FROM e CROSS JOIN comp c GROUP BY c.component),
-      tot AS (SELECT sum(vd) AS t FROM (
-          SELECT var_samp(emb[ix.i]) AS vd
-          FROM e CROSS JOIN (SELECT unnest(range(1,
-            (SELECT max(len(emb)) FROM e) + 1)) AS i) ix
-          GROUP BY ix.i)),
-      top AS (SELECT component, ix.i - 1 AS top_dim_x, abs(loading[ix.i]) AS al,
-          row_number() OVER (PARTITION BY component
-            ORDER BY abs(loading[ix.i]) DESC, ix.i) AS rn
-        FROM comp CROSS JOIN (SELECT unnest(range(1,
-          (SELECT max(len(loading)) FROM comp) + 1)) AS i) ix)
-      SELECT est.component,
-        CASE WHEN (SELECT dev FROM ortho) <= 1e-6
-              AND abs(est.explained_variance - proj.lam / (SELECT t FROM tot)) <= 1e-4
-             THEN est.explained_variance ELSE -1.0 END AS explained_variance,
-        CASE WHEN est.top_dim = top.top_dim_x THEN est.top_dim ELSE -1 END AS top_dim,
-        CASE WHEN abs(est.top_abs_loading - top.al) <= 5.1e-4
-             THEN est.top_abs_loading ELSE -1.0 END AS top_abs_loading
-      FROM est
-      JOIN proj USING (component)
-      JOIN (SELECT * FROM top WHERE rn = 1) top USING (component)
-      ORDER BY component""",
-
-    // incremental IVF maintenance restated from the persisted vec_id<400
-    // index: delta-only scan, same argmin + lower-cell tie-break, 6dp
-    // squared distance
-    "knn_ivf_incremental" -> s"""
-      WITH del AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-                   FROM embeddings WHERE vec_id >= 400),
-      cen AS (SELECT cell, centroid FROM read_parquet('$ArtifactsToken/ivf_idx/*.parquet')),
-      d AS (SELECT del.vec_id, cen.cell,
-              list_sum(list_transform(range(1, len(del.emb)+1),
-                i -> (del.emb[i]-cen.centroid[i])*(del.emb[i]-cen.centroid[i]))) AS d2
-            FROM del CROSS JOIN cen)
-      SELECT vec_id, cell, round(d2, 6) AS dist2 FROM (
-        SELECT vec_id, cell, d2,
-               row_number() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS rn
-        FROM d)
-      WHERE rn = 1 ORDER BY vec_id""",
-
-    // same selection contract as knn_bruteforce — shared oracle shape
-    "knn_topk_agg" -> """
-      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-      p AS (SELECT vec_id AS probe_id, emb AS pemb FROM e WHERE vec_id < 10),
-      s AS (SELECT probe_id, e.vec_id AS neighbor_id,
-              round(list_cosine_similarity(pemb, emb), 6) AS sim
-            FROM p CROSS JOIN e WHERE e.vec_id <> p.probe_id),
-      r AS (SELECT probe_id, neighbor_id, sim,
-              CAST(row_number() OVER (PARTITION BY probe_id ORDER BY sim DESC, neighbor_id) AS BIGINT) AS rank
-            FROM s)
-      SELECT probe_id, neighbor_id, rank, sim FROM r
-      WHERE rank <= 5 ORDER BY probe_id, rank""",
-
-    // container sizes are closed-form in the text length: BMP 54 + 3wh
-    // (w = 4*(2 + len%15), h = 2 + len%11), WAV 44 + 2*len, y4m
-    // 32 + (1 + len%4)*774 — see Multimodal.MediaGen
-    "media_meta" -> """
-      WITH d AS (SELECT doc_id, octet_length(encode(text)) AS len FROM documents)
-      SELECT doc_id,
-        CASE WHEN doc_id % 3 = 0 THEN 'image'
-             WHEN doc_id % 3 = 1 THEN 'audio'
-             ELSE 'video' END AS kind,
-        CAST(CASE WHEN doc_id % 3 = 0
-               THEN 54 + 3 * (4 * (2 + len % 15)) * (2 + len % 11)
-             WHEN doc_id % 3 = 1 THEN 44 + 2 * len
-             ELSE 32 + (1 + len % 4) * 774 END AS BIGINT) AS n_bytes
-      FROM d ORDER BY doc_id""",
-
-    // full decode+feature restatement, same closed-form basis as
-    // media_meta: geometry and frame counts are functions of the text
-    // length (BMP w=4*(2+len%15) h=2+len%11 single frame; WAV
-    // ceil(len/2000) sample windows, floor 1; y4m 32x16, 1+len%4
-    // frames), and the L1-normalized 8-bin histogram sums to exactly
-    // 1.0 for any non-empty region (0.0 only for a zero-sample WAV
-    // window) — so DuckDB re-derives every output cell including the
-    // frame fan-out. Hostile-header rejection stays gated by the
-    // MultimodalProps fuzz suite; this oracle pins the happy path
-    // end-to-end.
-    "multimodal_features" -> """
-      WITH d AS (SELECT doc_id, octet_length(encode(text)) AS len FROM documents),
-      m AS (SELECT doc_id, len,
-        CASE WHEN doc_id % 3 = 0 THEN 'image'
-             WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'video' END AS kind,
-        CASE WHEN doc_id % 3 = 0 THEN 1
-             WHEN doc_id % 3 = 1 THEN greatest(1, CAST(ceil(len / 2000.0) AS INT))
-             ELSE 1 + len % 4 END AS n_frames,
-        CASE WHEN doc_id % 3 = 0 THEN 4 * (2 + len % 15)
-             WHEN doc_id % 3 = 1 THEN 0 ELSE 32 END AS width,
-        CASE WHEN doc_id % 3 = 0 THEN 2 + len % 11
-             WHEN doc_id % 3 = 1 THEN 0 ELSE 16 END AS height,
-        CAST(CASE WHEN doc_id % 3 = 0
-               THEN 54 + 3 * (4 * (2 + len % 15)) * (2 + len % 11)
-             WHEN doc_id % 3 = 1 THEN 44 + 2 * len
-             ELSE 32 + (1 + len % 4) * 774 END AS BIGINT) AS n_bytes
-       FROM d)
-      SELECT doc_id, kind, n_bytes, width, height, n_frames,
-             CAST(unnest(range(0, n_frames)) AS INT) AS frame_idx,
-             CASE WHEN kind = 'audio' AND len = 0 THEN 0.0 ELSE 1.0 END AS feat_l1
-      FROM m
-      ORDER BY doc_id, frame_idx""",
-
-    "ca_rollup" -> s"""
-      WITH f AS (
-        SELECT coalesce(n_name, 'Inconnu') AS pays,
-               strftime(o_orderdate, '%Y-%m') AS mois, o_totalprice
-        FROM orders
-        LEFT JOIN customer ON o_custkey = c_custkey
-        LEFT JOIN nation ON c_nationkey = n_nationkey
-        WHERE $V)
-      SELECT coalesce(pays, 'ALL') AS pays, coalesce(mois, 'ALL') AS mois,
-             ${ms("o_totalprice")} AS ca
-      FROM f GROUP BY ROLLUP(pays, mois) ORDER BY pays, mois""",
-
-    "ca_cube" -> s"""
-      WITH f AS (
-        SELECT coalesce(n_name, 'Inconnu') AS pays,
-               CAST(year(o_orderdate) AS BIGINT) AS annee, o_totalprice
-        FROM orders
-        LEFT JOIN customer ON o_custkey = c_custkey
-        LEFT JOIN nation ON c_nationkey = n_nationkey
-        WHERE $V)
-      SELECT coalesce(pays, 'ALL') AS pays, coalesce(annee, -1) AS annee,
-             ${ms("o_totalprice")} AS ca
-      FROM f GROUP BY CUBE(pays, annee) ORDER BY pays, annee""",
-
-    "vocab_top" -> """
-      SELECT word, count(*) AS n, count(DISTINCT doc_id) AS docs
-      FROM (SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS word
-            FROM documents)
-      WHERE word <> ''
-      GROUP BY 1 ORDER BY n DESC, word LIMIT 50""",
-
-    // the sketch tier recounts exactly, so it shares the exact oracle
-    "vocab_top_approx" -> """
-      SELECT word, count(*) AS n, count(DISTINCT doc_id) AS docs
-      FROM (SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS word
-            FROM documents)
-      WHERE word <> ''
-      GROUP BY 1 ORDER BY n DESC, word LIMIT 50""",
-
-    // same tokenization; ln n - ln N mirrors the Scala shape exactly
-    "doc_logprob" -> logProbSql,
-
-    // source-grain TF-IDF: rank on the ROUNDED score with lexical ties,
-    // like tfidf_top_terms
-    "source_top_terms" -> """
-      WITH w AS (SELECT doc_id, source, string_split_regex(lower(text), '\s+') AS ws FROM documents),
-      tok AS (SELECT source, unnest(ws) AS word FROM w),
-      st AS (SELECT source, word, count(*) AS tf FROM tok WHERE word != '' GROUP BY 1, 2),
-      s AS (SELECT CAST(count(DISTINCT source) AS DOUBLE) AS ns FROM documents),
-      df AS (SELECT word, count(*) AS df FROM st GROUP BY 1),
-      r AS (SELECT source, word, tf, df.df,
-              round(tf * ln((SELECT ns FROM s) / df.df), 9) AS score,
-              row_number() OVER (PARTITION BY source
-                ORDER BY round(tf * ln((SELECT ns FROM s) / df.df), 9) DESC, word) AS rk
-            FROM st JOIN df USING (word))
-      SELECT source, CAST(rk AS BIGINT) AS rk, word, tf, df, score
-      FROM r WHERE rk <= 5 ORDER BY source, rk""",
-
-    // PMI over corpus bigram counts with self-consistent margins; the
-    // float expression shape matches Search.termPmiFrom term-for-term
-    // (CAST-to-double placement included) so 9 dp rounding hash-matches
-    "term_pmi" -> """
-      WITH w AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'),
-                        x -> x != '') AS ws FROM documents),
-      bg AS (SELECT ws[i] AS w1, ws[i+1] AS w2, count(*) AS c12
-             FROM w, unnest(range(1, greatest(len(ws), 1))) AS t(i)
-             WHERE len(ws) >= 2
-             GROUP BY 1, 2),
-      l AS (SELECT w1, sum(c12) AS c1 FROM bg GROUP BY 1),
-      r AS (SELECT w2, sum(c12) AS c2 FROM bg GROUP BY 1),
-      b AS (SELECT CAST(sum(c12) AS DOUBLE) AS btot FROM bg)
-      SELECT bg.w1, bg.w2, bg.c12,
-             round(ln(CAST(bg.c12 AS DOUBLE) * (SELECT btot FROM b)
-                      / (l.c1 * CAST(r.c2 AS DOUBLE))), 9) AS pmi
-      FROM bg JOIN l USING (w1) JOIN r USING (w2)
-      WHERE bg.c12 >= 5
-      ORDER BY pmi DESC, w1, w2 LIMIT 50""",
-
-    // add-k bigram LM: P(w2|w1) = (c12+k)/(c1+k*V), k=0.5, V = corpus
-    // vocabulary (distinct tokens over ALL docs, including 1-word docs);
-    // per-doc mean weights each bigram occurrence, 6 dp
-    "bigram_logprob" -> """
-      WITH w AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'),
-                        x -> x != '') AS ws FROM documents),
-      v AS (SELECT CAST(count(DISTINCT tok) AS DOUBLE) AS vs
-            FROM (SELECT unnest(ws) AS tok FROM w)),
-      bgdoc AS (SELECT doc_id, ws[i] AS w1, ws[i+1] AS w2, count(*) AS cnt
-                FROM w, unnest(range(1, greatest(len(ws), 1))) AS t(i)
-                WHERE len(ws) >= 2
-                GROUP BY 1, 2, 3),
-      bg AS (SELECT w1, w2, sum(cnt) AS c12 FROM bgdoc GROUP BY 1, 2),
-      l AS (SELECT w1, sum(c12) AS c1 FROM bg GROUP BY 1)
-      SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_bigrams,
-             round(sum(cnt * (ln(c12 + 0.5) - ln(c1 + 0.5 * (SELECT vs FROM v))))
-                   / sum(cnt), 6) AS avg_logprob
-      FROM bgdoc JOIN bg USING (w1, w2) JOIN l USING (w1)
-      GROUP BY 1 ORDER BY doc_id""",
-
-    // the capstone composes the three audited quality oracles verbatim —
-    // identical thresholds and first-match-wins reason order as the engine
-    "corpus_filter" -> s"""
-      WITH ts AS (SELECT doc_id, quality_score FROM ($textStatsSql)),
-      rep AS (SELECT doc_id, repeat_frac FROM ($repetitionSql)),
-      lp AS (SELECT doc_id, avg_logprob FROM ($logProbSql)),
-      j AS (SELECT ts.doc_id, ts.quality_score, rep.repeat_frac, lp.avg_logprob
-            FROM ts JOIN rep USING (doc_id) LEFT JOIN lp USING (doc_id)),
-      d AS (SELECT *,
-              CASE WHEN quality_score < 0.5 THEN 'low_quality'
-                   WHEN repeat_frac > 0.05 THEN 'repetitive'
-                   WHEN avg_logprob IS NULL OR avg_logprob < -3.6 THEN 'unusual_lm'
-                   ELSE 'keep' END AS reason
-            FROM j)
-      SELECT doc_id, quality_score, repeat_frac, avg_logprob, reason,
-             CAST(reason = 'keep' AS BIGINT) AS keep
-      FROM d ORDER BY doc_id""",
-
-    // shares vocab_top's tokenization shape; both engines rank on the
-    // 9dp-ROUNDED tf*ln(N/df) with a lexical tie-break
-    "tfidf_top_terms" -> """
-      WITH tok AS (SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS word
-                   FROM documents),
-      tf AS (SELECT doc_id, word, count(*) AS tf FROM tok WHERE word <> '' GROUP BY 1, 2),
-      dfq AS (SELECT word, count(*) AS df FROM tf GROUP BY 1),
-      n AS (SELECT count(*) AS n FROM documents),
-      s AS (SELECT tf.doc_id, tf.word, tf.tf, dfq.df,
-              round(tf.tf * ln(CAST(n.n AS DOUBLE) / dfq.df), 9) AS score
-            FROM tf JOIN dfq USING (word) CROSS JOIN n),
-      r AS (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, word) AS rk
-            FROM s)
-      SELECT doc_id, rk, word, tf, df, score FROM r WHERE rk <= 3 ORDER BY doc_id, rk""",
-
-    // identical arithmetic shape to Search.bm25 (k1=1.2, b=0.75,
-    // idf = ln(1 + (N-df+0.5)/(df+0.5)), N/avglen over docs with tokens)
-    "bm25_search" -> """
-      WITH tok AS (SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS word
-                   FROM documents),
-      tok2 AS (SELECT * FROM tok WHERE word <> ''),
-      dl AS (SELECT doc_id, count(*) AS len FROM tok2 GROUP BY 1),
-      st AS (SELECT count(*) AS n, avg(len) AS avglen FROM dl),
-      tf AS (SELECT doc_id, word, count(*) AS tf FROM tok2
-             WHERE word IN ('spark', 'shuffle', 'join') GROUP BY 1, 2),
-      dfq AS (SELECT word, count(*) AS df FROM tf GROUP BY 1),
-      c AS (SELECT tf.doc_id,
-              ln(1.0 + (CAST(st.n AS DOUBLE) - dfq.df + 0.5) / (dfq.df + 0.5))
-                * (tf.tf * 2.2) / (tf.tf + 1.2 * (1 - 0.75 + 0.75 * dl.len / st.avglen)) AS contrib
-            FROM tf JOIN dfq USING (word) JOIN dl USING (doc_id) CROSS JOIN st)
-      SELECT doc_id, round(sum(contrib), 9) AS score, count(*) AS n_terms
-      FROM c GROUP BY 1 ORDER BY score DESC, doc_id LIMIT 10""",
-
-    // every |A∩B| cell from one self-join; jaccard closed by
-    // inclusion-exclusion over the per-year totals
-    "customer_overlap_matrix" -> s"""
-      WITH yc AS (SELECT DISTINCT o_custkey, year(o_orderdate) AS yr
-                  FROM orders WHERE $V),
-      t AS (SELECT yr, count(*) AS n FROM yc GROUP BY 1),
-      p AS (SELECT a.yr AS y1, b.yr AS y2, count(*) AS n_both
-            FROM yc a JOIN yc b
-              ON a.o_custkey = b.o_custkey AND a.yr < b.yr
-            GROUP BY 1, 2)
-      SELECT p.y1, p.y2,
-             t1.n AS n1, t2.n AS n2, p.n_both,
-             round(p.n_both / (t1.n + t2.n - p.n_both), 6) AS jaccard
-      FROM p JOIN t t1 ON p.y1 = t1.yr JOIN t t2 ON p.y2 = t2.yr
-      ORDER BY y1, y2""",
-
-    // the oracle states the END state after the forget: the chosen key's
-    // rows gone, every other row intact
-    "gdpr_delete" -> s"""
-      WITH cand AS (SELECT o_custkey FROM orders WHERE $V GROUP BY 1
-                    HAVING count(DISTINCT year(o_orderdate)) = 1),
-      t AS (SELECT coalesce(min(o_custkey), -1) AS k FROM cand),
-      f AS (SELECT year(o_orderdate) AS annee, o_totalprice
-            FROM orders WHERE $V AND o_custkey <> (SELECT k FROM t))
-      SELECT annee, count(*) AS n, ${ms("o_totalprice")} AS ca
-      FROM f GROUP BY 1 ORDER BY annee""",
-
-    // the restated 1996 doubles every cent; every other year must equal
-    // the plain aggregate — the oracle states the END state directly
-    "partition_overwrite" -> s"""
-      WITH f AS (SELECT year(o_orderdate) AS annee,
-               CAST(round(o_totalprice*100) AS BIGINT) AS cents
-             FROM orders WHERE $V)
-      SELECT annee, count(*) AS n,
-             sum(cents * CASE WHEN annee = 1996 THEN 2 ELSE 1 END)/100.0 AS ca
-      FROM f GROUP BY 1 ORDER BY annee""",
-
-    // v2 restated from the base table (price doubled for 1996 — exact in
-    // cents since prices carry 2dp); same keys both sides by construction,
-    // so added/removed are structurally absent here but the operator
-    // classifies them
-    "snapshot_diff" -> s"""
-      WITH v1 AS (SELECT o_orderkey, year(o_orderdate) AS annee,
-                         CAST(round(o_totalprice*100) AS BIGINT) AS c
-                  FROM orders WHERE $V),
-      v2 AS (SELECT o_orderkey, annee,
-                    c * CASE WHEN annee = 1996 THEN 2 ELSE 1 END AS c
-             FROM v1),
-      j AS (SELECT coalesce(v1.annee, v2.annee) AS annee,
-              CASE WHEN v1.o_orderkey IS NULL THEN 'added'
-                   WHEN v2.o_orderkey IS NULL THEN 'removed'
-                   WHEN v1.c != v2.c THEN 'changed' ELSE 'same' END AS status,
-              coalesce(v2.c, 0) - coalesce(v1.c, 0) AS dc
-            FROM v1 FULL JOIN v2 ON v1.o_orderkey = v2.o_orderkey)
-      SELECT annee, status, count(*) AS n, CAST(sum(dc) AS BIGINT)/100.0 AS delta
-      FROM j GROUP BY 1, 2 ORDER BY annee, status""",
-
-    // the Horner fold restated one step per CTE; DuckDB date-date is
-    // already integer days
-    "table_checksum" -> """
-      WITH s0 AS (SELECT o_orderkey % 2147483647 AS acc,
-               o_custkey % 2147483647 AS v1,
-               ascii(o_orderstatus) AS v2,
-               CAST(round(o_totalprice*100) AS BIGINT) % 2147483647 AS v3,
-               (CAST(o_orderdate AS DATE) - DATE '1970-01-01') AS v4
-             FROM orders),
-      s1 AS (SELECT (acc * 1000003 + v1) % 2147483647 AS acc, v2, v3, v4 FROM s0),
-      s2 AS (SELECT (acc * 1000003 + v2) % 2147483647 AS acc, v3, v4 FROM s1),
-      s3 AS (SELECT (acc * 1000003 + v3) % 2147483647 AS acc, v4 FROM s2),
-      s4 AS (SELECT (acc * 1000003 + v4) % 2147483647 AS acc FROM s3)
-      SELECT count(*) AS n_rows, CAST(sum(acc) AS BIGINT) AS checksum FROM s4""",
-
-    // the compaction audit row restated from the SOURCE table: rows and
-    // digests must survive the physical rewrite unchanged, and the output
-    // file count is ⌈rows / 5000⌉ by the compactor's sizing rule
-    "compact_files" -> """
-      WITH s0 AS (SELECT o_orderkey % 2147483647 AS acc,
-               o_custkey % 2147483647 AS v1,
-               ascii(o_orderstatus) AS v2,
-               CAST(round(o_totalprice*100) AS BIGINT) % 2147483647 AS v3,
-               (CAST(o_orderdate AS DATE) - DATE '1970-01-01') AS v4
-             FROM orders),
-      s1 AS (SELECT (acc * 1000003 + v1) % 2147483647 AS acc, v2, v3, v4 FROM s0),
-      s2 AS (SELECT (acc * 1000003 + v2) % 2147483647 AS acc, v3, v4 FROM s1),
-      s3 AS (SELECT (acc * 1000003 + v3) % 2147483647 AS acc, v4 FROM s2),
-      s4 AS (SELECT (acc * 1000003 + v4) % 2147483647 AS acc FROM s3),
-      t AS (SELECT count(*) AS n, CAST(coalesce(sum(acc), 0) AS BIGINT) AS cs FROM s4)
-      SELECT n AS rows_before, n AS rows_after,
-             CAST(greatest(1, ceil(n / 5000.0)) AS BIGINT) AS files_after,
-             cs AS checksum_before, cs AS checksum_after
-      FROM t""",
-
-    // keep_rate reads the ROUNDED share (the engine computes it from the
-    // published 6dp share, so the oracle must too)
-    "sample_temperature" -> """
-      WITH s AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY 1),
-      t AS (SELECT source, n_docs, pow(n_docs, 0.7) AS w FROM s)
-      SELECT source, n_docs, round(w, 6) AS weight,
-             round(w / sum(w) OVER (), 6) AS share,
-             round(least(1.0, 1000 * round(w / sum(w) OVER (), 6) / n_docs), 6)
-               AS keep_rate
-      FROM t ORDER BY source""",
-
-    // correlations restated from the same exact integer moments — never
-    // from a float-summing corr() aggregate
-    "feature_corr" -> s"""$featsCte,
-      mom AS (SELECT count(*) AS n,
-        sum(freq_12m) AS sx,
-        sum(CAST(round(monetary_12m*100) AS BIGINT)) AS sy,
-        sum(recency_days) AS sz,
-        sum(freq_12m*freq_12m) AS sxx,
-        sum(CAST(round(monetary_12m*100) AS BIGINT)*CAST(round(monetary_12m*100) AS BIGINT)) AS syy,
-        sum(recency_days*recency_days) AS szz,
-        sum(freq_12m*CAST(round(monetary_12m*100) AS BIGINT)) AS sxy,
-        sum(freq_12m*recency_days) AS sxz,
-        sum(CAST(round(monetary_12m*100) AS BIGINT)*recency_days) AS syz
-        FROM feats)
-      SELECT x_name, y_name, CAST(n AS BIGINT) AS n, corr FROM (
-        SELECT 'freq_12m' AS x_name, 'monetary_12m' AS y_name, n,
-          round((n*CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sy AS DOUBLE)) /
-            sqrt((n*CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE)) *
-                 (n*CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE)*CAST(sy AS DOUBLE))), 6) AS corr
-        FROM mom
-        UNION ALL
-        SELECT 'freq_12m', 'recency_days', n,
-          round((n*CAST(sxz AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sz AS DOUBLE)) /
-            sqrt((n*CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE)) *
-                 (n*CAST(szz AS DOUBLE) - CAST(sz AS DOUBLE)*CAST(sz AS DOUBLE))), 6)
-        FROM mom
-        UNION ALL
-        SELECT 'monetary_12m', 'recency_days', n,
-          round((n*CAST(syz AS DOUBLE) - CAST(sy AS DOUBLE)*CAST(sz AS DOUBLE)) /
-            sqrt((n*CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE)*CAST(sy AS DOUBLE)) *
-                 (n*CAST(szz AS DOUBLE) - CAST(sz AS DOUBLE)*CAST(sz AS DOUBLE))), 6)
-        FROM mom)
-      ORDER BY x_name, y_name""",
-
-    // the Welch read-out from exact cents moments; hash split identical
-    // to split_assign's integer twin
-    // smoothed target encoding: enc = (sum + m*mu)/(n + m), m=20, all
-    // from exact cents; mu's division order (stot/100.0/ntot) matches
-    // the Scala scalar fold bit-for-bit
-    "target_encode" -> s"""
-      WITH f AS (SELECT coalesce(n_name, 'Inconnu') AS pays, o_totalprice
-                 FROM orders
-                 LEFT JOIN customer ON o_custkey = c_custkey
-                 LEFT JOIN nation ON c_nationkey = n_nationkey
-                 WHERE $V),
-      a AS (SELECT pays, sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS s_cents,
-                   count(*) AS n
-            FROM f GROUP BY 1),
-      g AS (SELECT sum(s_cents) AS stot, sum(n) AS ntot FROM a)
-      SELECT pays, n,
-             round((s_cents / 100.0 +
-                    20.0 * ((SELECT stot FROM g) / 100.0 / (SELECT ntot FROM g)))
-                   / (n + 20.0), 6) AS enc
-      FROM a ORDER BY pays""",
-
-    "ab_metrics" -> s"""
-      WITH s AS (SELECT
-          CASE WHEN floor(((o_custkey + 17) * 2654435761) % 4294967296 * 100
-                          / 4294967296) < 50 THEN 1 ELSE 0 END AS a,
-          CAST(round(o_totalprice*100) AS BIGINT) AS c
-        FROM orders WHERE $V),
-      m AS (SELECT
-          CAST(sum(a) AS BIGINT) AS n_a, CAST(sum(1 - a) AS BIGINT) AS n_b,
-          sum(CASE WHEN a = 1 THEN c ELSE 0 END) AS s_a,
-          sum(CASE WHEN a = 0 THEN c ELSE 0 END) AS s_b,
-          sum(CASE WHEN a = 1 THEN c*c ELSE 0 END) AS ss_a,
-          sum(CASE WHEN a = 0 THEN c*c ELSE 0 END) AS ss_b
-        FROM s),
-      r AS (SELECT n_a, n_b,
-          CAST(s_a AS DOUBLE) / nullif(n_a, 0) / 100.0 AS mean_a,
-          CAST(s_b AS DOUBLE) / nullif(n_b, 0) / 100.0 AS mean_b,
-          (n_a * CAST(ss_a AS DOUBLE) - CAST(s_a AS DOUBLE)*CAST(s_a AS DOUBLE))
-            / nullif(n_a * (n_a - 1), 0) / 10000.0 AS var_a,
-          (n_b * CAST(ss_b AS DOUBLE) - CAST(s_b AS DOUBLE)*CAST(s_b AS DOUBLE))
-            / nullif(n_b * (n_b - 1), 0) / 10000.0 AS var_b
-        FROM m)
-      SELECT n_a, n_b, round(mean_a, 6) AS mean_a, round(mean_b, 6) AS mean_b,
-             round(var_a, 6) AS var_a, round(var_b, 6) AS var_b,
-             round((mean_a - mean_b)
-                   / nullif(sqrt(var_a / n_a + var_b / n_b), 0), 6) AS welch_t
-      FROM r""",
-
-    // is_anomaly reads the ROUNDED z, like the engine's withColumn chain
-    "gold_daily_anomaly_robust" -> s"""
-      WITH d AS (
-        SELECT CAST(o_orderdate AS DATE) AS jour, ${ms("o_totalprice")} AS ca
-        FROM orders WHERE $V GROUP BY 1),
-      b AS (SELECT min(jour) AS lo, max(jour) AS hi FROM d),
-      m AS (SELECT CAST(unnest(generate_series(CAST(lo AS TIMESTAMP),
-                                               CAST(hi AS TIMESTAMP),
-                                               INTERVAL 1 DAY)) AS DATE) AS jour
-            FROM b),
-      sr AS (SELECT m.jour, coalesce(d.ca, 0.0) AS ca
-             FROM m LEFT JOIN d ON m.jour = d.jour),
-      st AS (SELECT quantile_cont(ca, 0.5) AS med FROM sr),
-      st2 AS (SELECT quantile_cont(abs(ca - (SELECT med FROM st)), 0.5) AS mad FROM sr),
-      z AS (SELECT jour, ca,
-              round((ca - (SELECT med FROM st)) /
-                nullif(1.4826 * (SELECT mad FROM st2), 0.0), 6) AS robust_z
-            FROM sr)
-      SELECT jour, ca, robust_z,
-             coalesce(abs(robust_z) > 3.5, false) AS is_anomaly
-      FROM z ORDER BY jour""",
-
-    // v1 rows (≤1995, written without the column) must read back as null
-    "schema_evolution" -> s"""
-      WITH u AS (SELECT o_orderstatus, o_totalprice,
-               CASE WHEN year(o_orderdate) > 1995 THEN o_orderdate END AS o_orderdate
-             FROM orders)
-      SELECT o_orderstatus, count(*) AS n,
-             ${ms("o_totalprice")} AS total,
-             count(o_orderdate) AS n_dated,
-             min(o_orderdate) AS first_date,
-             max(o_orderdate) AS last_date
-      FROM u GROUP BY 1 ORDER BY 1""",
-
-    // plan rates restated verbatim, then the ppm keep decision per doc
-    "sample_mix_temperature" -> """
-      WITH s AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY 1),
-      t AS (SELECT source, n_docs, pow(n_docs, 0.7) AS w FROM s),
-      p AS (SELECT source,
-              round(least(1.0, 1000 * round(w / sum(w) OVER (), 6) / n_docs), 6)
-                AS keep_rate
-            FROM t),
-      p2 AS (SELECT source, keep_rate,
-               CAST(round(keep_rate * 1000000) AS BIGINT) AS keep_ppm FROM p),
-      j AS (SELECT d.source, d.doc_id, p2.keep_ppm, p2.keep_rate
-            FROM documents d JOIN p2 USING (source))
-      SELECT source, count(*) AS n_docs,
-        CAST(sum(CASE WHEN floor(((doc_id + 23) * 2654435761) % 4294967296
-                              * 1000000 / 4294967296) < keep_ppm
-                 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-        min(keep_rate) AS keep_rate
-      FROM j GROUP BY 1 ORDER BY source""",
-
-    // the dense-series prologue, then OLS as ratios of exact moments
-    "spend_trend" -> s"""
-      WITH d AS (
-        SELECT CAST(o_orderdate AS DATE) AS jour, ${ms("o_totalprice")} AS ca
-        FROM orders WHERE $V GROUP BY 1),
-      b AS (SELECT min(jour) AS lo, max(jour) AS hi FROM d),
-      m AS (SELECT CAST(unnest(generate_series(CAST(lo AS TIMESTAMP),
-                                               CAST(hi AS TIMESTAMP),
-                                               INTERVAL 1 DAY)) AS DATE) AS jour
-            FROM b),
-      sr AS (SELECT m.jour, coalesce(d.ca, 0.0) AS ca
-             FROM m LEFT JOIN d ON m.jour = d.jour),
-      x0 AS (SELECT (jour - (SELECT min(jour) FROM sr)) AS x,
-               CAST(round(ca*100) AS BIGINT) AS y FROM sr),
-      mom AS (SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-               sum(x*x) AS sxx, sum(y*y) AS syy, sum(x*y) AS sxy FROM x0)
-      SELECT CAST(n AS BIGINT) AS n,
-        round(((n*CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sy AS DOUBLE)) /
-               nullif(n*CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE), 0))
-              / 100.0, 6) AS slope_per_day,
-        round((CAST(sy AS DOUBLE)/n -
-               (n*CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sy AS DOUBLE)) /
-               nullif(n*CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE), 0) *
-               (CAST(sx AS DOUBLE)/n)) / 100.0, 6) AS intercept,
-        round(((n*CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sy AS DOUBLE)) *
-               (n*CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sy AS DOUBLE))) /
-              nullif((n*CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE)) *
-               (n*CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE)*CAST(sy AS DOUBLE)), 0),
-              6) AS r2
-      FROM mom""",
-
-    // MERGE semantics stated as the full-outer-join rewrite: matched U
-    // accumulates, matched D drops, unmatched U inserts, unmatched D no-ops
-    "merge_upsert" -> s"""
-      WITH base AS (SELECT o_custkey, count(*) AS n_orders,
-               CAST(sum(round(o_totalprice*100)) AS BIGINT) AS cents
-             FROM orders WHERE $V AND o_orderdate <= DATE '1995-12-31' GROUP BY 1),
-      chg AS (SELECT o_custkey, count(*) AS c_n,
-               CAST(sum(round(o_totalprice*100)) AS BIGINT) AS c_cents,
-               CASE WHEN o_custkey % 7 = 0 THEN 'D' ELSE 'U' END AS op
-             FROM orders WHERE $V AND o_orderdate > DATE '1995-12-31' GROUP BY 1, 4)
-      SELECT coalesce(base.o_custkey, chg.o_custkey) AS o_custkey,
-             CAST(coalesce(base.n_orders, 0) + coalesce(chg.c_n, 0) AS BIGINT) AS n_orders,
-             round((coalesce(base.cents, 0) + coalesce(chg.c_cents, 0)) / 100.0, 2) AS total
-      FROM base FULL JOIN chg ON base.o_custkey = chg.o_custkey
-      WHERE chg.op IS NULL OR chg.op = 'U'
-      ORDER BY o_custkey""",
-
-    // ordered-wedge triangle enumeration (a<b<c); every triangle counts
-    // once for each of its three corners
-    "copurchase_triangles" -> """
-      WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-      e AS (SELECT DISTINCT x.p AS a, y.p AS b
-            FROM items x JOIN items y ON x.o = y.o AND x.p < y.p),
-      t AS (SELECT e1.a, e1.b, e2.b AS c
-            FROM e e1 JOIN e e2 ON e1.b = e2.a
-                      JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b)
-      SELECT p_partkey, count(*) AS n_triangles
-      FROM (SELECT a AS p_partkey FROM t
-            UNION ALL SELECT b FROM t
-            UNION ALL SELECT c FROM t)
-      GROUP BY 1 ORDER BY n_triangles DESC, p_partkey LIMIT 20""",
-
-    // DOULION tier promoted to a full oracle (r15): the edge coin is
-    // pmod(xxhash64(a, b, 42L), 2) — three chained XXH64 long-steps
-    // restated in wrapping HUGEINT arithmetic (validated bit-equal to
-    // Spark on probes) — then the SAME triangle SQL as the exact tier
-    // runs on the kept edges and counts scale by invP³ = 8. The
-    // estimate itself is deterministic (hash coin, not randomness), so
-    // exact cross-engine equality is the right gate.
-    "copurchase_triangles_approx" -> s"""
-      WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-      e0 AS (SELECT DISTINCT x.p AS a, y.p AS b
-             FROM items x JOIN items y ON x.o = y.o AND x.p < y.p),
-      eh AS (SELECT a, b, a::HUGEINT AS ah, b::HUGEINT AS bh FROM e0),
-      ${xxLong("cn1", "eh", "a, b, bh", "ah", "42::HUGEINT", "h1")},
-      ${xxLong("cn2", "cn1", "a, b", "bh", "h1", "h2")},
-      ${xxLong("cn3", "cn2", "a, b", "42::HUGEINT", "h2", "h3")},
-      e AS (SELECT a, b FROM cn3 WHERE h3 % 2 = 0),
-      t AS (SELECT e1.a, e1.b, e2.b AS c
-            FROM e e1 JOIN e e2 ON e1.b = e2.a
-                      JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b)
-      SELECT p_partkey, CAST(count(*) * 8 AS BIGINT) AS n_triangles_est
-      FROM (SELECT a AS p_partkey FROM t
-            UNION ALL SELECT b FROM t
-            UNION ALL SELECT c FROM t)
-      GROUP BY 1 ORDER BY n_triangles_est DESC, p_partkey LIMIT 20""",
-
-    // pair counts weighted by word frequency; tokenization identical to
-    // vocab_top's; generate_series(1,0) is empty so 1-char words vanish
-    "bpe_pairs" -> """
-      WITH v AS (SELECT word, count(*) AS n
-                 FROM (SELECT unnest(string_split_regex(lower(text), '\s+')) AS word
-                       FROM documents)
-                 WHERE word <> '' GROUP BY 1),
-      p AS (SELECT substr(word, i, 2) AS pair, n
-            FROM (SELECT word, n, unnest(generate_series(1, length(word) - 1)) AS i
-                  FROM v))
-      SELECT pair, CAST(sum(n) AS BIGINT) AS n
-      FROM p GROUP BY 1 ORDER BY n DESC, pair LIMIT 50""",
-
-    "shuffle_deterministic" -> s"""
-      SELECT doc_id,
-             row_number() OVER (ORDER BY (doc_id + 7) * ${Prep.KnuthC} % 4294967296, doc_id) - 1 AS pos,
-             (row_number() OVER (ORDER BY (doc_id + 7) * ${Prep.KnuthC} % 4294967296, doc_id) - 1) // 64 AS shard
-      FROM documents ORDER BY doc_id""",
-
-    "cohort_retention" -> s"""
-      WITH o AS (
-        SELECT o_custkey, date_trunc('month', o_orderdate) AS md
-        FROM orders WHERE $V),
-      c AS (SELECT o_custkey, md,
-                   min(md) OVER (PARTITION BY o_custkey) AS cd FROM o)
-      SELECT strftime(cd, '%Y-%m') AS cohort,
-             CAST(datediff('month', cd, md) AS BIGINT) AS month_offset,
-             count(DISTINCT o_custkey) AS active_clients
-      FROM c WHERE datediff('month', cd, md) <= 12
-      GROUP BY 1, 2 ORDER BY cohort, month_offset""",
-
-    // the melt round-trips to the long grain: same oracle as cohort_retention
-    "cohort_retention_melt" -> s"""
-      WITH o AS (
-        SELECT o_custkey, date_trunc('month', o_orderdate) AS md
-        FROM orders WHERE $V),
-      c AS (SELECT o_custkey, md,
-                   min(md) OVER (PARTITION BY o_custkey) AS cd FROM o)
-      SELECT strftime(cd, '%Y-%m') AS cohort,
-             CAST(datediff('month', cd, md) AS BIGINT) AS month_offset,
-             count(DISTINCT o_custkey) AS active_clients
-      FROM c WHERE datediff('month', cd, md) <= 12
-      GROUP BY 1, 2 ORDER BY cohort, month_offset""",
-
-    "cohort_retention_pivot" -> s"""
-      WITH o AS (
-        SELECT o_custkey, date_trunc('month', o_orderdate) AS md
-        FROM orders WHERE $V),
-      c AS (SELECT o_custkey, md,
-                   min(md) OVER (PARTITION BY o_custkey) AS cd FROM o),
-      r AS (SELECT strftime(cd, '%Y-%m') AS cohort,
-                   datediff('month', cd, md) AS off,
-                   count(DISTINCT o_custkey) AS ac
-            FROM c WHERE datediff('month', cd, md) <= 12 GROUP BY 1, 2)
-      SELECT cohort,
-             ${(0 to 12).map(i =>
-                 s"CAST(coalesce(sum(CASE WHEN off = $i THEN ac END), 0) AS BIGINT) AS m$i")
-               .mkString(",\n             ")}
-      FROM r GROUP BY cohort ORDER BY cohort""",
-
-    "basket_pairs" -> """
-      WITH items AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
-      n AS (SELECT count(DISTINCT ok) AS total FROM items),
-      pairs AS (
-        SELECT a.p AS p1, b.p AS p2, count(*) AS together
-        FROM items a JOIN items b ON a.ok = b.ok AND a.p < b.p
-        GROUP BY 1, 2 HAVING count(*) >= 3),
-      freq AS (SELECT p, count(*) AS n FROM items GROUP BY 1)
-      SELECT p1, p2, together,
-             round(CAST(together AS DOUBLE) * (SELECT total FROM n) / (f1.n * f2.n), 6) AS lift
-      FROM pairs JOIN freq f1 ON p1 = f1.p JOIN freq f2 ON p2 = f2.p
-      ORDER BY lift DESC, p1, p2 LIMIT 20""",
-
-    // the oracle may all-pairs a test-scale vocabulary; the engine may not
-    "typo_pairs" -> """
-      WITH vocab AS (
-        SELECT DISTINCT word FROM (
-          SELECT unnest(string_split_regex(lower(p_name), '\s+')) AS word FROM part)
-        WHERE length(word) >= 3)
-      SELECT a.word AS w1, b.word AS w2, levenshtein(a.word, b.word) AS dist
-      FROM vocab a JOIN vocab b ON a.word < b.word
-      WHERE levenshtein(a.word, b.word) <= 1
-      ORDER BY w1, w2""",
-
-    // transitive closure of the same candidate graph: recursive min-label
-    // propagation — min reachable word == the alternating-star component
-    // label (binary string order agrees across engines on this ascii vocab)
-    "typo_clusters" -> """
-      WITH RECURSIVE vocab AS (
-        SELECT DISTINCT word FROM (
-          SELECT unnest(string_split_regex(lower(p_name), '\s+')) AS word FROM part)
-        WHERE length(word) >= 3),
-      e AS (SELECT a.word AS a, b.word AS b FROM vocab a JOIN vocab b
-            ON a.word < b.word AND levenshtein(a.word, b.word) <= 1),
-      und AS (SELECT a, b FROM e UNION SELECT b AS a, a AS b FROM e),
-      cc(node, comp) AS (
-        SELECT DISTINCT a AS node, a AS comp FROM und
-        UNION
-        SELECT und.a AS node, cc.comp FROM cc JOIN und ON und.b = cc.node),
-      lab AS (SELECT node, min(comp) AS cluster_rep FROM cc GROUP BY 1)
-      SELECT node AS word, cluster_rep,
-             count(*) OVER (PARTITION BY cluster_rep) AS cluster_size
-      FROM lab ORDER BY cluster_rep, word""",
-
-    // keep-first span dedup: same block split as doc_chunks' slices,
-    // winner by (doc_id, blk) row_number, re-assembly ordered by blk
-    "span_dedup" -> """
-      WITH w AS (SELECT doc_id, string_split_regex(lower(text), '\s+') AS ws
-                 FROM documents),
-      k AS (SELECT doc_id, ws, CAST(ceil(len(ws) / 8.0) AS BIGINT) AS nb FROM w),
-      b AS (SELECT doc_id, i AS blk,
-              array_to_string(list_slice(ws, i * 8 + 1, i * 8 + 8), ' ') AS block_text
-            FROM k, unnest(range(0, nb)) AS t(i)),
-      r AS (SELECT *, row_number() OVER (PARTITION BY block_text
-                                         ORDER BY doc_id, blk) AS rk FROM b)
-      SELECT doc_id, count(*) AS n_blocks,
-             CAST(sum(CASE WHEN rk = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-             coalesce(string_agg(CASE WHEN rk = 1 THEN block_text END,
-                                 ' ' ORDER BY blk), '') AS clean_text
-      FROM r GROUP BY 1 ORDER BY doc_id""",
-
-    // PSI against 1996's exact decile edges (quantile_cont ==
-    // Spark `percentile`, the gold_distribution_quantile precedent);
-    // per-bucket terms from exact counts, NULL where 1997 is absent
-    "spend_psi" -> """
-      WITH a AS (SELECT o_totalprice AS amount FROM orders
-                 WHERE year(o_orderdate) = 1996),
-      b AS (SELECT o_totalprice AS amount FROM orders
-            WHERE year(o_orderdate) = 1997),
-      e AS (SELECT quantile_cont(amount,
-              [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS ed FROM a),
-      na AS (SELECT count(*) AS n FROM a), nb AS (SELECT count(*) AS n FROM b),
-      ba AS (SELECT CAST(len(list_filter((SELECT ed FROM e),
-                                         x -> amount >= x)) AS BIGINT) AS bucket,
-                    count(*) AS n_a
-             FROM a GROUP BY 1),
-      bb AS (SELECT CAST(len(list_filter((SELECT ed FROM e),
-                                         x -> amount >= x)) AS BIGINT) AS bucket,
-                    count(*) AS n_b
-             FROM b GROUP BY 1)
-      SELECT coalesce(ba.bucket, bb.bucket) AS bucket,
-             coalesce(n_a, 0) AS n_a, coalesce(n_b, 0) AS n_b,
-             CASE WHEN coalesce(n_a, 0) > 0 AND coalesce(n_b, 0) > 0 THEN
-               round((n_a / CAST((SELECT n FROM na) AS DOUBLE)
-                      - n_b / CAST((SELECT n FROM nb) AS DOUBLE))
-                     * ln((n_a / CAST((SELECT n FROM na) AS DOUBLE))
-                          / (n_b / CAST((SELECT n FROM nb) AS DOUBLE))), 6)
-             END AS psi_term
-      FROM ba FULL OUTER JOIN bb ON ba.bucket = bb.bucket
-      ORDER BY bucket""",
-
-    // exact KS: all-integer CDF gaps |cumA·n_b − cumB·n_a| maximized over
-    // pooled distinct amounts; the one float is the final normalization
-    "spend_ks" -> """
-      WITH p AS (
-        SELECT o_totalprice AS amount,
-               CASE WHEN year(o_orderdate) = 1996 THEN 1 ELSE 0 END AS ia,
-               CASE WHEN year(o_orderdate) = 1997 THEN 1 ELSE 0 END AS ib
-        FROM orders WHERE year(o_orderdate) IN (1996, 1997)),
-      g AS (SELECT amount, CAST(sum(ia) AS BIGINT) AS ca,
-                   CAST(sum(ib) AS BIGINT) AS cb FROM p GROUP BY 1),
-      c AS (SELECT amount,
-                   CAST(sum(ca) OVER (ORDER BY amount) AS BIGINT) AS cum_a,
-                   CAST(sum(cb) OVER (ORDER BY amount) AS BIGINT) AS cum_b
-            FROM g),
-      nn AS (SELECT CAST(sum(ca) AS BIGINT) AS na,
-                    CAST(sum(cb) AS BIGINT) AS nb FROM g),
-      gaps AS (SELECT amount,
-                      abs(cum_a * (SELECT nb FROM nn)
-                          - cum_b * (SELECT na FROM nn)) AS gap
-               FROM c)
-      SELECT round(gap / ((SELECT na FROM nn) * CAST((SELECT nb FROM nn) AS DOUBLE)), 6) AS ks_stat,
-             round(amount, 2) AS at_amount,
-             (SELECT na FROM nn) AS n_a, (SELECT nb FROM nn) AS n_b
-      FROM gaps ORDER BY gap DESC, amount LIMIT 1""",
-
-    "ca_monthly_incremental" -> s"""
-      SELECT strftime(o_orderdate, '%Y-%m') AS mois, ${ms("o_totalprice")} AS ca
-      FROM orders WHERE $V GROUP BY 1 ORDER BY mois""",
-
-    // the maintained join view must equal the full recompute — the
-    // oracle IS the recompute the delta algebra avoids
-    "join_view_maintained" -> """
-      SELECT o_orderkey, strftime(o_orderdate, '%Y-%m') AS mois,
-             sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000) AS BIGINT))/10000.0 AS revenue,
-             count(*) AS n_lines
-      FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      GROUP BY 1, 2 ORDER BY o_orderkey""",
-
-    // streaming maintenance converges to the same table as the batch agg
-    "ca_monthly_maintained" -> s"""
-      SELECT strftime(o_orderdate, '%Y-%m') AS mois, ${ms("o_totalprice")} AS ca
-      FROM orders WHERE $V GROUP BY 1 ORDER BY mois""",
-
-    "event_sessions" -> """
-      WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events),
-      x AS (SELECT user_id, ts, value,
-              lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts FROM e),
-      y AS (SELECT *, CASE WHEN prev_ts IS NULL
-              OR epoch_us(ts) - epoch_us(prev_ts) > 1800000000 THEN 1 ELSE 0 END AS new_session
-            FROM x),
-      z AS (SELECT *, CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq FROM y)
-      SELECT user_id, session_seq, min(ts) AS session_start, max(ts) AS session_end,
-             CAST((epoch_us(max(ts)) - epoch_us(min(ts))) // 1000000 AS BIGINT) AS duration_sec,
-             count(*) AS n_events, round(sum(value), 2) AS total_value
-      FROM z GROUP BY 1, 2 ORDER BY user_id, session_seq""",
-
-    // hopping windows: every event belongs to exactly slide-ratio (4)
-    // windows; starts computed by exact integer-µs floor arithmetic —
-    // epoch-aligned, matching Spark's window() origin
-    "events_hopping" -> """
-      WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS ts, value FROM events),
-      x AS (SELECT make_timestamp((epoch_us(ts) // 900000000) * 900000000
-                                  - i * CAST(900000000 AS BIGINT)) AS w_start, value
-            FROM e CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS i))
-      SELECT w_start, count(*) AS n_events, round(sum(value), 2) AS total_value
-      FROM x GROUP BY 1 ORDER BY w_start""",
-
-    // zipped unnest ranks 0-based, matching posexplode
-    "label_centroids" -> """
-      SELECT label, pos, round(avg(CAST(x AS DOUBLE)), 6) AS mean_x, count(*) AS n
-      FROM (SELECT label, unnest(embedding) AS x, unnest(range(len(embedding))) AS pos
-            FROM embeddings)
-      GROUP BY 1, 2 ORDER BY label, pos""",
-
-    // streaming twin shares the batch hopping oracle
-    "events_hopping_stream" -> """
-      WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS ts, value FROM events),
-      x AS (SELECT make_timestamp((epoch_us(ts) // 900000000) * 900000000
-                                  - i * CAST(900000000 AS BIGINT)) AS w_start, value
-            FROM e CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS i))
-      SELECT w_start, count(*) AS n_events, round(sum(value), 2) AS total_value
-      FROM x GROUP BY 1 ORDER BY w_start""",
-
-    "sql_ca_monthly" -> s"""
-      SELECT strftime(o_orderdate, '%Y-%m') AS mois, ${ms("o_totalprice")} AS ca
-      FROM orders WHERE $V GROUP BY 1 ORDER BY mois""",
-
-    "events_props" -> """
-      SELECT CAST(json_extract(props, '$.k') AS INTEGER) AS k,
-             count(*) AS n_events, count(DISTINCT user_id) AS n_users,
-             round(sum(value), 2) AS total_value
-      FROM events GROUP BY 1 ORDER BY k""",
-
-    // depth-bounded recursive UNION keeps every (node, dist) pair it
-    // reaches; min() collapses to BFS's first-reach distance. Both
-    // engines bound depth identically (emit dist <= 10)
-    "copurchase_distance" -> s"""
-      WITH RECURSIVE cp AS (
-        SELECT DISTINCT o_custkey * 2 AS c, l_partkey * 2 + 1 AS p
-        FROM orders JOIN lineitem ON o_orderkey = l_orderkey WHERE $V),
-      e AS (SELECT c AS a, p AS b FROM cp UNION ALL SELECT p, c FROM cp),
-      s AS (SELECT min(p) AS seed FROM cp),
-      bfs AS (
-        SELECT seed AS node, 0 AS dist FROM s
-        UNION
-        SELECT e.b, bfs.dist + 1 FROM bfs JOIN e ON e.a = bfs.node
-        WHERE bfs.dist < 10)
-      SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'part' END AS kind,
-             CAST(CASE WHEN node % 2 = 0 THEN node // 2 ELSE (node - 1) // 2 END AS BIGINT) AS node_key,
-             CAST(min(dist) AS BIGINT) AS dist
-      FROM bfs GROUP BY 1, 2 ORDER BY dist, kind, node_key""",
-
-    // the oracle states the set semantics with INTERSECT/EXCEPT; the
-    // engine's fused flag-aggregate must reproduce them exactly
-    "customer_overlap" -> s"""
-      WITH a AS (SELECT DISTINCT o_custkey FROM orders
-                 WHERE $V AND year(o_orderdate) = 1995),
-      b AS (SELECT DISTINCT o_custkey FROM orders
-            WHERE $V AND year(o_orderdate) = 1996)
-      SELECT n_both, n_only_first, n_only_second,
-             round(n_both / (n_both + n_only_first + n_only_second), 6) AS jaccard
-      FROM (SELECT
-        (SELECT count(*) FROM (SELECT * FROM a INTERSECT SELECT * FROM b)) AS n_both,
-        (SELECT count(*) FROM (SELECT * FROM a EXCEPT SELECT * FROM b)) AS n_only_first,
-        (SELECT count(*) FROM (SELECT * FROM b EXCEPT SELECT * FROM a)) AS n_only_second)""",
-
-    // bounded-error oracle: each HLL estimate (lgK=12, rsd≈1.6%, 5σ≈8%
-    // → 0.10 bound, absolute floor 5) against its exact set count; the
-    // inclusion-exclusion overlap compounds three estimates, so its
-    // bound is on the combined scale
-    "customer_overlap_approx" -> s"""
-      WITH est AS (SELECT * FROM read_parquet('$OutDirToken/customer_overlap_approx/*.parquet')),
-      a AS (SELECT DISTINCT o_custkey FROM orders
-            WHERE $V AND year(o_orderdate) = 1995),
-      b AS (SELECT DISTINCT o_custkey FROM orders
-            WHERE $V AND year(o_orderdate) = 1996),
-      x AS (SELECT
-        (SELECT count(*) FROM a) AS n1, (SELECT count(*) FROM b) AS n2,
-        (SELECT count(*) FROM (SELECT * FROM a UNION SELECT * FROM b)) AS nu,
-        (SELECT count(*) FROM (SELECT * FROM a INTERSECT SELECT * FROM b)) AS nb)
-      SELECT
-        CASE WHEN abs(est.n_first - x.n1) <= greatest(0.10 * x.n1, 5)
-             THEN est.n_first ELSE -1 END AS n_first,
-        CASE WHEN abs(est.n_second - x.n2) <= greatest(0.10 * x.n2, 5)
-             THEN est.n_second ELSE -1 END AS n_second,
-        CASE WHEN abs(est.n_union - x.nu) <= greatest(0.10 * x.nu, 5)
-             THEN est.n_union ELSE -1 END AS n_union,
-        CASE WHEN abs(est.n_both_approx - x.nb) <= greatest(0.10 * (x.n1 + x.n2), 5)
-             THEN est.n_both_approx ELSE -1 END AS n_both_approx
-      FROM est, x""",
-
-    // Spark's Intersect/Except operator form must agree with the fused pass
-    "customer_overlap_sets" -> s"""
-      WITH a AS (SELECT DISTINCT o_custkey FROM orders
-                 WHERE $V AND year(o_orderdate) = 1995),
-      b AS (SELECT DISTINCT o_custkey FROM orders
-            WHERE $V AND year(o_orderdate) = 1996)
-      SELECT n_both, n_only_first, n_only_second,
-             round(n_both / (n_both + n_only_first + n_only_second), 6) AS jaccard
-      FROM (SELECT
-        (SELECT count(*) FROM (SELECT * FROM a INTERSECT SELECT * FROM b)) AS n_both,
-        (SELECT count(*) FROM (SELECT * FROM a EXCEPT SELECT * FROM b)) AS n_only_first,
-        (SELECT count(*) FROM (SELECT * FROM b EXCEPT SELECT * FROM a)) AS n_only_second)""",
-
-    // ordered string_agg mirrors the engine's in-aggregate struct sort
-    "session_paths" -> """
-      WITH e AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS ts
-                 FROM events),
-      x AS (SELECT *, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-              AS prev_ts FROM e),
-      y AS (SELECT *, CASE WHEN prev_ts IS NULL
-              OR epoch_us(ts) - epoch_us(prev_ts) > 1800000000 THEN 1 ELSE 0 END AS ns
-            FROM x),
-      z AS (SELECT *, sum(ns) OVER (PARTITION BY user_id ORDER BY ts, event_id
-              ROWS UNBOUNDED PRECEDING) AS session_seq FROM y),
-      p AS (SELECT user_id, session_seq,
-              string_agg(event_type, '>' ORDER BY ts, event_id) AS path
-            FROM z GROUP BY 1, 2)
-      SELECT path, count(*) AS n_sessions FROM p
-      GROUP BY 1 ORDER BY n_sessions DESC, path LIMIT 10""",
-
-    // consecutive pairs under the deterministic (ts, event_id) ordering;
-    // n/total is bigint/bigint -> double in both engines
-    "event_transitions" -> """
-      WITH e AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS ts
-                 FROM events),
-      x AS (SELECT event_type AS next_type,
-              lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                AS prev_type
-            FROM e),
-      pairs AS (SELECT prev_type, next_type, count(*) AS n FROM x
-                WHERE prev_type IS NOT NULL GROUP BY 1, 2),
-      t AS (SELECT prev_type, CAST(sum(n) AS BIGINT) AS total FROM pairs GROUP BY 1)
-      SELECT pairs.prev_type, pairs.next_type, pairs.n,
-             round(pairs.n / t.total, 6) AS p
-      FROM pairs JOIN t USING (prev_type)
-      ORDER BY prev_type, next_type""",
-
-    // each customer counts once, at their first month
-    "customers_cumulative" -> s"""
-      WITH f AS (SELECT o_custkey, min(strftime(o_orderdate, '%Y-%m')) AS mois
-                 FROM orders WHERE $V GROUP BY 1),
-      m AS (SELECT mois, count(*) AS n_new FROM f GROUP BY 1)
-      SELECT mois, n_new,
-             CAST(sum(n_new) OVER (ORDER BY mois ROWS UNBOUNDED PRECEDING) AS BIGINT)
-               AS n_cumulative
-      FROM m ORDER BY mois""",
-
-    // retained joins act to itself on mi-1; prev_active joins the
-    // month frame on mi-1 (no lag across gaps)
-    "customer_churn_monthly" -> s"""
-      WITH act AS (SELECT DISTINCT o_custkey,
-               year(o_orderdate)*12 + month(o_orderdate) - 1 AS mi
-             FROM orders WHERE $V),
-      a AS (SELECT mi, count(*) AS n_active FROM act GROUP BY 1),
-      r AS (SELECT cur.mi, count(*) AS n_retained
-            FROM act cur JOIN act prv
-              ON cur.o_custkey = prv.o_custkey AND prv.mi = cur.mi - 1
-            GROUP BY 1)
-      SELECT CAST(a.mi // 12 AS BIGINT) AS annee,
-             CAST(a.mi % 12 + 1 AS BIGINT) AS mois,
-             a.n_active,
-             coalesce(r.n_retained, 0) AS n_retained,
-             a.n_active - coalesce(r.n_retained, 0) AS n_new,
-             coalesce(p.n_active, 0) - coalesce(r.n_retained, 0) AS n_churned
-      FROM a LEFT JOIN r ON a.mi = r.mi
-             LEFT JOIN a p ON p.mi = a.mi - 1
-      ORDER BY annee, mois""",
-
-    // the oracle states the RAW symmetric-overlap predicate — any
-    // bin-replication slip (missed cross-bin pair, double count)
-    // hash-mismatches immediately
-    "session_overlaps" -> """
-      WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
-      x AS (SELECT user_id, ts,
-              lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts FROM e),
-      y AS (SELECT *, CASE WHEN prev_ts IS NULL
-              OR epoch_us(ts) - epoch_us(prev_ts) > 1800000000 THEN 1 ELSE 0 END AS ns
-            FROM x),
-      z AS (SELECT *, CAST(sum(ns) OVER (PARTITION BY user_id ORDER BY ts
-              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq FROM y),
-      s AS (SELECT user_id, session_seq, min(ts) AS session_start,
-              max(ts) AS session_end FROM z GROUP BY 1, 2),
-      p AS (SELECT a.user_id AS user_a, b.user_id AS user_b
-            FROM s a JOIN s b ON a.user_id < b.user_id
-              AND a.session_start <= b.session_end
-              AND b.session_start <= a.session_end)
-      SELECT user_a, user_b, count(*) AS n_overlaps
-      FROM p GROUP BY 1, 2 ORDER BY n_overlaps DESC, user_a, user_b LIMIT 20""",
-
-    // each event expanded to its 6 covering hour-grid window starts
-    "events_sliding_uniques" -> """
-      WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS ts, user_id FROM events),
-      x AS (SELECT date_trunc('hour', ts) - to_hours(off) AS w_start, user_id
-            FROM (SELECT ts, user_id, unnest(generate_series(0, 5)) AS off FROM e))
-      SELECT w_start, count(*) AS n_events, count(DISTINCT user_id) AS n_users
-      FROM x GROUP BY 1 ORDER BY w_start""",
-
-    // islands via lag-change flag + running sum; valid_to closed by lead
-    "user_state_intervals" -> """
-      WITH e AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS ts
-                 FROM events),
-      x AS (SELECT *, CASE WHEN lag(event_type) OVER
-                (PARTITION BY user_id ORDER BY ts, event_id) IS DISTINCT FROM event_type
-              THEN 1 ELSE 0 END AS chg FROM e),
-      z AS (SELECT *, CAST(sum(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS state_seq FROM x),
-      g AS (SELECT user_id, state_seq, min(event_type) AS state,
-              min(ts) AS valid_from, count(*) AS n_events
-            FROM z GROUP BY 1, 2)
-      SELECT user_id, state_seq, state, valid_from,
-             lead(valid_from) OVER (PARTITION BY user_id ORDER BY state_seq) AS valid_to,
-             n_events
-      FROM g ORDER BY user_id, state_seq""",
-
-    // RANGE frame over integer epoch days — interval look-back across
-    // sparse dates (a rows-frame would widen across gaps)
-    "events_rolling_range" -> """
-      WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS d, count(*) AS n,
-               CAST(sum(round(value*100)) AS BIGINT) AS cents
-             FROM events GROUP BY 1, 2),
-      x AS (SELECT *, (d - DATE '1970-01-01') AS dd FROM daily)
-      SELECT event_type, d, n, round(cents / 100.0, 2) AS total,
-             CAST(sum(n) OVER w AS BIGINT) AS roll_n,
-             round(CAST(sum(cents) OVER w AS BIGINT) / 100.0, 2) AS roll_total
-      FROM x
-      WINDOW w AS (PARTITION BY event_type ORDER BY dd
-                   RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
-      ORDER BY event_type, d""",
-    // previous step's; integer/integer division is double in both engines
-    "event_funnel" -> """
-      WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type FROM events),
-      v AS (SELECT user_id, min(ts) AS t_view FROM e WHERE event_type = 'view' GROUP BY 1),
-      c AS (SELECT e.user_id, min(e.ts) AS t_click FROM e JOIN v USING (user_id)
-            WHERE e.event_type = 'click' AND e.ts > v.t_view GROUP BY 1),
-      p AS (SELECT e.user_id, min(e.ts) AS t_purchase FROM e JOIN c USING (user_id)
-            WHERE e.event_type = 'purchase' AND e.ts > c.t_click GROUP BY 1)
-      SELECT n_view, n_click, n_purchase,
-             round(CASE WHEN n_view > 0 THEN n_click / n_view END, 6) AS conv_click,
-             round(CASE WHEN n_click > 0 THEN n_purchase / n_click END, 6) AS conv_purchase
-      FROM (SELECT (SELECT count(*) FROM v) AS n_view,
-                   (SELECT count(*) FROM c) AS n_click,
-                   (SELECT count(*) FROM p) AS n_purchase)""",
-
-    // the oracle states the interval predicate directly; the engine's
-    // time-bin equi-join must produce the identical match set
-    "events_range_join" -> """
-      WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type
-                 FROM events),
-      p AS (SELECT event_id, user_id, ts AS p_ts FROM e WHERE event_type = 'purchase'),
-      c AS (SELECT user_id, ts AS c_ts FROM e WHERE event_type = 'click'),
-      m AS (SELECT p.event_id, count(*) AS n_clicks
-            FROM p JOIN c ON p.user_id = c.user_id
-              AND c.c_ts >= p.p_ts - INTERVAL 60 MINUTE AND c.c_ts < p.p_ts
-            GROUP BY 1)
-      SELECT p.event_id, p.user_id, p.p_ts, coalesce(m.n_clicks, 0) AS n_clicks
-      FROM p LEFT JOIN m USING (event_id) ORDER BY p.event_id""",
-
-    // exact-integer triangular decay weights (window − age + 1 µs): the
-    // per-purchase weight sum is a long, shares are one division per row
-    "attribution_credit" -> """
-      WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
-                        event_type, value FROM events),
-      p AS (SELECT event_id, user_id, epoch_us(ts) AS p_us, value
-            FROM e WHERE event_type = 'purchase'),
-      c AS (SELECT user_id, epoch_us(ts) AS c_us FROM e WHERE event_type = 'click'),
-      m AS (SELECT p.event_id, p.user_id, p.p_us, p.value, c.c_us,
-                   3600000000 - (p.p_us - c.c_us) + 1 AS wi
-            FROM p JOIN c ON p.user_id = c.user_id
-              AND c.c_us >= p.p_us - 3600000000 AND c.c_us < p.p_us),
-      t AS (SELECT *, count(*) OVER (PARTITION BY event_id) AS n_clicks,
-                   CAST(sum(wi) OVER (PARTITION BY event_id) AS BIGINT) AS wsum
-            FROM m)
-      SELECT event_id, user_id, c_us, CAST(n_clicks AS BIGINT) AS n_clicks,
-             round(value / CAST(n_clicks AS DOUBLE), 6) AS credit_linear,
-             round(value * wi / CAST(wsum AS DOUBLE), 6) AS credit_decay
-      FROM t ORDER BY event_id, c_us""",
-
-    // the parsed log must reproduce the parquet truth — the roundtrip is
-    // the proof that the text render + regex extraction are lossless
-    "textlog_roundtrip" -> """
-      SELECT event_type, count(*) AS n,
-             CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-             sum(CAST(round(value*100) AS BIGINT))/100.0 AS total_value,
-             min(CAST(ts AS TIMESTAMP)) AS first_ts,
-             max(CAST(ts AS TIMESTAMP)) AS last_ts
-      FROM events GROUP BY 1 ORDER BY 1""",
-
-    "events_asof_price" -> """
-      WITH u AS (
-        SELECT o_custkey AS key, o_orderdate AS t, o_orderkey AS rid,
-               o_totalprice AS price, 1 AS is_order, CAST(NULL AS BIGINT) AS event_id
-        FROM orders
-        UNION ALL
-        SELECT user_id, CAST(ts AS TIMESTAMP), event_id, CAST(NULL AS DOUBLE), 0, event_id
-        FROM events),
-      x AS (SELECT *, last_value(price IGNORE NULLS) OVER (
-              PARTITION BY key ORDER BY t, is_order DESC, rid
-              ROWS UNBOUNDED PRECEDING) AS last_order_price FROM u)
-      SELECT event_id, key AS user_id, t AS ts, last_order_price
-      FROM x WHERE is_order = 0 ORDER BY event_id""",
-
-    // the stream-static join materialized to completion equals the batch
-    // join — same hourly-window + dim-enrich semantics
-    "events_stream_enriched" -> """
-      WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS ts, user_id, value FROM events),
-      j AS (SELECT date_trunc('hour', e.ts) AS heure,
-              coalesce(n.n_name, 'Inconnu') AS pays, e.value
-            FROM e LEFT JOIN customer c ON e.user_id = c.c_custkey
-            LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey)
-      SELECT heure, pays, count(*) AS n_events, round(sum(value), 2) AS total_value
-      FROM j GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    // the custom-operator as-of join answers to the same oracle as the
-    // composed formulation — identical semantics, different physical plan
-    "events_asof_custom" -> """
-      WITH u AS (
-        SELECT o_custkey AS key, o_orderdate AS t, o_orderkey AS rid,
-               o_totalprice AS price, 1 AS is_order, CAST(NULL AS BIGINT) AS event_id
-        FROM orders
-        UNION ALL
-        SELECT user_id, CAST(ts AS TIMESTAMP), event_id, CAST(NULL AS DOUBLE), 0, event_id
-        FROM events),
-      x AS (SELECT *, last_value(price IGNORE NULLS) OVER (
-              PARTITION BY key ORDER BY t, is_order DESC, rid
-              ROWS UNBOUNDED PRECEDING) AS last_order_price FROM u)
-      SELECT event_id, key AS user_id, t AS ts, last_order_price
-      FROM x WHERE is_order = 0 ORDER BY event_id""",
-
-    // tolerance twin: the windowed last_value carries the matched order's
-    // TS alongside its price, and staleness > 30 days nulls the price
-    "events_asof_tolerance" -> """
-      WITH u AS (
-        SELECT o_custkey AS key, o_orderdate AS t, o_orderkey AS rid,
-               o_totalprice AS price, 1 AS is_order, CAST(NULL AS BIGINT) AS event_id
-        FROM orders
-        UNION ALL
-        SELECT user_id, CAST(ts AS TIMESTAMP), event_id, CAST(NULL AS DOUBLE), 0, event_id
-        FROM events),
-      x AS (SELECT *,
-              last_value(price IGNORE NULLS) OVER w AS lp,
-              last_value(CASE WHEN is_order = 1 THEN t END IGNORE NULLS) OVER w AS lt
-            FROM u
-            WINDOW w AS (PARTITION BY key ORDER BY t, is_order DESC, rid
-              ROWS UNBOUNDED PRECEDING))
-      SELECT event_id, key AS user_id, t AS ts,
-             CASE WHEN lt IS NOT NULL AND t - lt <= INTERVAL 30 DAY
-                  THEN lp END AS last_order_price
-      FROM x WHERE is_order = 0 ORDER BY event_id""",
-
-    // the streaming sessionizer (EventTimeTimeout + end-of-stream state
-    // flush) emits the SAME session set as the batch lag variant — same
-    // oracle minus the session_seq column
-    "event_sessions_stream" -> """
-      WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events),
-      x AS (SELECT user_id, ts, value,
-              lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts FROM e),
-      y AS (SELECT *, CASE WHEN prev_ts IS NULL
-              OR epoch_us(ts) - epoch_us(prev_ts) > 1800000000 THEN 1 ELSE 0 END AS new_session
-            FROM x),
-      z AS (SELECT *, sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-              ROWS UNBOUNDED PRECEDING) AS session_seq FROM y)
-      SELECT user_id, min(ts) AS session_start, max(ts) AS session_end,
-             CAST((epoch_us(max(ts)) - epoch_us(min(ts))) // 1000000 AS BIGINT) AS duration_sec,
-             count(*) AS n_events, round(sum(value), 2) AS total_value
-      FROM z GROUP BY user_id, session_seq ORDER BY user_id, session_start""",
-
-    // the streamed session_window drains to the same finished sessions
-    "event_sessions_native_stream" -> """
-      WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events),
-      x AS (SELECT user_id, ts, value,
-              lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts FROM e),
-      y AS (SELECT *, CASE WHEN prev_ts IS NULL
-              OR epoch_us(ts) - epoch_us(prev_ts) >= 1800000000 THEN 1 ELSE 0 END AS new_session
-            FROM x),
-      z AS (SELECT *, sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-              ROWS UNBOUNDED PRECEDING) AS session_seq FROM y)
-      SELECT user_id, min(ts) AS session_start, max(ts) AS session_end,
-             CAST((epoch_us(max(ts)) - epoch_us(min(ts))) // 1000000 AS BIGINT) AS duration_sec,
-             count(*) AS n_events, round(sum(value), 2) AS total_value
-      FROM z GROUP BY user_id, session_seq ORDER BY user_id, session_start""",
-
-    // session_window starts a new session when the gap >= 30 min (vs the
-    // lag variant's strict >); the oracle mirrors that with >=
-    "event_sessions_native" -> """
-      WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events),
-      x AS (SELECT user_id, ts, value,
-              lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts FROM e),
-      y AS (SELECT *, CASE WHEN prev_ts IS NULL
-              OR epoch_us(ts) - epoch_us(prev_ts) >= 1800000000 THEN 1 ELSE 0 END AS new_session
-            FROM x),
-      z AS (SELECT *, sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-              ROWS UNBOUNDED PRECEDING) AS session_seq FROM y)
-      SELECT user_id, min(ts) AS session_start, max(ts) AS session_end,
-             CAST((epoch_us(max(ts)) - epoch_us(min(ts))) // 1000000 AS BIGINT) AS duration_sec,
-             count(*) AS n_events, round(sum(value), 2) AS total_value
-      FROM z GROUP BY user_id, session_seq ORDER BY user_id, session_start"""
-  )
 }

@@ -1,7 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
 import EntryPoint.jsonString
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+import graft.queries.{Digest, Oracle, OracleSql, QuerySpec}
+/** Driver-run correctness dump: each SparkEntry spec's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -27,26 +28,27 @@ object Verify {
     // correctness failure (see graft.Digests).
     val dataset = Paths.get(sfDir).getFileName.toString
     val digests = scala.collection.concurrent.TrieMap.empty[String, String]
-    val futures = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, body) =>
+    val futures = SparkEntry.specs
+      .filter(q => only.forall(_.contains(q.name)))
+      .map { case QuerySpec(name, body, check) =>
       // correctness-dump posture: a tier-switch query runs its exact body
       // here so the oracle hash-checks the query code itself; Bench
       // always measures the registry (derived/warm/sketch) body
-      val fn = SparkEntry.exactTiers.get(name).fold(body)(_.body)
+      val fn = check match { case Oracle(_, Some(exact)) => exact.body; case _ => body }
       Future {
         val t0 = System.nanoTime()
         try {
           fn(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
-          if (Digests.queries(name)) {
-            val dg = Digests.resultDigest(
-              Digests.canonical(name, spark.read.parquet(s"$outDir/$name")))
-            digests.put(name, dg)
-            Digests.golden.get((name, dataset)).foreach { want =>
-              if (want != dg)
-                System.err.println(s"[verify] digest MISMATCH $name: got $dg want $want")
-            }
+          check match {
+            case Digest(golden, canon) =>
+              val dg = Digests.resultDigest(canon(spark.read.parquet(s"$outDir/$name")))
+              digests.put(name, dg)
+              golden.get(dataset).foreach { want =>
+                if (want != dg)
+                  System.err.println(s"[verify] digest MISMATCH $name: got $dg want $want")
+              }
+            case _ =>
           }
           System.err.println(f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1fs")
         } catch { case e: Throwable =>
@@ -64,13 +66,13 @@ object Verify {
     // bounded-error oracles additionally read this run's own dump (the
     // estimate parquet) — concretize the out-dir token the same way
     val outAbs = Paths.get(outDir).toAbsolutePath.toString
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) =>
-        s"${jsonString(k)}: ${jsonString(v.replace(SparkEntry.ArtifactsToken, art)
-          .replace(SparkEntry.OutDirToken, outAbs))}" }
+    val json = SparkEntry.specs
+      .collect { case QuerySpec(name, _, Oracle(sql, _)) =>
+        s"${jsonString(name)}: ${jsonString(sql.replace(OracleSql.ArtifactsToken, art)
+          .replace(OracleSql.OutDirToken, outAbs))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // computed no-oracle digests (regeneration source for Digests.golden)
+    // computed no-oracle digests (regeneration source for the Digest goldens)
     Files.writeString(Paths.get(s"$outDir/digests.json"),
       digests.toSeq.sortBy(_._1)
         .map { case (k, v) => s"${jsonString(s"$k|$dataset")}: ${jsonString(v)}" }

@@ -1234,7 +1234,7 @@ object Gold {
     // but a ShuffledHashJoin build relation holds the arrays UNPACKED in
     // execution memory — measured at sf1 as a hash-relation OOM ("Can't
     // acquire 268435456 bytes"). The caller runs the triangle tiers on a
-    // session with that conversion OFF (SparkEntry.triangleSession):
+    // session with that conversion OFF (queries.Fixtures.triangleSession):
     // AQE still broadcasts a genuinely small adjacency, and once it
     // outgrows broadcast the join stays sort-merge, which spills instead
     // of pinning a partition's unpacked arrays resident at once. (A

@@ -16,8 +16,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * Scope is deliberately narrow — single-argument, non-filtered COUNT
   * DISTINCT only: multi-column distincts and FILTER clauses keep exact
   * semantics rather than silently estimating something the sketch
-  * doesn't model. Registered via [[GraftExtensions]]
-  * (`injectOptimizerRule`, next to the as-of pushdown); PlanShapeSpec
+  * doesn't model. Added per session with `Bridge.addOptimizerRule`
+  * (the cloned session of the `kpis_rewritten` query); PlanShapeSpec
   * gates both directions of the flag. */
 object ApproxDistinctRewrite extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =

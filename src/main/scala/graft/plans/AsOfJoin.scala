@@ -27,8 +27,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * The logical node is built from already-analyzed children (attributes
   * resolved by name at construction), so no analyzer rule is needed; the
   * strategy is injected per-session via `Bridge.addStrategy` (the
-  * post-hoc form of `SparkSessionExtensions.injectPlannerStrategy`, which
-  * [[GraftExtensions]] wires for config-built sessions).
+  * post-hoc form of `SparkSessionExtensions.injectPlannerStrategy`).
   */
 case class AsOfJoinNode(left: LogicalPlan, right: LogicalPlan,
     leftKey: Attribute, rightKey: Attribute,
@@ -182,16 +181,6 @@ object AsOfFilterPushdown
         kept.reduceOption(org.apache.spark.sql.catalyst.expressions.And)
           .map(Filter(_, pushed)).getOrElse(pushed)
       }
-  }
-}
-
-/** `spark.sql.extensions`-style injection for sessions built from config:
-  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
-    ext.injectOptimizerRule(_ => AsOfFilterPushdown)
-    ext.injectOptimizerRule(_ => ApproxDistinctRewrite)
   }
 }
 

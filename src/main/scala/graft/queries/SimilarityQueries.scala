@@ -1,0 +1,272 @@
+package graft
+package queries
+
+import org.apache.spark.sql.functions._
+
+import OracleSql._
+import SparkEntry._
+import Fixtures._
+
+/** Similarity search over embeddings, plus the streaming
+  * dedup/enrichment, profile, CSV and upsert queries registered
+  * alongside it. */
+object SimilarityQueries {
+  /** The orders columns both table-profile tiers profile. */
+  private val profiledColumns = Seq("o_orderkey", "o_custkey", "o_orderstatus",
+    "o_totalprice", "o_orderdate", "o_orderpriority")
+
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("knn_bruteforce", (s, d) => Llm.knnBruteforce(Tables.embeddings(s, d)),
+      Oracle(knnBruteforceSql)),
+    QuerySpec("knn_lsh", (s, d) => Llm.knnLsh(Tables.embeddings(s, d)),
+      // sign-LSH ANN restated whole: the ±1 hyperplanes are deterministic
+      // (splitmix64 of plane*4096+dim), so they inline as literals and
+      // DuckDB re-derives the per-table bucket ids, the bucket-mate
+      // candidate union, and the cosine top-k over candidates — the full
+      // ranked result, not just the candidate set. Sign decisions are
+      // float-safe cross-engine: the minimum |dot| margin over every
+      // (vector, plane) at all three SFs is ~5e-6, eight orders above
+      // double accumulation noise (measured round 14).
+      Oracle(s"""
+      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+      planes(j, w) AS (VALUES $lshPlanesValues),
+      bits AS (SELECT e.vec_id, p.j // 4 AS tbl,
+                      CASE WHEN list_dot_product(e.emb, p.w) >= 0
+                           THEN 1 << (p.j % 4) ELSE 0 END AS bit
+               FROM e CROSS JOIN planes p),
+      b AS (SELECT vec_id, tbl, CAST(sum(bit) AS BIGINT) AS bucket
+            FROM bits GROUP BY 1, 2),
+      cand AS (SELECT DISTINCT pb.vec_id AS probe_id, b2.vec_id
+               FROM b pb JOIN b b2 ON pb.tbl = b2.tbl AND pb.bucket = b2.bucket
+               WHERE pb.vec_id < 10 AND b2.vec_id <> pb.vec_id),
+      s AS (SELECT c.probe_id, c.vec_id AS neighbor_id,
+                   round(list_cosine_similarity(ep.emb, en.emb), 6) AS sim
+            FROM cand c
+            JOIN e ep ON ep.vec_id = c.probe_id
+            JOIN e en ON en.vec_id = c.vec_id),
+      r AS (SELECT probe_id, neighbor_id, sim,
+              CAST(row_number() OVER (PARTITION BY probe_id ORDER BY sim DESC, neighbor_id) AS BIGINT) AS rank
+            FROM s)
+      SELECT probe_id, neighbor_id, rank, sim FROM r
+      WHERE rank <= 5 ORDER BY probe_id, rank""")),
+    // IVF search against the persisted full-corpus quantizer: explicit
+    // argmin assignment + nprobe probing (Ml.knnIvfFrom), hash-checked
+    // since r15 — the oracle reads the same centroid parquet
+    QuerySpec("knn_ivf", (s, d) => memoFrame("ivf", s, d)(
+      Ml.knnIvfFrom(Tables.embeddings(s, d), s.read.parquet(ivfFullIndex(s, d)))),
+      // IVF search restated end-to-end from the PERSISTED coarse-quantizer
+      // centroids (Verify substitutes ArtifactsToken with the real path at
+      // dump time): squared-L2 argmin cell assignment with ties to the
+      // lower cell, nprobe=8 nearest-cell probing per probe vector, then
+      // the shared 6dp-cosine top-k contract over cell-mates. Assignment
+      // margins are float-safe cross-engine: the Spark side evaluates the
+      // same explicit (x-c)² fold, not MLlib's norm-trick distance
+      Oracle(s"""
+      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+      cen AS (SELECT cell, centroid FROM read_parquet('$ArtifactsToken/ivf_full/*.parquet')),
+      d AS (SELECT e.vec_id, cen.cell, e.emb,
+              list_sum(list_transform(range(1, len(e.emb)+1),
+                i -> (e.emb[i]-cen.centroid[i])*(e.emb[i]-cen.centroid[i]))) AS d2,
+              row_number() OVER (PARTITION BY e.vec_id
+                ORDER BY list_sum(list_transform(range(1, len(e.emb)+1),
+                  i -> (e.emb[i]-cen.centroid[i])*(e.emb[i]-cen.centroid[i]))), cen.cell) AS rn
+            FROM e CROSS JOIN cen),
+      a AS (SELECT vec_id, cell, emb FROM d WHERE rn = 1),
+      p AS (SELECT vec_id AS probe_id, emb AS pemb, cell FROM d
+            WHERE vec_id < 10 AND rn <= 8),
+      s AS (SELECT p.probe_id, a.vec_id AS neighbor_id,
+              round(list_cosine_similarity(p.pemb, a.emb), 6) AS sim
+            FROM p JOIN a USING (cell) WHERE a.vec_id <> p.probe_id),
+      r AS (SELECT probe_id, neighbor_id, sim,
+              CAST(row_number() OVER (PARTITION BY probe_id ORDER BY sim DESC, neighbor_id) AS BIGINT) AS rank
+            FROM s)
+      SELECT probe_id, neighbor_id, rank, sim FROM r
+      WHERE rank <= 5 ORDER BY probe_id, rank""")),
+    QuerySpec("knn_topk_agg", (s, d) => Llm.knnTopkAgg(Tables.embeddings(s, d)),
+      // same selection contract as knn_bruteforce — shared oracle shape
+      Oracle(knnBruteforceSql)),
+    // incremental IVF maintenance: delta vectors assigned to PERSISTED
+    // centroids — no refit, no indexed-corpus rescan (delta scan carries
+    // a pushed vec_id >= 400 filter, gated in PlanShapeSpec)
+    QuerySpec("knn_ivf_incremental", (s, d) => {
+      val idx = ivfIndex(s, d)
+      Ml.ivfAssignDelta(Tables.embeddings(s, d).filter(col("vec_id") >= 400L),
+        s.read.parquet(idx))
+    },
+      // incremental IVF maintenance restated from the persisted vec_id<400
+      // index: delta-only scan, same argmin + lower-cell tie-break, 6dp
+      // squared distance
+      Oracle(s"""
+      WITH del AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
+                   FROM embeddings WHERE vec_id >= 400),
+      cen AS (SELECT cell, centroid FROM read_parquet('$ArtifactsToken/ivf_idx/*.parquet')),
+      d AS (SELECT del.vec_id, cen.cell,
+              list_sum(list_transform(range(1, len(del.emb)+1),
+                i -> (del.emb[i]-cen.centroid[i])*(del.emb[i]-cen.centroid[i]))) AS d2
+            FROM del CROSS JOIN cen)
+      SELECT vec_id, cell, round(d2, 6) AS dist2 FROM (
+        SELECT vec_id, cell, d2,
+               row_number() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS rn
+        FROM d)
+      WHERE rn = 1 ORDER BY vec_id""")),
+    // int8 scalar-quantized corpus, asymmetric full-precision probes;
+    // hash-checked since r8 — the DuckDB oracle restates the integer
+    // quantization and the codebook fold exactly — and LlmSpec still
+    // gates recall@5 vs knn_bruteforce
+    QuerySpec("knn_quantized", (s, d) => memoFrame("sq", s, d)(
+      Ml.knnQuantized(Tables.embeddings(s, d))),
+      // int8 scalar quantization restated: same affine codebook (per-dim
+      // min/span), same quantize/dequantize expression order, then the
+      // knn_bruteforce scoring contract over the reconstructed vectors —
+      // promoted from rows-only because every step is deterministic float
+      // arithmetic both engines execute identically
+      Oracle("""
+      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+      x AS (SELECT unnest(emb) AS x, unnest(range(len(emb))) AS pos FROM e),
+      d AS (SELECT pos, min(x) AS lo, max(x) AS hi FROM x GROUP BY 1),
+      cb AS (SELECT list(lo ORDER BY pos) AS clo,
+                    list(CASE WHEN hi - lo > 0 THEN hi - lo ELSE 1.0 END ORDER BY pos) AS cspan
+             FROM d),
+      deq AS (SELECT vec_id,
+                list_transform(range(len(emb)), i ->
+                  clo[i+1]
+                  + (least(floor((emb[i+1] - clo[i+1]) / cspan[i+1] * 256), CAST(255 AS DOUBLE)) + 0.5)
+                    * cspan[i+1] / 256.0) AS emb
+              FROM e CROSS JOIN cb),
+      p AS (SELECT vec_id AS probe_id, emb AS pemb FROM e WHERE vec_id < 10),
+      s AS (SELECT probe_id, deq.vec_id AS neighbor_id,
+              round(list_cosine_similarity(pemb, deq.emb), 6) AS sim
+            FROM p CROSS JOIN deq WHERE deq.vec_id <> p.probe_id),
+      r AS (SELECT probe_id, neighbor_id, sim,
+              CAST(row_number() OVER (PARTITION BY probe_id ORDER BY sim DESC, neighbor_id) AS BIGINT) AS rank
+            FROM s)
+      SELECT probe_id, neighbor_id, rank, sim FROM r
+      WHERE rank <= 5 ORDER BY probe_id, rank""")),
+    // PCA decomposition over embeddings; the fitted SIGNED components
+    // persist to the artifacts dir so the DuckDB oracle restates
+    // orthonormality + projection-variance ratios + top loadings from
+    // them (bounded-error oracle — see Ml.embeddingPcaFit)
+    QuerySpec("embedding_pca", (s, d) => memoFrame("pca", s, d) {
+      val (out, comps) = Ml.embeddingPcaFit(Tables.embeddings(s, d))
+      comps.coalesce(1).write.mode("overwrite")
+        .parquet(s"${Tables.oracleArtifactsDir(d)}/pca_components")
+      out
+    },
+      // bounded-error oracle from the persisted SIGNED components: gate
+      // (a) pairwise orthonormality of the component vectors (≤1e-6
+      // deviation), (b) the explained-variance ratio as var_samp of the
+      // row projections over the summed per-dimension var_samp (vᵀΣv /
+      // trace Σ; n-vs-n−1 cancels; estimate rounded 4dp → 1e-4 bound),
+      // (c) the top-|loading| dimension exactly and its 3dp-rounded
+      // loading (5.1e-4 bound covers rint-vs-round edges)
+      Oracle(s"""
+      WITH est AS (SELECT * FROM read_parquet('$OutDirToken/embedding_pca/*.parquet')),
+      comp AS (SELECT component, loading FROM read_parquet('$ArtifactsToken/pca_components/*.parquet')),
+      e AS (SELECT CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+      ortho AS (SELECT max(abs(
+          list_sum(list_transform(range(1, len(a.loading)+1),
+            i -> a.loading[i] * b.loading[i]))
+          - CASE WHEN a.component = b.component THEN 1.0 ELSE 0.0 END)) AS dev
+        FROM comp a CROSS JOIN comp b),
+      proj AS (SELECT c.component,
+          var_samp(list_sum(list_transform(range(1, len(e.emb)+1),
+            i -> e.emb[i] * c.loading[i]))) AS lam
+        FROM e CROSS JOIN comp c GROUP BY c.component),
+      tot AS (SELECT sum(vd) AS t FROM (
+          SELECT var_samp(emb[ix.i]) AS vd
+          FROM e CROSS JOIN (SELECT unnest(range(1,
+            (SELECT max(len(emb)) FROM e) + 1)) AS i) ix
+          GROUP BY ix.i)),
+      top AS (SELECT component, ix.i - 1 AS top_dim_x, abs(loading[ix.i]) AS al,
+          row_number() OVER (PARTITION BY component
+            ORDER BY abs(loading[ix.i]) DESC, ix.i) AS rn
+        FROM comp CROSS JOIN (SELECT unnest(range(1,
+          (SELECT max(len(loading)) FROM comp) + 1)) AS i) ix)
+      SELECT est.component,
+        CASE WHEN (SELECT dev FROM ortho) <= 1e-6
+              AND abs(est.explained_variance - proj.lam / (SELECT t FROM tot)) <= 1e-4
+             THEN est.explained_variance ELSE -1.0 END AS explained_variance,
+        CASE WHEN est.top_dim = top.top_dim_x THEN est.top_dim ELSE -1 END AS top_dim,
+        CASE WHEN abs(est.top_abs_loading - top.al) <= 5.1e-4
+             THEN est.top_abs_loading ELSE -1.0 END AS top_abs_loading
+      FROM est
+      JOIN proj USING (component)
+      JOIN (SELECT * FROM top WHERE rn = 1) top USING (component)
+      ORDER BY component""")),
+    // per-label centroid aggregation, long form (the IVF-training shape)
+    QuerySpec("label_centroids", (s, d) => Ml.labelCentroids(Tables.embeddings(s, d)),
+      // zipped unnest ranks 0-based, matching posexplode
+      Oracle("""
+      SELECT label, pos, round(avg(CAST(x AS DOUBLE)), 6) AS mean_x, count(*) AS n
+      FROM (SELECT label, unnest(embedding) AS x, unnest(range(len(embedding))) AS pos
+            FROM embeddings)
+      GROUP BY 1, 2 ORDER BY label, pos""")),
+    // streaming exact dedup over a deliberately doubled stream —
+    // oracle-checked: event_ids are unique and the doubled copies are
+    // bit-identical rows, so full suppression must reproduce the raw
+    // events table exactly (not just matching counts)
+    QuerySpec("events_dedup_stream", (s, d) => Streams.eventsDedupStreamed(s, d),
+      // watermarked dedup of the doubled stream == the raw table: ids are
+      // unique, duplicate copies identical, so survival is deterministic
+      Oracle("""
+      SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type,
+             value, props
+      FROM events ORDER BY event_id""")),
+    // stream-static broadcast join: event stream enriched with the
+    // customer->nation dim, hourly revenue by country
+    QuerySpec("events_stream_enriched", (s, d) => Streams.enrichedHourlyStreamed(s, d),
+      // the stream-static join materialized to completion equals the batch
+      // join — same hourly-window + dim-enrich semantics
+      Oracle("""
+      WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS ts, user_id, value FROM events),
+      j AS (SELECT date_trunc('hour', e.ts) AS heure,
+              coalesce(n.n_name, 'Inconnu') AS pays, e.value
+            FROM e LEFT JOIN customer c ON e.user_id = c.c_custkey
+            LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey)
+      SELECT heure, pays, count(*) AS n_events, round(sum(value), 2) AS total_value
+      FROM j GROUP BY 1, 2 ORDER BY 1, 2""")),
+    // ANALYZE-style column profile of a table (nulls + exact distincts)
+    QuerySpec("table_profile", (s, d) =>
+      Catalog.tableProfile(Tables.orders(s, d), profiledColumns),
+      Oracle(s"""
+      SELECT * FROM ($profileExactBody)
+      ORDER BY column_name""")),
+    // the same profile through HLL++ sketches — no Expand, one map-side
+    // pass; the shape tableProfile's doc promises at corpus scale
+    QuerySpec("table_profile_approx", (s, d) =>
+      Catalog.tableProfileApprox(Tables.orders(s, d), profiledColumns),
+      // bounded-error oracle: exact null counts gated on equality, HLL++
+      // distincts (rsd 0.02 × 5σ = 0.10, absolute floor 1 for the tiny
+      // enum columns) echoed inside the bound, else poisoned
+      Oracle(s"""
+      WITH est AS (SELECT * FROM read_parquet('$OutDirToken/table_profile_approx/*.parquet')),
+      ex AS ($profileExactBody)
+      SELECT ex.column_name,
+             CASE WHEN est.n_null = ex.n_null THEN est.n_null ELSE -1 END AS n_null,
+             CASE WHEN abs(est.n_distinct - ex.n_distinct) <= greatest(0.10 * ex.n_distinct, 1)
+                  THEN est.n_distinct ELSE -1 END AS n_distinct
+      FROM ex JOIN est USING (column_name)
+      ORDER BY column_name""")),
+    // S1 gate with teeth: orders -> CSV -> schema'd PERMISSIVE read ->
+    // aggregate, hash-compared against the parquet-based oracle. min/max
+    // of the timestamp column ride along so a silently null-coerced
+    // parse (the PERMISSIVE failure mode) breaks the hash, not just rows
+    QuerySpec("csv_roundtrip", (s, d) => {
+      // one CSV copy per (session, dataset): the query gates the
+      // reader; rewriting the fixture per bench pass would time the writer
+      val dir = Shared.dir(s, "csv", d)(
+        Tables.orders(s, d).write.mode("overwrite").option("header", "true").csv(_))
+      roundtripSummary(Tables.readCsv(s, dir, Tables.orders(s, d).schema, "orders_csv"))
+    },
+      Oracle(csvRoundtripSql)),
+    // update-mode streaming aggregate published through the keyed
+    // foreachBatch upsert sink (reference Mongo ReplaceOne analog);
+    // one sink dir per (session, dataset) — re-upserting into it is
+    // idempotent, and the hook removes it on JVM exit
+    QuerySpec("events_upsert_publish", (s, d) => Streams.userTotalsUpserted(s, d,
+      Shared.dir(s, "upsert_q", d)(_ => ())),
+      Oracle("""
+      SELECT user_id, count(*) AS n_events, round(sum(value), 2) AS total_value
+      FROM events GROUP BY 1 ORDER BY user_id"""))
+  )
+}

@@ -907,7 +907,7 @@ object Serving {
     * promotion threshold in the union). At lgK=20 promotion happens
     * at 262144 coupons, so every realistic per-hour cardinality
     * through the 10x scale soak stays exact and the digest golden
-    * pins (Digests.canon still rounds to 3 significant digits as the
+    * pins (its Digest canon still rounds to 3 significant digits as the
     * stated contract). Cost: a SET-mode sketch is ~4 B/coupon (a few
     * KB per hour here); the dense worst case at true 100 TB
     * cardinalities is 512 KB per hour-sketch x 24/day — noise — with

@@ -785,7 +785,7 @@ object Streams extends Serializable {
     * memoizes that drain; the per-view filters/rollups are proved
     * pair-for-pair equal to the independent drains by StreamsSpec.
     * Verify still runs each view's own genuine drain
-    * (`SparkEntry.exactTiers`), so the cross-SF oracle sweep keeps
+    * (its spec's `ExactTier`), so the cross-SF oracle sweep keeps
     * hash-checking the real inner and left-outer stream-stream join
     * paths. */
   def attributionStreamed(spark: SparkSession, dir: String): DataFrame =

@@ -206,7 +206,7 @@ object Tables {
     * Contents are tiny by construction (nlist×dim doubles per index)
     * and rewritten by each session's first use, so staleness cannot
     * outlive the run that dumps the SQL referencing it. Verify
-    * substitutes [[SparkEntry.ArtifactsToken]] in oracle SQL with this
+    * substitutes [[queries.OracleSql.ArtifactsToken]] in oracle SQL with this
     * path at dump time. */
   private[graft] def oracleArtifactsDir(sfDir: String): String = {
     val tag = pathTag(sfDir)

@@ -2,9 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.queries.{Digest, QuerySpec}
+
 /** Pins the determinism-digest gate (graft.Digests) that machine-checks
-  * the no-oracle queries across rounds, and the SessionMemo container
-  * the round-15 eviction sweep moved every session-keyed memo onto. */
+  * the no-oracle queries across rounds, the spec registry's size, and
+  * the SessionMemo container the round-15 eviction sweep moved every
+  * session-keyed memo onto. */
 class DigestsSpec extends SparkSpec {
 
   test("resultDigest is row-order independent and column-order independent") {
@@ -34,30 +37,22 @@ class DigestsSpec extends SparkSpec {
     assert(Digests.resultDigest(a.limit(0)) == "0:0")
   }
 
-  test("every golden-pinned and exempt query exists in the registry; sets are disjoint") {
-    val reg = SparkEntry.queries.keySet
-    assert(Digests.queries.subsetOf(reg),
-      s"unknown digest queries: ${Digests.queries -- reg}")
-    assert(Digests.exempt.keySet.subsetOf(Digests.queries))
-    val pinned = Digests.golden.keySet.map(_._1)
-    assert(pinned.subsetOf(Digests.queries))
-    // no query is both golden-pinned and exempt
-    assert((pinned & Digests.exempt.keySet).isEmpty)
-    // everything under digest pinning is either golden-pinned or
-    // documented exempt — a third state would be an unpinned hole
-    assert(pinned ++ Digests.exempt.keySet == Digests.queries)
-    // none of the digest queries carries a DuckDB oracle (those are
-    // already hash-checked; double-gating would mask a ledger error)
-    assert((Digests.queries & SparkEntry.oracleSql.keySet).isEmpty)
-    // every registry query has exactly one gate: a DuckDB oracle or a
-    // digest pin — a query with neither would ship unchecked
-    assert(SparkEntry.oracleSql.keySet ++ Digests.queries == reg,
-      s"ungated: ${reg -- SparkEntry.oracleSql.keySet -- Digests.queries}; " +
-        s"unregistered: ${SparkEntry.oracleSql.keySet ++ Digests.queries -- reg}")
-    // an exact tier replaces its query's body in Verify, so it must be
-    // oracle-checked there
-    assert(SparkEntry.exactTiers.keySet.subsetOf(SparkEntry.oracleSql.keySet),
-      s"exact tiers without an oracle: ${SparkEntry.exactTiers.keySet -- SparkEntry.oracleSql.keySet}")
+  test("the spec registry holds exactly 191 distinct query names") {
+    // Seq → Map would silently drop a duplicated name from `queries`
+    val names = SparkEntry.specs.map(_.name)
+    assert(names.size == 191)
+    assert(names.distinct.size == names.size,
+      s"duplicated: ${names.diff(names.distinct)}")
+    assert(SparkEntry.queries.keySet == names.toSet)
+  }
+
+  test("every digest-pinned query carries goldens for sf0.001, sf0.01 and sf0.1") {
+    // an unpinned dataset would let Verify skip the comparison silently
+    val pinned = SparkEntry.specs.collect { case q @ QuerySpec(_, _, Digest(g, _)) => q.name -> g }
+    assert(pinned.nonEmpty)
+    pinned.foreach { case (name, golden) =>
+      assert(golden.keySet == Set("sf0.001", "sf0.01", "sf0.1"), name)
+    }
   }
 
   test("SessionMemo: winner semantics, put returns previous, per-session keys") {

@@ -75,7 +75,7 @@ class SourceGateSpec extends AnyFunSuite {
   }
 
   test("no JVM-global system property switches in src/main") {
-    // a query tier is data (SparkEntry.exactTiers), not a -D flag that
+    // a query tier is data (a spec's ExactTier), not a -D flag that
     // flips every suite and query in the JVM at once
     val offenders = mainSources.flatMap { p =>
       code(p).linesIterator.collect {

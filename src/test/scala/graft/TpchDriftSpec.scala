@@ -206,7 +206,7 @@ class TpchDriftSpec extends SparkSpec {
     assert(pushed >= 4, p)
     // all three delta terms actually contribute rows on the test data
     import org.apache.spark.sql.functions.{col, lit}
-    val cut = lit(SparkEntry.IncrementalCutoff).cast("timestamp")
+    val cut = lit(graft.queries.Fixtures.IncrementalCutoff).cast("timestamp")
     val newO = Tables.orders(spark, sf).filter(col("o_orderdate") >= cut)
     val oldO = Tables.orders(spark, sf).filter(col("o_orderdate") < cut)
     val newL = Tables.lineitem(spark, sf).filter(col("l_shipdate") >= cut)

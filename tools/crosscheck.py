@@ -71,7 +71,7 @@ with open("CROSSCHECK.json", "w") as f:
     json.dump({"metric": "cross_sf_oracle_sweep", "head_commit": head,
                "src_tree": src_tree,
                "verify_posture": "tier-switch queries run their "
-               "genuine/exact bodies (SparkEntry.exactTiers) here; Bench "
+               "genuine/exact bodies (each Oracle spec's ExactTier) here; Bench "
                "measures the derived/warm/sketch tiers",
                "run_utc": datetime.datetime.utcnow().strftime("%Y-%m-%dT%H:%MZ"),
                "runs": record,

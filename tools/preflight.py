@@ -154,7 +154,7 @@ else:
 
 # -- 2a'. bench-posture gate ------------------------------------------------
 # Bench measures derived/warm/sketch tiers for the tier-switch queries;
-# Verify runs their exact bodies (SparkEntry.exactTiers). Their
+# Verify runs their exact bodies (each Oracle spec's ExactTier). Their
 # correctness rests on the StreamsSpec derived==genuine equivalence test
 # plus Verify's oracle sweep over the exact bodies. The
 # equivalence test must EXIST in the certified tree — a green suite then
