@@ -60,16 +60,15 @@ object Profile {
         //   exec  = the noop-sink job(s)
         // run twice per query, report the second (warm) split — the bench
         // itself measures warm passes after its untimed warmup
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+        val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+        spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
           override def onJobStart(
               j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
             jobs.incrementAndGet(); ()
           }
-        }
-        spark.sparkContext.addSparkListener(listener)
+        })
         def split(fn: (SparkSession, String) => DataFrame): (Double, Double, Double, Int) = {
-          val j0 = listener.jobs.get()
+          val j0 = jobs.get()
           val t0 = System.nanoTime()
           val df = fn(spark, d)
           val t1 = System.nanoTime()
@@ -79,7 +78,7 @@ object Profile {
           val t3 = System.nanoTime()
           Thread.sleep(15) // let the async listener bus drain job events
           ((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9,
-            listener.jobs.get() - j0)
+            jobs.get() - j0)
         }
         // SPARK_GRAFT_QUERIES narrows the floor pass like Bench's filter
         val only = sys.env.get("SPARK_GRAFT_QUERIES")

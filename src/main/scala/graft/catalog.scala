@@ -2,6 +2,10 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** SQL surface (reference serving read path, SURVEY §3 entry point 3: the
   * Flask/Mongo layer collapses to views + ORDER BY/LIMIT queries).
@@ -26,20 +30,48 @@ object Catalog {
   }
 
   /** Register every gold table written by [[Pipeline.run]] as a
-    * `gold_<name>` view. Resolving a relation infers its schema from the
-    * parquet footers, one small Spark job per table, so the relations are
-    * resolved concurrently through [[FanOut]] (bounded by
-    * `defaultParallelism`, one in-flight job per task slot); the views are
-    * then registered on the caller's thread, in directory-name order. */
+    * `gold_<name>` view. Each relation is resolved with the Spark schema
+    * stored in the footer of its first data file ([[footerSchema]]), read
+    * on the driver, so no schema-inference job runs; partition columns
+    * are left out of that schema and come from the directory names, as in
+    * an inferring read. A table without such a footer is resolved by an
+    * inferring read. Relations are resolved concurrently through
+    * [[FanOut]] (bounded by `defaultParallelism`), then registered on the
+    * caller's thread, in directory-name order. */
   def registerGold(spark: SparkSession, outDir: String): Unit = {
     val goldDir = new java.io.File(s"$outDir/gold")
     require(goldDir.isDirectory, s"no gold dir at $goldDir — run Pipeline first")
     val dirs = goldDir.listFiles().filter(_.isDirectory).sortBy(_.getName).toSeq
-    val frames = FanOut(spark, dirs.map(d => () => spark.read.parquet(d.getAbsolutePath)))
+    val frames = FanOut(spark, dirs.map(d => () => {
+      val path = d.getAbsolutePath
+      footerSchema(spark, d).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+    }))
     dirs.zip(frames).foreach { case (d, df) =>
       df.createOrReplaceTempView(s"gold_${d.getName.stripPrefix("gold_")}")
     }
     graft.functions.CosineSimilarity.register(spark)
+  }
+
+  /** The Spark schema a parquet sink's writer stored in the footer of its
+    * first data file (first by name, partition directories included),
+    * without the partition columns, which a data file does not hold.
+    * None when the sink has no data file or the file no Spark schema. */
+  private[graft] def footerSchema(spark: SparkSession,
+      dir: java.io.File): Option[StructType] = {
+    def firstPart(d: java.io.File): Option[java.io.File] = {
+      val kids = Option(d.listFiles()).map(_.toSeq.sortBy(_.getName)).getOrElse(Nil)
+        .filterNot(k => k.getName.startsWith("_") || k.getName.startsWith("."))
+      kids.find(k => k.isFile && k.getName.endsWith(".parquet"))
+        .orElse(kids.filter(_.isDirectory).iterator.flatMap(firstPart).nextOption())
+    }
+    firstPart(dir).flatMap { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new Path(f.getAbsolutePath), spark.sparkContext.hadoopConfiguration))
+      val meta = try reader.getFileMetaData.getKeyValueMetaData finally reader.close()
+      Option(meta.get("org.apache.spark.sql.parquet.row.metadata"))
+        .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+        .collect { case s: StructType => s }
+    }
   }
 
   /** Column-level table profiling (ANALYZE-style observability): per

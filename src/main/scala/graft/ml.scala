@@ -374,7 +374,7 @@ object Ml {
       (col("c_custkey") +: RfmCols.map(col)) ++ scaled: _*).cache()
 
     def nearest(centers: Array[Array[Double]]): Column = {
-      val cand = centers.zipWithIndex.map { case (cen, j) =>
+      val cand = centers.toSeq.zipWithIndex.map { case (cen, j) =>
         struct(
           fs.indices.map(i => (fs(i) - lit(cen(i))) * (fs(i) - lit(cen(i))))
             .reduce(_ + _).as("d"),

@@ -1,8 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** End-to-end medallion flow (reference tools/run.py:131-146 →
   * flows_spark/{silver,gold}_transformation_spark.py): bronze (typed
@@ -19,22 +24,31 @@ import org.apache.spark.sql.types.StructType
   *    downstream time-ranged scan;
   *  - silver quality counters are computed in one pass, not one action
   *    per rule;
-  *  - independent sinks are written concurrently through [[FanOut]]: the
-  *    2 silver sinks together, then the 13 gold sinks with their readback
-  *    counts, `fact_achats` (the largest) first. Up to sf0.01 the flow is
-  *    ~130 jobs of about two tasks each, so a single calling thread leaves
-  *    most task slots idle; the pool is bounded by `defaultParallelism`
-  *    since one in-flight job per slot already fills them. `fact` and
-  *    `feats` are cached on the caller's thread before the fan-out, so
-  *    all sinks share one cached copy, and unpersisted when the run
-  *    ends: the caches are the run's own, never a session memo, so a
+  *  - the flow is one dependency-ordered fan-out through [[FanOut]], so
+  *    no Spark action runs alone on the caller's thread. Up to sf0.01 a
+  *    run is many small jobs of about two tasks each, and a single calling
+  *    thread would leave most task slots idle; the pool is bounded by
+  *    `defaultParallelism` since one in-flight job per slot already
+  *    fills them:
+  *     - silver: the quality pass (submitted first) beside the 2 silver
+  *       writes;
+  *     - gold: the 13 sinks, each building its frame inside its own
+  *       task. The driver scalars are computed once, on first use, by
+  *       whichever task needs them: the reference date, then the cached
+  *       client features, then the score thresholds. The 9 sinks that
+  *       need none of them never wait for the chain, and the chain
+  *       starts early (`fact_achats`, the largest sink, first;
+  *       `client_scores` second);
+  *  - `fact` is cached on the caller's thread before the gold fan-out and
+  *    `feats` on first use, so all sinks share one cached copy of each;
+  *    both are unpersisted when the run ends (`feats` only if some sink
+  *    built it). The caches are the run's own, never a session memo, so a
   *    second run into the same `outDir` reads its own silver files;
-  *  - the quality pass stays sequential, ahead of the silver writes:
-  *    overlapping it saves little more and would blur its cost in a trace,
-  *    where an action that starts before the first silver write is the
-  *    quality step;
-  *  - sinks are read back with the schema of the frame just written
-  *    ([[readBack]]), saving the footer-inference job per sink.
+  *  - a gold sink's row count comes from the write itself, an observed
+  *    metric counting the rows on their way into the sink
+  *    ([[writeCounted]]), not from a readback `count()` job;
+  *  - silver sinks are read back with the schema of the frame just
+  *    written ([[readBack]]), saving the footer-inference job per sink.
   */
 object Pipeline {
 
@@ -44,15 +58,16 @@ object Pipeline {
     // ---- silver -----------------------------------------------------------
     val rawOrders = Tables.orders(spark, sfDir)
     val rawCustomer = Tables.customer(spark, sfDir)
-    val quality = Silver.qualityCounters(rawOrders, rawCustomer).first()
-    val qualityMap = quality.schema.fieldNames.map(n =>
-      n -> quality.getAs[Long](n)).toMap
-
     val silver = Seq(
       "orders" -> Silver.cleanOrders(rawOrders, rawCustomer),
       "customer" -> Silver.cleanCustomers(rawCustomer))
-    FanOut(spark, silver.map { case (name, df) =>
-      () => df.write.mode("overwrite").parquet(s"$outDir/silver/$name") })
+    val silverTasks: Seq[() => Option[Row]] =
+      (() => Some(Silver.qualityCounters(rawOrders, rawCustomer).first())) +:
+        silver.map { case (name, df) => () =>
+          df.write.mode("overwrite").parquet(s"$outDir/silver/$name"); None }
+    val quality = FanOut(spark, silverTasks).flatten.head
+    val qualityMap = quality.schema.fieldNames.map(n =>
+      n -> quality.getAs[Long](n)).toMap
 
     // ---- gold -------------------------------------------------------------
     val Seq(orders, customer) = silver.map { case (name, df) =>
@@ -61,38 +76,70 @@ object Pipeline {
     val lineitem = Tables.lineitem(spark, sfDir)
     val part = Tables.part(spark, sfDir)
 
-    val ref = Gold.referenceDate(Gold.validOrders(orders))
     val fact = Gold.buildFact(orders, customer, nation).cache()
-    val feats = Gold.clientFeatures(orders, lineitem, ref).cache()
+    // the driver-side chain; a local lazy val initializes once, under a
+    // lock, on the first task that reads it
+    var featsBuilt = false
+    lazy val ref = Gold.referenceDate(Gold.validOrders(orders))
+    lazy val feats = {
+      val f = Gold.clientFeatures(orders, lineitem, ref).cache()
+      featsBuilt = true
+      f
+    }
+    lazy val scored = Gold.scoreClients(feats, Gold.scoreThresholds(feats))
     try {
-      val scored = Gold.scoreClients(feats, Gold.scoreThresholds(feats))
+      // (name, frame, partition columns) in start order: the largest sink,
+      // the sinks whose frames wait on a driver action (the chain, the
+      // distribution's min/max), the rest, and last the chain's other readers
+      val gold: Seq[(String, () => DataFrame, Seq[String])] = Seq(
+        ("fact_achats", () => fact, Seq("annee")),
+        ("client_scores", () => scored, Nil),
+        ("dim_clients", () => Gold.dimClients(customer, orders, lineitem, ref), Nil),
+        ("gold_distribution", () => Serving.distribution(fact), Nil),
+        ("ca_monthly", () => Gold.caMonthly(fact), Nil),
+        ("ca_country", () => Gold.caCountry(fact), Nil),
+        ("ca_product", () => Gold.caProduct(orders, lineitem, part), Nil),
+        ("cohort_first_purchase", () => Gold.cohort(fact), Nil),
+        ("gold_daily", () => Serving.daily(fact), Nil),
+        ("gold_weekly", () => Serving.weekly(fact), Nil),
+        ("gold_monthly_growth", () => Serving.monthlyGrowth(Gold.caMonthly(fact)), Nil),
+        ("client_features", () => feats, Nil),
+        ("segment_summary", () => Gold.segmentSummary(scored), Nil))
 
-      // (name, frame, partition columns); fact_achats first, the largest sink
-      val gold: Seq[(String, DataFrame, Seq[String])] = Seq(
-        ("fact_achats", fact, Seq("annee")),
-        ("dim_clients", Gold.dimClients(customer, orders, lineitem, ref), Nil),
-        ("client_features", feats, Nil),
-        ("client_scores", scored, Nil),
-        ("segment_summary", Gold.segmentSummary(scored), Nil),
-        ("ca_monthly", Gold.caMonthly(fact), Nil),
-        ("ca_country", Gold.caCountry(fact), Nil),
-        ("ca_product", Gold.caProduct(orders, lineitem, part), Nil),
-        ("cohort_first_purchase", Gold.cohort(fact), Nil),
-        ("gold_daily", Serving.daily(fact), Nil),
-        ("gold_weekly", Serving.weekly(fact), Nil),
-        ("gold_distribution", Serving.distribution(fact), Nil),
-        ("gold_monthly_growth", Serving.monthlyGrowth(Gold.caMonthly(fact)), Nil))
-
-      val rows = FanOut(spark, gold.map { case (name, df, partitions) => () =>
-        val dir = s"$outDir/gold/$name"
-        df.write.mode("overwrite").partitionBy(partitions: _*).parquet(dir)
-        name -> readBack(spark, df, dir, partitions).count()
-      }).toMap
-      Result(rows, qualityMap)
+      Result(writeCounted(spark, gold, s"$outDir/gold"), qualityMap)
     } finally {
       fact.unpersist()
-      feats.unpersist()
+      if (featsBuilt) feats.unpersist()
     }
+  }
+
+  /** Writes each (name, frame, partition columns) sink under `dir`
+    * through [[FanOut]] and returns its row count, taken from the write
+    * itself: the frame carries a named `observe` metric, which a query
+    * listener reads off the write's QueryExecution. Listeners run on the
+    * listener bus, so each task awaits its count after its write returns.
+    * The metric is not an `Observation`: the first `Observation` a
+    * session sees initializes its ObservationManager, which does not
+    * serialize, and from then on every spark.ml model whose training
+    * summary holds that session fails to ship in a task. */
+  private def writeCounted(spark: SparkSession,
+      sinks: Seq[(String, () => DataFrame, Seq[String])], dir: String): Map[String, Long] = {
+    val tag = java.util.UUID.randomUUID()
+    def metric(name: String) = s"rows:$name:$tag"
+    val counts = sinks.map { case (name, _, _) => metric(name) -> Promise[Long]() }.toMap
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
+        qe.observedMetrics.foreach { case (m, row) =>
+          counts.get(m).foreach(_.trySuccess(row.getLong(0))) }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try FanOut(spark, sinks.map { case (name, frame, partitions) => () =>
+      frame().observe(metric(name), count(lit(1)))
+        .write.mode("overwrite").partitionBy(partitions: _*).parquet(s"$dir/$name")
+      name -> Await.result(counts(metric(name)).future, Duration.Inf)
+    }).toMap
+    finally spark.listenerManager.unregister(listener)
   }
 
   /** Reads a sink back with the schema of the frame just written there,

@@ -43,6 +43,7 @@ object GoldProps extends Properties("Gold") {
           case (Some((n, c)), Some((cn, cc, _)))   => Some((k, n + cn, c + cc))
           case (None, Some((cn, cc, "U")))         => Some((k, cn, cc))
           case (None, Some((_, _, _)))             => None // unmatched delete
+          case (None, None)                        => sys.error(s"key $k in neither map")
         }
       }
       // compare in exact cents: the engine divides once on output, so

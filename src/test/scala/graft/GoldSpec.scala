@@ -358,6 +358,56 @@ class GoldSpec extends SparkSpec {
     Pipeline.checkGold(spark, out)
   }
 
+  // drops every cached frame of the shared session (the released memo,
+  // whose handles later suites rebuild, and anything a test cached itself),
+  // so a test can tell which frames a run leaves behind
+  private def clearSessionCache(): Unit = {
+    SparkEntry.unpersistShared(blocking = true)
+    spark.catalog.clearCache()
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("pipeline: a run releases every frame it cached and leaves the session serializable") {
+    clearSessionCache()
+    val out = java.nio.file.Files.createTempDirectory("graft_pipeline_cache").toString
+    assert(Pipeline.run(spark, sf, out).rows == pipelineRows)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    // spark.ml models keep the session in their training summary and ship
+    // with every transform task, so the run must not leave an
+    // unserializable member (an Observation's manager) on the session
+    new java.io.ObjectOutputStream(new java.io.ByteArrayOutputStream()).writeObject(spark)
+  }
+
+  test("pipeline: a failure inside the gold fan-out is rethrown and leaves nothing cached") {
+    clearSessionCache()
+    val out = java.nio.file.Files.createTempDirectory("graft_pipeline_fail").toString
+    // a plain file where the gold dir goes: every gold write fails, after
+    // the client_scores task has built (and cached) the client features
+    assert(new java.io.File(s"$out/gold").createNewFile())
+    val e = intercept[Exception](Pipeline.run(spark, sf, out))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains(s"$out/gold")), e)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("registerGold: each gold view's footer-read schema equals the inferred one") {
+    val out = java.nio.file.Files.createTempDirectory("graft_gold_views").toString
+    Pipeline.run(spark, sf, out)
+    Catalog.registerGold(spark, out)
+    val dirs = new java.io.File(s"$out/gold").listFiles().filter(_.isDirectory)
+    assert(dirs.length == 13)
+    dirs.foreach { d =>
+      assert(Catalog.footerSchema(spark, d).nonEmpty, d.getName)
+      val view = spark.table(s"gold_${d.getName.stripPrefix("gold_")}")
+      assert(view.schema == spark.read.parquet(d.getAbsolutePath).schema, d.getName)
+    }
+    assert(spark.table("gold_fact_achats").schema.last.name == "annee")
+    // no data file, no footer schema: registerGold falls back to inference
+    val empty = java.nio.file.Files.createTempDirectory("graft_no_parts").toFile
+    assert(new java.io.File(empty, "_SUCCESS").createNewFile())
+    assert(Catalog.footerSchema(spark, empty).isEmpty)
+  }
+
   test("sink readback: the schema-bound read equals the inferred one, flat and annee-partitioned") {
     val out = java.nio.file.Files.createTempDirectory("graft_readback").toString
     val fact = Gold.buildFact(Tables.orders(spark, sf), Tables.customer(spark, sf),
@@ -891,10 +941,10 @@ class GoldSpec extends SparkSpec {
   test("copurchaseTrianglesApprox: global estimate within the error floor; deterministic under repartition") {
     val e = Gold.itemPairEdges(Tables.lineitem(spark, sf))
     val exactTot = Gold.triangleCounts(e)
-      .agg(sum("n_triangles")).head.getLong(0)
+      .agg(sum("n_triangles")).head().getLong(0)
     val estTot = Gold.triangleCounts(e.filter(
         pmod(xxhash64(col("a"), col("b"), lit(42L)), lit(2L)) === 0L))
-      .agg(sum("n_triangles") * 8).head.getLong(0)
+      .agg(sum("n_triangles") * 8).head().getLong(0)
     // measured across 5 seeds at sf0.001: rel-err 0.008-0.075 (0.003-0.012
     // at sf0.01 — DOULION variance shrinks with triangle count); the floor
     // is 2x the worst observed seed, failing only on a real estimator bug

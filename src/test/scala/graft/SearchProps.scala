@@ -98,7 +98,7 @@ object SearchProps extends Properties("Search") {
         val ws = tok(t)
         if (ws.isEmpty) None
         else Some((id, ws.size.toLong,
-          round6(ws.map(w => math.log(uni(w)) - math.log(total)).sum / ws.size)))
+          round6(ws.map(w => math.log(uni(w).toDouble) - math.log(total)).sum / ws.size)))
       }.toSet
       val got = Llm.unigramLogProb(corpus.toDF("doc_id", "text")).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet

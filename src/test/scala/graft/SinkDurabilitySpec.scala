@@ -102,7 +102,7 @@ class SinkDurabilitySpec extends SparkSpec {
   // crash leaves behind ages out via the lease — covered above); the
   // invariant at EVERY point is one whole committed generation visible:
   // the previous one before the manifest rename, the new one at/after it.
-  private final case class Fault(point: String, inStage: Boolean, newVisible: Boolean)
+  private case class Fault(point: String, inStage: Boolean, newVisible: Boolean)
   private val faults = Seq(
     Fault("staging-written", inStage = true, newVisible = false),
     Fault("store-renamed", inStage = true, newVisible = false),
