@@ -95,11 +95,11 @@ object GenScale {
 
     // fixed dims copy through verbatim
     for (t <- Seq("region", "nation"))
-      writeSingle(spark.read.parquet(s"$inDir/$t.parquet"), t)
+      writeSingle(Tables.parquet(spark, s"$inDir/$t.parquet"), t)
 
     def scale(table: String, keys: Seq[String],
         extra: (DataFrame, Int) => DataFrame = (df, _) => df): Unit = {
-      val src = spark.read.parquet(s"$inDir/$table.parquet")
+      val src = Tables.parquet(spark, s"$inDir/$table.parquet")
       writeSingle((0 until r).map { i =>
         extra(keys.foldLeft(src)((df, k) =>
           df.withColumn(k, col(k) * r + i)), i)
@@ -115,7 +115,7 @@ object GenScale {
     scale("documents", Seq("doc_id"), (df, i) => df.withColumn("text",
       translate(translate(col("text"), Lower, rot(Lower, i)),
         Upper, rot(Upper, i))))
-    val dim = spark.read.parquet(s"$inDir/embeddings.parquet")
+    val dim = Tables.parquet(spark, s"$inDir/embeddings.parquet")
       .select(size(col("embedding"))).head().getInt(0)
     scale("embeddings", Seq("vec_id"), (df, i) =>
       df.withColumn("embedding",

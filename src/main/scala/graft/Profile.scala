@@ -12,7 +12,7 @@ object Profile {
 
   def mat(df: DataFrame): Long = { // materialize every column
     df.write.mode("overwrite").parquet("/tmp/profile_out")
-    df.sparkSession.read.parquet("/tmp/profile_out").count()
+    Tables.parquet(df.sparkSession, "/tmp/profile_out").count()
   }
 
   def main(args: Array[String]): Unit = {

@@ -42,7 +42,7 @@ object Verify {
             .parquet(s"$outDir/$name")
           check match {
             case Digest(golden, canon) =>
-              val dg = Digests.resultDigest(canon(spark.read.parquet(s"$outDir/$name")))
+              val dg = Digests.resultDigest(canon(Tables.parquet(spark, s"$outDir/$name")))
               digests.put(name, dg)
               golden.get(dataset).foreach { want =>
                 if (want != dg)

@@ -2,10 +2,6 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** SQL surface (reference serving read path, SURVEY §3 entry point 3: the
   * Flask/Mongo layer collapses to views + ORDER BY/LIMIT queries).
@@ -16,7 +12,9 @@ object Catalog {
 
   /** Register the raw test tables (region…embeddings) as temp views.
     * Goes through the typed accessors — `events` needs its nanos→micros
-    * conversion, a raw load fails on TIMESTAMP(NANOS). */
+    * conversion, a raw load fails on TIMESTAMP(NANOS). Each relation's
+    * schema comes from its parquet footer ([[Tables.parquet]]), so
+    * registering starts no Spark job (JobCountSpec). */
   def registerTables(spark: SparkSession, dir: String): Unit = {
     val loaders: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
       "region" -> Tables.region, "nation" -> Tables.nation,
@@ -30,48 +28,21 @@ object Catalog {
   }
 
   /** Register every gold table written by [[Pipeline.run]] as a
-    * `gold_<name>` view. Each relation is resolved with the Spark schema
-    * stored in the footer of its first data file ([[footerSchema]]), read
-    * on the driver, so no schema-inference job runs; partition columns
-    * are left out of that schema and come from the directory names, as in
-    * an inferring read. A table without such a footer is resolved by an
-    * inferring read. Relations are resolved concurrently through
+    * `gold_<name>` view. Each relation is resolved by [[Tables.parquet]],
+    * from the footer of its first data file, so no schema-inference job
+    * runs; the `annee` partition column of `fact_achats` comes from the
+    * directory names. Relations are resolved concurrently through
     * [[FanOut]] (bounded by `defaultParallelism`), then registered on the
     * caller's thread, in directory-name order. */
   def registerGold(spark: SparkSession, outDir: String): Unit = {
     val goldDir = new java.io.File(s"$outDir/gold")
     require(goldDir.isDirectory, s"no gold dir at $goldDir — run Pipeline first")
     val dirs = goldDir.listFiles().filter(_.isDirectory).sortBy(_.getName).toSeq
-    val frames = FanOut(spark, dirs.map(d => () => {
-      val path = d.getAbsolutePath
-      footerSchema(spark, d).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
-    }))
+    val frames = FanOut(spark, dirs.map(d => () => Tables.parquet(spark, d.getAbsolutePath)))
     dirs.zip(frames).foreach { case (d, df) =>
       df.createOrReplaceTempView(s"gold_${d.getName.stripPrefix("gold_")}")
     }
     graft.functions.CosineSimilarity.register(spark)
-  }
-
-  /** The Spark schema a parquet sink's writer stored in the footer of its
-    * first data file (first by name, partition directories included),
-    * without the partition columns, which a data file does not hold.
-    * None when the sink has no data file or the file no Spark schema. */
-  private[graft] def footerSchema(spark: SparkSession,
-      dir: java.io.File): Option[StructType] = {
-    def firstPart(d: java.io.File): Option[java.io.File] = {
-      val kids = Option(d.listFiles()).map(_.toSeq.sortBy(_.getName)).getOrElse(Nil)
-        .filterNot(k => k.getName.startsWith("_") || k.getName.startsWith("."))
-      kids.find(k => k.isFile && k.getName.endsWith(".parquet"))
-        .orElse(kids.filter(_.isDirectory).iterator.flatMap(firstPart).nextOption())
-    }
-    firstPart(dir).flatMap { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new Path(f.getAbsolutePath), spark.sparkContext.hadoopConfiguration))
-      val meta = try reader.getFileMetaData.getKeyValueMetaData finally reader.close()
-      Option(meta.get("org.apache.spark.sql.parquet.row.metadata"))
-        .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
-        .collect { case s: StructType => s }
-    }
   }
 
   /** Column-level table profiling (ANALYZE-style observability): per
@@ -184,14 +155,22 @@ object Catalog {
     * field-select layer) — empty means all columns; unknown fields fail
     * analysis like the API's 400. Projection is applied before the sort
     * so the scan only reads the requested columns (sort keys must be in
-    * the projection, as in the reference API). */
+    * the projection, as in the reference API).
+    *
+    * The answer is materialized, as the reference API returns it: one
+    * query collects the bounded rows and comes back as a local frame.
+    * With `limit > 0` a collection has rows iff the answer has, so the
+    * empty check reads the answer; only `limit <= 0` needs its own
+    * emptiness probe. */
   def fetchCollection(spark: SparkSession, view: String, sortSpec: String = "",
       limit: Int = 5000, fields: Seq[String] = Nil): DataFrame = {
     val df = spark.table(view)
-    require(!df.isEmpty, s"collection '$view' is empty")
     val projected = if (fields.isEmpty) df else df.select(fields.map(col): _*)
     val sorted = if (sortSpec.isEmpty) projected
       else projected.orderBy(Serving.parseSortSpec(sortSpec): _*)
-    sorted.limit(limit)
+    val answer = sorted.limit(limit)
+    val rows = answer.collect()
+    require(rows.nonEmpty || (limit <= 0 && !df.isEmpty), s"collection '$view' is empty")
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), answer.schema)
   }
 }

@@ -92,12 +92,12 @@ object Layout {
     import spark.implicits._
     def files(d: String): Long =
       new java.io.File(d).listFiles().count(f => f.getName.endsWith(".parquet"))
-    val before = spark.read.parquet(inDir)
+    val before = Tables.parquet(spark, inDir)
     val bSum = Catalog.tableChecksum(before).head()
     val nFiles = math.max(1L, (bSum.getLong(0) + targetRecordsPerFile - 1)
       / targetRecordsPerFile).toInt
     before.repartition(nFiles).write.mode("overwrite").parquet(outDir)
-    val aSum = Catalog.tableChecksum(spark.read.parquet(outDir)).head()
+    val aSum = Catalog.tableChecksum(Tables.parquet(spark, outDir)).head()
     Seq((files(inDir), files(outDir), bSum.getLong(0), aSum.getLong(0),
       bSum.getLong(1), aSum.getLong(1)))
       .toDF("files_before", "files_after", "rows_before", "rows_after",

@@ -6,7 +6,6 @@ import scala.concurrent.duration.Duration
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** End-to-end medallion flow (reference tools/run.py:131-146 →
@@ -47,8 +46,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *  - a gold sink's row count comes from the write itself, an observed
   *    metric counting the rows on their way into the sink
   *    ([[writeCounted]]), not from a readback `count()` job;
-  *  - silver sinks are read back with the schema of the frame just
-  *    written ([[readBack]]), saving the footer-inference job per sink.
+  *  - every source table and sink is read through [[Tables.parquet]],
+  *    which takes its schema from a parquet footer on the driver, so no
+  *    schema-inference job runs; every job a run starts is part of a SQL
+  *    execution.
   */
 object Pipeline {
 
@@ -70,8 +71,8 @@ object Pipeline {
       n -> quality.getAs[Long](n)).toMap
 
     // ---- gold -------------------------------------------------------------
-    val Seq(orders, customer) = silver.map { case (name, df) =>
-      readBack(spark, df, s"$outDir/silver/$name") }
+    val Seq(orders, customer) = silver.map { case (name, _) =>
+      Tables.parquet(spark, s"$outDir/silver/$name") }
     val nation = Tables.nation(spark, sfDir)
     val lineitem = Tables.lineitem(spark, sfDir)
     val part = Tables.part(spark, sfDir)
@@ -142,16 +143,6 @@ object Pipeline {
     finally spark.listenerManager.unregister(listener)
   }
 
-  /** Reads a sink back with the schema of the frame just written there,
-    * which skips the one-job footer inference of an inferring
-    * `spark.read.parquet`. Partition columns are left out of that schema,
-    * so their types come from the directory names as in an inferring read
-    * (a long `annee` reads back as int); GoldSpec pins the equality. */
-  private[graft] def readBack(spark: SparkSession, df: DataFrame, dir: String,
-      partitions: Seq[String] = Nil): DataFrame =
-    spark.read.schema(StructType(df.schema.filterNot(f => partitions.contains(f.name))))
-      .parquet(dir)
-
   /** Small-file compaction for a Hive-partitioned parquet sink — the
     * maintenance job every long-lived 100 TB table needs: daily appends
     * leave each partition with one file per writing task, and scan/
@@ -201,7 +192,7 @@ object Pipeline {
         val marker = new java.io.File(pd.getParentFile, s".${pd.getName}.commit")
         val trash = new java.io.File(pd.getParentFile, s".${pd.getName}.old")
         Streams.deleteRec(staged); marker.delete(); Streams.deleteRec(trash)
-        spark.read.parquet(pd.toString)
+        Tables.parquet(spark, pd.toString)
           .repartition(n)
           .write.mode("overwrite").parquet(staged.toString)
         tick("staged-written")
@@ -335,14 +326,14 @@ object Pipeline {
         "expected_value_12m", "value_at_risk_12m", "segment_label"),
       "ca_monthly" -> Seq("mois", "ca"))
     expected.foreach { case (name, cols) =>
-      val df = spark.read.parquet(s"$outDir/gold/$name")
+      val df = Tables.parquet(spark, s"$outDir/gold/$name")
       Tables.requireColumns(df, cols, name)
       require(df.limit(1).count() == 1, s"$name is empty")
     }
-    val fact = spark.read.parquet(s"$outDir/gold/fact_achats")
+    val fact = Tables.parquet(spark, s"$outDir/gold/fact_achats")
     require(fact.filter(col("o_totalprice") < 0).isEmpty,
       "fact_achats contains negative amounts")
-    val scores = spark.read.parquet(s"$outDir/gold/client_scores")
+    val scores = Tables.parquet(spark, s"$outDir/gold/client_scores")
     require(scores.filter(col("prob_reachat_12m") < 0 ||
       col("prob_reachat_12m") > 1).isEmpty, "prob out of [0,1]")
   }

@@ -141,7 +141,7 @@ object GoldQueries {
     // incremental gold maintenance: persisted pre-cutoff partial merged
     // with a delta-only scan; hash-checked against the full recompute
     QuerySpec("ca_monthly_incremental", (s, d) => Gold.caMonthlyFromPartials(
-      s.read.parquet(caPartialDir(s, d)).unionByName(Gold.caMonthlyPartial(deltaOrders(s, d)))),
+      Tables.parquet(s, caPartialDir(s, d)).unionByName(Gold.caMonthlyPartial(deltaOrders(s, d)))),
       Oracle(caMonthlySql)),
     // join-VIEW incremental maintenance (delta algebra): the persisted
     // base join never recomputes; the refresh is three delta-sided
@@ -153,7 +153,7 @@ object GoldQueries {
       val newL = Tables.lineitem(s, d).filter(col("l_shipdate") >= cut)
       val oldL = Tables.lineitem(s, d).filter(col("l_shipdate") < cut)
       Gold.orderRevenueFromPartials(
-        s.read.parquet(joinPartialDir(s, d))
+        Tables.parquet(s, joinPartialDir(s, d))
           .unionByName(Gold.orderRevenuePartial(oldO, newL))
           .unionByName(Gold.orderRevenuePartial(newO, oldL))
           .unionByName(Gold.orderRevenuePartial(newO, newL)))
@@ -172,7 +172,7 @@ object GoldQueries {
     // (its ExactTier); the sketch merge's error bound and
     // split-insensitivity are pinned by GoldSpec.
     QuerySpec("kpis_incremental", (s, d) => Serving.kpisFromPartials(
-      s.read.parquet(kpisPartialDir(s, d)).unionByName(Serving.kpisPartial(deltaOrders(s, d)))),
+      Tables.parquet(s, kpisPartialDir(s, d)).unionByName(Serving.kpisPartial(deltaOrders(s, d)))),
       // kpis_incremental runs its fully-exact merge tier at verify time
       // (persisted algebraic partial + exact key set; the HLL sketch tier
       // is pinned by GoldSpec) — same truth as the kpis oracle, with the
@@ -186,13 +186,13 @@ object GoldQueries {
         // the fully-exact merge: algebraic fields + a persisted exact key set
         Some(ExactTier("bench: HLL sketch-union merge; verify: fully-exact merge vs the kpis oracle (GoldSpec pins sketch error bound + split-insensitivity)",
           (s, d) => Serving.kpisExactIncremental(
-            s.read.parquet(kpisPartialDir(s, d)),
-            s.read.parquet(kpisKeysDir(s, d)), deltaOrders(s, d)))))),
+            Tables.parquet(s, kpisPartialDir(s, d)),
+            Tables.parquet(s, kpisKeysDir(s, d)), deltaOrders(s, d)))))),
     // the exact algebraic half of the same refresh (sums/counts in
     // integer cents merge bit-for-bit) — hash-checked against a full
     // recompute; only the HLL client estimate stays rows-only above
     QuerySpec("kpis_incremental_exact", (s, d) => Serving.kpisExactFromPartials(
-      s.read.parquet(kpisPartialDir(s, d)).unionByName(Serving.kpisPartial(deltaOrders(s, d)))),
+      Tables.parquet(s, kpisPartialDir(s, d)).unionByName(Serving.kpisPartial(deltaOrders(s, d)))),
       // the incremental refresh's exact fields vs a FULL recompute: the
       // partial+delta merge must be indistinguishable from one pass
       Oracle(s"""

@@ -205,7 +205,7 @@ object LlmQueries {
     QuerySpec("dedup_incremental", (s, d) => {
       val idx = dedupIndex(s, d)
       Llm.dedupIncrementalIndexed(Tables.documents(s, d),
-        s.read.parquet(s"$idx/exact"), s.read.parquet(s"$idx/shingles"))
+        Tables.parquet(s, s"$idx/exact"), Tables.parquet(s, s"$idx/shingles"))
     },
       // hash-percentile arithmetic must match Prep.hashPct bit-for-bit:
       // high bits of a Knuth multiplicative hash, floor over exact doubles

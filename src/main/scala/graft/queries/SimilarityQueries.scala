@@ -53,7 +53,7 @@ object SimilarityQueries {
     // argmin assignment + nprobe probing (Ml.knnIvfFrom), hash-checked
     // since r15 — the oracle reads the same centroid parquet
     QuerySpec("knn_ivf", (s, d) => memoFrame("ivf", s, d)(
-      Ml.knnIvfFrom(Tables.embeddings(s, d), s.read.parquet(ivfFullIndex(s, d)))),
+      Ml.knnIvfFrom(Tables.embeddings(s, d), Tables.parquet(s, ivfFullIndex(s, d)))),
       // IVF search restated end-to-end from the PERSISTED coarse-quantizer
       // centroids (Verify substitutes ArtifactsToken with the real path at
       // dump time): squared-L2 argmin cell assignment with ties to the
@@ -91,7 +91,7 @@ object SimilarityQueries {
     QuerySpec("knn_ivf_incremental", (s, d) => {
       val idx = ivfIndex(s, d)
       Ml.ivfAssignDelta(Tables.embeddings(s, d).filter(col("vec_id") >= 400L),
-        s.read.parquet(idx))
+        Tables.parquet(s, idx))
     },
       // incremental IVF maintenance restated from the persisted vec_id<400
       // index: delta-only scan, same argmin + lower-cell tie-break, 6dp

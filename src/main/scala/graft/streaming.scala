@@ -59,9 +59,7 @@ object Streams extends Serializable {
     * same conversion as Tables.events). */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // shared-listing memo: the schema listing runs once per (session,
-    // dataset), not once per streaming query (r16 judge item 8)
-    val schema = Tables.parquetSchema(spark, s"$dir/events.parquet")
+    val schema = Tables.parquet(spark, s"$dir/events.parquet").schema
     val raw = spark.readStream
       .schema(schema)
       .option("pathGlobFilter", "events.parquet")
@@ -93,7 +91,7 @@ object Streams extends Serializable {
     require(chunks.nonEmpty, s"chunked event stream: no .parquet chunk files in $dir")
     val first = chunks.minBy(_.getName)
     val raw = spark.readStream
-      .schema(spark.read.parquet(first.getAbsolutePath).schema)
+      .schema(Tables.parquet(spark, first.getAbsolutePath).schema)
       .option("maxFilesPerTrigger", 1)
       .option("latestFirst", "false")
       .parquet(dir)
@@ -376,8 +374,8 @@ object Streams extends Serializable {
     val merged =
       if (onDisk.isEmpty) b
       else {
-        val existing = spark.read
-          .parquet(onDisk.toSeq.map(i => s"${store.getAbsolutePath}/${man(i)}"): _*)
+        val existing = Tables.parquet(spark,
+          onDisk.toSeq.map(i => s"${store.getAbsolutePath}/${man(i)}"): _*)
         existing.join(b.select(key).distinct(), Seq(key), "left_anti")
           .withColumn("_bucket", pmod(xxhash64(col(key)), lit(buckets.toLong)))
           .unionByName(b)
@@ -516,7 +514,7 @@ object Streams extends Serializable {
   def readUpserted(spark: SparkSession, sinkDir: String): DataFrame = {
     val man = readManifest(sinkDir)
     require(man.nonEmpty, s"upsert sink has no committed generation: $sinkDir")
-    spark.read.parquet(
+    Tables.parquet(spark,
       man.toSeq.sortBy(_._1).map { case (_, n) => s"$sinkDir/store/$n" }: _*)
   }
 
@@ -558,7 +556,7 @@ object Streams extends Serializable {
       sinkDir: String, filesPerBatch: Int = 2,
       checkpointDir: Option[String] = None,
       crashAfterCommitOfBatch: Long = -1L): DataFrame = {
-    val schema = Tables.parquetSchema(spark, ordersDir)
+    val schema = Tables.parquet(spark, ordersDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", filesPerBatch)
       .parquet(ordersDir)
@@ -595,7 +593,7 @@ object Streams extends Serializable {
   def topClientsMaintained(spark: SparkSession, ordersDir: String,
       sinkDir: String, filesPerBatch: Int = 2, k: Int = 20,
       checkpointDir: Option[String] = None): DataFrame = {
-    val schema = Tables.parquetSchema(spark, ordersDir)
+    val schema = Tables.parquet(spark, ordersDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", filesPerBatch)
       .parquet(ordersDir)
@@ -931,11 +929,11 @@ object Streams extends Serializable {
     * treats it exactly like the real feed. */
   private[graft] def heartbeatStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.parquetSchema(spark, s"$dir/events.parquet")
+    val schema = Tables.parquet(spark, s"$dir/events.parquet").schema
     val isNanos = schema("ts").dataType == org.apache.spark.sql.types.LongType
     val tmp = Shared.dir(spark, "heartbeat", dir) { p =>
       // the full relation resolves only on the one-time sentinel build
-      val static = spark.read.parquet(s"$dir/events.parquet")
+      val static = Tables.parquet(spark, s"$dir/events.parquet")
       val maxTs = static.agg(max("ts")).first()
       // `lit` accepts java.sql.Timestamp (TIMESTAMP) and
       // java.time.LocalDateTime (TIMESTAMP_NTZ) alike, so the same branch

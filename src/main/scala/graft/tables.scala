@@ -1,7 +1,12 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Table loaders + schema validation for the driver test star schema.
   *
@@ -11,6 +16,12 @@ import org.apache.spark.sql.functions._
   * validation applied at load time against explicit required-column
   * lists, rather than schema inference (the reference infers CSV schema,
   * flows_spark/bronze_ingestion_spark.py:24-25 — we read typed parquet).
+  *
+  * Every parquet read of the engine — source tables, sinks, fixtures,
+  * dumps — goes through [[parquet]] / [[parquetOr]], which resolve the
+  * schema from one footer on the driver instead of a schema-inference
+  * job (SourceGateSpec holds the rule). Loading a source table starts no
+  * Spark job.
   */
 object Tables {
 
@@ -92,14 +103,13 @@ object Tables {
   }
 
   /** Resolved-relation memo — what a catalog does for a registered table.
-    * `spark.read.parquet` resolves the DataSource from scratch on every
-    * call: a driver-side file listing plus a footer read for schema
-    * inference, ~5-10ms each. The test tables are immutable within a
-    * session, and a 190-query bench pass issues hundreds of loader calls,
-    * so re-resolving per call is pure floor cost (measured seconds per
-    * bench run). One resolved handle per (session, dir, table); sinks and
-    * scratch dirs — anything rewritten mid-session — never load through
-    * here, they call spark.read directly.
+    * Resolving a parquet relation costs a driver-side file listing and a
+    * footer read ([[parquet]]), and a 190-query bench pass issues
+    * hundreds of loader calls over test tables that are immutable within
+    * a session, so re-resolving per call is pure floor cost. One resolved
+    * handle per (session, dir, table); sinks and scratch dirs — anything
+    * rewritten mid-session — never load through here, they call
+    * [[parquet]] directly.
     *
     * Keys are `spark.sessionUUID` — unique per session for the JVM's
     * lifetime, unlike an identity hash, which can recur after a stopped
@@ -110,21 +120,67 @@ object Tables {
     * otherwise retains dead plans forever. */
   private val loadMemo = new SessionMemo[(String, String), DataFrame]
 
-  /** Session-scoped parquet-SCHEMA memo (r16 judge item 8): resolving a
-    * parquet relation for `.schema` performs a directory listing plus a
-    * footer read (~50 ms on this machine), and every FILE-SOURCE
-    * streaming query needs the source schema before `readStream` — 12
-    * such queries paid the listing independently (~0.6 s suite-wide).
-    * The schema of a DATASET path is immutable for a session's
-    * lifetime (test datasets never change shape mid-session), so one
-    * listing serves all streaming queries over the same path. Per-query
-    * stream state machinery is untouched — this shares only the
-    * schema-inference read, never source progress. */
-  private val schemaMemo =
-    new SessionMemo[String, org.apache.spark.sql.types.StructType]
-  private[graft] def parquetSchema(spark: SparkSession,
-      path: String): org.apache.spark.sql.types.StructType =
-    schemaMemo.getOrElseUpdate(spark, path, spark.read.parquet(path).schema)
+  /** A parquet read whose schema is resolved on the driver from one
+    * footer, so no schema-inference job runs. A schema-less
+    * `spark.read.parquet` starts a one-task job to read a footer; a
+    * parquet file carries its schema in its own metadata, so reading
+    * that footer here gives the same answer without a job. The file is
+    * the first data file under `paths`, by name, partition directories
+    * included and `_`/`.` names skipped as Spark's file listing skips
+    * them. Its schema is the Spark schema its writer stored there, or
+    * else its parquet schema converted under the session's conf (nanos
+    * as long, timestamp-NTZ inference, binary as string, int96), both
+    * exactly as the inferring read takes them. Partition columns are not
+    * in a data file, so they come from the directory names as in an
+    * inferring read. Paths with no data file take the inferring read, so
+    * a missing path fails with Spark's own error. */
+  def parquet(spark: SparkSession, paths: String*): DataFrame =
+    read(spark, paths, footerSchema(spark, paths))
+
+  /** [[parquet]] that tolerates a FILE-LESS directory: a partitionBy
+    * write of zero rows creates no part files (only `_SUCCESS`), so there
+    * is no footer to resolve, and `empty` — the writer's own schema —
+    * binds the read instead, which then yields an empty frame. A dir with
+    * data never consults `empty`. */
+  def parquetOr(spark: SparkSession, dir: String, empty: => StructType): DataFrame =
+    read(spark, Seq(dir), footerSchema(spark, Seq(dir)).orElse(Some(empty)))
+
+  private def read(spark: SparkSession, paths: Seq[String],
+      schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read.parquet(paths: _*))(spark.read.schema(_).parquet(paths: _*))
+
+  /** The data schema [[parquet]] binds: read from the footer of the first
+    * data file under `paths`, without partition columns. None when no
+    * path holds a data file. */
+  private[graft] def footerSchema(spark: SparkSession,
+      paths: Seq[String]): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    paths.iterator.flatMap { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(conf)
+      if (fs.exists(path)) firstDataFile(fs, fs.getFileStatus(path)) else None
+    }.nextOption().map { file =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+      val footer = try reader.getFooter finally reader.close()
+      ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    }
+  }
+
+  /** Spark's listing rule: `.`-names, `_`-names other than `k=v`
+    * partition dirs, and in-flight `._COPYING_` copies are not data. */
+  private def hidden(name: String): Boolean =
+    name.startsWith(".") || (name.startsWith("_") && !name.contains("=")) ||
+      name.endsWith("._COPYING_")
+
+  private def firstDataFile(fs: FileSystem, st: FileStatus): Option[FileStatus] =
+    if (st.isFile) Some(st)
+    else {
+      val kids = fs.listStatus(st.getPath)
+        .filterNot(k => hidden(k.getPath.getName)).sortBy(_.getPath.getName)
+      kids.find(_.isFile).orElse(
+        kids.iterator.filter(_.isDirectory).flatMap(firstDataFile(fs, _)).nextOption())
+    }
 
   /** One UUID per live session, assigned on first sight and never
     * reused (Spark's own `sessionUUID` is `private[sql]`, so we mint our
@@ -218,7 +274,7 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     loadMemo.getOrElseUpdate(spark, (dir, name), {
-      val df = spark.read.parquet(s"$dir/$name.parquet")
+      val df = parquet(spark, s"$dir/$name.parquet")
       required.get(name).map(requireColumns(df, _, name)).getOrElse(df)
     })
 
@@ -256,22 +312,6 @@ object Tables {
       miss(regexp_extract(line, "ev=(\\S+)", 1)).as("event_type"),
       miss(regexp_extract(line, "vc=(-?\\d+)", 1)).cast("long").as("value_cents"))
   }
-
-  /** Parquet read that tolerates a FILE-LESS directory: a partitionBy
-    * write of zero rows creates no part files (only _SUCCESS), and the
-    * read-back then fails schema inference with UNABLE_TO_INFER_SCHEMA.
-    * Falls back to the caller-supplied schema — the writer's own — so an
-    * empty sink reads as an empty frame. Non-empty dirs take the normal
-    * inference path untouched (the fallback schema is by-name and never
-    * consulted), keeping bit-identical behavior where data exists. */
-  def parquetOr(spark: SparkSession, dir: String,
-      fallback: => org.apache.spark.sql.types.StructType): DataFrame =
-    try spark.read.parquet(dir)
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
-        spark.read.schema(fallback).parquet(dir)
-    }
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")

@@ -390,22 +390,49 @@ class GoldSpec extends SparkSpec {
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 
-  test("registerGold: each gold view's footer-read schema equals the inferred one") {
+  /** One pipeline output for the schema-resolution tests. */
+  private lazy val resolvedOut = {
     val out = java.nio.file.Files.createTempDirectory("graft_gold_views").toString
     Pipeline.run(spark, sf, out)
-    Catalog.registerGold(spark, out)
-    val dirs = new java.io.File(s"$out/gold").listFiles().filter(_.isDirectory)
+    out
+  }
+
+  test("registerGold: each gold view's footer-read schema equals the inferred one") {
+    Catalog.registerGold(spark, resolvedOut)
+    val dirs = new java.io.File(s"$resolvedOut/gold").listFiles().filter(_.isDirectory)
     assert(dirs.length == 13)
     dirs.foreach { d =>
-      assert(Catalog.footerSchema(spark, d).nonEmpty, d.getName)
+      assert(Tables.footerSchema(spark, Seq(d.getAbsolutePath)).nonEmpty, d.getName)
       val view = spark.table(s"gold_${d.getName.stripPrefix("gold_")}")
       assert(view.schema == spark.read.parquet(d.getAbsolutePath).schema, d.getName)
     }
     assert(spark.table("gold_fact_achats").schema.last.name == "annee")
-    // no data file, no footer schema: registerGold falls back to inference
+  }
+
+  test("Tables.parquet: footer-read schema equals the inferred one on sources and sinks") {
+    // events.ts is TIMESTAMP(NANOS): both reads see it as Tables.events does
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    def same(path: String): Unit = {
+      assert(Tables.footerSchema(spark, Seq(path)).nonEmpty, path)
+      assert(Tables.parquet(spark, path).schema == spark.read.parquet(path).schema, path)
+    }
+    assert(Tables.required.size == 10)
+    Tables.required.keys.toSeq.sorted.foreach(t => same(s"$sf/$t.parquet"))
+    Seq("orders", "customer").foreach(t => same(s"$resolvedOut/silver/$t"))
+    // no data file: parquetOr binds the caller's schema, parquet infers and
+    // fails as Spark does, and a missing path keeps Spark's own error
     val empty = java.nio.file.Files.createTempDirectory("graft_no_parts").toFile
     assert(new java.io.File(empty, "_SUCCESS").createNewFile())
-    assert(Catalog.footerSchema(spark, empty).isEmpty)
+    val dir = empty.getAbsolutePath
+    assert(Tables.footerSchema(spark, Seq(dir)).isEmpty)
+    val fallback = StructType(Seq(StructField("o_custkey", LongType)))
+    val bound = Tables.parquetOr(spark, dir, fallback)
+    assert(bound.schema == fallback && bound.count() == 0)
+    def condition(read: => DataFrame) =
+      intercept[org.apache.spark.sql.AnalysisException](read).getCondition
+    assert(condition(Tables.parquet(spark, dir)) == "UNABLE_TO_INFER_SCHEMA")
+    assert(condition(Tables.parquet(spark, s"$dir/missing")) ==
+      condition(spark.read.parquet(s"$dir/missing")))
   }
 
   test("sink readback: the schema-bound read equals the inferred one, flat and annee-partitioned") {
@@ -414,7 +441,7 @@ class GoldSpec extends SparkSpec {
       Tables.nation(spark, sf))
     def roundTrip(df: DataFrame, dir: String, partitions: Seq[String]): Unit = {
       df.write.partitionBy(partitions: _*).parquet(dir)
-      val bound = Pipeline.readBack(spark, df, dir, partitions)
+      val bound = Tables.parquet(spark, dir)
       val inferred = spark.read.parquet(dir)
       assert(bound.schema == inferred.schema, dir)
       assert(bound.count() == inferred.count(), dir)

@@ -50,7 +50,7 @@ class SourceGateSpec extends AnyFunSuite {
       .map(_.replaceAll("//.*", ""))
       .mkString("\n")
 
-  test("SessionMemo is constructed only by Shared, Tables' two loader memos and lastSink") {
+  test("SessionMemo is constructed only by Shared, Tables.loadMemo and lastSink") {
     val decl = """val\s+(\w+)\s*=\s*new\s+(?:Tables\.)?SessionMemo\b""".r
     val anyNew = """new\s+(?:Tables\.)?SessionMemo\b""".r
     val sites = mainSources.flatMap { p =>
@@ -62,9 +62,24 @@ class SourceGateSpec extends AnyFunSuite {
     }
     val outsideShared = sites.filterNot(_._1 == "shared.scala")
     assert(outsideShared.sorted == Seq("streaming.scala" -> "lastSink",
-        "tables.scala" -> "loadMemo", "tables.scala" -> "schemaMemo"),
+        "tables.scala" -> "loadMemo"),
       "a cross-query memo belongs in graft.Shared (released or session " +
         s"lifetime), not in its own SessionMemo: $outsideShared")
+  }
+
+  test("every parquet read in src/main resolves its schema through Tables.parquet") {
+    // a schema-less `read.parquet(` starts a schema-inference job; only the
+    // resolver itself and the schema-evolution query's mergeSchema read,
+    // which must infer across files, may issue one
+    val schemaless = """read\s*(?:\.option\([^)]*\)\s*)*\.parquet\(""".r
+    val offenders = mainSources.flatMap { p =>
+      schemaless.findAllMatchIn(code(p)).map(_.matched.replaceAll("\\s+", " "))
+        .map(p.getFileName.toString -> _).toSeq
+    }
+    assert(offenders.sorted == Seq(
+        "ExtensionQueries.scala" -> """read.option("mergeSchema", "true").parquet(""",
+        "tables.scala" -> "read.parquet("),
+      s"read parquet through Tables.parquet / Tables.parquetOr: $offenders")
   }
 
   test("sys.addShutdownHook appears only in Shared (its tempDir helper)") {

@@ -817,12 +817,27 @@ class StreamsSpec extends SparkSpec {
     assert(fetched.length == 10)
     assert(fetched(0).getAs[Double]("c_acctbal") >= fetched(9).getAs[Double]("c_acctbal"))
     // projection + sort + limit together: only the requested columns come
-    // back, in the requested order, and the scan is pruned to them
-    val proj = Catalog.fetchCollection(spark, "customer", "c_acctbal:desc", 10,
-      fields = Seq("c_custkey", "c_acctbal"))
+    // back, in the requested order, and the one query the fetch executes
+    // scans only them (the returned frame is its materialized answer)
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = executed.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val drain = () => org.apache.spark.graftbridge.BusDrain(spark.sparkContext)
+    drain() // the earlier queries' events must not reach the listener
+    spark.listenerManager.register(listener)
+    val proj = try {
+      val p = Catalog.fetchCollection(spark, "customer", "c_acctbal:desc", 10,
+        fields = Seq("c_custkey", "c_acctbal"))
+      drain()
+      p
+    } finally spark.listenerManager.unregister(listener)
     assert(proj.columns.toSeq == Seq("c_custkey", "c_acctbal"))
-    assert(proj.queryExecution.executedPlan.toString
-      .contains("ReadSchema: struct<c_custkey:bigint,c_acctbal:double>"))
+    assert(executed.size == 1, executed)
+    assert(executed.peek().contains("ReadSchema: struct<c_custkey:bigint,c_acctbal:double>"))
     val pr = proj.collect()
     assert(pr.length == 10)
     assert(pr.map(_.getAs[Double]("c_acctbal")).toSeq ==
