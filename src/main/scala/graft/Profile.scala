@@ -2,22 +2,17 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Ad-hoc profiling entry (dev tool, not part of the driver contract). */
+/** Dev profiling modes for what no other tool records: a query's
+  * build/plan/exec/jobs split (`floor`), its plans before and after
+  * execution, per-batch streaming durations and ad-hoc SQL over the
+  * registered tables. Bench and Verify do not call it. */
 object Profile {
-  def time(name: String)(f: => Long): Unit = {
-    val t0 = System.nanoTime()
-    val n = f
-    println(f"[profile] $name: ${(System.nanoTime() - t0) / 1e9}%.1fs ($n rows)")
-  }
-
-  def mat(df: DataFrame): Long = { // materialize every column
-    df.write.mode("overwrite").parquet("/tmp/profile_out")
-    Tables.parquet(df.sparkSession, "/tmp/profile_out").count()
-  }
+  private val Usage = "usage: graft.Profile <sfDir> (sql <text...> | floor | " +
+    "explain <query...> | exec-explain <query...> | streamprof <query> <passes>)"
 
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = EntryPoint.session(EntryPoint.cpus("8"))
+    lazy val spark = EntryPoint.session(EntryPoint.cpus("8")) // no session on a usage error
     args.drop(1) match {
       case Array("sql", query @ _*) =>
         Catalog.registerTables(spark, d)
@@ -106,22 +101,6 @@ object Profile {
           println(SparkEntry.queries(n)(spark, d).queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode))
         }
-      case Array("sharedbuild", nStr @ _*) =>
-        // replay Bench's timed shared_build phase N times (pass 1 ~ the
-        // bench's own cold-after-warmup condition; later passes separate
-        // JIT warmup from real build cost while iterating on a builder)
-        val n = nStr.headOption.map(_.toInt).getOrElse(2)
-        for (i <- 1 to n) {
-          SparkEntry.unpersistShared(blocking = true)
-          val rows = SparkEntry.sharedFrameBuilders.map { case (name, fn) =>
-            val t0 = System.nanoTime()
-            fn(spark, d).write.format("noop").mode("overwrite").save()
-            (name, (System.nanoTime() - t0) / 1e9)
-          }
-          println(f"[profile] sharedbuild pass $i total=${rows.map(_._2).sum}%.2fs")
-          rows.sortBy(-_._2).foreach { case (nm, sec) =>
-            println(f"[profile] sharedbuild   $nm%-20s $sec%7.3f") }
-        }
       case Array("exec-explain", names @ _*) =>
         // FINAL plan after execution — AQE runtime decisions (SMJ->SHJ
         // conversion, coalesced reads) only exist in the executed plan
@@ -132,43 +111,9 @@ object Profile {
           println(df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode))
         }
-      case Array("repeat", name, nStr) =>
-        // variance diagnosis: run one query N times in this JVM, print
-        // per-pass wall time alongside the JVM-level suspects — GC time
-        // delta, JIT compilation time delta, and a hash of the executed
-        // plan (an AQE flip between passes would change it)
-        import java.lang.management.ManagementFactory
-        import scala.jdk.CollectionConverters._
-        def gcMs: Long = ManagementFactory.getGarbageCollectorMXBeans
-          .asScala.map(_.getCollectionTime).sum
-        def jitMs: Long = ManagementFactory.getCompilationMXBean.getTotalCompilationTime
-        val fn = SparkEntry.queries(name)
-        fn(spark, d).write.format("noop").mode("overwrite").save() // warmup
-        for (i <- 1 to nStr.toInt) {
-          val (g0, c0, t0) = (gcMs, jitMs, System.nanoTime())
-          val df = fn(spark, d)
-          df.write.format("noop").mode("overwrite").save()
-          val wall = (System.nanoTime() - t0) / 1e9
-          // read the plan AFTER the action (AQE finalized); exprIds make
-          // the raw string hash-unstable across passes, so compare the
-          // operator SHAPE: per-strategy node counts — an AQE join flip
-          // between passes shows up here
-          val plan = df.queryExecution.executedPlan.toString
-          def cnt(op: String) = op + "=" + plan.sliding(op.length).count(_ == op)
-          val shape = Seq("SortMergeJoin", "BroadcastHashJoin",
-            "ShuffledHashJoin", "CartesianProduct", "AQEShuffleRead")
-            .map(cnt).mkString(" ")
-          println(f"[profile] repeat $name pass=$i%2d wall=$wall%6.2fs " +
-            f"gc=+${gcMs - g0}%4dms jit=+${jitMs - c0}%5dms $shape")
-        }
       case _ =>
-        val docs = Tables.documents(spark, d)
-        time("signatures")(mat(Llm.minhashSignatures(docs)))
-        time("candidates")(mat(Llm.minhashCandidates(docs)))
-        time("dedupMinhash")(mat(Llm.dedupMinhash(docs)))
-        time("simhashDocs")(mat(Llm.simhashDocs(docs)))
-        time("dedupSimhash")(mat(Llm.dedupSimhash(docs)))
-        spark.stop()
+        System.err.println(Usage)
+        sys.exit(2)
     }
   }
 }

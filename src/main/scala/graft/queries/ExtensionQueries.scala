@@ -1044,8 +1044,7 @@ object ExtensionQueries {
                     20.0 * ((SELECT stot FROM g) / 100.0 / (SELECT ntot FROM g)))
                    / (n + 20.0), 6) AS enc
       FROM a ORDER BY pays""")),
-    QuerySpec("kmeans_segments", (s, d) => memoFrame("kmeans", s, d)(
-      Ml.segmentsOf(kmeansAssigned(s, d))),
+    QuerySpec("kmeans_segments", (s, d) => Ml.segmentsOf(kmeansAssigned(s, d)),
       // the deterministic Lloyd's fit (hash-ordered init, order-independent
       // decimal sums) is bit-identical between local[4] and local[32]
       Digest(Map(
@@ -1055,8 +1054,7 @@ object ExtensionQueries {
     // cluster-quality metric the reference's advisor publishes
     // (reference scripts/train_advisor.py:123,321): mean silhouette of the
     // seed-pinned k=5 assignment, squared-Euclidean sufficient statistics
-    QuerySpec("kmeans_silhouette", (s, d) => memoFrame("silhouette", s, d)(
-      Ml.silhouetteOf(kmeansAssigned(s, d))),
+    QuerySpec("kmeans_silhouette", (s, d) => Ml.silhouetteOf(kmeansAssigned(s, d)),
       Digest(Map(
         "sf0.001" -> "1:e65fbe91d4921ea",
         "sf0.01" -> "1:8be91f72dd29cf3",

@@ -52,8 +52,8 @@ object SimilarityQueries {
     // IVF search against the persisted full-corpus quantizer: explicit
     // argmin assignment + nprobe probing (Ml.knnIvfFrom), hash-checked
     // since r15 — the oracle reads the same centroid parquet
-    QuerySpec("knn_ivf", (s, d) => memoFrame("ivf", s, d)(
-      Ml.knnIvfFrom(Tables.embeddings(s, d), Tables.parquet(s, ivfFullIndex(s, d)))),
+    QuerySpec("knn_ivf", (s, d) =>
+      Ml.knnIvfFrom(Tables.embeddings(s, d), Tables.parquet(s, ivfFullIndex(s, d))),
       // IVF search restated end-to-end from the PERSISTED coarse-quantizer
       // centroids (Verify substitutes ArtifactsToken with the real path at
       // dump time): squared-L2 argmin cell assignment with ties to the

@@ -11,9 +11,14 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * one of two lifetimes:
   *
   *  - '''released''' entries live until [[release]]: the named shared
-  *    frames (fact, docTf, textStats, …), the ML fits and the answers
-  *    built from them, the plan-keyed frames of [[CacheOnce]], the corpus
+  *    frames (fact, docTf, textStats, …), the ML fits (the kmeans
+  *    assignment `kmeans_fit`), the answers whose fit runs inside the
+  *    answer (`propensity_model`, `propensity_backtest`, `knn_quantized`,
+  *    `embedding_pca`), the plan-keyed frames of [[CacheOnce]], the corpus
   *    vocabulary size and the BPE learn loop's handles. They are memory.
+  *    An answer derived from a memoized fit or index (`kmeans_segments`,
+  *    `kmeans_silhouette`, `knn_ivf`) is not memoized itself: it
+  *    recomputes per call, so a warm timing of it is not a cache read.
   *    Each frame is ONE cached handle, built once and reused by
   *    reference; leaning on the CacheManager's canonical-plan matching
   *    instead (an identical plan re-`.cache()`d per invocation) logs

@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   * other suite), so this main runs the full lifecycle in its own JVM:
   *
   *  1. session A populates one entry of each memo family: Shared's
-  *     released side (the `fact` frame, the `kmeans` fit, a CacheOnce
+  *     released side (the `fact` frame, the kmeans fit `kmeans_fit`, a CacheOnce
   *     plan frame), Shared's session side (the attribution pairs drain,
   *     its heartbeat dir, the upsert sink dir), Streams' lastSink
   *     pointer and Tables.load;
@@ -43,7 +43,7 @@ object MemoAuditMain {
     // family -> does it hold an entry of the session with this uuid
     val families: Seq[(String, String => Boolean)] = Seq(
       "shared frame fact" -> (id => Shared.released.keys((id, ("fact", sf)))),
-      "ML fit kmeans" -> (id => Shared.released.keys((id, ("kmeans", sf)))),
+      "ML fit kmeans" -> (id => Shared.released.keys((id, ("kmeans_fit", sf)))),
       "CacheOnce plan frame" -> (id =>
         Shared.released.keys.exists { case (u, k) => u == id && k.isInstanceOf[Int] }),
       "attribution pairs" -> (id => Shared.kept.keys((id, ("attrPairs", sf)))),

@@ -9,8 +9,12 @@ class SharedSpec extends SparkSpec {
 
   test("unpersistShared uncaches frames, ML fits and CacheOnce frames; fixtures survive unwritten") {
     val id = Tables.sessionId(spark)
-    for (q <- Seq("fact_achats", "kmeans_segments", "event_funnel", "csv_roundtrip"))
+    for (q <- Seq("fact_achats", "kmeans_segments", "kmeans_silhouette", "knn_ivf",
+        "event_funnel", "csv_roundtrip"))
       SparkEntry.queries(q)(spark, sf).collect()
+    // an answer derived from a memoized fit or index recomputes per call
+    for (k <- Seq("kmeans", "silhouette", "ivf"))
+      assert(!Shared.released.keys((id, (k, sf))), s"answer memo ($k, $sf) is back")
     val planKey = Shared.released.keys.collectFirst { case (`id`, k: Int) => k }
     assert(planKey.nonEmpty, "event_funnel left no CacheOnce frame")
     val frames = Seq(("fact", sf), ("kmeans_fit", sf), planKey.get)

@@ -138,7 +138,8 @@ out = {
         "complexity class is worse",
     "timing": "graft.Bench noop-materialize min-of-3 per SF, back-to-back "
         "same machine; single-run ratios carry the usual shared-JVM JIT "
-        "noise band (see CALIBRATION.json). flagged = ratio > flag_ratio "
+        "noise band (graft.Bench records it per query as `spread`, "
+        "max-min over its 3 timed passes). flagged = ratio > flag_ratio "
         "AND sf1 >= abs_floor_sec (sub-floor fixed-cost scheduling blips "
         "on cheap queries go to noise_band instead — any genuinely "
         "quadratic query crosses the floor trivially at 10x). Every "
