@@ -280,6 +280,18 @@ object Gold {
   def caMonthly(fact: DataFrame): DataFrame =
     fact.groupBy("mois").agg(moneySum(col("o_totalprice")).as("ca")).orderBy("mois")
 
+  /** Distinct (customer, part) co-purchase pairs, parity-encoded into
+    * one node-id space (even = customer·2, odd = part·2+1) — the shared
+    * bipartite frame both graph queries walk ([[productRankFrom]],
+    * [[copurchaseDistanceFrom]]); SparkEntry memoizes it so the line-grain
+    * join + distinct runs once per session. */
+  def copurchasePairs(orders: DataFrame, lineitem: DataFrame): DataFrame =
+    validOrders(orders).select("o_orderkey", "o_custkey")
+      .join(lineitem.select("l_orderkey", "l_partkey"),
+        col("o_orderkey") === col("l_orderkey"))
+      .select((col("o_custkey") * 2).as("c"), (col("l_partkey") * 2 + 1).as("p"))
+      .distinct()
+
   /** Product importance by co-purchase random walk: PageRank over the
     * customer—part bipartite graph (edges = distinct (customer, part)
     * purchase pairs, both directions, so the walk alternates sides and
@@ -294,22 +306,6 @@ object Gold {
     * distance of any rank to the 9dp grid is ~4e-14, ~400x the
     * cross-engine sum-order noise) + GraphSpec reference-value and
     * mass-conservation pins. */
-  /** Distinct (customer, part) co-purchase pairs, parity-encoded into
-    * one node-id space (even = customer·2, odd = part·2+1) — the shared
-    * bipartite frame both graph queries walk ([[productRank]],
-    * [[copurchaseDistance]]); SparkEntry memoizes it so the line-grain
-    * join + distinct runs once per session. */
-  def copurchasePairs(orders: DataFrame, lineitem: DataFrame): DataFrame =
-    validOrders(orders).select("o_orderkey", "o_custkey")
-      .join(lineitem.select("l_orderkey", "l_partkey"),
-        col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("c"), (col("l_partkey") * 2 + 1).as("p"))
-      .distinct()
-
-  def productRank(orders: DataFrame, lineitem: DataFrame, k: Int = 50,
-      iters: Int = 5): DataFrame =
-    productRankFrom(copurchasePairs(orders, lineitem), k, iters)
-
   def productRankFrom(cp: DataFrame, k: Int = 50, iters: Int = 5,
       roundProbe: DataFrame => Unit = _ => ()): DataFrame = {
     val edges = cp.select(col("c").as("src"), col("p").as("dst"))
@@ -548,11 +544,8 @@ object Gold {
     * dropping the zero-filled cells restores exactly
     * [[cohortRetention]]'s sparse output, which is what hash-checks
     * this query against the SAME oracle — a machine-checked proof the
-    * two reshapes are mutual inverses. */
-  def cohortRetentionMelt(orders: DataFrame, maxOffset: Int = 12): DataFrame =
-    cohortRetentionMeltFrom(cohortRetention(orders, maxOffset), maxOffset)
-
-  /** [[cohortRetentionMelt]] over a prebuilt [[cohortRetention]] frame. */
+    * two reshapes are mutual inverses. Takes a prebuilt
+    * [[cohortRetention]] frame. */
   def cohortRetentionMeltFrom(retention: DataFrame, maxOffset: Int = 12): DataFrame =
     cohortRetentionPivotFrom(retention, maxOffset)
       .unpivot(Array(col("cohort")),
@@ -636,16 +629,12 @@ object Gold {
   }
 
   /** Single-source BFS over the customer—part co-purchase graph (the
-    * same parity-encoded bipartite frame productRank walks), seeded at
+    * same parity-encoded bipartite frame productRankFrom walks), seeded at
     * the smallest part node: "how many hops of shared purchasing
     * separate every customer/product from this product". The
     * oracle-checked member of the iterative-graph family —
     * [[Graph.bfsDistances]] against DuckDB's depth-bounded recursive
     * CTE, exact distances, no float tolerance. */
-  def copurchaseDistance(orders: DataFrame, lineitem: DataFrame,
-      maxDepth: Int = 10): DataFrame =
-    copurchaseDistanceFrom(copurchasePairs(orders, lineitem), maxDepth)
-
   def copurchaseDistanceFrom(cp: DataFrame, maxDepth: Int = 10): DataFrame = {
     val edges = cp.select(col("c").as("a"), col("p").as("b"))
       .unionByName(cp.select(col("p").as("a"), col("c").as("b")))

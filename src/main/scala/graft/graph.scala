@@ -148,7 +148,7 @@ object Graph {
     // layout — hash on the round key — is pinned further down on `ew`,
     // where the degree-joined frame is explicitly repartitioned and the
     // layout re-declared across the checkpoint. Callers whose
-    // construction already guarantees uniqueness (productRank's
+    // construction already guarantees uniqueness (productRankFrom's
     // parity-encoded bipartite expansion) skip the dedup pass entirely
     // via preDeduped.
     val e = (if (preDeduped) cast else cast.distinct())

@@ -271,15 +271,6 @@ object Pipeline {
     partitionState(spark, dir)
   }
 
-  /** Surgical key deletion (right-to-be-forgotten) from an
-    * annee-partitioned sink: find the partitions that actually contain
-    * the key (one partition-pruned aggregate), rewrite ONLY those with
-    * the key anti-filtered, via [[overwritePartition]]'s dynamic mode —
-    * every other partition's files stay bit-for-bit in place. The 100 TB
-    * contrast: a naive `read → filter → overwrite` rewrites the whole
-    * table to delete one customer; this rewrites
-    * |partitions containing the key|. Returns the end state per
-    * partition. */
   /** Minimal read schema for an EMPTY annee-partitioned fact sink (a
     * zero-row partitionBy write leaves no part files to infer from; see
     * [[Tables.parquetOr]]). Only the columns this module touches on the
@@ -292,6 +283,15 @@ object Pipeline {
     org.apache.spark.sql.types.StructField("annee",
       org.apache.spark.sql.types.LongType)))
 
+  /** Surgical key deletion (right-to-be-forgotten) from an
+    * annee-partitioned sink: find the partitions that actually contain
+    * the key (one partition-pruned aggregate), rewrite ONLY those with
+    * the key anti-filtered, via [[overwritePartition]]'s dynamic mode —
+    * every other partition's files stay bit-for-bit in place. The 100 TB
+    * contrast: a naive `read → filter → overwrite` rewrites the whole
+    * table to delete one customer; this rewrites
+    * |partitions containing the key|. Returns the end state per
+    * partition. */
   def deleteKey(spark: SparkSession, dir: String, custkey: Long): DataFrame = {
     val sink = Tables.parquetOr(spark, dir, emptySinkSchema)
     val years = sink.filter(col("o_custkey") === custkey)

@@ -36,7 +36,9 @@ object EventsQueries {
       // the JSON ingest path must agree with the parquet path exactly
       Oracle(eventsHourlySql)),
     // stream-stream inner join (event-time range + two-sided watermark):
-    // click->purchase attribution, checked against the batch-join oracle
+    // click->purchase attribution, checked against the batch-join oracle.
+    // The three attribution views are rollups over ONE shared full-outer
+    // pair drain per (session, dataset); Verify dumps the body Bench times
     QuerySpec("events_attribution", (s, d) => Streams.attributionStreamed(s, d),
       Oracle("""
       WITH c AS (SELECT user_id, ts AS click_ts, value FROM events
@@ -50,9 +52,7 @@ object EventsQueries {
         AND c.click_ts >= p.purchase_ts - INTERVAL 1 HOUR
         AND c.click_ts < p.purchase_ts
       GROUP BY 1, 2, 3
-      ORDER BY purchase_id""",
-        Some(ExactTier("bench: rollup over ONE shared memoized full-outer pair drain per (session,dataset); verify: genuine independent stream-stream drain (StreamsSpec derived==genuine)",
-          (s, d) => Streams.attributionInnerDrain(s, () => Streams.eventsStream(s, d)))))),
+      ORDER BY purchase_id""")),
     // LEFT OUTER form: every purchase emits (null-click rows flushed by
     // the watermark heartbeat sentinel), same batch left-join oracle
     QuerySpec("events_attribution_outer", (s, d) => Streams.attributionOuterStreamed(s, d),
@@ -70,10 +70,7 @@ object EventsQueries {
         AND c.click_ts >= p.purchase_ts - INTERVAL 1 HOUR
         AND c.click_ts < p.purchase_ts
       GROUP BY 1, 2, 3
-      ORDER BY purchase_id""",
-        Some(ExactTier("bench: rollup over the shared full-outer pair drain; verify: genuine independent outer drain (StreamsSpec derived==genuine)",
-          (s, d) => Streams.attributionOuterDrain(s,
-            () => Streams.eventsStream(s, d).unionByName(Streams.heartbeatStream(s, d))))))),
+      ORDER BY purchase_id""")),
     // FULL OUTER completes the stream-stream join family: orphan clicks
     // (attributed to no purchase) emit per user under a NULL purchase key
     QuerySpec("events_attribution_full", (s, d) => Streams.attributionFullStreamed(s, d),
@@ -92,9 +89,6 @@ object EventsQueries {
         AND c.click_ts >= p.purchase_ts - INTERVAL 1 HOUR
         AND c.click_ts < p.purchase_ts
       GROUP BY 1, 2, 3
-      ORDER BY purchase_id, user_id""",
-        Some(ExactTier("bench: rollup over the shared full-outer pair drain; verify: genuine independent full-outer drain (StreamsSpec derived==genuine)",
-          (s, d) => Streams.attributionFullDrain(s,
-            () => Streams.eventsStream(s, d).unionByName(Streams.heartbeatStream(s, d)))))))
+      ORDER BY purchase_id, user_id"""))
   )
 }

@@ -202,34 +202,27 @@ object GoldQueries {
     // streaming form of the same maintenance: orders as a micro-batched
     // file stream, each batch sum-merged into the persisted partial;
     // final table hash-checks against the batch ca_monthly oracle.
-    // Bench measures the warm-sink form: history bootstrapped once, the
+    // The body is the warm-sink form: history bootstrapped once, the
     // invocation merges the one-trigger tail delta (see [[warmMaintBase]]).
-    // Verify runs the COLD from-empty 4-batch replay instead
-    // (its ExactTier), so the cross-SF oracle sweep keeps hash-checking
-    // the full bootstrap path, not just the steady-state merge.
+    // Bench times it and Verify dumps it; Verify's first call also runs
+    // the cold from-empty bootstrap, so the oracle sweep covers both.
     QuerySpec("ca_monthly_maintained", (s, d) => {
       val (base, tail) = warmMaintBase(s, d, "camaint")(
         (src, sink) => { Streams.caMonthlyMaintained(s, src, sink); () })
       Streams.caMonthlyMaintained(s, tail, scratchSinkCopy(base, "camaint"))
     },
       // streaming maintenance converges to the same table as the batch agg
-      Oracle(caMonthlySql,
-        // the COLD from-empty 4-batch replays: the oracle sweep keeps
-        // hash-checking the full bootstrap path, not just the steady-state merge
-        Some(ExactTier("bench: warm-sink one-trigger tail merge; verify: cold from-empty 4-batch streaming replay, hash-checked vs the batch ca_monthly oracle",
-          (s, d) => Streams.caMonthlyMaintained(s, ordersStreamDir(s, d), coldSink("camaint")))))),
+      Oracle(caMonthlySql)),
     // streamed maintenance of the top-client BASE state (client-grain
     // exact partials; top-k on read) — same oracle as top_clients; same
-    // warm-bench / cold-Verify split as ca_monthly_maintained
+    // warm-sink body as ca_monthly_maintained
     QuerySpec("top_clients_maintained", (s, d) => {
       val (base, tail) = warmMaintBase(s, d, "topkmaint")(
         (src, sink) => { Streams.topClientsMaintained(s, src, sink); () })
       Streams.topClientsMaintained(s, tail, scratchSinkCopy(base, "topkmaint"))
     },
       // the maintained base state converges to the same ranking
-      Oracle(topClientsSql,
-        Some(ExactTier("bench: warm-sink one-trigger tail merge; verify: cold from-empty 4-batch streaming replay, hash-checked vs the top_clients oracle",
-          (s, d) => Streams.topClientsMaintained(s, ordersStreamDir(s, d), coldSink("topkmaint")))))),
+      Oracle(topClientsSql)),
     QuerySpec("ca_country", (s, d) => Gold.caCountry(fact(s, d)), Oracle(caCountrySql)),
     // the hot-key two-stage salted aggregation as a query (same oracle:
     // exact cents make the salted sum bit-equal to the direct groupBy)

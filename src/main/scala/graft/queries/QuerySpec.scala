@@ -13,18 +13,17 @@ sealed trait Check
 
 /** Hash-checked against a DuckDB statement over the same tables (run by
   * tools/selfcheck.py and the driver from Verify's `oracle_sql.json`).
-  * `exact` is a tier-switch query's second body: Verify dumps it in place
-  * of the spec body, so the oracle checks the exact tier while Bench
-  * times the derived/warm/sketch one. */
+  * Verify dumps the spec body, the one Bench times, unless `exact` is
+  * set: that is only for a query whose timed body is approximate. */
 final case class Oracle(sql: String, exact: Option[ExactTier] = None) extends Check
 
-/** A tier-switch query's exact body. `posture` says what Bench MEASURES
-  * vs what Verify HASH-CHECKS (stamped into BENCH_FULL.json, so a
-  * cross-round reader can never misread tier amortization as engine
-  * speedup). StreamsSpec pins bench == exact row for row on the
-  * attribution and maintained views (tools/preflight.py refuses a tree
-  * whose gate is deleted); GoldSpec and PlanShapeSpec bound the two HLL
-  * tiers. */
+/** The exact body of a query whose timed body is an HLL sketch estimate
+  * (`kpis_incremental`, `kpis_rewritten`): Verify dumps it in place of
+  * the spec body, so the oracle checks exact code while Bench times the
+  * sketch. `posture` says what Bench measures vs what Verify
+  * hash-checks (stamped into BENCH_FULL.json). GoldSpec and
+  * PlanShapeSpec bound the two sketch tiers; StreamsSpec holds that no
+  * other query carries an exact body. */
 final case class ExactTier(posture: String,
     body: (SparkSession, String) => DataFrame)
 

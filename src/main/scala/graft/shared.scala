@@ -44,7 +44,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * `getOrElseUpdate` selects one winner atomically; a concurrent first
   * call (Verify runs 4 queries at a time) may run `build` twice, but only
   * the winning value is kept. A losing fixture's write lands in its own
-  * temp dir, which its exit hook removes — harmless, never a torn write. */
+  * temp dir, which its exit hook removes — harmless, never a torn write.
+  * A build whose side effects are shared between calls (the attribution
+  * drain replaces a per-prefix memory table) takes its own lock. */
 private[graft] object Shared {
 
   // visible to the audit and release specs

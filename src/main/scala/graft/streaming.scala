@@ -774,18 +774,15 @@ object Streams extends Serializable {
     * Purchases with no preceding click don't appear (inner semantics,
     * same as the oracle's plain join).
     *
-    * Production posture (what Bench measures): the three attribution
-    * views never each run their own stream-stream join — ONE full-outer
-    * attribution stream is drained per (session, dataset) and all three
-    * views derive from its pair set, because a full-outer pair set is a
-    * strict superset: inner = rows with both sides matched, left-outer =
-    * rows with the purchase side present. [[sharedAttributionPairs]]
-    * memoizes that drain; the per-view filters/rollups are proved
-    * pair-for-pair equal to the independent drains by StreamsSpec.
-    * Verify still runs each view's own genuine drain
-    * (its spec's `ExactTier`), so the cross-SF oracle sweep keeps
-    * hash-checking the real inner and left-outer stream-stream join
-    * paths. */
+    * The three attribution views never each run their own stream-stream
+    * join: ONE full-outer attribution stream is drained per (session,
+    * dataset) and all three views derive from its pair set, because a
+    * full-outer pair set is a strict superset: inner = rows with both
+    * sides matched, left-outer = rows with the purchase side present.
+    * [[sharedAttributionPairs]] memoizes that drain. The rollups are
+    * exact, so this one body is what Bench times and what Verify
+    * hash-checks against the batch-join oracle at every scale factor;
+    * StreamsProps fuzzes the three rollups against the batch joins. */
   def attributionStreamed(spark: SparkSession, dir: String): DataFrame =
     innerFromPairs(sharedAttributionPairs(spark, dir))
 
@@ -836,16 +833,25 @@ object Streams extends Serializable {
 
   /** The one shared full-outer pair drain behind the three attribution
     * views — drained once per (session, dataset), heartbeat-punctuated
-    * on both sides so every outer row flushes. */
+    * on both sides so every outer row flushes. The first call drains
+    * under `sharedPairsLock` and concurrent first callers wait for it:
+    * `Shared.session` alone may run its build twice, and the second
+    * drain's `sinkName` would drop the first one's memory table before
+    * that drain reads it back. */
   private def sharedAttributionPairs(spark: SparkSession, dir: String): DataFrame =
-    Shared.session(spark, ("attrPairs", dir))(
-      attributionPairsDrain(spark,
-        () => eventsStream(spark, dir).unionByName(heartbeatStream(spark, dir)),
-        // own per-dir sink prefix: sinkName drops the PREVIOUS view of the
-        // same (session, prefix), so the memoized view must never share a
-        // prefix with per-call drains (spec/fuzz/Verify paths) or with a
-        // different dataset's shared drain in the same session
-        s"graft_attr_shared_${Tables.pathTag(dir)}"))
+    sharedPairsLock.synchronized {
+      Shared.session(spark, ("attrPairs", dir))(
+        attributionPairsDrain(spark,
+          () => eventsStream(spark, dir).unionByName(heartbeatStream(spark, dir)),
+          // own per-dir sink prefix: sinkName drops the PREVIOUS view of
+          // the same (session, prefix), so the memoized view must never
+          // share a prefix with per-call drains (spec/fuzz paths) or with
+          // a different dataset's shared drain in the same session
+          sharedPairsPrefix(dir)))
+    }
+  private val sharedPairsLock = new Object
+  private[graft] def sharedPairsPrefix(dir: String): String =
+    s"graft_attr_shared_${Tables.pathTag(dir)}"
 
   /** Drain the full-outer click↔purchase range join and return the RAW
     * pair set (no rollup) as the session-local memory table. */
@@ -876,46 +882,6 @@ object Streams extends Serializable {
       .start()
     q.awaitTermination()
     spark.table(name)
-  }
-
-  /** The genuine inner drain Verify runs for [[attributionStreamed]],
-    * split on a source FACTORY (each side of a stream-stream join needs
-    * its own source instance tracking its own offsets) for the fuzz
-    * harness. */
-  private[graft] def attributionInnerDrain(spark: SparkSession,
-      mkSource: () => DataFrame): DataFrame = withStatePartitions(spark) {
-    val name = sinkName(spark, "graft_attr_stream")
-    // two independent source instances: each side of a stream-stream
-    // join tracks its own offsets/watermark
-    val clicks = mkSource()
-      .filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
-        col("value").as("click_value"))
-      .withWatermark("click_ts", "1 hour")
-    val purchases = mkSource()
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("ts").as("purchase_ts"))
-      .withWatermark("purchase_ts", "1 hour")
-    val pairs = purchases.join(clicks,
-      col("c_user") === col("user_id") &&
-        col("click_ts") >= col("purchase_ts") - expr("INTERVAL 1 HOUR") &&
-        col("click_ts") < col("purchase_ts"))
-    val q = pairs.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
-      .groupBy("purchase_id", "user_id", "purchase_ts")
-      .agg(count(lit(1)).as("n_clicks"),
-        Tables.moneySum(col("click_value")).as("click_value"))
-      .select(col("purchase_id"), col("user_id"),
-        col("purchase_ts").cast("timestamp_ntz").as("purchase_ts"),
-        col("n_clicks"), col("click_value"))
-      .orderBy("purchase_id")
   }
 
   /** A one-row "heartbeat" stream whose single event sits 3 hours past
@@ -966,48 +932,6 @@ object Streams extends Serializable {
   def attributionOuterStreamed(spark: SparkSession, dir: String): DataFrame =
     outerFromPairs(sharedAttributionPairs(spark, dir))
 
-  /** The genuine left-outer drain Verify runs for
-    * [[attributionOuterStreamed]], split on a source FACTORY for the fuzz
-    * harness — the fuzz writes its own
-    * sentinel row as the final chunk instead of the heartbeat union, so
-    * the null-row flush runs through the same machinery under random
-    * data and multi-batch arrival. */
-  private[graft] def attributionOuterDrain(spark: SparkSession,
-      mkSource: () => DataFrame): DataFrame = withStatePartitions(spark) {
-    val name = sinkName(spark, "graft_attr_outer")
-    val clicks = mkSource()
-      .filter(col("event_type").isin("click", "sentinel"))
-      .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
-        col("value").as("click_value"))
-      .withWatermark("click_ts", "1 hour")
-    val purchases = mkSource()
-      .filter(col("event_type").isin("purchase", "sentinel"))
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("ts").as("purchase_ts"))
-      .withWatermark("purchase_ts", "1 hour")
-    val pairs = purchases.join(clicks,
-      col("c_user") === col("user_id") &&
-        col("click_ts") >= col("purchase_ts") - expr("INTERVAL 1 HOUR") &&
-        col("click_ts") < col("purchase_ts"),
-      "left_outer")
-    val q = pairs.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
-      .filter(col("purchase_id") =!= -1L) // the sentinel is not a purchase
-      .groupBy("purchase_id", "user_id", "purchase_ts")
-      .agg(count(col("c_user")).as("n_clicks"),
-        Tables.moneySum(col("click_value")).as("click_value"))
-      .select(col("purchase_id"), col("user_id"),
-        col("purchase_ts").cast("timestamp_ntz").as("purchase_ts"),
-        col("n_clicks"), col("click_value"))
-      .orderBy("purchase_id")
-  }
-
   /** [[attributionOuterStreamed]]'s FULL OUTER form — the last member of
     * the stream-stream join family: every purchase emits (zero-click ones
     * with a null-click row, as in the left-outer form) AND every click
@@ -1023,15 +947,6 @@ object Streams extends Serializable {
     * left-outer forms. */
   def attributionFullStreamed(spark: SparkSession, dir: String): DataFrame =
     fullFromPairs(sharedAttributionPairs(spark, dir))
-
-  /** The genuine full-outer drain Verify runs for
-    * [[attributionFullStreamed]], split on a source factory for the fuzz
-    * harness (same sentinel-as-final-chunk
-    * pattern as [[attributionOuterDrain]]) — the raw pair drain plus the
-    * full-outer rollup. */
-  private[graft] def attributionFullDrain(spark: SparkSession,
-      mkSource: () => DataFrame): DataFrame =
-    fullFromPairs(attributionPairsDrain(spark, mkSource))
 
   /** Recursive delete for staged sink/checkpoint directories. */
   private[graft] def deleteRec(f: java.io.File): Unit = {

@@ -69,7 +69,7 @@ object GraphProps extends Properties("Graph") {
   // bit equality — the posture that found every real bug since round 9.
 
   /** BFS is DIRECTED and depth-TRUNCATED by contract: callers hand it a
-    * symmetric frame when they mean undirected, and copurchaseDistance
+    * symmetric frame when they mean undirected, and copurchaseDistanceFrom
     * relies on "a node is labeled the first time it arrives". The replay
     * runs raw directed edges with a maxDepth that is OFTEN SMALLER than
     * the true eccentricity, so a frontier that sneaks one round past the

@@ -241,69 +241,6 @@ object StreamsProps extends Properties("Streams") {
       } finally Streams.deleteRec(new java.io.File(dir))
     }
 
-  property("left-outer attribution with a fuzz-written sentinel flushes every zero-click purchase") =
-    Prop.forAll(genContiguous) { case (all, chunks) =>
-      // outer null rows only emit when the watermark PASSES a purchase's
-      // join window; the fuzz appends its own end-of-stream sentinel as
-      // the FINAL chunk (3h past max — the heartbeat pattern), so the
-      // flush machinery runs under random data and multi-batch arrival
-      val maxOff = all.map(_.off).max
-      val sentinel = Ev(-1L, -1L, "sentinel", maxOff + 3 * 3600L, 0.0)
-      val dir = writeChunks(chunks :+ Seq(sentinel))
-      try {
-        val streamed = Streams.attributionOuterDrain(spark,
-            () => Streams.chunkedEventsStream(spark, dir))
-          .select("purchase_id", "n_clicks", "click_value")
-          .collect().map(_.mkString("|")).toSeq.sorted
-        val ev = toDf(all)
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
-            col("value").as("click_value"))
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("event_id").as("purchase_id"), col("user_id"),
-            col("ts").as("purchase_ts"))
-        val oracle = purchases.join(clicks,
-            col("c_user") === col("user_id") &&
-              col("click_ts") >= col("purchase_ts") - expr("INTERVAL 1 HOUR") &&
-              col("click_ts") < col("purchase_ts"), "left_outer")
-          .groupBy("purchase_id")
-          .agg(count(col("c_user")).as("n_clicks"),
-            Tables.moneySum(col("click_value")).as("click_value"))
-          .collect().map(_.mkString("|")).toSeq.sorted
-        (streamed == oracle) :| s"streamed=$streamed oracle=$oracle"
-      } finally Streams.deleteRec(new java.io.File(dir))
-    }
-
-  property("full-outer attribution: orphan clicks and zero-click purchases both flush to the batch full join") =
-    Prop.forAll(genContiguous) { case (all, chunks) =>
-      val maxOff = all.map(_.off).max
-      val sentinel = Ev(-1L, -1L, "sentinel", maxOff + 3 * 3600L, 0.0)
-      val dir = writeChunks(chunks :+ Seq(sentinel))
-      try {
-        val streamed = Streams.attributionFullDrain(spark,
-            () => Streams.chunkedEventsStream(spark, dir))
-          .select("purchase_id", "user_id", "n_clicks", "click_value")
-          .collect().map(_.mkString("|")).toSeq.sorted
-        val ev = toDf(all)
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
-            col("value").as("click_value"))
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("event_id").as("purchase_id"), col("user_id"),
-            col("ts").as("purchase_ts"))
-        val oracle = purchases.join(clicks,
-            col("c_user") === col("user_id") &&
-              col("click_ts") >= col("purchase_ts") - expr("INTERVAL 1 HOUR") &&
-              col("click_ts") < col("purchase_ts"), "full_outer")
-          .groupBy(col("purchase_id"),
-            coalesce(col("user_id"), col("c_user")).as("user_id"))
-          .agg(count(col("c_user")).as("n_clicks"),
-            Tables.moneySum(col("click_value")).as("click_value"))
-          .collect().map(_.mkString("|")).toSeq.sorted
-        (streamed == oracle) :| s"streamed=$streamed oracle=$oracle"
-      } finally Streams.deleteRec(new java.io.File(dir))
-    }
-
   property("one full-outer pair drain serves all three attribution rollups (derived = batch)") =
     Prop.forAll(genContiguous) { case (all, chunks) =>
       // the bench posture: ONE drained pair set, three derived views —
@@ -349,35 +286,6 @@ object StreamsProps extends Properties("Streams") {
         ((di == bi) :| s"inner: derived=$di batch=$bi") &&
           ((dl == bl) :| s"outer: derived=$dl batch=$bl") &&
           ((df_ == bf) :| s"full: derived=$df_ batch=$bf")
-      } finally Streams.deleteRec(new java.io.File(dir))
-    }
-
-  property("chunked stream-stream attribution equals the batch range join") =
-    Prop.forAll(genContiguous) { case (all, chunks) =>
-      val dir = writeChunks(chunks)
-      try {
-        val streamed = Streams.attributionInnerDrain(spark,
-            () => Streams.chunkedEventsStream(spark, dir))
-          .select("purchase_id", "n_clicks", "click_value")
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-          .toSeq.sorted
-        val ev = toDf(all)
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
-            col("value").as("click_value"))
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("event_id").as("purchase_id"), col("user_id"),
-            col("ts").as("purchase_ts"))
-        val oracle = purchases.join(clicks,
-            col("c_user") === col("user_id") &&
-              col("click_ts") >= col("purchase_ts") - expr("INTERVAL 1 HOUR") &&
-              col("click_ts") < col("purchase_ts"))
-          .groupBy("purchase_id")
-          .agg(count(lit(1)).as("n_clicks"),
-            Tables.moneySum(col("click_value")).as("click_value"))
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-          .toSeq.sorted
-        (streamed == oracle) :| s"streamed=$streamed oracle=$oracle"
       } finally Streams.deleteRec(new java.io.File(dir))
     }
 }

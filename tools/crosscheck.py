@@ -70,9 +70,9 @@ src_tree = subprocess.run(["git", "rev-parse", "HEAD:src"],
 with open("CROSSCHECK.json", "w") as f:
     json.dump({"metric": "cross_sf_oracle_sweep", "head_commit": head,
                "src_tree": src_tree,
-               "verify_posture": "tier-switch queries run their "
-               "genuine/exact bodies (each Oracle spec's ExactTier) here; Bench "
-               "measures the derived/warm/sketch tiers",
+               "verify_posture": "every query dumps the body Bench "
+               "times, except the two HLL sketch tiers (kpis_incremental, "
+               "kpis_rewritten), which dump their exact body (ExactTier)",
                "run_utc": datetime.datetime.utcnow().strftime("%Y-%m-%dT%H:%MZ"),
                "runs": record,
                "all_pass": fails == 0}, f, indent=1)
