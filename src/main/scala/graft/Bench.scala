@@ -3,10 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import EntryPoint.jsonString
-import graft.queries.{Oracle, QuerySpec}
 
 /** Driver benchmark: one shared SparkSession, every SparkEntry query timed
-  * at SPARK_GRAFT_SF_DIR; emits one JSON metric line.
+  * at SPARK_GRAFT_SF_DIR; emits one JSON metric line. Each body timed
+  * here is the body Verify dumps and its oracle checks (a sketch
+  * estimate against a bounded-error oracle), so no record field says
+  * what was timed apart from what was checked.
   *
   * An untimed warmup pass runs first — it amortizes JVM/codegen warmup and
   * populates the deliberate caches (fact, features), so the timed pass
@@ -181,15 +183,7 @@ object Bench {
       // probe run can never masquerade as a default-config record in
       // cross-round comparisons
       val conf = s"""{"cpus":${jsonString(cpus)},"minPartitionSize":${jsonString(EntryPoint.MinPartitionSize)},"queryFilter":${only.map(f => jsonString(f.toSeq.sorted.mkString(","))).getOrElse("null")}}"""
-      // tier-switch posture per affected query (ADVICE r14): what this
-      // bench MEASURED vs what Verify hash-checks, so amortized tiers
-      // can never be misread as engine speedups in cross-round deltas
-      val posture = SparkEntry.specs
-        .collect { case QuerySpec(k, _, Oracle(_, Some(t))) if qs.contains(k) => k -> t.posture }
-        .sortBy(_._1)
-        .map { case (k, p) => jsonString(k) + ":" + jsonString(p) }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$q,"spread":$sp,"shared_build":$sbJson,"pass1":$p1Json,"errors":$errJson,"cache_mb":${math.round(cacheMb * 10) / 10.0},"conf":$conf,"posture":$posture,"timing":"noop-materialize min-of-3 + timed shared_build of the released memo frames; spread = max-min over the 3 timed passes; pass1 = cold-CacheOnce first pass (r1-r6 were min-of-2 or single-pass; r7-r17 left shared builds untimed in warmup)","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$q,"spread":$sp,"shared_build":$sbJson,"pass1":$p1Json,"errors":$errJson,"cache_mb":${math.round(cacheMb * 10) / 10.0},"conf":$conf,"timing":"noop-materialize min-of-3 + timed shared_build of the released memo frames; spread = max-min over the 3 timed passes; pass1 = cold-CacheOnce first pass (r1-r6 were min-of-2 or single-pass; r7-r17 left shared builds untimed in warmup)","sf":"$sfDir"}"""
     }
     // best-effort: a read-only/odd cwd must not kill the run after the
     // queries already completed — the stdout line below is the record

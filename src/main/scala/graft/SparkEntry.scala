@@ -6,7 +6,7 @@ import graft.queries._
 
 /** Driver contract — the query registry: one [[QuerySpec]] per
   * implemented operator from SURVEY.md §2, each carrying its body and its
-  * single gate (a DuckDB [[Oracle]], possibly with an [[ExactTier]], or a
+  * single gate (a DuckDB [[Oracle]], exact or bounded-error, or a
   * [[Digest]] pin). The specs live per family under `graft.queries`;
   * this object concatenates them and owns the shared frames their bodies
   * reuse.

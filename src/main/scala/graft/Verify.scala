@@ -31,14 +31,12 @@ object Verify {
     val futures = SparkEntry.specs
       .filter(q => only.forall(_.contains(q.name)))
       .map { case QuerySpec(name, body, check) =>
-      // correctness-dump posture: the two sketch-tier queries run their
-      // exact body here so the oracle hash-checks exact code; every other
-      // query dumps the registry body, the one Bench times
-      val fn = check match { case Oracle(_, Some(exact)) => exact.body; case _ => body }
+      // every query dumps its registry body, the one Bench times; a
+      // sketch estimate is checked by its bounded-error oracle
       Future {
         val t0 = System.nanoTime()
         try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          body(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
           check match {
             case Digest(golden, canon) =>
@@ -67,7 +65,7 @@ object Verify {
     // estimate parquet) — concretize the out-dir token the same way
     val outAbs = Paths.get(outDir).toAbsolutePath.toString
     val json = SparkEntry.specs
-      .collect { case QuerySpec(name, _, Oracle(sql, _)) =>
+      .collect { case QuerySpec(name, _, Oracle(sql)) =>
         s"${jsonString(name)}: ${jsonString(sql.replace(OracleSql.ArtifactsToken, art)
           .replace(OracleSql.OutDirToken, outAbs))}" }
       .mkString("{", ",", "}")

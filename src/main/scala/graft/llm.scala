@@ -96,11 +96,8 @@ object Llm {
     * signature-estimated Jaccard. The self-join shuffles on the 64-bit
     * band key only; pair dedup happens on (doc_a, doc_b) before touching
     * signatures (per-doc signatures are unique, so dropDuplicates is
-    * deterministic). Standalone wrapper — caches nothing; the self-join's
-    * two sides share the signature aggregation's shuffle output. */
-  def minhashCandidates(documents: DataFrame): DataFrame =
-    candidatesFromSignatures(minhashSignatures(documents))
-
+    * deterministic). Caches nothing; the self-join's two sides share
+    * the signature aggregation's shuffle output. */
   private[graft] def candidatesFromSignatures(sigs: DataFrame): DataFrame = {
     // join on (band INDEX, band value), exactly the oracle's predicate —
     // the band values are already j-salted, but joining on the value

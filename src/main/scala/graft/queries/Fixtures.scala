@@ -30,15 +30,13 @@ object Fixtures {
           .withColumn("o_totalprice", col("o_totalprice") * 2))
     }
 
-  /** Cloned session carrying the opt-in approx-distinct rewrite —
-    * ISOLATED from the main session on purpose: the flag lives in
-    * session conf, and Verify optimizes queries concurrently, so
-    * toggling it on the shared session would nondeterministically
-    * rewrite the exact-gated queries mid-flight. */
+  /** Cloned session carrying the approx-distinct rewrite — ISOLATED
+    * from the main session on purpose: installing the rule is the
+    * switch, so every query planned on the shared session (Verify plans
+    * them concurrently) keeps its exact count(DISTINCT). */
   private[queries] def rewriteSession(s: SparkSession): SparkSession =
     Shared.session(s, "rewriteSession") {
       val ns = s.newSession()
-      ns.conf.set("graft.rewrite.approxDistinct", "true")
       org.apache.spark.sql.graftbridge.Bridge.addOptimizerRule(
         ns, graft.plans.ApproxDistinctRewrite)
       ns
@@ -145,15 +143,6 @@ object Fixtures {
   private[queries] def kpisPartialDir(s: SparkSession, d: String): String =
     Shared.dir(s, "kpi_partial", d)(
       Serving.kpisPartial(historyOrders(s, d)).write.mode("overwrite").parquet(_))
-
-  /** Persisted exact client-key set (pre-cutoff) for the exact tier of
-    * the incremental KPI refresh — the structure an exact incremental
-    * distinct count maintains instead of an HLL sketch. Same cutoff and
-    * lifecycle as [[kpisPartialDir]]. */
-  private[queries] def kpisKeysDir(s: SparkSession, d: String): String =
-    Shared.dir(s, "kpi_keys", d)(
-      Gold.validOrders(historyOrders(s, d)).select("o_custkey").distinct()
-        .write.mode("overwrite").parquet(_))
 
   /** Multi-file orders fixture for the streaming-maintenance queries: 8
     * parquet files so AvailableNow at 2 files/trigger yields real

@@ -168,29 +168,15 @@ object GoldQueries {
       GROUP BY 1, 2 ORDER BY o_orderkey""")),
     // sketch-merge incremental KPIs: distinct clients refresh by HLL
     // union of a persisted sketch with the delta's — never an exact
-    // recount over history. Verify runs the fully-exact merge instead
-    // (its ExactTier); the sketch merge's error bound and
-    // split-insensitivity are pinned by GoldSpec.
+    // recount over history. Verify dumps the sketch merge and the
+    // bounded-error oracle gates its estimate at 5σ of the sketch's rsd
+    // (lgK 12, bound ≈ 0.081); GoldSpec pins split-insensitivity.
     QuerySpec("kpis_incremental", (s, d) => Serving.kpisFromPartials(
       Tables.parquet(s, kpisPartialDir(s, d)).unionByName(Serving.kpisPartial(deltaOrders(s, d)))),
-      // kpis_incremental runs its fully-exact merge tier at verify time
-      // (persisted algebraic partial + exact key set; the HLL sketch tier
-      // is pinned by GoldSpec) — same truth as the kpis oracle, with the
-      // exact distinct under the sketch tier's column name
-      Oracle(s"""
-      SELECT ca_total, nb_achats, nb_clients_approx,
-             round(ca_total / nb_achats, 2) AS panier_moyen
-      FROM (SELECT ${ms("o_totalprice")} AS ca_total, count(o_orderkey) AS nb_achats,
-                   count(DISTINCT o_custkey) AS nb_clients_approx
-            FROM orders WHERE $V)""",
-        // the fully-exact merge: algebraic fields + a persisted exact key set
-        Some(ExactTier("bench: HLL sketch-union merge; verify: fully-exact merge vs the kpis oracle (GoldSpec pins sketch error bound + split-insensitivity)",
-          (s, d) => Serving.kpisExactIncremental(
-            Tables.parquet(s, kpisPartialDir(s, d)),
-            Tables.parquet(s, kpisKeysDir(s, d)), deltaOrders(s, d)))))),
+      Oracle(kpisBoundedSql("kpis_incremental", "nb_clients_approx", Serving.KpisSketchRsd))),
     // the exact algebraic half of the same refresh (sums/counts in
     // integer cents merge bit-for-bit) — hash-checked against a full
-    // recompute; only the HLL client estimate stays rows-only above
+    // recompute; only the HLL client estimate above is bounded-error
     QuerySpec("kpis_incremental_exact", (s, d) => Serving.kpisExactFromPartials(
       Tables.parquet(s, kpisPartialDir(s, d)).unionByName(Serving.kpisPartial(deltaOrders(s, d)))),
       // the incremental refresh's exact fields vs a FULL recompute: the
@@ -335,25 +321,17 @@ object GoldQueries {
       FROM p JOIN t t1 ON p.y1 = t1.yr JOIN t t2 ON p.y2 = t2.yr
       ORDER BY y1, y2""")),
     // the EXACT kpis code under the injected optimizer rewrite — the
-    // Rule, not the query text, picks the sketch tier. Correctness is
-    // proved in two halves (the judge-adjudicated decomposition): Verify
-    // runs the query body with the rewrite off against the same oracle
-    // as kpis (its ExactTier); PlanShapeSpec separately pins that the
-    // RULE swaps the plan to HLL and its estimate equals the explicit
-    // approx_count_distinct call. Bench always measures the rewritten
-    // (sketch) plan — the production posture the query exists to prove.
+    // Rule, not the query text, picks the sketch tier. Verify dumps the
+    // rewritten (HLL++) plan and the bounded-error oracle gates its
+    // estimate at 5σ of the rule's rsd 0.05 (bound 0.25); PlanShapeSpec
+    // pins that the rule swaps the plan and that its estimate equals the
+    // explicit approx_count_distinct call.
     QuerySpec("kpis_rewritten", (s, d) => {
       val c = rewriteSession(s)
       Serving.kpis(Gold.buildFact(
         Tables.orders(c, d), Tables.customer(c, d), Tables.nation(c, d)))
     },
-      // kpis_rewritten runs the exact kpis body at verify time (the
-      // optimizer-rule sketch tier is pinned by PlanShapeSpec) — same oracle
-      Oracle(kpisSql,
-        // the rewrite flag stays off: the QUERY BODY hash-checks against the
-        // same oracle as kpis
-        Some(ExactTier("bench: optimizer-rewritten HLL plan; verify: exact query body vs the kpis oracle (PlanShapeSpec pins the rule swap + estimate equality)",
-          (s, d) => Serving.kpis(fact(s, d)))))),
+      Oracle(kpisBoundedSql("kpis_rewritten", "nb_clients", graft.plans.ApproxDistinctRewrite.RelativeSD))),
     // right-to-be-forgotten: delete one customer by rewriting ONLY the
     // partitions that contain them; target picked deterministically
     // (min custkey among single-year customers, mirrored in the oracle)

@@ -451,12 +451,25 @@ object OracleSql {
       LEFT JOIN nation ON c_nationkey = n_nationkey
       WHERE $V GROUP BY 1 ORDER BY ca DESC, pays"""
 
-  /** Oracle shared by kpis_rewritten and kpis. */
-  private[queries] val kpisSql = s"""
-      SELECT ca_total, nb_achats, nb_clients, round(ca_total / nb_achats, 2) AS panier_moyen
-      FROM (SELECT ${ms("o_totalprice")} AS ca_total, count(o_orderkey) AS nb_achats,
+  /** Bounded-error oracle of a KPI row whose distinct-client column
+    * `estCol` is a sketch estimate with relative standard error `rsd`:
+    * ca_total, nb_achats and panier_moyen are re-derived exactly and
+    * gated on equality; the estimate, read back from the query's own
+    * dump, is echoed only within 5σ (5 · rsd · the exact count), else
+    * poisoned to -1. Shared by kpis_approx, kpis_incremental and
+    * kpis_rewritten. */
+  private[queries] def kpisBoundedSql(name: String, estCol: String, rsd: Double): String = s"""
+      WITH est AS (SELECT * FROM read_parquet('$OutDirToken/$name/*.parquet')),
+      x AS (SELECT ${ms("o_totalprice")} AS ca_total, count(o_orderkey) AS nb_achats,
                    count(DISTINCT o_custkey) AS nb_clients
-            FROM orders WHERE $V)"""
+            FROM orders WHERE $V)
+      SELECT CASE WHEN est.ca_total = x.ca_total THEN est.ca_total ELSE -1.0 END AS ca_total,
+             CASE WHEN est.nb_achats = x.nb_achats THEN est.nb_achats ELSE -1 END AS nb_achats,
+             CASE WHEN abs(est.$estCol - x.nb_clients) <= ${5 * rsd} * x.nb_clients
+                  THEN est.$estCol ELSE -1 END AS $estCol,
+             CASE WHEN est.panier_moyen = round(x.ca_total / x.nb_achats, 2)
+                  THEN est.panier_moyen ELSE -1.0 END AS panier_moyen
+      FROM est, x"""
 
   /** Oracle shared by event_sessions_native_stream and
     * event_sessions_native: session_window starts a new session when the

@@ -13,19 +13,11 @@ sealed trait Check
 
 /** Hash-checked against a DuckDB statement over the same tables (run by
   * tools/selfcheck.py and the driver from Verify's `oracle_sql.json`).
-  * Verify dumps the spec body, the one Bench times, unless `exact` is
-  * set: that is only for a query whose timed body is approximate. */
-final case class Oracle(sql: String, exact: Option[ExactTier] = None) extends Check
-
-/** The exact body of a query whose timed body is an HLL sketch estimate
-  * (`kpis_incremental`, `kpis_rewritten`): Verify dumps it in place of
-  * the spec body, so the oracle checks exact code while Bench times the
-  * sketch. `posture` says what Bench measures vs what Verify
-  * hash-checks (stamped into BENCH_FULL.json). GoldSpec and
-  * PlanShapeSpec bound the two sketch tiers; StreamsSpec holds that no
-  * other query carries an exact body. */
-final case class ExactTier(posture: String,
-    body: (SparkSession, String) => DataFrame)
+  * Verify always dumps the spec body, the one Bench times. A query whose
+  * body is a sketch estimate gets a bounded-error oracle: the SQL reads
+  * the query's own dump back through [[OracleSql.OutDirToken]] and
+  * echoes the estimate only inside the sketch's configured error bound. */
+final case class Oracle(sql: String) extends Check
 
 /** Pinned by an order-independent result digest ([[Digests]]) for the
   * queries no independent engine restates (sketch estimators, iterative

@@ -322,8 +322,8 @@ object Serving {
   /** 100 TB variant of [[kpis]]: HyperLogLog++ distinct clients instead
     * of exact countDistinct. Exact distinct shuffles every distinct key;
     * the sketch is fixed-size per partition — the right trade once the
-    * key cardinality approaches the row count. Gated rows-only (approx
-    * values aren't oracle-reproducible). */
+    * key cardinality approaches the row count. Gated by the
+    * `kpis_approx` bounded-error oracle (5σ of `rsd`). */
   def kpisApprox(fact: DataFrame, rsd: Double = 0.01): DataFrame =
     // r18 (VERDICT r17 item 8): DataSketches HLL in place of HLL++ at
     // equal-or-tighter error — lgConfigK from the declared rsd via
@@ -352,13 +352,20 @@ object Serving {
     Gold.validOrders(orders).agg(
       sum(Tables.cents(col("o_totalprice"))).as("ca_cents"),
       count("o_orderkey").as("nb_achats"),
-      hll_sketch_agg(col("o_custkey")).as("clients_sketch"))
+      hll_sketch_agg(col("o_custkey"), KpisSketchLgK).as("clients_sketch"))
+
+  /** lgK of [[kpisPartial]]'s client sketch (the DataSketches default)
+    * and its relative standard error 1.04/√2^12 ≈ 0.0163: the
+    * `kpis_incremental` oracle accepts an estimate within 5σ ≈ 0.081. */
+  private[graft] val KpisSketchLgK = 12
+  private[graft] val KpisSketchRsd = 1.04 / math.sqrt((1 << KpisSketchLgK).toDouble)
 
   /** Finalize merged [[kpisPartial]] rows: algebraic fields re-sum,
     * sketches union (associative and order-insensitive, so ANY split of
     * the orders into partials yields the same estimate), and the
-    * estimate materializes only here. Gated rows-only (the estimate is
-    * approximate) + a GoldSpec exactness/error-bound spec. */
+    * estimate materializes only here. Verify gates the estimate with the
+    * `kpis_incremental` bounded-error oracle ([[KpisSketchRsd]]);
+    * GoldSpec pins the exact fields and split-invariance. */
   def kpisFromPartials(partials: DataFrame): DataFrame =
     partials.agg(
       sum("ca_cents").as("ca_cents"),
@@ -374,41 +381,13 @@ object Serving {
     * the merged partials equal a full recompute BIT-FOR-BIT, and DuckDB
     * can state that recompute as plain SQL. Only the distinct-client
     * estimate is approximate, and it stays in [[kpisFromPartials]]
-    * (rows-only, 5%-bound GoldSpec gate). */
+    * (gated by a bounded-error oracle). */
   def kpisExactFromPartials(partials: DataFrame): DataFrame =
     partials.agg(
       sum("ca_cents").as("ca_cents"),
       sum("nb_achats").as("nb_achats"))
       .select((col("ca_cents") / 100.0).as("ca_total"), col("nb_achats"),
         round((col("ca_cents") / 100.0) / col("nb_achats"), 2).as("panier_moyen"))
-
-  /** Fully-exact tier of the incremental KPI refresh — the Verify
-    * posture of `kpis_incremental` (kpis_rewritten decomposition): the
-    * algebraic fields merge from the persisted partial exactly as in
-    * [[kpisExactFromPartials]], and the distinct-client count merges a
-    * persisted exact KEY SET with the delta's keys (union → distinct) —
-    * still merge-not-recount over history, but with exact arithmetic,
-    * so the result hash-checks against the same SQL as `kpis`. The
-    * column keeps the sketch tier's `nb_clients_approx` name so both
-    * tiers present one schema; Bench never takes this path — it
-    * measures the HLL sketch merge, whose 5% bound and
-    * split-insensitivity GoldSpec pins separately. */
-  def kpisExactIncremental(partials: DataFrame, historyKeys: DataFrame,
-      deltaOrders: DataFrame): DataFrame = {
-    val deltaValid = Gold.validOrders(deltaOrders)
-    val alg = partials.select("ca_cents", "nb_achats")
-      .unionByName(deltaValid.agg(
-        sum(Tables.cents(col("o_totalprice"))).as("ca_cents"),
-        count("o_orderkey").as("nb_achats")))
-      .agg(sum("ca_cents").as("ca_cents"), sum("nb_achats").as("nb_achats"))
-    val clients = historyKeys.select("o_custkey")
-      .unionByName(deltaValid.select("o_custkey"))
-      .agg(countDistinct("o_custkey").as("nb_clients_approx"))
-    alg.crossJoin(clients) // 1×1 scalar combine
-      .select((col("ca_cents") / 100.0).as("ca_total"), col("nb_achats"),
-        col("nb_clients_approx"),
-        round((col("ca_cents") / 100.0) / col("nb_achats"), 2).as("panier_moyen"))
-  }
 
   /** Top-K clients by lifetime spend (reference scripts/dashboard.py:165,
     * W3/O2/O4). Global top-k = TakeOrderedAndProject — no full sort. */

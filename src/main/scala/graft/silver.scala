@@ -65,18 +65,6 @@ object Silver {
       .orderBy("c_custkey")
   }
 
-  /** Quality counters (reference silver quality dicts,
-    * flows/silver_transformation.py:58-98 clients, :103-139 achats):
-    * per-rule would-drop counts for BOTH tables in one aggregation pass
-    * each — the reference runs one `df.count()` action per rule
-    * (flows_spark/silver_transformation_spark.py:28,45,50,75), i.e.
-    * re-executes the plan N times; this is one pass per table. Orphan
-    * count via a left_anti join; the three 1-row frames combine with 1×1
-    * cross joins.
-    *
-    * Customer-side rules mirror [[cleanCustomers]] sequentially, like the
-    * reference's clients dict (invalid id first, then the name guard —
-    * the email-format analog — then duplicates among survivors). */
   /** Row-disposition quarantine — the dead-letter complement of
     * [[qualityCounters]]: that one counts per-rule WOULD-DROP overlaps;
     * this routes every raw row to exactly ONE disposition with a
@@ -123,6 +111,18 @@ object Silver {
       .orderBy("disposition")
   }
 
+  /** Quality counters (reference silver quality dicts,
+    * flows/silver_transformation.py:58-98 clients, :103-139 achats):
+    * per-rule would-drop counts for BOTH tables in one aggregation pass
+    * each — the reference runs one `df.count()` action per rule
+    * (flows_spark/silver_transformation_spark.py:28,45,50,75), i.e.
+    * re-executes the plan N times; this is one pass per table. Orphan
+    * count via a left_anti join; the three 1-row frames combine with 1×1
+    * cross joins.
+    *
+    * Customer-side rules mirror [[cleanCustomers]] sequentially, like the
+    * reference's clients dict (invalid id first, then the name guard —
+    * the email-format analog — then duplicates among survivors). */
   def qualityCounters(orders: DataFrame, customer: DataFrame): DataFrame = {
     val base = orders.agg(
       count(lit(1)).as("initial_rows"),

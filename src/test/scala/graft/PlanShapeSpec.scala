@@ -232,16 +232,19 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
-  test("approxDistinctRewrite: flag flips count(distinct) to HLL, off and multi-column stay exact") {
+  test("ApproxDistinctRewrite: HLL only with the rule, multi-column stays exact") {
     val ns = spark.newSession()
     org.apache.spark.sql.graftbridge.Bridge.addOptimizerRule(
       ns, graft.plans.ApproxDistinctRewrite)
     import ns.implicits._
     import org.apache.spark.sql.functions.{approx_count_distinct, countDistinct}
-    val df = Seq.tabulate(1000)(i => (i % 37, i % 101)).toDF("k", "v")
-    // flag off: exact result, no sketch in the plan
-    assert(df.agg(countDistinct("v")).head().getLong(0) == 101L)
-    ns.conf.set("graft.rewrite.approxDistinct", "true")
+    val rows = Seq.tabulate(1000)(i => (i % 37, i % 101))
+    // a session without the rule: exact result, no sketch in the plan
+    val exact = spark.createDataFrame(rows).toDF("k", "v").agg(countDistinct("v"))
+    assert(!exact.queryExecution.optimizedPlan.toString
+      .contains("approx_count_distinct"), exact.queryExecution.optimizedPlan)
+    assert(exact.head().getLong(0) == 101L)
+    val df = rows.toDF("k", "v")
     val on = df.agg(countDistinct("v"))
     assert(on.queryExecution.optimizedPlan.toString
       .contains("approx_count_distinct"), on.queryExecution.optimizedPlan)
@@ -255,7 +258,6 @@ class PlanShapeSpec extends SparkSpec {
       .contains("approx_count_distinct"))
     // (i%37, i%101) has period lcm=3737 > 1000 ⇒ all pairs distinct
     assert(multi.head().getLong(0) == 1000L)
-    ns.conf.set("graft.rewrite.approxDistinct", "false")
   }
 
   test("user_state_intervals: ONE data exchange feeds both windows, the island agg and the lead") {

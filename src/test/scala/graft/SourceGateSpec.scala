@@ -90,7 +90,7 @@ class SourceGateSpec extends AnyFunSuite {
   }
 
   test("no JVM-global system property switches in src/main") {
-    // a query tier is data (a spec's ExactTier), not a -D flag that
+    // a query tier is data (its own registry spec), not a -D flag that
     // flips every suite and query in the JVM at once; nor is a run's
     // output switched by a repo file under tools/ that the engine reads
     val offenders = mainSources.flatMap { p =>

@@ -337,14 +337,18 @@ class StreamsSpec extends SparkSpec {
     assert(outer.subsetOf(full) && outer.size < full.size)
   }
 
-  test("only the sketch tiers keep an exact body") {
-    // every other query's timed body is exact, so Verify dumps and the
-    // oracle checks the body Bench times; only an approximate (HLL)
-    // timed body may swap in an exact one for the dump
-    val tiers = SparkEntry.specs.collect {
-      case QuerySpec(n, _, Oracle(_, Some(_))) => n
-    }.toSet
-    assert(tiers == Set("kpis_incremental", "kpis_rewritten"))
+  test("bounded-error oracles read only their own dump, the HLL tiers among them") {
+    // Verify dumps the body Bench times for every query; a sketch
+    // estimate is checked by an oracle that reads that dump back, so it
+    // must read its own query's output and nothing else
+    import graft.queries.OracleSql.OutDirToken
+    val bounded = SparkEntry.specs.collect {
+      case QuerySpec(n, _, Oracle(sql)) if sql.contains(OutDirToken) => n -> sql
+    }
+    for ((n, sql) <- bounded; read <- sql.split(OutDirToken, -1).tail)
+      assert(read.startsWith(s"/$n/"), s"$n reads $OutDirToken$read")
+    assert(Set("kpis_incremental", "kpis_rewritten")
+      .subsetOf(bounded.map(_._1).toSet))
   }
 
   test("concurrent first calls of the attribution views share one drain") {
