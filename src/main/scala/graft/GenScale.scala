@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic R× scale-up of a test dataset for the empirical scale
@@ -62,16 +62,9 @@ object GenScale {
     val Array(inDir, outDir, rStr) = args.take(3)
     val r = rStr.toInt
     require(r >= 1, "replication factor must be >= 1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet may carry TIMESTAMP(NANOS) at some SFs — read it
-      // as long and write int64; Tables.events handles both encodings
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // events.parquet may carry TIMESTAMP(NANOS) at some SFs: the conf
+    // reads it as long and it is written back as int64
+    val spark = EntryPoint.session(EntryPoint.cpus("32"))
 
     // SINGLE-FILE layout, exactly like the driver's testdata: the
     // streaming file source selects leaves via

@@ -2,11 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** What the entry-point mains (Bench, Verify, Profile, Pipeline.main)
-  * share: one session conf and one JSON string escaper. Verify's oracle
-  * sweep hash-checks results under exactly the conf Bench times (and the
-  * benchmark harness runs), so a join-strategy flip can never change a
-  * result unseen. */
+/** The one session conf every session is built from (the entry-point
+  * mains, GenScale, the test suites), and one JSON string escaper.
+  * Verify's oracle sweep hash-checks results under exactly the conf
+  * Bench times (and the benchmark harness runs), so a join-strategy flip
+  * can never change a result unseen. A setting one query needs apart
+  * from the rest lives on a cloned session ([[Shared.clone]]), never
+  * written into the session a query runs on. */
 object EntryPoint {
   /** AQE's parallelism-first coalescing floors partitions at 1 MB —
     * CPU-heavy-but-small-bytes stages (interpreted HOF pipelines over
@@ -25,16 +27,24 @@ object EntryPoint {
   /** Core count: SPARK_GRAFT_CPUS, else the caller's `default`. */
   def cpus(default: String): String = sys.env.getOrElse("SPARK_GRAFT_CPUS", default)
 
-  /** `local[cpus]` with one shuffle partition per core. */
+  /** `local[cpus]` with one shuffle partition per core, the two AQE
+    * settings above, UTC and no UI. `nanosAsLong` reads a parquet
+    * TIMESTAMP(NANOS) column as its raw int64 nanos, which Spark's
+    * vectorized reader otherwise rejects; [[Tables.events]] and the
+    * event streams convert it to a microsecond timestamp. It touches no
+    * other column type. */
+  def conf(cpus: String): Seq[(String, String)] = Seq(
+    "spark.master" -> s"local[$cpus]",
+    "spark.sql.shuffle.partitions" -> cpus,
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> MinPartitionSize,
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> ShjThreshold,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+
+  /** The session built from [[conf]]. */
   def session(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", MinPartitionSize)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", ShjThreshold)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkSession.builder().config(conf(cpus).toMap).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

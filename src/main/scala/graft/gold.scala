@@ -1119,12 +1119,13 @@ object Gold {
       round(lit(q), 6).as("modularity"))
   }
 
-  /** Per-node triangle membership over the co-occurrence graph — the
-    * third graph operator next to PageRank (rank) and BFS (reach):
-    * cohesion. Degree-rank-oriented wedge enumeration (the node-iterator
-    * orientation from Schank &amp; Wagner / Suri-Vassilvitskii's MapReduce
-    * variant): re-orient every undirected edge from its lower- to its
-    * higher-(degree, id) endpoint. Each triangle then has EXACTLY one
+  /** Per-node triangle membership over the co-occurrence graph `e`
+    * ([[itemPairEdges]]), top `k` nodes — the third graph operator next
+    * to PageRank (rank) and BFS (reach): cohesion. Degree-rank-oriented
+    * wedge enumeration (the node-iterator orientation from Schank &amp;
+    * Wagner / Suri-Vassilvitskii's MapReduce variant): re-orient every
+    * undirected edge from its lower- to its higher-(degree, id)
+    * endpoint. Each triangle then has EXACTLY one
     * corner with two out-edges — its minimum-rank node — so wedges are
     * an out-edge self-join on that corner, closed by a semi-join against
     * the oriented edge set (the closing edge is guaranteed oriented
@@ -1141,9 +1142,6 @@ object Gold {
     * exchange; the close is a left-semi (build side dedup-free, no
     * output amplification). Membership counting explodes the (u,v,w)
     * triple — three rows per triangle — into one node-grain aggregate. */
-  def copurchaseTriangles(lineitem: DataFrame, k: Int = 20): DataFrame =
-    copurchaseTrianglesFrom(itemPairEdges(lineitem), k)
-
   def copurchaseTrianglesFrom(e: DataFrame, k: Int = 20): DataFrame =
     triangleCounts(e)
       .orderBy(desc("n_triangles"), col("p_partkey"))

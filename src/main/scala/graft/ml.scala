@@ -420,9 +420,6 @@ object Ml {
         col("recency_days"), col("cluster").cast("long").as("cluster"))
       .orderBy("c_custkey")
 
-  def kmeansSegments(features: DataFrame, k: Int = 5, seed: Long = 42): DataFrame =
-    segmentsOf(kmeansFit(features, k, seed))
-
   /** Cluster-quality metric the reference's advisor computes and publishes
     * next to its segmentation (reference scripts/train_advisor.py:123,321
     * picks k by silhouette): mean silhouette of the seed-pinned k=5
@@ -484,9 +481,6 @@ object Ml {
       lit(k.toLong).as("k"),
       lit(math.rint(mean * 1e6) / 1e6).as("silhouette"))
   }
-
-  def kmeansSilhouette(features: DataFrame, k: Int = 5, seed: Long = 42): DataFrame =
-    silhouetteOf(kmeansFit(features, k, seed))
 
   /** Incremental IVF index maintenance — the ANN twin of the persisted
     * shingle-index dedup: new vectors are assigned to the PERSISTED

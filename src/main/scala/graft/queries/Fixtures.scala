@@ -8,8 +8,9 @@ import SparkEntry._
 
 /** Persisted inputs the query bodies read: sink copies, incremental
   * partials and indexes written once per (session, dataset), cloned
-  * sessions with their own conf, the maintained views' warm-sink
-  * scaffolding, and the read-back aggregate of the format round trips. */
+  * sessions with their own rule or conf ([[Shared.clone]]), the
+  * maintained views' warm-sink scaffolding, and the read-back aggregate
+  * of the format round trips. */
 object Fixtures {
   /** The annee-partitioned fact sink (what Pipeline.run stages for
     * fact_achats), written once per session for the pruning-dependent
@@ -30,38 +31,32 @@ object Fixtures {
           .withColumn("o_totalprice", col("o_totalprice") * 2))
     }
 
-  /** Cloned session carrying the approx-distinct rewrite — ISOLATED
-    * from the main session on purpose: installing the rule is the
-    * switch, so every query planned on the shared session (Verify plans
-    * them concurrently) keeps its exact count(DISTINCT). */
+  /** Cloned session ([[Shared.clone]]) carrying the approx-distinct
+    * rewrite — ISOLATED from the main session on purpose: installing the
+    * rule is the switch, so every query planned on the shared session
+    * (Verify plans them concurrently) keeps its exact count(DISTINCT). */
   private[queries] def rewriteSession(s: SparkSession): SparkSession =
-    Shared.session(s, "rewriteSession") {
-      val ns = s.newSession()
-      org.apache.spark.sql.graftbridge.Bridge.addOptimizerRule(
-        ns, graft.plans.ApproxDistinctRewrite)
-      ns
-    }
+    Shared.clone(s, "rewriteSession")(org.apache.spark.sql.graftbridge.Bridge
+      .addOptimizerRule(_, graft.plans.ApproxDistinctRewrite))
 
-  /** Cloned session for the triangle tiers with AQE's SMJ→SHJ conversion
-    * left at Spark's default (off). The bench-wide 64 MB threshold keys
-    * on COMPRESSED post-shuffle bytes, but the triangle endpoint joins
-    * carry packed adjacency ARRAYS that a ShuffledHashJoin pins UNPACKED
-    * in its build relation — measured at sf1 as a hash-relation OOM
-    * ("Can't acquire 268435456 bytes to build hash relation"). With the
-    * conversion off, AQE still broadcasts a genuinely small adjacency
-    * (keeps the local shape), and once it outgrows broadcast the join
-    * stays sort-merge, which SPILLS instead of pinning. Join strategy
+  /** Cloned session ([[Shared.clone]]) for the triangle tiers with
+    * AQE's SMJ→SHJ conversion left at Spark's default (off). The
+    * bench-wide 64 MB threshold keys on COMPRESSED post-shuffle bytes,
+    * but the triangle endpoint joins carry packed adjacency ARRAYS that
+    * a ShuffledHashJoin pins UNPACKED in its build relation — measured
+    * at sf1 as a hash-relation OOM ("Can't acquire 268435456 bytes to
+    * build hash relation"). With the conversion off, AQE still
+    * broadcasts a genuinely small adjacency (keeps the local shape), and
+    * once it outgrows broadcast the join stays sort-merge, which SPILLS
+    * instead of pinning. Join strategy
     * only — results unchanged; shared frames built on the parent session
     * are reused here through the SharedState CacheManager's
     * canonical-plan matching. (The alternative, merge hints on the two
     * joins, also kills the legitimate small-scale broadcast: +65%
     * at sf0.1.) */
   private[queries] def triangleSession(s: SparkSession): SparkSession =
-    Shared.session(s, "triangleSession") {
-      val ns = s.newSession()
-      ns.conf.set("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "0")
-      ns
-    }
+    Shared.clone(s, "triangleSession")(
+      _.conf.set("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "0"))
 
   /** The corpus-half dedup index (what a production ingest job maintains):
     * doc-level sha2 hashes and (doc_id, n, shingle-hash) rows for

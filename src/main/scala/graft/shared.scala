@@ -35,11 +35,11 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   *    copies, partials, indexes and stream fixtures, the bucketed twins,
   *    the warm maintained-view bases, the streaming attribution drain
   *    and its heartbeat — and the cloned sessions that carry a private
-  *    conf. They are files and sessions, not memory, so `release` has
-  *    nothing to free; and a query over a fixture measures the read the
-  *    fixture exists for, so Bench must not rewrite fixtures between
-  *    passes. Scratch directories come from [[tempDir]], deleted at JVM
-  *    exit.
+  *    conf or rule ([[clone]]). They are files and sessions, not memory,
+  *    so `release` has nothing to free; and a query over a fixture
+  *    measures the read the fixture exists for, so Bench must not
+  *    rewrite fixtures between passes. Scratch directories come from
+  *    [[tempDir]], deleted at JVM exit.
   *
   * `getOrElseUpdate` selects one winner atomically; a concurrent first
   * call (Verify runs 4 queries at a time) may run `build` twice, but only
@@ -64,6 +64,22 @@ private[graft] object Shared {
   /** A session value, built once per (session, key) for the session's life. */
   def session[V](s: SparkSession, key: Any)(build: => V): V =
     kept.getOrElseUpdate(s, key, build).asInstanceOf[V]
+
+  /** A cloned session, built once per (session, name) for the session's
+    * life: `s.newSession()` with `setup` applied. The clone shares `s`'s
+    * SparkContext and CacheManager, so frames cached on `s` still serve
+    * plans on the clone, but not its conf or rules, so what `setup`
+    * installs never reaches a query planned on `s`. `newSession` starts
+    * from the builder conf, not from `s`'s current conf: a temporary
+    * `conf.set` on `s` can never be frozen into a clone that outlives it.
+    * `setup` is the only place `src/main` writes a session conf
+    * (SourceGateSpec). */
+  def clone(s: SparkSession, name: String)(setup: SparkSession => Unit): SparkSession =
+    session(s, name) {
+      val ns = s.newSession()
+      setup(ns)
+      ns
+    }
 
   /** A session scratch fixture: a fresh `graft_<name>` dir, filled by
     * `write` once per (session, dataset); returns its path. */

@@ -17,6 +17,11 @@ import org.apache.spark.sql.streaming.Trigger
   * correctness gate we drive it with Trigger.AvailableNow over the static
   * parquet and materialize via the memory sink, so the result is exactly
   * comparable to the batch oracle.
+  *
+  * Every public entry point reads its stream on [[stateSession]], a
+  * cached clone of the caller's session that carries the state width; a
+  * drain runs on its source's session and reads its memory table back
+  * there. No body here writes the conf of the session it is called with.
   */
 object Streams extends Serializable {
 
@@ -38,9 +43,11 @@ object Streams extends Serializable {
     name
   }
 
-  /** Run `f` with `spark.sql.shuffle.partitions` lowered to the streaming
-    * state width, restoring the batch setting after. A stateful streaming
-    * query materializes one state-store instance PER shuffle partition and
+  /** The session every public entry point below reads its streams on: a
+    * clone of `spark` ([[Shared.clone]]) whose shuffle width is the
+    * streaming state width, so no drain writes the conf of the session
+    * its caller plans batch queries on. A stateful streaming query
+    * materializes one state-store instance PER shuffle partition and
     * pays its open/maintenance/commit on EVERY micro-batch, so the state
     * width should track stateful-key cardinality and stream volume — not
     * the batch shuffle width sized for table-scan joins. (At production
@@ -48,17 +55,26 @@ object Streams extends Serializable {
     * runs inside a wide-cluster session.) The width is pinned at the
     * query's FIRST start and persists in the checkpoint, which is exactly
     * why it must be chosen deliberately rather than inherited. */
-  private def withStatePartitions[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "8")
-    try f finally spark.conf.set(key, prev)
+  private[graft] def stateSession(spark: SparkSession): SparkSession =
+    Shared.clone(spark, "streamState")(_.conf.set("spark.sql.shuffle.partitions", "8"))
+
+  /** Run `query` to completion (AvailableNow) into a fresh memory table on
+    * the session it was read on, and return that table. */
+  private def drain(query: DataFrame, prefix: String, mode: String,
+      checkpoint: Option[String] = None): DataFrame = {
+    val spark = query.sparkSession
+    val name = sinkName(spark, prefix)
+    val writer = query.writeStream.outputMode(mode).format("memory").queryName(name)
+    checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    spark.table(name)
   }
 
   /** Raw events stream over the test parquet (nanos ts → TIMESTAMP_NTZ,
-    * same conversion as Tables.events). */
+    * same conversion as Tables.events), read on `spark` itself. */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = Tables.parquet(spark, s"$dir/events.parquet").schema
     val raw = spark.readStream
       .schema(schema)
@@ -520,7 +536,8 @@ object Streams extends Serializable {
 
   /** Streaming job publishing per-user running aggregates with
     * upsert-by-key semantics (update output mode → foreachBatch sink). */
-  def userTotalsUpserted(spark: SparkSession, dir: String, sinkDir: String): DataFrame = withStatePartitions(spark) {
+  def userTotalsUpserted(parent: SparkSession, dir: String, sinkDir: String): DataFrame = {
+    val spark = stateSession(parent)
     val agg = eventsStream(spark, dir)
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_events"), round(sum("value"), 2).as("total_value"))
@@ -743,24 +760,14 @@ object Streams extends Serializable {
     * twice) and return the surviving rows — proves duplicate suppression
     * across the stream. */
   def eventsDedupStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val src = eventsStream(spark, dir)
-    dedupDrain(spark, src.union(src))
+    val src = eventsStream(stateSession(spark), dir)
+    dedupDrain(src.union(src))
   }
 
   /** The dedup drain behind [[eventsDedupStreamed]], split on the source
     * for the fuzz harness (duplicate bursts across micro-batches). */
-  private[graft] def dedupDrain(spark: SparkSession, source: DataFrame): DataFrame = withStatePartitions(spark) {
-    val name = sinkName(spark, "graft_dedup_stream")
-    val q = eventsDedupStream(source)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name).orderBy("event_id")
-  }
+  private[graft] def dedupDrain(source: DataFrame): DataFrame =
+    drain(eventsDedupStream(source), "graft_dedup_stream", "append").orderBy("event_id")
 
   /** Stream-stream inner join with an event-time range condition —
     * click→purchase attribution: for each purchase, the same-user clicks
@@ -840,25 +847,25 @@ object Streams extends Serializable {
     * that drain reads it back. */
   private def sharedAttributionPairs(spark: SparkSession, dir: String): DataFrame =
     sharedPairsLock.synchronized {
-      Shared.session(spark, ("attrPairs", dir))(
-        attributionPairsDrain(spark,
-          () => eventsStream(spark, dir).unionByName(heartbeatStream(spark, dir)),
+      Shared.session(spark, ("attrPairs", dir)) {
+        val state = stateSession(spark)
+        attributionPairsDrain(
+          () => eventsStream(state, dir).unionByName(heartbeatStream(state, dir)),
           // own per-dir sink prefix: sinkName drops the PREVIOUS view of
           // the same (session, prefix), so the memoized view must never
           // share a prefix with per-call drains (spec/fuzz paths) or with
           // a different dataset's shared drain in the same session
-          sharedPairsPrefix(dir)))
+          sharedPairsPrefix(dir))
+      }
     }
   private val sharedPairsLock = new Object
   private[graft] def sharedPairsPrefix(dir: String): String =
     s"graft_attr_shared_${Tables.pathTag(dir)}"
 
   /** Drain the full-outer click↔purchase range join and return the RAW
-    * pair set (no rollup) as the session-local memory table. */
-  private[graft] def attributionPairsDrain(spark: SparkSession,
-      mkSource: () => DataFrame,
-      prefix: String = "graft_attr_full"): DataFrame = withStatePartitions(spark) {
-    val name = sinkName(spark, prefix)
+    * pair set (no rollup) as the source session's memory table. */
+  private[graft] def attributionPairsDrain(mkSource: () => DataFrame,
+      prefix: String = "graft_attr_full"): DataFrame = {
     val clicks = mkSource()
       .filter(col("event_type").isin("click", "sentinel"))
       .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
@@ -874,14 +881,7 @@ object Streams extends Serializable {
         col("click_ts") >= col("purchase_ts") - expr("INTERVAL 1 HOUR") &&
         col("click_ts") < col("purchase_ts"),
       "full_outer")
-    val q = pairs.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drain(pairs, prefix, "append")
   }
 
   /** A one-row "heartbeat" stream whose single event sits 3 hours past
@@ -894,7 +894,6 @@ object Streams extends Serializable {
     * Written in the source parquet's raw schema so the streaming reader
     * treats it exactly like the real feed. */
   private[graft] def heartbeatStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = Tables.parquet(spark, s"$dir/events.parquet").schema
     val isNanos = schema("ts").dataType == org.apache.spark.sql.types.LongType
     val tmp = Shared.dir(spark, "heartbeat", dir) { p =>
@@ -963,26 +962,18 @@ object Streams extends Serializable {
     * sessionizer's. The flush collects only still-open sessions (bounded
     * by active users in the final gap window), not the output. */
   def eventSessionsStreamed(spark: SparkSession, dir: String): DataFrame =
-    sessionsDrain(spark, eventsStream(spark, dir))
+    sessionsDrain(eventsStream(stateSession(spark), dir))
 
   /** The sessionization drain behind [[eventSessionsStreamed]], split on
     * the SOURCE so the fuzz harness can feed chunked/shuffled/late
     * arrivals ([[chunkedEventsStream]]) through the identical
     * state-machine + timeout + end-of-stream-flush machinery. */
-  private[graft] def sessionsDrain(spark: SparkSession, source: DataFrame): DataFrame = withStatePartitions(spark) {
+  private[graft] def sessionsDrain(source: DataFrame): DataFrame = {
+    val spark = source.sparkSession
     import spark.implicits._
-    val name = sinkName(spark, "graft_sessions_stream")
     val ckpt = java.nio.file.Files.createTempDirectory("graft_sessions_ckpt")
-    val q = sessionizeStream(source)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val emitted = spark.table(name)
+    val emitted = drain(sessionizeStream(source), "graft_sessions_stream", "append",
+      Some(ckpt.toString))
     // a zero-file source commits NO batch under AvailableNow, and the
     // statestore read source then refuses the checkpoint
     // (STDS_COMMITTED_BATCH_UNAVAILABLE) — no batch means no state, so
@@ -1017,24 +1008,15 @@ object Streams extends Serializable {
     * twin of the batch `events_hourly` query, checked against the same
     * DuckDB oracle. */
   def eventsHourlyStreamed(spark: SparkSession, dir: String): DataFrame =
-    hourlyDrain(spark, eventsStream(spark, dir))
+    hourlyDrain(eventsStream(stateSession(spark), dir))
 
   /** The complete-mode hourly drain, split on the source for the fuzz
     * harness: complete output keeps ALL window state (the watermark is a
     * no-op), so the result must equal the batch aggregate over EVERY
     * row under any chunking — late arrivals included. */
-  private[graft] def hourlyDrain(spark: SparkSession, source: DataFrame): DataFrame = withStatePartitions(spark) {
-    val name = sinkName(spark, "graft_events_stream")
-    val q = hourlyAgg(source)
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name).orderBy("heure", "event_type")
-  }
+  private[graft] def hourlyDrain(source: DataFrame): DataFrame =
+    drain(hourlyAgg(source), "graft_events_stream", "complete")
+      .orderBy("heure", "event_type")
 
   /** Streaming twin of the batch hopping-window aggregate
     * (Serving.eventsHopping): the SAME `window(ts, 1h, 15min)` operator
@@ -1044,23 +1026,14 @@ object Streams extends Serializable {
     * Materialized to completion and checked against the batch query's
     * own DuckDB oracle, proving the sliding operator agrees between the
     * at-rest and in-motion paths. */
-  def eventsHoppingStreamed(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
-    val name = sinkName(spark, "graft_hopping_stream")
-    val q = eventsStream(spark, dir)
+  def eventsHoppingStreamed(spark: SparkSession, dir: String): DataFrame =
+    drain(eventsStream(stateSession(spark), dir)
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"))
       .agg(count(lit(1)).as("n_events"), round(sum("value"), 2).as("total_value"))
       .select(col("w.start").cast("timestamp_ntz").as("w_start"),
-        col("n_events"), col("total_value"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name).orderBy("w_start")
-  }
+        col("n_events"), col("total_value")),
+      "graft_hopping_stream", "complete").orderBy("w_start")
 
   /** Streaming twin of [[Serving.eventSessionsNative]]: Spark's native
     * session_window under a watermark — the engine merges/extends
@@ -1071,7 +1044,7 @@ object Streams extends Serializable {
     * against the SAME batch oracle as the native batch form (update
     * mode is the one session_window doesn't support). */
   def sessionsNativeStreamed(spark: SparkSession, dir: String): DataFrame =
-    sessionsNativeDrain(spark, eventsStream(spark, dir))
+    sessionsNativeDrain(eventsStream(stateSession(spark), dir))
 
   /** The native session_window drain, split on the source for the fuzz
     * harness: complete output ignores the watermark entirely, so
@@ -1079,9 +1052,8 @@ object Streams extends Serializable {
     * under ANY multi-batch arrival — late chunks included (the
     * engine-managed merge of session state the hand-rolled FMGWS
     * variant reimplements). */
-  private[graft] def sessionsNativeDrain(spark: SparkSession, source: DataFrame): DataFrame = withStatePartitions(spark) {
-    val name = sinkName(spark, "graft_sessions_native_stream")
-    val q = source
+  private[graft] def sessionsNativeDrain(source: DataFrame): DataFrame =
+    drain(source
       .withWatermark("ts", "2 hours")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
       .agg(min("ts").as("session_start"), max("ts").as("session_end"),
@@ -1089,16 +1061,8 @@ object Streams extends Serializable {
       .withColumn("duration_sec",
         expr("(unix_micros(CAST(session_end AS TIMESTAMP)) - unix_micros(CAST(session_start AS TIMESTAMP))) div 1000000"))
       .select("user_id", "session_start", "session_end", "duration_sec",
-        "n_events", "total_value")
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name).orderBy("user_id", "session_start")
-  }
+        "n_events", "total_value"),
+      "graft_sessions_native_stream", "complete").orderBy("user_id", "session_start")
 
   /** Stream-static enrichment (the standard production shape for joining
     * a fact stream to slowly-changing dims): the event stream left-joins
@@ -1106,12 +1070,12 @@ object Streams extends Serializable {
     * micro-batch, no stream-stream state — then aggregates hourly revenue
     * by country. Materialized to completion and checked against the same
     * batch-join oracle. */
-  def enrichedHourlyStreamed(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+  def enrichedHourlyStreamed(parent: SparkSession, dir: String): DataFrame = {
+    val spark = stateSession(parent)
     val dims = Tables.customer(spark, dir)
       .join(Tables.nation(spark, dir),
         col("c_nationkey") === col("n_nationkey"), "left")
       .select(col("c_custkey"), coalesce(col("n_name"), lit("Inconnu")).as("pays"))
-    val name = sinkName(spark, "graft_enriched_stream")
     val agg = eventsStream(spark, dir)
       .join(broadcast(dims), col("user_id") === col("c_custkey"), "left")
       .withColumn("pays", coalesce(col("pays"), lit("Inconnu")))
@@ -1120,13 +1084,6 @@ object Streams extends Serializable {
       .agg(count(lit(1)).as("n_events"), round(sum("value"), 2).as("total_value"))
       .select(col("window.start").cast("timestamp_ntz").as("heure"), col("pays"),
         col("n_events"), col("total_value"))
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name).orderBy("heure", "pays")
+    drain(agg, "graft_enriched_stream", "complete").orderBy("heure", "pays")
   }
 }

@@ -320,12 +320,13 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame = load(s, d, "lineitem")
-  /** `events.ts` is parquet TIMESTAMP(NANOS) which Spark's vectorized
-    * reader rejects; read it as raw nanos (legacy conf) and convert to a
+  /** `events.ts` may be parquet TIMESTAMP(NANOS), which Spark's
+    * vectorized reader rejects; the session conf reads it as raw nanos
+    * (`nanosAsLong`, [[EntryPoint.conf]]) and it is converted to a
     * microsecond TIMESTAMP_NTZ — the same truncation DuckDB applies when
-    * casting its TIMESTAMP_NS to TIMESTAMP. */
+    * casting its TIMESTAMP_NS to TIMESTAMP. A microsecond `ts` passes
+    * through. */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = load(s, d, "events")
     if (df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
       // integer `div` (not `/`): nanos ~1.7e18 exceed double's 53-bit

@@ -19,13 +19,10 @@ import java.nio.file.Files
 class EmptyInputSpec extends SparkSpec {
 
   /** Schema-correct zero-row copies of all ten driver tables, written
-    * once per JVM. `events.ts` is read under the nanos-as-long conf so
-    * the empty copy carries the same long-typed column the loader
-    * handles (tables.scala:131). */
+    * once per JVM. */
   private lazy val emptyDir: String = {
     val dir = Files.createTempDirectory("graft-empty-sf").toFile
     dir.deleteOnExit()
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     Tables.required.keys.foreach { t =>
       spark.read.parquet(s"$sf/$t.parquet").limit(0)
         .write.mode("overwrite").parquet(s"${dir.getAbsolutePath}/$t.parquet")

@@ -410,8 +410,6 @@ class GoldSpec extends SparkSpec {
   }
 
   test("Tables.parquet: footer-read schema equals the inferred one on sources and sinks") {
-    // events.ts is TIMESTAMP(NANOS): both reads see it as Tables.events does
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     def same(path: String): Unit = {
       assert(Tables.footerSchema(spark, Seq(path)).nonEmpty, path)
       assert(Tables.parquet(spark, path).schema == spark.read.parquet(path).schema, path)
@@ -937,7 +935,7 @@ class GoldSpec extends SparkSpec {
       // order 4 repeats edge 1-2 (must dedupe, not double-count)
       (4L, 1L), (4L, 2L))
       .toDF("l_orderkey", "l_partkey")
-    val out = Gold.copurchaseTriangles(li).collect()
+    val out = Gold.copurchaseTrianglesFrom(Gold.itemPairEdges(li)).collect()
       .map(r => r.getLong(0) -> r.getLong(1))
     assert(out.toSeq == Seq(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
   }

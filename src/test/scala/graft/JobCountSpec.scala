@@ -42,10 +42,7 @@ class JobCountSpec extends SparkSpec {
     val fresh: SparkSession = spark.newSession()
     assert(jobsOf(Catalog.registerTables(fresh, sf)).isEmpty)
     Tables.required.keys.toSeq.sorted.foreach { name =>
-      val other = spark.newSession()
-      // events.ts is TIMESTAMP(NANOS), readable only as Tables.events reads it
-      other.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      assert(jobsOf(Tables.load(other, sf, name)).isEmpty, name)
+      assert(jobsOf(Tables.load(spark.newSession(), sf, name)).isEmpty, name)
     }
     assert(pipelineJobs.nonEmpty)
     assert(jobsOf(Catalog.registerGold(spark.newSession(), pipelineOut)).isEmpty)

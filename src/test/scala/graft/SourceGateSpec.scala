@@ -104,11 +104,38 @@ class SourceGateSpec extends AnyFunSuite {
       s"system-property or tools/ file switches:\n${offenders.mkString("\n")}")
   }
 
-  test("SparkSession.builder appears only in EntryPoint and GenScale") {
+  test("SparkSession.builder appears only in EntryPoint") {
     val files = mainSources.filter(p => code(p).contains("SparkSession.builder"))
       .map(_.getFileName.toString).sorted
-    assert(files == Seq("GenScale.scala", "entrypoint.scala"),
-      s"entry-point mains build their session with EntryPoint.session: $files")
+    assert(files == Seq("entrypoint.scala"),
+      s"every session is built from EntryPoint.conf by EntryPoint.session: $files")
+  }
+
+  /** The session-conf writes in `text` that are not a [[Shared.clone]]
+    * setup (`Shared.clone(s, name)(_.conf.set(...))`). */
+  private def confWritesOutsideClone(text: String): Seq[String] = {
+    val cloneSetup =
+      """Shared\.clone\([^()]*\)\(\s*(?:_|(\w+)\s*=>\s*\1)\.conf\.set\(""".r
+    val write = """\bconf\.(?:set|unset|setConf|unsetConf)\(""".r
+    cloneSetup.replaceAllIn(text, "").linesIterator
+      .filter(l => write.findFirstIn(l).nonEmpty).map(_.trim).toSeq
+  }
+
+  test("no conf.set or conf.unset in src/main outside a Shared.clone setup") {
+    // a body that writes the session it runs on changes the plan of every
+    // query planned on that session meanwhile (Verify plans 4 at once); a
+    // setting one query needs apart lives on a cloned session
+    assert(confWritesOutsideClone(
+      "Shared.clone(s, \"c\")(\n  _.conf.set(\"k\", \"v\"))").isEmpty)
+    assert(confWritesOutsideClone(
+      "Shared.clone(s, \"c\")(ns => ns.conf.set(\"k\", \"v\"))").isEmpty)
+    assert(confWritesOutsideClone("spark.conf.set(\"k\", \"v\")").size == 1)
+    assert(confWritesOutsideClone("try f finally s.conf.unset(k)").size == 1)
+    val offenders = mainSources.flatMap { p =>
+      confWritesOutsideClone(code(p)).map(l => s"${p.getFileName}: $l")
+    }
+    assert(offenders.isEmpty,
+      s"session conf written outside a Shared.clone setup:\n${offenders.mkString("\n")}")
   }
 
   test("percentile-array folds go through the shared decode helper") {

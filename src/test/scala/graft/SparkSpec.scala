@@ -17,15 +17,6 @@ object SparkSpec {
     sys.env.get("GRAFT_FUZZ_N").map(_.toInt).map(math.max(_, default))
       .getOrElse(default)
 
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The engine's session conf ([[EntryPoint.conf]]) on 4 cores. */
+  lazy val session: SparkSession = EntryPoint.session("4")
 }

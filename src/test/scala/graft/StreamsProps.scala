@@ -25,6 +25,8 @@ object StreamsProps extends Properties("Streams") {
     p.withMinSuccessfulTests(SparkSpec.fuzzN(5))
 
   private lazy val spark = SparkSpec.session
+  /** The drains read their chunks at the registry drains' state width. */
+  private lazy val state = Streams.stateSession(spark)
 
   /** (event_id, user_id, event_type, offSec, value). Whole-second
     * offsets keep the ms-floored watermark exact; quarter values make
@@ -165,7 +167,7 @@ object StreamsProps extends Properties("Streams") {
       val dir = writeChunks(chunks)
       try {
         val streamed = canonSessions(
-          Streams.sessionsDrain(spark, Streams.chunkedEventsStream(spark, dir)))
+          Streams.sessionsDrain(Streams.chunkedEventsStream(state, dir)))
         val oracle = canonSessions(Serving.eventSessions(toDf(delivered(chunks))))
         val noCorruption = streamed.forall(_._4 >= 0) // the round's headline bug
         (streamed == oracle) :| s"streamed=$streamed oracle=$oracle" &&
@@ -194,7 +196,7 @@ object StreamsProps extends Properties("Streams") {
         .filter(_.nonEmpty)
       val dir = writeChunks(chunks)
       try {
-        val out = Streams.dedupDrain(spark, Streams.chunkedEventsStream(spark, dir))
+        val out = Streams.dedupDrain(Streams.chunkedEventsStream(state, dir))
           .select("event_id").collect().map(_.getLong(0)).toSeq
         val want = ids.map(_.id).distinct.sorted
         (out.sorted == want) :| s"got=$out want=$want" &&
@@ -213,7 +215,7 @@ object StreamsProps extends Properties("Streams") {
           .withColumn("heure", date_format(col("heure"), "yyyy-MM-dd HH:mm:ss"))
           .collect().map(_.mkString("|")).toSeq.sorted
         val streamed = canon(
-          Streams.hourlyDrain(spark, Streams.chunkedEventsStream(spark, dir)))
+          Streams.hourlyDrain(Streams.chunkedEventsStream(state, dir)))
         val oracle = canon(toDf(all)
           .groupBy(date_trunc("hour", col("ts")).as("heure"), col("event_type"))
           .agg(count(lit(1)).as("n_events"), round(sum("value"), 2).as("total_value")))
@@ -235,7 +237,7 @@ object StreamsProps extends Properties("Streams") {
       val dir = writeChunks(chunks)
       try {
         val streamed = canonSessions(
-          Streams.sessionsNativeDrain(spark, Streams.chunkedEventsStream(spark, dir)))
+          Streams.sessionsNativeDrain(Streams.chunkedEventsStream(state, dir)))
         val oracle = canonSessions(Serving.eventSessionsNative(toDf(all)))
         (streamed == oracle) :| s"streamed=$streamed oracle=$oracle"
       } finally Streams.deleteRec(new java.io.File(dir))
@@ -251,8 +253,7 @@ object StreamsProps extends Properties("Streams") {
       val sentinel = Ev(-1L, -1L, "sentinel", maxOff + 3 * 3600L, 0.0)
       val dir = writeChunks(chunks :+ Seq(sentinel))
       try {
-        val pairs = Streams.attributionPairsDrain(spark,
-          () => Streams.chunkedEventsStream(spark, dir))
+        val pairs = Streams.attributionPairsDrain(() => Streams.chunkedEventsStream(state, dir))
         def fmt(df: DataFrame): Seq[String] =
           df.select("purchase_id", "user_id", "n_clicks", "click_value")
             .collect().map(_.mkString("|")).toSeq.sorted

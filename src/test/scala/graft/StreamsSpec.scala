@@ -6,6 +6,8 @@ import graft.queries.{Oracle, QuerySpec}
 
 /** Streaming + multimodal extension plumbing. */
 class StreamsSpec extends SparkSpec {
+  /** The chunked drains read at the registry drains' state width. */
+  private lazy val state = Streams.stateSession(spark)
 
   test("streamed hourly aggregate equals the batch aggregate") {
     // cast heure to string on both sides: batch carries TIMESTAMP, the
@@ -73,16 +75,76 @@ class StreamsSpec extends SparkSpec {
     // cluster runs when session state outgrows the JVM heap (HDFS-backed
     // keeps every key in executor memory; RocksDB spills to local SSD).
     // The result must be byte-identical: state backend is an operational
-    // choice, never a semantic one.
-    val key0 = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key0)
-    spark.conf.set(key0,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val rocks = canon(Streams.eventSessionsStreamed(spark, sf))
-      assert(rocks.map(key).toSeq == canon(batch).map(key).toSeq,
-        "RocksDB state store changed the session set")
-    } finally prev.fold(spark.conf.unset(key0))(spark.conf.set(key0, _))
+    // choice, never a semantic one. The provider is set on a private
+    // session, and the drain reads on it directly: a state clone of the
+    // shared session would not inherit the provider.
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val rocksDb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    val rocks = spark.newSession()
+    rocks.conf.set(provider, rocksDb)
+    val drained = Streams.sessionsDrain(Streams.eventsStream(rocks, sf))
+    assert(drained.sparkSession.conf.get(provider) == rocksDb)
+    assert(canon(drained).map(key).toSeq == canon(batch).map(key).toSeq,
+      "RocksDB state store changed the session set")
+  }
+
+  test("concurrent drains run at the state width and never write their caller's shuffle width") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
+    // Verify runs bodies concurrently on one session: a drain that
+    // lowered the session's shuffle width around its run handed that
+    // width to every batch query planned meanwhile, and two overlapping
+    // drains could restore it in the wrong order
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]
+    // a SparkListener sees the progress of every session's queries
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case p: StreamingQueryListener.QueryProgressEvent => progress.add(p.progress)
+        case _ =>
+      }
+    }
+    val drainBus = () => org.apache.spark.graftbridge.BusDrain(spark.sparkContext)
+    drainBus()
+    spark.sparkContext.addSparkListener(listener)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val sampled = try {
+      val drains = Seq(
+        Future(Streams.eventsHourlyStreamed(spark, sf).collect()),
+        Future(Streams.eventSessionsStreamed(spark, sf).collect()))
+      // the batch query's thread samples the caller's width while the
+      // drains run, and plans and runs a query at each sample
+      val batch = Future {
+        val seen = Seq.newBuilder[String]
+        while (!drains.forall(_.isCompleted)) {
+          seen += spark.conf.get(key)
+          Tables.events(spark, sf).groupBy("event_type").count().collect()
+        }
+        seen.result()
+      }
+      drains.foreach(Await.result(_, Duration.Inf))
+      val seen = Await.result(batch, Duration.Inf)
+      drainBus()
+      seen
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      pool.shutdown()
+    }
+    val states = progress.asScala.toSeq
+      .filter(p => Option(p.name).exists(n =>
+        n.startsWith("graft_events_stream") || n.startsWith("graft_sessions_stream")))
+      .flatMap(_.stateOperators)
+    assert(states.nonEmpty, "no state operator progress from the drains")
+    assert(states.forall(_.numShufflePartitions == 8),
+      s"state widths: ${states.map(_.numShufflePartitions).distinct}")
+    assert(sampled.nonEmpty && sampled.forall(_ == before),
+      s"caller's $key read ${sampled.distinct} during the drains, $before before")
+    assert(spark.conf.get(key) == before, s"caller's $key left at ${spark.conf.get(key)}")
   }
 
   test("late arrivals are dropped at the watermark, never folded backwards into session state") {
@@ -115,7 +177,7 @@ class StreamsSpec extends SparkSpec {
         java.nio.file.Files.move(part.toPath, dst.toPath)
         dst.setLastModified(1700000000000L + i * 10000L)
       }
-      val got = Streams.sessionsDrain(spark, Streams.chunkedEventsStream(spark, dir.toString))
+      val got = Streams.sessionsDrain(Streams.chunkedEventsStream(state, dir.toString))
         .select(col("user_id"), unix_timestamp(col("session_start")).as("s"),
           col("duration_sec"), col("n_events"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -158,7 +220,7 @@ class StreamsSpec extends SparkSpec {
           java.nio.file.Files.move(part.toPath, dst.toPath)
           dst.setLastModified(1700000000000L + i * 10000L)
         }
-        Streams.sessionsDrain(spark, Streams.chunkedEventsStream(spark, dir.toString))
+        Streams.sessionsDrain(Streams.chunkedEventsStream(state, dir.toString))
           .select("user_id").collect().map(_.getLong(0)).toSeq.sorted
       } finally {
         Streams.deleteRec(dir.toFile); Streams.deleteRec(stage.toFile)
@@ -209,8 +271,7 @@ class StreamsSpec extends SparkSpec {
         java.nio.file.Files.move(part.toPath, dst.toPath)
         dst.setLastModified(1700000000000L + i * 10000L)
       }
-      val users = Streams.sessionsNativeDrain(spark,
-          Streams.chunkedEventsStream(spark, dir.toString))
+      val users = Streams.sessionsNativeDrain(Streams.chunkedEventsStream(state, dir.toString))
         .select("user_id").collect().map(_.getLong(0)).sorted.toSeq
       assert(users == Seq(1L, 3L, 9L),
         s"session_window late-row semantics changed: $users")
@@ -393,7 +454,8 @@ class StreamsSpec extends SparkSpec {
     val views = Seq("events_attribution" -> "inner",
       "events_attribution_outer" -> "left_outer",
       "events_attribution_full" -> "full_outer")
-    spark.streams.addListener(listener)
+    // the drains run on the state clone, whose query manager posts them
+    state.streams.addListener(listener)
     try {
       val start = new java.util.concurrent.CountDownLatch(1)
       val pool = java.util.concurrent.Executors.newFixedThreadPool(views.size)
@@ -412,7 +474,7 @@ class StreamsSpec extends SparkSpec {
         assert(want.nonEmpty && got == want, n)
       }
     } finally {
-      spark.streams.removeListener(listener)
+      state.streams.removeListener(listener)
       Streams.deleteRec(tmp.toFile)
     }
   }
@@ -490,8 +552,8 @@ class StreamsSpec extends SparkSpec {
   test("kmeans segmentation: k clusters, deterministic under a fixed seed") {
     val feats = Gold.clientFeatures(Tables.orders(spark, sf), Tables.lineitem(spark, sf),
       Gold.referenceDate(Gold.validOrders(Tables.orders(spark, sf))))
-    val a = Ml.kmeansSegments(feats).collect()
-    val b = Ml.kmeansSegments(feats).collect()
+    val a = Ml.segmentsOf(Ml.kmeansFit(feats)).collect()
+    val b = Ml.segmentsOf(Ml.kmeansFit(feats)).collect()
     assert(a.nonEmpty)
     assert(a.map(_.getAs[Long]("cluster")).distinct.length <= 5)
     assert(a.map(_.toString).toSeq == b.map(_.toString).toSeq)
@@ -629,7 +691,7 @@ class StreamsSpec extends SparkSpec {
   test("kmeans silhouette: one row in [-1,1], deterministic, clears the quality floor") {
     val feats = Gold.clientFeatures(Tables.orders(spark, sf), Tables.lineitem(spark, sf),
       Gold.referenceDate(Gold.validOrders(Tables.orders(spark, sf))))
-    val a = Ml.kmeansSilhouette(feats).collect()
+    val a = Ml.silhouetteOf(Ml.kmeansFit(feats)).collect()
     assert(a.length == 1)
     assert(a.head.getAs[Long]("k") == 5L)
     val s = a.head.getAs[Double]("silhouette")
@@ -638,7 +700,7 @@ class StreamsSpec extends SparkSpec {
     // space, not just not-crash (floor set from measured sf0.001 value)
     assert(s >= 0.25, s"silhouette=$s below floor")
     // same session + data => same fit => identical metric
-    val b = Ml.kmeansSilhouette(feats).collect()
+    val b = Ml.silhouetteOf(Ml.kmeansFit(feats)).collect()
     assert(a.map(_.toString).toSeq == b.map(_.toString).toSeq)
   }
 
@@ -812,7 +874,7 @@ class StreamsSpec extends SparkSpec {
         java.nio.file.Files.move(part.toPath, dst.toPath)
         dst.setLastModified(1700000000000L + i * 10000L)
       }
-      val got = Streams.dedupDrain(spark, Streams.chunkedEventsStream(spark, dir.toString))
+      val got = Streams.dedupDrain(Streams.chunkedEventsStream(state, dir.toString))
         .select("event_id").collect().map(_.getLong(0)).toSeq
       val counts = got.groupBy(identity).view.mapValues(_.size).toMap
       assert(counts(8L) == 1, s"in-window duplicate escaped: $got")
