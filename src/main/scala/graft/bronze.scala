@@ -33,7 +33,10 @@ object Bronze {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  /** Copy one source object into the bronze dir, verbatim + verified. */
+  /** Copy one source object into the bronze dir, verbatim + verified.
+    * The reference's per-object task loop (bronze_ingestion.py:62-75)
+    * is a map of this over the object list; the results are its
+    * manifest. */
   def copyToBronze(src: String, bronzeDir: String): Copied = {
     val srcPath = Paths.get(src)
     require(Files.isRegularFile(srcPath), s"no source object at $src")
@@ -50,9 +53,4 @@ object Bronze {
       StandardCopyOption.ATOMIC_MOVE)
     Copied(dest.getFileName.toString, Files.size(dest), srcSum)
   }
-
-  /** The reference's per-object task loop (bronze_ingestion.py:62-75):
-    * copy every named object, return the manifest. */
-  def ingest(srcs: Seq[String], bronzeDir: String): Seq[Copied] =
-    srcs.map(copyToBronze(_, bronzeDir))
 }

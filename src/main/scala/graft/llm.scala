@@ -184,7 +184,58 @@ object Llm {
 
   // ------------------------------------------------- exact n-gram Jaccard
 
-  /** Exact 3-gram Jaccard best-match per document.
+  /** Exact 3-gram Jaccard best match per document (dedup_ngram): the
+    * highest-Jaccard partner of each `doc_a` in a [[jaccardFromStats]]
+    * pair frame. The pair frame is an argument so a session computes it
+    * once and feeds every consumer (see the memo in SparkEntry). */
+  def bestNgramMatch(jac: DataFrame): DataFrame = {
+    // best match per doc via max(struct): (jaccard DESC, doc_b ASC)
+    // selection identical to a row_number window, but map-side combine
+    // collapses each partition to <= one row per doc_a before the shuffle
+    // — no full sort of the pair set
+    jac.groupBy("doc_a")
+      .agg(max(struct(col("jaccard"), (-col("doc_b")).as("negb"), col("doc_b").as("doc_b"))).as("m"))
+      .select(col("doc_a").as("doc_id"), col("m.doc_b").as("best_match"),
+        col("m.jaccard").as("jaccard"))
+      .orderBy("doc_id")
+  }
+
+  /** One row per distinct 3-gram per document: (doc_id, n, h) where n is
+    * the doc's TOTAL distinct-shingle count (rides along so Jaccard union
+    * sizes never need a lookup join) and h = xxhash64 of the shingle text
+    * (the shuffles downstream move 8-byte keys, never text). This is the
+    * single text-scan pass behind the whole near-dup family —
+    * [[ngramPairStatsFrom]] consumes it and [[dedupIncrementalIndexed]]'s
+    * corpus index is written from it, so a session computes it once (at
+    * production scale this frame is the persisted shingle INDEX of the
+    * corpus). */
+  def shingleHashes(documents: DataFrame): DataFrame = {
+    val withN = spread(documents)
+      .withColumn("ws", words(col("text")))
+      .filter(size(col("ws")) >= 3)
+      .select(col("doc_id"), shingles(col("ws")).as("sh"))
+      .select(col("doc_id"), size(col("sh")).cast("long").as("n"), col("sh"))
+    explodeOnce(withN, col("sh"), "shingle", col("doc_id"), col("n"))
+      .select(col("doc_id"), col("n"), xxhash64(col("shingle")).as("h"))
+  }
+
+  /** Every exact 3-gram Jaccard pair (doc_a < doc_b, jaccard rounded to
+    * 6 dp) — the shared candidate-pair frame behind [[bestNgramMatch]]
+    * (best match per doc) and [[dedupClustersFrom]] (connected
+    * components). A thin select over a [[ngramPairStatsFrom]] frame: pass
+    * the memoized stats frame so the pair shuffle is shared with
+    * [[containmentPairsFrom]]. */
+  def jaccardFromStats(stats: DataFrame): DataFrame =
+    stats.select(
+      col("doc_a"), col("doc_b"),
+      round(col("inter") * 1.0 / (col("na") + col("nb") - col("inter")), 6).as("jaccard"))
+
+  /** Raw pair statistics behind the whole exact n-gram family: one row
+    * per candidate pair (doc_a < doc_b) with each side's distinct-shingle
+    * count and the intersection size — [[jaccardFromStats]] and
+    * [[containmentPairsFrom]] are thin selects over this frame, so a
+    * session that memoizes it pays the pair shuffle once for Jaccard,
+    * containment, and cluster queries alike.
     *
     * Shuffle discipline (the 100 TB shape):
     *  1. Shingles are joined on xxhash64(shingle) — the shuffle moves
@@ -208,69 +259,6 @@ object Llm {
     *     At test scale max df ≈ 25 so the hot tier is empty; LlmSpec
     *     forces every shingle through it and asserts bit-equality.
     */
-  def dedupNgram(documents: DataFrame, hotDf: Int = 256, salts: Int = 32): DataFrame =
-    bestNgramMatch(ngramJaccardPairs(documents, hotDf, salts))
-
-  /** Best match per doc over a prebuilt [[ngramJaccardPairs]] frame —
-    * split out so a session can compute the pair frame once and feed
-    * every consumer (see the memo in SparkEntry). */
-  def bestNgramMatch(jac: DataFrame): DataFrame = {
-    // best match per doc via max(struct): (jaccard DESC, doc_b ASC)
-    // selection identical to a row_number window, but map-side combine
-    // collapses each partition to <= one row per doc_a before the shuffle
-    // — no full sort of the pair set
-    jac.groupBy("doc_a")
-      .agg(max(struct(col("jaccard"), (-col("doc_b")).as("negb"), col("doc_b").as("doc_b"))).as("m"))
-      .select(col("doc_a").as("doc_id"), col("m.doc_b").as("best_match"),
-        col("m.jaccard").as("jaccard"))
-      .orderBy("doc_id")
-  }
-
-  /** One row per distinct 3-gram per document: (doc_id, n, h) where n is
-    * the doc's TOTAL distinct-shingle count (rides along so Jaccard union
-    * sizes never need a lookup join) and h = xxhash64 of the shingle text
-    * (the shuffles downstream move 8-byte keys, never text). This is the
-    * single text-scan pass behind the whole near-dup family —
-    * [[ngramJaccardPairsFrom]] and [[dedupIncrementalFrom]] both consume
-    * it, so a session computes it once (at production scale this frame is
-    * the persisted shingle INDEX of the corpus). */
-  def shingleHashes(documents: DataFrame): DataFrame = {
-    val withN = spread(documents)
-      .withColumn("ws", words(col("text")))
-      .filter(size(col("ws")) >= 3)
-      .select(col("doc_id"), shingles(col("ws")).as("sh"))
-      .select(col("doc_id"), size(col("sh")).cast("long").as("n"), col("sh"))
-    explodeOnce(withN, col("sh"), "shingle", col("doc_id"), col("n"))
-      .select(col("doc_id"), col("n"), xxhash64(col("shingle")).as("h"))
-  }
-
-  /** Every exact 3-gram Jaccard pair (doc_a < doc_b, jaccard rounded to
-    * 6 dp) — the shared candidate-pair frame behind [[dedupNgram]] (best
-    * match per doc) and [[dedupClusters]] (connected components). Same
-    * shuffle discipline as documented on [[dedupNgram]]. */
-  def ngramJaccardPairs(documents: DataFrame, hotDf: Int = 256,
-      salts: Int = 32): DataFrame =
-    ngramJaccardPairsFrom(shingleHashes(documents), hotDf, salts)
-
-  /** [[ngramJaccardPairs]] over a prebuilt [[shingleHashes]] frame. */
-  def ngramJaccardPairsFrom(shingleH: DataFrame, hotDf: Int = 256,
-      salts: Int = 32): DataFrame =
-    jaccardFromStats(ngramPairStatsFrom(shingleH, hotDf, salts))
-
-  /** Jaccard view of a [[ngramPairStatsFrom]] frame (thin select — pass
-    * the memoized stats frame so the pair shuffle is shared with
-    * [[containmentPairsFrom]]). */
-  def jaccardFromStats(stats: DataFrame): DataFrame =
-    stats.select(
-      col("doc_a"), col("doc_b"),
-      round(col("inter") * 1.0 / (col("na") + col("nb") - col("inter")), 6).as("jaccard"))
-
-  /** Raw pair statistics behind the whole exact n-gram family: one row
-    * per candidate pair (doc_a < doc_b) with each side's distinct-shingle
-    * count and the intersection size — [[ngramJaccardPairsFrom]] and
-    * [[containmentPairsFrom]] are thin selects over this frame, so a
-    * session that memoizes it pays the pair shuffle once for Jaccard,
-    * containment, and cluster queries alike. */
   def ngramPairStatsFrom(shingleH: DataFrame, hotDf: Int = 256,
       salts: Int = 32): DataFrame = {
     val sh = shingleH
@@ -382,7 +370,8 @@ object Llm {
 
   /** Near-dup cluster assignment — the keep-one-per-cluster step that
     * follows pairwise candidate generation in a training-data dedup
-    * pipeline. Pairs at `minJaccard` become an undirected graph;
+    * pipeline. Pairs of a [[jaccardFromStats]] frame at `minJaccard`
+    * become an undirected graph;
     * [[Graph.connectedComponents]] (large-star/small-star) labels each
     * document with its component's minimum doc_id. Every document is
     * emitted (singletons are their own cluster), with the cluster size —
@@ -393,12 +382,6 @@ object Llm {
     * star contraction whose shuffles carry only 8-byte ids; the final
     * size annotation is one window over cluster_id (near-dup clusters
     * are small by construction, so no partition skew). */
-  def dedupClusters(documents: DataFrame, minJaccard: Double = 0.5,
-      hotDf: Int = 256, salts: Int = 32): DataFrame =
-    dedupClustersFrom(documents, ngramJaccardPairs(documents, hotDf, salts),
-      minJaccard)
-
-  /** [[dedupClusters]] over a prebuilt [[ngramJaccardPairs]] frame. */
   def dedupClustersFrom(documents: DataFrame, pairs: DataFrame,
       minJaccard: Double = 0.5): DataFrame = {
     val edges = pairs
@@ -425,21 +408,15 @@ object Llm {
     *    intersections aggregate per (new, old) pair, exact Jaccard >= 0.5
     *    counts as a near-dup. Only shingles present in the DELTA travel
     *    into the join, so work scales with the batch, not the corpus
-    *    (corpus-side shingles would come from a persisted index in
-    *    production; the hot-shingle salt tier of [[dedupNgram]] applies
-    *    unchanged if a delta shingle is ubiquitous). */
-  def dedupIncremental(documents: DataFrame, oldDocs: Long = 400): DataFrame =
-    dedupIncrementalFrom(documents, shingleHashes(documents), oldDocs)
-
-  /** [[dedupIncremental]] against a PERSISTED corpus index instead of
-    * frames recomputed from corpus text: `corpusExact` is the doc-level
-    * sha2 index (column `h`), `corpusShingles` the (doc_id, n, h)
-    * shingle-hash index — both written once at ingest and only read here.
-    * The delta query therefore scans documents ONLY above the delta
-    * boundary (the doc_id predicate pushes into the scan; PlanShapeSpec
-    * gates it) and its work is delta-proportional on both tiers, the
-    * shape that stays affordable against a continuously growing 100 TB
-    * corpus. */
+    *    (the hot-shingle salt tier of [[ngramPairStatsFrom]] applies
+    *    unchanged if a delta shingle is ubiquitous).
+    *
+    * The corpus side is a PERSISTED index, never recomputed from corpus
+    * text: `corpusExact` is the doc-level sha2 index (column `h`),
+    * `corpusShingles` the (doc_id, n, h) [[shingleHashes]] index — both
+    * written once at ingest and only read here. The delta query
+    * therefore scans documents ONLY above the delta boundary (the doc_id
+    * predicate pushes into the scan; PlanShapeSpec gates it). */
   def dedupIncrementalIndexed(documents: DataFrame, corpusExact: DataFrame,
       corpusShingles: DataFrame, oldDocs: Long = 400): DataFrame = {
     val delta = documents.filter(col("doc_id") >= oldDocs)
@@ -461,51 +438,11 @@ object Llm {
       .orderBy("doc_id")
   }
 
-  /** [[dedupIncremental]] over a prebuilt [[shingleHashes]] frame. */
-  def dedupIncrementalFrom(documents: DataFrame, shingleH: DataFrame,
-      oldDocs: Long = 400): DataFrame = {
-    val d = spread(documents)
-    val hashes = d.select(col("doc_id"), sha2(col("text"), 256).as("h"))
-    val exact = hashes.filter(col("doc_id") >= oldDocs)
-      .join(hashes.filter(col("doc_id") < oldDocs).select("h").distinct(),
-        Seq("h"), "left_semi")
-      .select("doc_id").withColumn("is_exact_dup", lit(true))
-    val inter = shingleH.filter(col("doc_id") >= oldDocs)
-      .select(col("doc_id").as("new_id"), col("n").as("nn"), col("h"))
-      .join(shingleH.filter(col("doc_id") < oldDocs)
-        .select(col("doc_id").as("old_id"), col("n").as("no"), col("h")), Seq("h"))
-      .groupBy("new_id", "old_id", "nn", "no").agg(count(lit(1)).as("inter"))
-    val near = inter
-      .filter(round(col("inter") * 1.0 / (col("nn") + col("no") - col("inter")), 6) >= 0.5)
-      .groupBy(col("new_id").as("doc_id")).agg(count(lit(1)).as("n_near_dups"))
-    d.filter(col("doc_id") >= oldDocs).select("doc_id")
-      .join(exact, Seq("doc_id"), "left")
-      .join(near, Seq("doc_id"), "left")
-      .na.fill(false, Seq("is_exact_dup")).na.fill(0L, Seq("n_near_dups"))
-      .orderBy("doc_id")
-  }
-
   // ------------------------------------------- decontamination / PII scrub
 
-  /** Benchmark decontamination: flag corpus documents sharing ≥1 distinct
-    * 3-gram with the benchmark set (documents with doc_id < `benchDocs`
-    * stand in for an eval set). The benchmark shingle set is tiny next to
-    * the corpus, so it BROADCASTS: the corpus-side scan joins against it
-    * map-side and only per-doc hit counts shuffle — the corpus text never
-    * does. The two passes over the shingle pipeline each push their
-    * doc_id filter into the scan, so the benchmark pass reads only the
-    * benchmark documents.
-    *
-    * Shingles key on [[graft.functions.Sketches.tokenHash]] (the
-    * cross-engine poly31+splitmix64 hash the MinHash/SimHash signatures
-    * already use) rather than xxhash64: equality-join semantics are
-    * identical for any 64-bit hash, and the restatable hash is what
-    * lets the bloom tier's DuckDB oracle re-derive the filter's bit
-    * positions from the raw text (and what a production corpus wants
-    * anyway — hashes recomputable by a different engine, bit-for-bit). */
   /** The (doc_id, shingle token_hash64) frame BOTH decontamination
     * tiers scan — split out so SparkEntry can share one corpus shingle
-    * pass between them (r17). */
+    * pass between them. */
   def decontamHashes(documents: DataFrame): DataFrame = {
     val base = spread(documents)
       .withColumn("ws", words(col("text")))
@@ -515,10 +452,22 @@ object Llm {
         graft.functions.Sketches.token_hash64(col("s")).as("h"))
   }
 
-  def decontaminate(documents: DataFrame, benchDocs: Long = 10): DataFrame =
-    decontaminateFrom(documents, decontamHashes(documents), benchDocs)
-
-  /** [[decontaminate]] over a prebuilt [[decontamHashes]] frame. */
+  /** Benchmark decontamination over a [[decontamHashes]] frame: flag
+    * corpus documents sharing ≥1 distinct 3-gram with the benchmark set
+    * (documents with doc_id < `benchDocs` stand in for an eval set). The
+    * benchmark shingle set is tiny next to the corpus, so it BROADCASTS:
+    * the corpus-side scan joins against it map-side and only per-doc hit
+    * counts shuffle — the corpus text never does. The two passes over
+    * the shingle pipeline each push their doc_id filter into the scan,
+    * so the benchmark pass reads only the benchmark documents.
+    *
+    * Shingles key on [[graft.functions.Sketches.tokenHash]] (the
+    * cross-engine poly31+splitmix64 hash the MinHash/SimHash signatures
+    * already use) rather than xxhash64: equality-join semantics are
+    * identical for any 64-bit hash, and the restatable hash is what
+    * lets the bloom tier's DuckDB oracle re-derive the filter's bit
+    * positions from the raw text (and what a production corpus wants
+    * anyway — hashes recomputable by a different engine, bit-for-bit). */
   def decontaminateFrom(documents: DataFrame, ex: DataFrame,
       benchDocs: Long = 10): DataFrame = {
     val bench = ex.filter(col("doc_id") < benchDocs).select("h").distinct()
@@ -532,7 +481,7 @@ object Llm {
       .orderBy("doc_id")
   }
 
-  /** [[decontaminate]]'s constant-memory scale tier: the exact tier
+  /** [[decontaminateFrom]]'s constant-memory scale tier: the exact tier
     * broadcasts the DISTINCT bench-shingle hash set, which is fine while
     * the eval suite is small but unbounded if it isn't. Here the bench
     * shingles fold into a fixed-size bloom filter (Spark's native
@@ -547,9 +496,10 @@ object Llm {
     * literal is the same two-phase shape as the scoring thresholds.
     *
     * Fully oracle-checked (rows+schema+hash), false positives included:
-    * shingle keys are the cross-engine tokenHash (see [[decontaminate]])
-    * and Spark's BloomFilter V2 bit placement is a pure function of the
-    * 64-bit key and the (numBits, k=round(numBits/n·ln2)) geometry —
+    * shingle keys are the cross-engine tokenHash (see
+    * [[decontaminateFrom]]) and Spark's BloomFilter V2 bit placement is
+    * a pure function of the 64-bit key and the (numBits,
+    * k=round(numBits/n·ln2)) geometry —
     * two chained Murmur3_x86_32 rounds over the key's 32-bit halves,
     * then k probes of (h1·(2³¹−1) + i·h2) with a complement-flip and a
     * mod — all restated in DuckDB wrapping arithmetic, so the oracle
@@ -573,12 +523,6 @@ object Llm {
     * (524288, k=6) restatement. Both values sit far below the default
     * conf caps (4M items / 64M bits), so the aggregate's Math.min
     * clamping is a no-op. */
-  def decontaminateBloom(documents: DataFrame, benchDocs: Long = 10,
-      expectedShingles: Long = 1L << 16): DataFrame =
-    decontaminateBloomFrom(documents, decontamHashes(documents),
-      benchDocs, expectedShingles)
-
-  /** [[decontaminateBloom]] over a prebuilt [[decontamHashes]] frame. */
   def decontaminateBloomFrom(documents: DataFrame, ex: DataFrame,
       benchDocs: Long = 10, expectedShingles: Long = 1L << 16): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
@@ -667,16 +611,12 @@ object Llm {
     * frame, never re-exploded. 6dp rounding on both engines: the
     * double sum over a document's distinct words is partition-order
     * nondeterministic at ~1e-14, far inside 6dp. */
-  def unigramLogProb(documents: DataFrame): DataFrame =
-    unigramLogProbFrom(Search.docTermFreq(documents))
-
-  /** [[unigramLogProb]] over a prebuilt [[Search.docTermFreq]] frame. */
   def unigramLogProbFrom(tf: DataFrame): DataFrame = {
     val uni = tf.groupBy("word").agg(sum("tf").as("n"))
     // N = Σ_w n(w) = Σ rows tf — fold the driver scalar straight off the
     // (cached) tf frame so the vocab aggregate isn't executed twice
     // (once for the scalar, once inside the score join); both sums are
-    // exact longs over the same multiset, bit-identical (r18)
+    // exact longs over the same multiset, bit-identical
     val totalRow = tf.agg(sum("tf")).head()
     // an all-empty corpus has no tokens: no documents to score, not an NPE
     if (totalRow.isNullAt(0))
@@ -700,16 +640,10 @@ object Llm {
     * [[unigramLogProbFrom]]); this joins their doc-grain outputs — three
     * doc-keyed frames, so the joins are dimension-sized, and the LM
     * score arrives via the shared term-frequency frame. A document the
-    * LM never saw (no tokens) fails the LM band, not the job. */
-  def corpusFilter(documents: DataFrame, logProb: DataFrame,
-      minQuality: Double = 0.5, maxRepeat: Double = 0.05,
-      minLogProb: Double = -3.6): DataFrame =
-    corpusFilterFrom(textStats(documents), repetitionScore(documents),
-      logProb, minQuality, maxRepeat, minLogProb)
-
-  /** [[corpusFilter]] over prebuilt component frames (what SparkEntry
-    * feeds from its shared memos — the stats scan and the 3-gram pass
-    * then run once per session across all their consumers). */
+    * LM never saw (no tokens) fails the LM band, not the job. The
+    * component frames are arguments (what SparkEntry feeds from its
+    * shared memos — the stats scan and the 3-gram pass then run once per
+    * session across all their consumers). */
   def corpusFilterFrom(stats: DataFrame, repetition: DataFrame,
       logProb: DataFrame, minQuality: Double = 0.5, maxRepeat: Double = 0.05,
       minLogProb: Double = -3.6): DataFrame = {
@@ -785,23 +719,13 @@ object Llm {
       .orderBy("doc_id")
   }
 
-  /** Corpus vocabulary: top-k word unigrams by document frequency and
-    * total count — the explode → groupBy shape; at 100 TB the same plan
-    * with a count threshold is how stopword/spam-token lists get built. */
-  def vocabTop(documents: DataFrame, k: Int = 50): DataFrame =
-    explodeOnce(spread(documents), words(col("text")), "word", col("doc_id"))
-      .filter(col("word") =!= "")
-      .groupBy("word")
-      .agg(count(lit(1)).as("n"), countDistinct("doc_id").as("docs"))
-      .orderBy(desc("n"), col("word"))
-      .limit(k)
-
-  /** [[vocabTop]] over a prebuilt [[Search.docTermFreq]] frame (r17):
-    * n = Σ tf and docs = row count per word at the (doc, word) grain —
-    * bit-identical counts, but the corpus explode is the session-shared
-    * tf pass instead of this operator's own, and the distinct-doc count
-    * collapses to a plain row count (the tf frame is already distinct
-    * on (doc, word) by construction). */
+  /** Corpus vocabulary: top-k word unigrams by total count and document
+    * frequency — at 100 TB the same plan with a count threshold is how
+    * stopword/spam-token lists get built. Reads a [[Search.docTermFreq]]
+    * frame: n = Σ tf and docs = row count per word at the (doc, word)
+    * grain, so the corpus explode is the session-shared tf pass and the
+    * distinct-doc count collapses to a plain row count (the tf frame is
+    * already distinct on (doc, word) by construction). */
   def vocabTopFrom(tf: DataFrame, k: Int = 50): DataFrame =
     tf.groupBy("word")
       .agg(sum("tf").as("n"), count(lit(1)).as("docs"))
@@ -820,8 +744,8 @@ object Llm {
     * not over 100 TB of text. That vocab-not-corpus pivot is what makes
     * iterated merge rounds feasible at scale: each round is a window
     * over the (word, n) frame, never a re-scan.
-    * [[bpeLearn]] iterates this statistic into an actual merge table;
-    * LlmSpec pins both semantics on literal data. */
+    * [[bpeLearnCore]] iterates this statistic into an actual merge
+    * table; LlmSpec pins both semantics on literal data. */
   def bpePairsFrom(tf: DataFrame, k: Int = 50): DataFrame =
     explodeOnce(tf.groupBy("word").agg(sum("tf").as("n")),
       // sequence(1, len-1) with len<2 would run DESCENDING (Spark defaults
@@ -851,16 +775,14 @@ object Llm {
     * interpolated SQL text — corpus tokens containing quotes can't
     * break the expression. Rows-only gate (DuckDB has no fold to state
     * the rewrite); LlmSpec hand-computes the merge table on literal
-    * words. */
-  def bpeLearn(tf: DataFrame, rounds: Int = 5): DataFrame =
-    bpeLearnCore(tf, rounds)._1
-
-  /** The learned merges AND the post-merge symbol vocabulary (syms, n) —
-    * [[bpeTokenize]] consumes the latter. Exposed package-private so
-    * SparkEntry can run the greedy loop ONCE per (session, dataset) for
-    * bpe_learn and bpe_tokenize together (r18, the VERDICT r17 item-7
-    * shape: the merge table is bounded and learned once; the encode
-    * pass reuses it instead of re-running the 5 collect rounds). */
+    * words.
+    *
+    * Returns the learned merges AND the post-merge symbol vocabulary
+    * (syms, n), which [[bpeTokenizeFrom]] consumes, so SparkEntry runs
+    * the greedy loop ONCE per (session, dataset) for bpe_learn and
+    * bpe_tokenize together: the merge table is bounded and learned once,
+    * and the encode pass reuses it instead of re-running the collect
+    * rounds. */
   private[graft] def bpeLearnCore(tf: DataFrame, rounds: Int): (DataFrame, DataFrame) = {
     val session = tf.sparkSession
     import session.implicits._
@@ -896,11 +818,11 @@ object Llm {
             .otherwise(concat(acc, array(s)))).as("syms"), col("n"))
           // each round's plan stacks a fold on the last; sever the
           // lineage so round k doesn't re-run rounds 1..k-1's rewrites.
-          // LAZY (r18 job fusion): the rewrite materializes inside the
-          // NEXT round's top-pair collect (one job per round instead of
-          // rewrite job + collect job), and the FINAL round's rewrite —
-          // which bpeLearn's merges-only output never reads — is never
-          // executed at all; bpeTokenize's explode still materializes it
+          // LAZY: the rewrite materializes inside the NEXT round's
+          // top-pair collect (one job per round instead of rewrite job +
+          // collect job), and the FINAL round's rewrite — which the
+          // merges output never reads — is never executed at all;
+          // bpeTokenizeFrom's explode still materializes it
           .localCheckpoint(false)
         r += 1
       }
@@ -913,13 +835,9 @@ object Llm {
     * under the merged vocabulary, weighted by word frequency. Runs at
     * vocabulary grain like the rest of the family (the corpus was
     * scanned once into the shared tf frame; at serving time the same
-    * merge table applies to unseen text by the identical fold).
-    * Rows-only + LlmSpec hand-computed token table. */
-  def bpeTokenize(tf: DataFrame, rounds: Int = 5, k: Int = 30): DataFrame =
-    bpeTokenizeFrom(bpeLearnCore(tf, rounds)._2, k)
-
-  /** [[bpeTokenize]]'s encode tail over a prebuilt post-merge vocabulary
-    * (the second half of [[bpeLearnCore]]'s pair). */
+    * merge table applies to unseen text by the identical fold). Reads
+    * the post-merge vocabulary, the second half of [[bpeLearnCore]]'s
+    * pair. Rows-only + LlmSpec hand-computed token table. */
   def bpeTokenizeFrom(vocab: DataFrame, k: Int = 30): DataFrame =
     vocab.select(explode(col("syms")).as("token"), col("n"))
       .groupBy("token")
@@ -927,37 +845,33 @@ object Llm {
       .orderBy(desc("n"), col("token"))
       .limit(k)
 
-  /** [[vocabTop]]'s bounded-memory scale tier. The exact form's hazard at
-    * corpus scale is not the shuffle (partial aggregation bounds that to
-    * |vocab per partition|) but the partial-aggregation HASH MAP itself:
-    * a web-scale token vocabulary (hundreds of millions of distinct
-    * tokens, most of them noise) spills every aggregation task. This tier
-    * caps memory at `m` counters per partition with a Misra-Gries
-    * summary, unions the surviving candidates (≤ partitions × m rows,
-    * usually ≪), then recounts EXACTLY only the candidate tokens — the
-    * broadcast semi-join filters the token stream map-side, so the
-    * aggregation map and shuffle hold candidate tokens only.
+  /** [[vocabTopFrom]]'s bounded-memory scale tier. The exact form's
+    * hazard at corpus scale is not the shuffle (partial aggregation
+    * bounds that to |vocab per partition|) but the partial-aggregation
+    * HASH MAP itself: a web-scale token vocabulary (hundreds of millions
+    * of distinct tokens, most of them noise) spills every aggregation
+    * task. This tier caps memory at `m` counters per partition with a
+    * Misra-Gries summary, unions the surviving candidates (≤ partitions
+    * × m rows, usually ≪), then recounts EXACTLY only the candidate
+    * tokens — the broadcast semi-join filters the token stream map-side,
+    * so the aggregation map and shuffle hold candidate tokens only.
     *
     * The Misra-Gries guarantee (every token with global count > N/(m+1)
     * survives in at least one partition summary) makes the final top-k
-    * EXACT — hash-checked against the same oracle as [[vocabTop]] —
+    * EXACT — hash-checked against the same oracle as [[vocabTopFrom]] —
     * whenever the true k-th count exceeds N/(m+1); with a Zipf-shaped
     * vocabulary and m ≫ k that precondition holds by orders of
     * magnitude (LlmSpec pins the guarantee itself on adversarial literal
-    * data with m = 3). */
-  def vocabTopApprox(documents: DataFrame, k: Int = 50, m: Int = 4096): DataFrame =
-    vocabTopApproxFrom(documents,
-      Search.docTermFreq(documents), k, m)
-
-  /** [[vocabTopApprox]] with the RECOUNT side fed from a prebuilt
-    * [[Search.docTermFreq]] frame (r17): the Misra-Gries candidate pass
-    * still reads the raw token stream (the summary is defined over
-    * occurrences), but the exact recount — per-candidate n and docs —
-    * is grain-invariant, so it re-aggregates the (doc, word, tf) frame
-    * instead of joining candidates against every token occurrence. The
-    * broadcast recount join now probes |doc×word| rows, not |tokens|,
-    * and SparkEntry feeds the session-shared tf frame. Candidates and
-    * final counts are unchanged. */
+    * data with m = 3).
+    *
+    * The RECOUNT side reads a [[Search.docTermFreq]] frame: the
+    * Misra-Gries candidate pass still reads the raw token stream (the
+    * summary is defined over occurrences), but the exact recount —
+    * per-candidate n and docs — is grain-invariant, so it re-aggregates
+    * the (doc, word, tf) frame instead of joining candidates against
+    * every token occurrence: the broadcast recount join probes
+    * |doc×word| rows, not |tokens|, and SparkEntry feeds the
+    * session-shared tf frame. */
   def vocabTopApproxFrom(documents: DataFrame, tf: DataFrame,
       k: Int = 50, m: Int = 4096): DataFrame = {
     val spark = documents.sparkSession
@@ -1013,16 +927,12 @@ object Llm {
     * cluster, labeled by the cluster's alphabetically-smallest member —
     * the blocking→verify→transitive-closure pipeline of record linkage,
     * run here at vocabulary grain. Components come from the same
-    * alternating-star machinery as [[dedupClusters]], operating DIRECTLY
-    * on string nodes (no id-assignment pass — see
+    * alternating-star machinery as [[dedupClustersFrom]], operating
+    * DIRECTLY on string nodes (no id-assignment pass — see
     * [[Graph.connectedComponentsBy]]); the size window keys on the
     * cluster label, never a global order. Only edge-participating words
     * appear: a word with no ≤1-distance neighbor is its own trivial
-    * cluster and is left implicit. */
-  def typoClusters(df: DataFrame, textCol: String, minLen: Int = 3): DataFrame =
-    typoClustersFrom(typoPairs(df, textCol, minLen))
-
-  /** [[typoClusters]] over a prebuilt [[typoPairs]] frame (r17):
+    * cluster and is left implicit. The pair frame is an argument so
     * SparkEntry shares one candidates-then-verify pass between
     * typo_pairs and this transitive closure. */
   def typoClustersFrom(pairs: DataFrame): DataFrame = {
@@ -1121,17 +1031,10 @@ object Llm {
 
   // ----------------------------------------------------- similarity search
 
-  /** Built-in-composed cosine (kept as the reference formulation; the
-    * native expression below is bit-identical — see LlmSpec). */
-  private[graft] def cosineHof(a: Column, b: Column): Column = {
-    def dot(x: Column, y: Column): Column =
-      aggregate(zip_with(x, y, (p, q) => p * q), lit(0.0), (acc, v) => acc + v)
-    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
-  }
-
   /** Hot-path cosine: fused codegen'd loop (graft.functions.CosineSimilarity)
-    * — same accumulation order as the HOF form, ~one array traversal
-    * instead of three interpreted folds. */
+    * — same accumulation order as the built-in HOF composition (LlmSpec
+    * checks the two bit-identical), ~one array traversal instead of three
+    * interpreted folds. */
   private def cosine(a: Column, b: Column): Column =
     graft.functions.CosineSimilarity.cosine_sim(a, b)
 

@@ -31,18 +31,10 @@ object Ml {
     * the synthetic near-uniform test vectors (neighbors at cos≈0.3, the
     * adversarial case for a coarse quantizer); a real corpus with
     * clustered neighbors runs nprobe≪nlist (e.g. 8 of 1024) for the
-    * same recall. */
-  def knnIvf(embeddings: DataFrame, nProbes: Int = 10, k: Int = 5,
-      nlist: Int = 16, nprobe: Int = 8, seed: Long = 42): DataFrame = {
-    // fail-loud precondition (EmptyInputSpec whitelist): the coarse
-    // quantizer cannot train on an empty corpus
-    require(!embeddings.isEmpty, "knnIvf: no embedding rows to index")
-    knnIvfFrom(embeddings, ivfCentroids(embeddings, nlist, seed),
-      nProbes, k, nprobe)
-  }
-
-  /** [[knnIvf]]'s search path against an EXTERNALLY persisted coarse
-    * quantizer — the form a vector store actually serves (quantizer
+    * same recall.
+    *
+    * The coarse quantizer is an argument ([[ivfCentroids]]), persisted
+    * EXTERNALLY — the form a vector store actually serves (quantizer
     * trained on a schedule, searches run against the persisted index).
     * Cell assignment and nprobe probing are the same explicit
     * squared-L2 argmin expression as [[ivfAssignDelta]] — (dist, idx)
@@ -116,7 +108,7 @@ object Ml {
 
   /** [[embeddingPca]] plus the fitted SIGNED component vectors
     * ((component 1-based, loading array over dims) — the persisted-
-    * artifact form, r16 judge item 6): the caller persists the
+    * artifact form): the caller persists the
     * components next to the IVF centroids and the DuckDB oracle
     * restates from them (a) pairwise orthonormality, (b) each
     * component's explained-variance ratio as the VARIANCE OF THE
@@ -154,8 +146,8 @@ object Ml {
 
   /** Scalar-quantized (int8) approximate nearest neighbor — the STORAGE
     * scale path next to the compute tiers (Llm.knnLsh prunes candidates,
-    * [[knnIvf]] prunes cells; this shrinks the vectors themselves). Each
-    * dimension is affinely mapped to 0..255 by its global [min, max];
+    * [[knnIvfFrom]] prunes cells; this shrinks the vectors themselves).
+    * Each dimension is affinely mapped to 0..255 by its global [min, max];
     * a 100 TB float corpus becomes 25 TB of bytes plus a dim-sized
     * codebook, and at that scale the quantized copy is what every
     * scoring pass scans. Search is asymmetric (standard SQ practice):
@@ -200,36 +192,6 @@ object Ml {
       .orderBy("probe_id", "rank")
   }
 
-  /** Supervised twin of the reference's heuristic repurchase score
-    * (reference scripts/train_predictor.py:133-146 hard-codes the blend
-    * 0.45·freq + 0.30·recency + 0.15·monetary + 0.10·diversity): learn
-    * the weights instead with spark.ml LogisticRegression on a temporally
-    * honest label, evaluated on a TEMPORAL HOLDOUT. Two consecutive
-    * windows: the model fits on features as of `ref − 2·horizon` with
-    * label "placed a valid order in the following horizon", then scores
-    * features as of `ref − horizon` whose labels come from the final
-    * horizon — rows the fit never saw, one period later. This is the
-    * backtest the reference never runs: [[propensityBacktest]] reports
-    * held-out AUC next to in-sample. (On the synthetic test data the
-    * held-out AUC sits at chance — the generator assigns orders to
-    * customers uniformly, so there IS no temporal signal; the in-sample
-    * number is pure overfit, which is precisely what a backtest exists
-    * to expose. StreamsSpec gates the held-out value to a band around
-    * 0.5: above it would mean feature/label leakage.)
-    *
-    * Scale shape: each feature build is the audited one-pass conditional
-    * agg; LR training is d=9 — each LBFGS iteration is one treeAggregate
-    * of 9-element gradients, the model is a 10-double broadcast, scoring
-    * is map-side. Nothing here is quadratic in customers.
-    *
-    * Like kmeans_segments this is gated rows-only + ScalaTest
-    * (same-session determinism, held-out AUC floor) — training is
-    * iterative float math, not SQL-expressible. */
-  def propensityModel(orders: DataFrame, lineitem: DataFrame,
-      horizonDays: Int = Gold.HorizonDays, regParam: Double = 0.01,
-      maxIter: Int = 64): DataFrame =
-    propensityBacktest(orders, lineitem, horizonDays, regParam, maxIter)._1
-
   /** Labeled feature frame for one backtest window: features as of
     * `cutoff`, label = any valid order in (cutoff, labelEnd]. */
   private def labeledWindow(orders: DataFrame, lineitem: DataFrame,
@@ -245,11 +207,37 @@ object Ml {
       .na.fill(0.0, Seq("label"))
   }
 
-  /** [[propensityModel]] plus its evaluation: returns (scored holdout
-    * frame, 1-row metrics frame with train/holdout sizes and in-sample vs
-    * held-out AUC). The AUC evaluations are distributed
-    * (BinaryClassificationEvaluator aggregates ROC per partition); only
-    * the two scalars land on the driver. */
+  /** Supervised twin of the reference's heuristic repurchase score
+    * (reference scripts/train_predictor.py:133-146 hard-codes the blend
+    * 0.45·freq + 0.30·recency + 0.15·monetary + 0.10·diversity): learn
+    * the weights instead with spark.ml LogisticRegression on a temporally
+    * honest label, evaluated on a TEMPORAL HOLDOUT. Two consecutive
+    * windows: the model fits on features as of `ref − 2·horizon` with
+    * label "placed a valid order in the following horizon", then scores
+    * features as of `ref − horizon` whose labels come from the final
+    * horizon — rows the fit never saw, one period later. This is the
+    * backtest the reference never runs: it reports held-out AUC next to
+    * in-sample. (On the synthetic test data the held-out AUC sits at
+    * chance — the generator assigns orders to customers uniformly, so
+    * there IS no temporal signal; the in-sample number is pure overfit,
+    * which is precisely what a backtest exists to expose. StreamsSpec
+    * gates the held-out value to a band around 0.5: above it would mean
+    * feature/label leakage.)
+    *
+    * Scale shape: each feature build is the audited one-pass conditional
+    * agg; LR training is d=9 — each LBFGS iteration is one treeAggregate
+    * of 9-element gradients, the model is a 10-double broadcast, scoring
+    * is map-side. Nothing here is quadratic in customers.
+    *
+    * Like kmeans_segments this is gated rows-only + ScalaTest
+    * (same-session determinism, held-out AUC floor) — training is
+    * iterative float math, not SQL-expressible.
+    *
+    * Returns (scored holdout frame, 1-row metrics frame with
+    * train/holdout sizes and in-sample vs held-out AUC). The AUC
+    * evaluations are distributed (BinaryClassificationEvaluator
+    * aggregates ROC per partition); only the two scalars land on the
+    * driver. */
   def propensityBacktest(orders: DataFrame, lineitem: DataFrame,
       horizonDays: Int = Gold.HorizonDays, regParam: Double = 0.01,
       maxIter: Int = 64): (DataFrame, DataFrame) = {
@@ -512,7 +500,7 @@ object Ml {
   }
 
   /** Train the IVF coarse quantizer for [[ivfAssignDelta]]'s persisted
-    * index: same KMeans configuration as [[knnIvf]] (so the incremental
+    * index: same KMeans configuration as knn_ivf (so the incremental
     * path maintains the index the batch query would build), returned as
     * a (cell, centroid) frame ready to persist. */
   def ivfCentroids(corpus: DataFrame, nlist: Int = 16,

@@ -28,7 +28,7 @@ object ExtensionQueries {
   /** The part-part co-occurrence edges both triangle tiers count, on the
     * triangle session (see [[Fixtures.triangleSession]]). */
   private def triangleEdges(s: SparkSession, d: String): DataFrame =
-    itemCooc(triangleSession(s), d).select(col("p1").as("a"), col("p2").as("b"))
+    Gold.itemPairEdges(itemCooc(triangleSession(s), d))
 
   val specs: Seq[QuerySpec] = Seq(
     QuerySpec("ca_rollup", (s, d) => Serving.caRollup(fact(s, d)),

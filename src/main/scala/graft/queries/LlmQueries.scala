@@ -316,7 +316,7 @@ object LlmQueries {
       // constructor would instead derive a conf-dependent
       // optimalNumOfBits geometry (1039168/k=11 under defaults) and
       // silently diverge from this restatement — see the scaladoc on
-      // Llm.decontaminateBloom and SketchProps' geometry pin.
+      // Llm.decontaminateBloomFrom and SketchProps' geometry pin.
       Oracle(s"""
       WITH w AS (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS ws FROM documents),
       sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s

@@ -15,7 +15,7 @@ object OracleSql {
   private[graft] val ArtifactsToken = "__GRAFT_ARTIFACTS__"
 
   /** Placeholder in oracle SQL for Verify's OWN dump directory —
-    * the bounded-error oracle pattern (r16 judge item 5): for a sketch
+    * the bounded-error oracle pattern: for a sketch
     * estimator the oracle reads the query's dumped ESTIMATE, computes
     * the EXACT twin from the source tables, and echoes the estimate
     * only while |est − exact| is inside the sketch's published error
@@ -252,7 +252,7 @@ object OracleSql {
           ON d.src = s.id)"""
   }.mkString(",\n      ")
 
-  /** graft.Llm.bpeLearn's 5 greedy merge rounds unrolled for the BPE
+  /** graft.Llm.bpeLearnCore's 5 greedy merge rounds unrolled for the BPE
     * oracles. The left-to-right non-overlapping merge fold IS
     * SQL-stateable without recursion via a positional rule: an adjacent
     * (x,y) occurrence merges iff x≠y (occurrences can never overlap —
@@ -352,7 +352,7 @@ object OracleSql {
     * Spark's BloomFilter V2 bit placement (sketch module: two chained
     * `hashLong` rounds give (h1, h2), then k probes of
     * h1·(2³¹−1) + i·h2 with a complement-flip and mod-bitSize; see
-    * Llm.decontaminateBloom's scaladoc). 32-bit wrapping arithmetic in
+    * Llm.decontaminateBloomFrom's scaladoc). 32-bit wrapping arithmetic in
     * HUGEINT [0, 2^32): products are reduced mod 2^32, rotations split
     * at the rotate point, XOR hops through BIGINT (values < 2^32 are
     * sign-safe there). SketchProps pins this arithmetic against the

@@ -26,7 +26,7 @@ object SearchQueries {
     // are all (doc, word)-grain derivations, so the operator's own two
     // corpus token passes are gone (bit-identical scores)
     QuerySpec("bm25_search", (s, d) => Search.bm25From(docTf(s, d)),
-      // identical arithmetic shape to Search.bm25 (k1=1.2, b=0.75,
+      // identical arithmetic shape to Search.bm25From (k1=1.2, b=0.75,
       // idf = ln(1 + (N-df+0.5)/(df+0.5)), N/avglen over docs with tokens)
       Oracle("""
       WITH tok AS (SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS word

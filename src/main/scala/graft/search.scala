@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * counts (its text path is dedup-oriented); these are the two classic
   * relevance primitives a training-data pipeline layers on top — TF-IDF
   * for keyword/topic extraction per document, BM25 for corpus search —
-  * and both reduce to the same scale shape as [[Llm.vocabTop]]: one
+  * and both reduce to the same scale shape as [[Llm.vocabTopFrom]]: one
   * explode → token-keyed aggregation pass, everything after it grain-
   * bounded by (doc, matched term), never by corpus size.
   *
@@ -29,8 +29,8 @@ object Search {
       .filter(col("word") =!= "")
 
   /** The (doc_id, word, tf) term-frequency frame — the one corpus-sized
-    * pass every text-ranking operator starts from ([[tfidfTopTerms]],
-    * [[bm25]]'s exact shape, [[Llm.unigramLogProbFrom]]); SparkEntry
+    * pass every text-ranking operator starts from ([[tfidfTopTermsFrom]],
+    * [[bm25From]], [[Llm.unigramLogProbFrom]]); SparkEntry
     * memoizes it so the explode + aggregate runs once per session. */
   def docTermFreq(documents: DataFrame): DataFrame =
     tokens(documents).groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
@@ -46,11 +46,8 @@ object Search {
     * in a task. The df join is vocab-grain; left to AQE rather than a
     * broadcast hint because a 100 TB corpus's vocabulary is itself large
     * while the Zipf head that actually matters still fits a shuffle.
+    * Reads a [[docTermFreq]] frame; `n` is the corpus document count.
     */
-  def tfidfTopTerms(documents: DataFrame, k: Int = 3): DataFrame =
-    tfidfTopTermsFrom(docTermFreq(documents), documents.count(), k)
-
-  /** [[tfidfTopTerms]] over a prebuilt [[docTermFreq]] frame. */
   def tfidfTopTermsFrom(tf: DataFrame, n: Long, k: Int = 3): DataFrame = {
     val df = tf.groupBy("word").agg(count(lit(1)).as("df"))
     val byDoc = Window.partitionBy("doc_id").orderBy(desc("score"), col("word"))
@@ -65,29 +62,22 @@ object Search {
   /** BM25 top-k retrieval for a fixed bag of query terms (Robertson/
     * Sparck Jones idf with the standard +1 floor; k1 = 1.2, b = 0.75).
     *
-    * Scale shape: the term filter lands BEFORE the tf aggregation, so
-    * every shuffle after the doc-length pass is proportional to the
-    * POSTINGS of the query terms, not the corpus — the DataFrame
-    * equivalent of walking an inverted index. Doc lengths are a separate
-    * corpus-grain aggregate (unavoidable: BM25 normalizes by |d|); at
-    * production scale that frame is precomputed once per corpus snapshot
-    * (it is [[Llm.textStats]]' n_words column), not per query. The df
-    * frame has ≤ |query| rows and is broadcast explicitly.
+    * Scale shape: the term filter lands BEFORE any query-side
+    * aggregation, so every shuffle after the doc-length pass is
+    * proportional to the POSTINGS of the query terms, not the corpus —
+    * the DataFrame equivalent of walking an inverted index. Doc lengths
+    * are a separate corpus-grain aggregate (unavoidable: BM25 normalizes
+    * by |d|); at production scale that frame is precomputed once per
+    * corpus snapshot (it is [[Llm.textStats]]' n_words column), not per
+    * query. The df frame has ≤ |query| rows and is broadcast explicitly.
+    *
+    * Every input is derivable at the (doc, word) grain of a
+    * [[docTermFreq]] frame — doc length is the per-doc tf sum, the query
+    * postings are a filter of the tf frame, df counts its rows — so the
+    * raw token explode never runs here at all: SparkEntry feeds the
+    * session-shared tf frame, and the doc-length count and the query tf
+    * aggregation are re-aggregates of that one cached frame.
     */
-  def bm25(documents: DataFrame,
-      query: Seq[String] = Seq("spark", "shuffle", "join"),
-      k: Int = 10, k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25From(docTermFreq(documents), query, k, k1, b)
-
-  /** [[bm25]] over a prebuilt [[docTermFreq]] frame (r17): every BM25
-    * input is derivable at the (doc, word) grain — doc length is the
-    * per-doc tf sum, the query postings are a filter of the tf frame,
-    * df counts its rows — so the raw token explode never runs here at
-    * all; SparkEntry feeds the session-shared tf frame and the two
-    * corpus passes this operator used to pay (doc-length count + query
-    * tf aggregation over raw tokens) become re-aggregates of one cached
-    * frame. Scores are bit-identical: tf, len, n, and avglen are the
-    * same integers/means under either derivation. */
   def bm25From(tfAll: DataFrame,
       query: Seq[String] = Seq("spark", "shuffle", "join"),
       k: Int = 10, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
@@ -112,7 +102,7 @@ object Search {
       .limit(k)
   }
 
-  /** Characteristic vocabulary per SOURCE — [[tfidfTopTerms]] lifted one
+  /** Characteristic vocabulary per SOURCE — [[tfidfTopTermsFrom]] lifted one
     * grain up: each source's token counts act as one "document", idf
     * runs over the |sources| corpus, and the top-k terms are what makes
     * each domain's language distinctive (the mix-analysis view a

@@ -31,14 +31,10 @@ object Serving {
     * scaffold is `sequence(min, max, 1 day)` exploded from the one-row
     * bounds aggregate — generated, never collected — and the join is at
     * the serving grain (days), which stays bounded no matter how large
-    * the fact table grows. */
-  def dailyDense(fact: DataFrame): DataFrame = dailyDenseFrom(daily(fact))
-
-  /** [[dailyDense]] over a prebuilt [[daily]] frame (r17): SparkEntry
-    * shares ONE dense series across gold_daily_dense and both anomaly
-    * tiers instead of re-running the day aggregate + scaffold join per
-    * consumer. */
-  def dailyDenseFrom(d: DataFrame): DataFrame = {
+    * the fact table grows. SparkEntry shares ONE dense series across
+    * gold_daily_dense, both anomaly tiers and spend_trend. */
+  def dailyDense(fact: DataFrame): DataFrame = {
+    val d = daily(fact)
     val scaffold = d.agg(min("jour").as("lo"), max("jour").as("hi"))
       .select(explode(sequence(col("lo"), col("hi"),
         expr("interval 1 day"))).as("jour"))
@@ -47,33 +43,16 @@ object Serving {
       .orderBy("jour")
   }
 
-  /** Rolling 7-day revenue anomaly flags over the DENSE daily series
-    * (composes [[dailyDense]] — calendar alignment matters: on the
-    * sparse series a 7-ROW frame silently spans more than 7 days).
-    * Frame-spec window (rowsBetween) per day: mean and sample stddev of
-    * the 7 PRECEDING days — the current row is excluded from its own
-    * baseline, both because a spike must not contaminate the statistics
-    * it is judged against and because an inclusive trailing window caps
-    * a lone spike's z at (n−1)/√n ≈ 2.27, below any useful threshold.
-    * Like [[monthlyGrowth]], the global-order window runs
-    * single-partition BY DESIGN: the daily grain is bounded (~365
-    * rows/year) no matter how large the fact table grows — a
-    * serving-grain op, not a fact-grain one. Guards: a constant or
-    * empty baseline (sd 0 / first day) yields null z via nullif, never
-    * a division blow-up, and flags false. */
-  /** Robust twin of [[dailyAnomaly]]: global median / MAD instead of the
-    * rolling mean / stddev — a true outlier day cannot drag its own
+  /** Robust twin of [[dailyAnomalyFrom]]: global median / MAD instead of
+    * the rolling mean / stddev — a true outlier day cannot drag its own
     * baseline (breakdown point 50% vs 0%). Median and MAD are exact
     * two-phase `percentile` scalars (the A9 literal pattern — two
     * one-row driver hops over the date-grain series; the fact subtree is
     * the session-cached frame, so neither pass rescans orders). A
     * constant series has MAD 0 → null z and no flag, mirrored via
     * nullif on both engines. 1.4826·MAD is the normal-consistency
-    * sigma; 3.5 the standard robust-z cut (Iglewicz-Hoaglin). */
-  def dailyAnomalyRobust(fact: DataFrame, threshold: Double = 3.5): DataFrame =
-    dailyAnomalyRobustFrom(dailyDense(fact), threshold)
-
-  /** [[dailyAnomalyRobust]] over a prebuilt dense series. */
+    * sigma; 3.5 the standard robust-z cut (Iglewicz-Hoaglin). Reads a
+    * [[dailyDense]] series. */
   def dailyAnomalyRobustFrom(d: DataFrame, threshold: Double = 3.5): DataFrame = {
     // empty fact → NULL median; (0,0) keeps the nullif-guarded z NULL
     // over the (empty) dense series instead of throwing off getDouble
@@ -97,11 +76,7 @@ object Serving {
     * no nondeterministic float summation. Slope reported in dollars/day,
     * intercept in dollars at the epoch-day origin of the series' first
     * day (x is re-based to day 0 so the intercept is interpretable and
-    * the moments stay small). */
-  def spendTrend(fact: DataFrame): DataFrame =
-    spendTrendFrom(dailyDense(fact))
-
-  /** [[spendTrend]] over a prebuilt dense series. */
+    * the moments stay small). Reads a [[dailyDense]] series. */
   def spendTrendFrom(dense: DataFrame): DataFrame = {
     def d38(c: Column) = c.cast("decimal(38,0)")
     def dbl(c: String) = col(c).cast("double")
@@ -137,10 +112,20 @@ object Serving {
       }: _*)
   }
 
-  def dailyAnomaly(fact: DataFrame, threshold: Double = 3.0): DataFrame =
-    dailyAnomalyFrom(dailyDense(fact), threshold)
-
-  /** [[dailyAnomaly]] over a prebuilt dense series. */
+  /** Rolling 7-day revenue anomaly flags over the DENSE daily series
+    * (reads a [[dailyDense]] series — calendar alignment matters: on the
+    * sparse series a 7-ROW frame silently spans more than 7 days).
+    * Frame-spec window (rowsBetween) per day: mean and sample stddev of
+    * the 7 PRECEDING days — the current row is excluded from its own
+    * baseline, both because a spike must not contaminate the statistics
+    * it is judged against and because an inclusive trailing window caps
+    * a lone spike's z at (n−1)/√n ≈ 2.27, below any useful threshold.
+    * Like [[monthlyGrowth]], the global-order window runs
+    * single-partition BY DESIGN: the daily grain is bounded (~365
+    * rows/year) no matter how large the fact table grows — a
+    * serving-grain op, not a fact-grain one. Guards: a constant or
+    * empty baseline (sd 0 / first day) yields null z via nullif, never
+    * a division blow-up, and flags false. */
   def dailyAnomalyFrom(dense: DataFrame, threshold: Double = 3.0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.orderBy("jour").rowsBetween(-7, -1)
@@ -325,12 +310,12 @@ object Serving {
     * key cardinality approaches the row count. Gated by the
     * `kpis_approx` bounded-error oracle (5σ of `rsd`). */
   def kpisApprox(fact: DataFrame, rsd: Double = 0.01): DataFrame =
-    // r18 (VERDICT r17 item 8): DataSketches HLL in place of HLL++ at
-    // equal-or-tighter error — lgConfigK from the declared rsd via
-    // rsd ≈ 1.04/√(2^lgK) (0.01 → 14, realized ≈0.81%); o_custkey is a
-    // long, which the sketch ingests directly, and nulls are skipped
-    // exactly as approx_count_distinct skips them. The bounded-error
-    // oracle (±5σ·rsd) is unchanged and still gates the estimate.
+    // DataSketches HLL in place of HLL++ at equal-or-tighter error —
+    // lgConfigK from the declared rsd via rsd ≈ 1.04/√(2^lgK) (0.01 →
+    // 14, realized ≈0.81%); o_custkey is a long, which the sketch
+    // ingests directly, and nulls are skipped exactly as
+    // approx_count_distinct skips them. The bounded-error oracle
+    // (±5σ·rsd) gates the estimate.
     fact.agg(
       moneySum(col("o_totalprice")).as("ca_total"),
       count("o_orderkey").as("nb_achats"),
@@ -802,12 +787,7 @@ object Serving {
     * the standard dedup every bin-replicated interval join needs.
     * Bin width trades replication (long sessions × 1/width) against
     * candidate density (concurrent sessions × width); an hour suits
-    * 30-min-gap sessions. */
-  def sessionOverlaps(events: DataFrame, gapSeconds: Long = 1800,
-      k: Int = 20): DataFrame =
-    sessionOverlapsFrom(eventSessions(events, gapSeconds), k)
-
-  /** [[sessionOverlaps]] over a prebuilt [[eventSessions]] frame (r17):
+    * 30-min-gap sessions. Reads an [[eventSessions]] frame, so
     * SparkEntry shares one sessionization pass between event_sessions
     * and this interval join. */
   def sessionOverlapsFrom(sessions: DataFrame, k: Int = 20): DataFrame = {
@@ -999,7 +979,7 @@ object Serving {
   /** Rolling 7-day totals per event type with a RANGE frame over epoch
     * days — interval semantics over SPARSE dates: a day with no
     * predecessor still looks back 6 calendar days, where the rows-frame
-    * form ([[dailyAnomaly]]) would silently widen across gaps. The
+    * form ([[dailyAnomalyFrom]]) would silently widen across gaps. The
     * window runs over the daily pre-aggregate (|types|×|days| rows), so
     * the per-partition frame scan is trivially small no matter the log
     * size; counts and cents both sum exactly (long), one division on

@@ -665,9 +665,9 @@ object Streams extends Serializable {
     // same rows is naturally idempotent.)
     if (batchId >= 0) {
       val st = readManifestState(sinkDir)
-      // Upgrade guard (ADVICE r16 medium): a manifest written before the
-      // round-15→16 id-format break carries a legacy `ckpt<8-hex>` mark
-      // (32-bit hashCode; current ids are ckpt + 16-hex SHA-256 pathTag).
+      // Upgrade guard: a manifest written under the older checkpoint-id
+      // format carries a legacy `ckpt<8-hex>` mark (32-bit hashCode;
+      // current ids are ckpt + 16-hex SHA-256 pathTag).
       // Under the lineage-mismatch rule that mark can never match the new
       // id, so the first redelivered batch would silently re-merge and
       // double-count its sums. Refuse loudly instead: the sink must be

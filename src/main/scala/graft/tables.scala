@@ -201,7 +201,7 @@ object Tables {
       id
     }
 
-  /** Session-scoped memo (ADVICE r14): entries carry their owning
+  /** Session-scoped memo: entries carry their owning
     * session and every access first evicts entries whose session has
     * stopped. Session UUIDs never recur, so without eviction a long
     * multi-session JVM (the test suite, a notebook server) retains dead
@@ -235,7 +235,7 @@ object Tables {
     * created once at enclosing-object init), so the MemoAudit harness
     * can assert stopped-session eviction across ALL of them — a new
     * memo added anywhere is audited automatically, without a
-    * hand-maintained list going stale (r15 judge item 6). */
+    * hand-maintained list going stale. */
   private[graft] object SessionMemo {
     private val all =
       new java.util.concurrent.CopyOnWriteArrayList[SessionMemo[_, _]]
@@ -248,8 +248,8 @@ object Tables {
 
   /** Collision-free short tag for a path (16 hex chars of SHA-256) —
     * for sink prefixes and scratch names that must never alias across
-    * dataset dirs (ADVICE r14: a 32-bit `hashCode` collision between
-    * two dirs in one session would drop the other's memoized view). */
+    * dataset dirs (a 32-bit `hashCode` collision between two dirs in
+    * one session would drop the other's memoized view). */
   private[graft] def pathTag(path: String): String =
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(path.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString

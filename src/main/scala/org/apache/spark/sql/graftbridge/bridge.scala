@@ -78,7 +78,7 @@ object Bridge {
           df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
           Some(lr.stats), Some(lr.constraints)))
       case other =>
-        // ADVICE r16: a SILENT no-op here would let a Spark upgrade that
+        // a SILENT no-op here would let a Spark upgrade that
         // changes the checkpoint plan shape quietly drop the pin and
         // reintroduce the per-consumer re-exchange (visible only when
         // PlanShapeSpec runs). Warn loudly so a pin loss shows up in any

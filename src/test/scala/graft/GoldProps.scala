@@ -120,7 +120,8 @@ object GoldProps extends Properties("Gold") {
       val perNode = triples.flatMap(t => Seq(t._1, t._2, t._3))
         .groupBy(identity).map { case (k, xs) => k -> xs.size.toLong }
       val expected = perNode.toSeq.sortBy { case (k, n) => (-n, k) }.take(20)
-      val got = Gold.copurchaseTrianglesFrom(Gold.itemPairEdges(li)).collect()
+      val got = Gold.copurchaseTrianglesFrom(
+          Gold.itemPairEdges(Gold.itemCooccurrenceFrom(Gold.orderItems(li)))).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toSeq
       got == expected
     }

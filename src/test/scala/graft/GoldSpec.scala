@@ -31,6 +31,11 @@ class GoldSpec extends SparkSpec {
   private def custDf(rows: Seq[Row]): DataFrame =
     spark.createDataFrame(spark.sparkContext.parallelize(rows), custSchema)
 
+  /** The co-purchase edge set both triangle tiers count, built the way
+    * their registry bodies build it. */
+  private def pairEdges(lineitem: DataFrame): DataFrame =
+    Gold.itemPairEdges(Gold.itemCooccurrenceFrom(Gold.orderItems(lineitem)))
+
   test("csv source: explicit schema, header, malformed fields coerced to null") {
     val dir = java.nio.file.Files.createTempDirectory("graft_csv").toFile
     val f = new java.io.File(dir, "orders.csv")
@@ -188,7 +193,7 @@ class GoldSpec extends SparkSpec {
     }
     val f = srcDir.resolve("clients.csv")
     Files.write(f, "id;nom\n1;Ada\n2;Grace\n".getBytes("UTF-8"))
-    val m = Bronze.ingest(Seq(f.toString), bronze)
+    val m = Seq(Bronze.copyToBronze(f.toString, bronze))
     assert(m.map(_.name) == Seq("clients.csv"))
     val copied = java.nio.file.Paths.get(bronze, "clients.csv")
     assert(java.util.Arrays.equals(Files.readAllBytes(copied), Files.readAllBytes(f)))
@@ -613,7 +618,9 @@ class GoldSpec extends SparkSpec {
       (3L, 10L), (3L, 20L), (3L, 30L),
       (4L, 30L), (4L, 30L)) // duplicate line: same part twice in one order
       .toDF("l_orderkey", "l_partkey")
-    val out = Gold.basketPairs(li, minSupport = 3, k = 10)
+    val items = Gold.orderItems(li)
+    val out = Gold.basketPairsFrom(items, Gold.itemCooccurrenceFrom(items),
+        minSupport = 3, k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
     // lift(10,20) = (3/4) / ((3/4)*(3/4)) = 4/3; the (10,30)/(20,30)
     // pairs sit below minSupport and the duplicated 30-line counts once
@@ -638,7 +645,7 @@ class GoldSpec extends SparkSpec {
       Row(1L, 1L, "O", 10.0, ts("2020-01-05 00:00:00"), "p"),
       Row(2L, 1L, "O", 10.0, ts("2020-03-01 00:00:00"), "p"),  // offset 2
       Row(3L, 2L, "O", 10.0, ts("2020-01-09 00:00:00"), "p")))
-    val out = Gold.cohortRetentionPivot(orders)
+    val out = Gold.cohortRetentionPivotFrom(Gold.cohortRetention(orders))
     assert(out.columns.toSeq == "cohort" +: (0 to 12).map(i => s"m$i"))
     val row = out.collect().head
     assert(row.getString(0) == "2020-01")
@@ -654,7 +661,7 @@ class GoldSpec extends SparkSpec {
       Row(i.toLong, 1L, "O", 10.0, ts(f"2020-01-$i%02d 08:00:00"), "p")) :+
       Row(99L, 1L, "O", 500.0, ts("2020-01-16 08:00:00"), "p")
     val fact = ordersDf(rows).withColumn("jour", to_date(col("o_orderdate")))
-    val out = Serving.dailyAnomaly(fact).collect()
+    val out = Serving.dailyAnomalyFrom(Serving.dailyDense(fact)).collect()
       .map(r => r.getDate(0).toString -> r).toMap
     // constant early window: sd 0 -> z null, not flagged
     assert(out("2020-01-05").isNullAt(4) && !out("2020-01-05").getBoolean(5))
@@ -825,7 +832,7 @@ class GoldSpec extends SparkSpec {
         ts(f"2020-01-$i%02d 08:00:00"), "p")) :+
       Row(99L, 1L, "O", 500.0, ts("2020-01-15 08:00:00"), "p")
     val fact = ordersDf(rows).withColumn("jour", to_date(col("o_orderdate")))
-    val out = Serving.dailyAnomalyRobust(fact).collect()
+    val out = Serving.dailyAnomalyRobustFrom(Serving.dailyDense(fact)).collect()
       .map(r => r.getDate(0).toString -> r).toMap
     assert(out("2020-01-15").getBoolean(3))                  // spike flagged
     assert(!out("2020-01-01").getBoolean(3))                 // 10.0 day: normal
@@ -858,7 +865,7 @@ class GoldSpec extends SparkSpec {
       Row(2L, 1L, "O", 20.0, ts("2020-01-02 08:00:00"), "p"),
       Row(3L, 1L, "O", 30.0, ts("2020-01-03 08:00:00"), "p"))
     val fact = ordersDf(rows).withColumn("jour", to_date(col("o_orderdate")))
-    val r = Serving.spendTrend(fact).collect()(0)
+    val r = Serving.spendTrendFrom(Serving.dailyDense(fact)).collect()(0)
     assert(r.getLong(0) == 3L)
     assert(r.getDouble(1) == 10.0 && r.getDouble(2) == 10.0 && r.getDouble(3) == 1.0)
   }
@@ -935,7 +942,7 @@ class GoldSpec extends SparkSpec {
       // order 4 repeats edge 1-2 (must dedupe, not double-count)
       (4L, 1L), (4L, 2L))
       .toDF("l_orderkey", "l_partkey")
-    val out = Gold.copurchaseTrianglesFrom(Gold.itemPairEdges(li)).collect()
+    val out = Gold.copurchaseTrianglesFrom(pairEdges(li)).collect()
       .map(r => r.getLong(0) -> r.getLong(1))
     assert(out.toSeq == Seq(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
   }
@@ -943,7 +950,7 @@ class GoldSpec extends SparkSpec {
   test("copurchaseTrianglesApprox: invP=1 degenerates to the exact tier, bit for bit") {
     // p=1 keeps every edge and scales by 1 — the sampled tier must then
     // BE the exact tier (proves the two share one counting core)
-    val e = Gold.itemPairEdges(Tables.lineitem(spark, sf))
+    val e = pairEdges(Tables.lineitem(spark, sf))
     val exact = Gold.copurchaseTrianglesFrom(e).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     val p1 = Gold.copurchaseTrianglesApprox(e, invP = 1).collect()
@@ -952,7 +959,7 @@ class GoldSpec extends SparkSpec {
   }
 
   test("copurchaseTrianglesApprox: global estimate within the error floor; deterministic under repartition") {
-    val e = Gold.itemPairEdges(Tables.lineitem(spark, sf))
+    val e = pairEdges(Tables.lineitem(spark, sf))
     val exactTot = Gold.triangleCounts(e)
       .agg(sum("n_triangles")).head().getLong(0)
     val estTot = Gold.triangleCounts(e.filter(

@@ -69,7 +69,8 @@ class GraphSpec extends SparkSpec {
 
   test("dedupClusters: every doc labeled, representatives are members, sizes consistent") {
     val docs = Tables.documents(spark, sf)
-    val out = Llm.dedupClusters(docs).cache()
+    val pairs = Llm.jaccardFromStats(Llm.ngramPairStatsFrom(Llm.shingleHashes(docs)))
+    val out = Llm.dedupClustersFrom(docs, pairs).cache()
     assert(out.count() == docs.count())
     // cluster_id is always a member of its own cluster
     assert(out.filter(col("doc_id") === col("cluster_id")).count() ==

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Semantics of the LLM-pipeline extension operators on literal docs. */
@@ -11,6 +12,18 @@ class LlmSpec extends SparkSpec {
       .withColumn("lang", lit("en"))
       .withColumn("source", lit("test"))
       .withColumn("n_chars", length(col("text")).cast("long"))
+
+  /** The exact 3-gram Jaccard pair frame dedup_ngram's body reads. */
+  private def jaccardPairs(d: DataFrame, hotDf: Int = 256, salts: Int = 32) =
+    Llm.jaccardFromStats(Llm.ngramPairStatsFrom(Llm.shingleHashes(d), hotDf, salts))
+
+  /** The built-in HOF composition of cosine similarity — the reference
+    * the fused CosineSimilarity expression must match bit for bit. */
+  private def cosineHof(a: Column, b: Column): Column = {
+    def dot(x: Column, y: Column): Column =
+      aggregate(zip_with(x, y, (p, q) => p * q), lit(0.0), (acc, v) => acc + v)
+    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
+  }
 
   test("repetitionScore: looping text scores high, unique text zero, short text empty") {
     val out = Llm.repetitionScore(docs(
@@ -32,7 +45,12 @@ class LlmSpec extends SparkSpec {
       500L -> "the quick brown fox jumps over the lazy dog today", // exact dup of 1
       501L -> "the quick brown fox jumps over the lazy dog tonight", // near dup of 1
       502L -> "fresh new document with no overlap at all whatsoever")
-    val out = Llm.dedupIncremental(corpus, oldDocs = 400L)
+    // the two corpus-half index frames, built as Fixtures.dedupIndex
+    // writes them for dedup_incremental
+    val exactIdx = corpus.filter(col("doc_id") < 400L)
+      .select(sha2(col("text"), 256).as("h"))
+    val shingleIdx = Llm.shingleHashes(corpus).filter(col("doc_id") < 400L)
+    val out = Llm.dedupIncrementalIndexed(corpus, exactIdx, shingleIdx, 400L)
       .collect().map(r => r.getLong(0) -> (r.getBoolean(1), r.getLong(2))).toMap
     assert(out.keySet == Set(500L, 501L, 502L)) // only the delta is emitted
     assert(out(500L) == ((true, 1L)))
@@ -92,7 +110,7 @@ class LlmSpec extends SparkSpec {
       (1L, "a b c d e f"),
       (2L, "a b c d e f"),
       (3L, "a b c x y z"))
-    val out = Llm.dedupNgram(d).orderBy("doc_id").collect()
+    val out = Llm.bestNgramMatch(jaccardPairs(d)).orderBy("doc_id").collect()
     val best1 = out.find(_.getLong(0) == 1L).get
     assert(best1.getAs[Long]("best_match") == 2L)
     assert(best1.getAs[Double]("jaccard") == 1.0)
@@ -154,8 +172,9 @@ class LlmSpec extends SparkSpec {
       (3L, "a b c q r s t"),
       (4L, "m n o p a b c"),
       (5L, "entirely unrelated words appear here only"))
-    val plain = Llm.dedupNgram(d).collect().map(_.toString).toSeq
-    val forced = Llm.dedupNgram(d, hotDf = 1, salts = 4).collect().map(_.toString).toSeq
+    val plain = Llm.bestNgramMatch(jaccardPairs(d)).collect().map(_.toString).toSeq
+    val forced = Llm.bestNgramMatch(jaccardPairs(d, hotDf = 1, salts = 4))
+      .collect().map(_.toString).toSeq
     assert(plain.nonEmpty && plain == forced)
   }
 
@@ -244,7 +263,7 @@ class LlmSpec extends SparkSpec {
     import spark.implicits._
     // n(a)=3, n(b)=1, N=4
     val d = Seq((0L, "a a b"), (1L, "a")).toDF("doc_id", "text")
-    val out = Llm.unigramLogProb(d).collect()
+    val out = Llm.unigramLogProbFrom(Search.docTermFreq(d)).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[Long]("n_tokens"), r.getAs[Double]("avg_logprob"))).toMap
     def s(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -261,14 +280,15 @@ class LlmSpec extends SparkSpec {
       (1L, "a b c a b c a b c a b c a b c"),         // repetitive
       (2L, "zz yy ww vv uu tt"))                     // rare vocabulary
       .toDF("doc_id", "text")
-    val lp = Llm.unigramLogProb(docs)
+    val lp = Llm.unigramLogProbFrom(Search.docTermFreq(docs))
     def vals(df: org.apache.spark.sql.DataFrame, c: String) =
       df.collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Double](c)).toMap
     val q = vals(Llm.textStats(docs).select($"doc_id", $"quality_score"), "quality_score")
     val rep = vals(Llm.repetitionScore(docs).select($"doc_id", $"repeat_frac"), "repeat_frac")
     val l = vals(lp, "avg_logprob")
     def reasons(minQ: Double, maxR: Double, minL: Double) =
-      Llm.corpusFilter(docs, lp, minQ, maxR, minL).collect()
+      Llm.corpusFilterFrom(Llm.textStats(docs), Llm.repetitionScore(docs), lp,
+        minQ, maxR, minL).collect()
         .map(r => r.getAs[Long]("doc_id") ->
           (r.getAs[String]("reason"), r.getAs[Long]("keep"))).toMap
     // thresholds calibrated from the measured values so each rule fires
@@ -311,7 +331,7 @@ class LlmSpec extends SparkSpec {
     val paired = e.as("a").crossJoin(e.as("b"))
       .filter(col("a.vec_id") < col("b.vec_id")).limit(2000)
       .select(cosine_sim(col("a.emb"), col("b.emb")).as("native"),
-        Llm.cosineHof(col("a.emb"), col("b.emb")).as("hof"))
+        cosineHof(col("a.emb"), col("b.emb")).as("hof"))
     assert(paired.filter(col("native") =!= col("hof")).count() == 0L)
     // and through the SQL/codegen path end-to-end
     val r = paired.agg(min("native"), max("native")).first()
@@ -320,7 +340,7 @@ class LlmSpec extends SparkSpec {
     // poisons the HOF aggregate; the native expression mirrors it)
     val mm = Seq((Array(1.0, 2.0), Array(1.0, 2.0, 3.0))).toDF("a", "b")
       .select(cosine_sim(col("a"), col("b")).as("native"),
-        Llm.cosineHof(col("a"), col("b")).as("hof")).first()
+        cosineHof(col("a"), col("b")).as("hof")).first()
     assert(mm.isNullAt(0) && mm.isNullAt(1))
   }
 
@@ -361,7 +381,7 @@ class LlmSpec extends SparkSpec {
       (1L, "alpha beta gamma delta"), // benchmark (doc_id < 10)
       (11L, "something alpha beta gamma tail"), // shares 'alpha beta gamma'
       (12L, "totally unrelated words here now"))
-    val out = Llm.decontaminate(d).collect()
+    val out = Llm.decontaminateFrom(d, Llm.decontamHashes(d)).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[Long]("n_contaminated"), r.getAs[Boolean]("is_contaminated"))).toMap
     assert(out(11L)._1 >= 1L && out(11L)._2)
@@ -371,9 +391,10 @@ class LlmSpec extends SparkSpec {
 
   test("decontaminateBloom: never misses an exact flag, over-flags within the fpp budget") {
     val d = Tables.documents(spark, sf)
-    val exact = Llm.decontaminate(d).filter(col("is_contaminated"))
+    val ex = Llm.decontamHashes(d)
+    val exact = Llm.decontaminateFrom(d, ex).filter(col("is_contaminated"))
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    val bloom = Llm.decontaminateBloom(d).collect()
+    val bloom = Llm.decontaminateBloomFrom(d, ex).collect()
     val flagged = bloom.filter(_.getAs[Boolean]("is_flagged"))
       .map(_.getAs[Long]("doc_id")).toSet
     // a bloom filter has no false negatives: every exactly-contaminated
@@ -570,8 +591,10 @@ class LlmSpec extends SparkSpec {
       val noise = (0 until 5).flatMap(j => Seq.fill(2)(s"n${5 * i + j}"))
       i -> new scala.util.Random(i).shuffle(wanted ++ noise).mkString(" ")
     }: _*)
-    val exact = Llm.vocabTop(d, k = 10).collect().map(_.mkString("|")).toSeq
-    val approx = Llm.vocabTopApprox(d, k = 10, m = 12).collect().map(_.mkString("|")).toSeq
+    val tf = Search.docTermFreq(d)
+    val exact = Llm.vocabTopFrom(tf, k = 10).collect().map(_.mkString("|")).toSeq
+    val approx = Llm.vocabTopApproxFrom(d, tf, k = 10, m = 12)
+      .collect().map(_.mkString("|")).toSeq
     assert(exact.size == 10 && approx == exact, s"approx=$approx\nexact=$exact")
   }
 
@@ -594,7 +617,7 @@ class LlmSpec extends SparkSpec {
     //   wait: round-2 rewrite merges the (a,b) tail: [aa,ab]; ab→[ab]
     // round 3 pairs: (aa,ab)×3 → merge, n=3
     val tf = Seq((1L, "aaab", 3L), (2L, "ab", 2L)).toDF("doc_id", "word", "tf")
-    val out = Llm.bpeLearn(tf, rounds = 4).collect()
+    val out = Llm.bpeLearnCore(tf, rounds = 4)._1.collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
     assert(out.toSeq == Seq(
       (1, "a", "a", 6L), (2, "a", "b", 5L), (3, "aa", "ab", 3L)))
@@ -607,11 +630,11 @@ class LlmSpec extends SparkSpec {
     // same corpus as bpeLearn's test; after 2 rounds ((a,a) then (a,b)):
     //   aaab -> [aa, ab] ×3 ; ab -> [ab] ×2  ⇒ ab 5, aa 3
     val tf = Seq((1L, "aaab", 3L), (2L, "ab", 2L)).toDF("doc_id", "word", "tf")
-    val two = Llm.bpeTokenize(tf, rounds = 2).collect()
+    val two = Llm.bpeTokenizeFrom(Llm.bpeLearnCore(tf, rounds = 2)._2).collect()
       .map(r => r.getString(0) -> r.getLong(1))
     assert(two.toSeq == Seq("ab" -> 5L, "aa" -> 3L))
     // all 3 rounds: aaab -> [aaab] ×3 ; ab -> [ab] ×2
-    val three = Llm.bpeTokenize(tf, rounds = 3).collect()
+    val three = Llm.bpeTokenizeFrom(Llm.bpeLearnCore(tf, rounds = 3)._2).collect()
       .map(r => r.getString(0) -> r.getLong(1))
     assert(three.toSeq == Seq("aaab" -> 3L, "ab" -> 2L))
   }

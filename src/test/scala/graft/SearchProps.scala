@@ -48,7 +48,8 @@ object SearchProps extends Properties("Search") {
         rows.sortBy(r => (-r._5, r._2)).take(3).zipWithIndex
           .map { case (r, i) => (id, (i + 1).toLong, r._2, r._3, r._4, r._5) }
       }.toSet
-      val got = Search.tfidfTopTerms(corpus.toDF("doc_id", "text")).collect()
+      val d = corpus.toDF("doc_id", "text")
+      val got = Search.tfidfTopTermsFrom(Search.docTermFreq(d), d.count()).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3),
           r.getLong(4), r.getDouble(5))).toSet
       got == expected
@@ -100,7 +101,8 @@ object SearchProps extends Properties("Search") {
         else Some((id, ws.size.toLong,
           round6(ws.map(w => math.log(uni(w).toDouble) - math.log(total)).sum / ws.size)))
       }.toSet
-      val got = Llm.unigramLogProb(corpus.toDF("doc_id", "text")).collect()
+      val got = Llm.unigramLogProbFrom(Search.docTermFreq(corpus.toDF("doc_id", "text")))
+        .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       got == expected
     }

@@ -16,7 +16,7 @@ class SearchSpec extends SparkSpec {
 
   test("tfidfTopTerms: exact tf*ln(N/df) scores, score-desc/word-asc ranking") {
     val d = docs((0L, "a a b"), (1L, "a c"), (2L, "c c c d"))
-    val out = Search.tfidfTopTerms(d).collect()
+    val out = Search.tfidfTopTermsFrom(Search.docTermFreq(d), d.count()).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("rk")) ->
         (r.getAs[String]("word"), r.getAs[Long]("tf"), r.getAs[Long]("df"),
           r.getAs[Double]("score"))).toMap
@@ -34,13 +34,13 @@ class SearchSpec extends SparkSpec {
 
   test("tfidfTopTerms: k caps each document's terms") {
     val d = docs((0L, "a b c d e f"))
-    assert(Search.tfidfTopTerms(d, k = 2).count() == 2)
+    assert(Search.tfidfTopTermsFrom(Search.docTermFreq(d), d.count(), k = 2).count() == 2)
   }
 
   test("bm25: exact one-term scores, length normalization orders docs") {
     // df(q)=2 of N=3, avglen=(3+6+3)/3=4; idf = ln(1 + 1.5/2.5)
     val d = docs((0L, "q q q"), (1L, "q z z z z z"), (2L, "z z z"))
-    val out = Search.bm25(d, query = Seq("q")).collect()
+    val out = Search.bm25From(Search.docTermFreq(d), query = Seq("q")).collect()
     assert(out.map(_.getAs[Long]("doc_id")).toSeq == Seq(0L, 1L)) // doc 2 never matches
     val idf = math.log(1.0 + (3.0 - 2 + 0.5) / (2 + 0.5))
     def expected(tf: Long, len: Long) =
@@ -55,7 +55,7 @@ class SearchSpec extends SparkSpec {
 
   test("bm25: same tf, shorter document wins") {
     val d = docs((0L, "q a"), (1L, "q a a a a a a a"))
-    val out = Search.bm25(d, query = Seq("q")).collect()
+    val out = Search.bm25From(Search.docTermFreq(d), query = Seq("q")).collect()
     assert(out.head.getAs[Long]("doc_id") == 0L)
   }
 
@@ -180,7 +180,7 @@ class SearchSpec extends SparkSpec {
       (15L, 4L, "2024-01-01 12:00:00", "view"),
       (16L, 4L, "2024-01-01 12:30:00", "view"))
       .withColumn("value", lit(1.0))
-    val out = Serving.sessionOverlaps(e).collect()
+    val out = Serving.sessionOverlapsFrom(Serving.eventSessions(e)).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getAs[Long]("n_overlaps"))
     // every qualifying pair exactly once — the multi-bin (1,4) and (2,4)
     // candidates must collapse; (3, anyone-but-1B) must not appear

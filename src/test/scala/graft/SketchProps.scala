@@ -179,7 +179,7 @@ object SketchProps extends Properties("Sketches") {
     Prop.forAll(Gen.nonEmptyListOf(Gen.long), Gen.listOfN(64, Gen.long)) {
       (items, probes) =>
         // Build the buffer through the exact production path
-        // (Llm.decontaminateBloom's 3-arg constructor), not through
+        // (Llm.decontaminateBloomFrom's 3-arg constructor), not through
         // BloomFilter.create directly — this is what guards the oracle's
         // hardcoded geometry against a constructor/conf change.
         import org.apache.spark.sql.catalyst.expressions.Literal

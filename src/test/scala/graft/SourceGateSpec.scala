@@ -138,6 +138,35 @@ class SourceGateSpec extends AnyFunSuite {
       s"session conf written outside a Shared.clone setup:\n${offenders.mkString("\n")}")
   }
 
+  /** `Obj.x` for every top-level object in `text` that defines both `x`
+    * and `xFrom`. */
+  private def wrapperPairs(text: String): Seq[String] = {
+    val obj = """(?m)^(?:private\[\w+\]\s+)?object\s+(\w+)""".r
+    val defn = """\bdef\s+(\w+)""".r
+    val starts = obj.findAllMatchIn(text).toSeq
+    starts.zipWithIndex.flatMap { case (m, i) =>
+      val end = if (i + 1 < starts.size) starts(i + 1).start else text.length
+      val defs = defn.findAllMatchIn(text.substring(m.start, end)).map(_.group(1)).toSet
+      defs.filter(x => defs(x + "From")).toSeq.sorted.map(x => s"${m.group(1)}.$x")
+    }
+  }
+
+  test("no object in src/main defines both x and xFrom") {
+    // the registry runs the *From form over its shared frames; a second
+    // entry point that rebuilds the same chain from raw input is a form
+    // that neither Bench nor Verify runs, so only tests would check it
+    assert(wrapperPairs(
+      "object A {\n  def f(d: D) = fFrom(g(d))\n  def fFrom(x: D) = x\n}\n" +
+        "object B {\n  def h = 1\n}\nobject C {\n  def hFrom = 1\n}") == Seq("A.f"))
+    assert(wrapperPairs("private[graft] object A {\n  def kFrom = 1\n}").isEmpty)
+    val offenders = mainSources.flatMap { p =>
+      wrapperPairs(code(p)).map(x => s"${p.getFileName}: $x / ${x}From")
+    }
+    assert(offenders.isEmpty,
+      "call the registry's *From form instead of keeping a raw-input twin:\n" +
+        offenders.mkString("\n"))
+  }
+
   test("percentile-array folds go through the shared decode helper") {
     // every file that builds a percentile(..., array(...)) driver fold
     // must reference doubleSeqAt or getSeq — not ad-hoc casts

@@ -585,7 +585,8 @@ class StreamsSpec extends SparkSpec {
     // the temporal label actually splits at test scale
     assert(rows.map(_.getAs[Long]("label")).distinct.sorted.toSeq == Seq(0L, 1L))
     // same session + data => bit-identical refit (same gate as kmeans)
-    val b = Ml.propensityModel(Tables.orders(spark, sf), Tables.lineitem(spark, sf)).collect()
+    val b = Ml.propensityBacktest(Tables.orders(spark, sf), Tables.lineitem(spark, sf))._1
+      .collect()
     assert(rows.map(_.toString).toSeq == b.map(_.toString).toSeq)
     // the backtest gates HONESTY, not accuracy: the synthetic generator
     // assigns orders to customers uniformly, so past behavior carries no
@@ -920,8 +921,8 @@ class StreamsSpec extends SparkSpec {
 
   test("knn_ivf: probes return ranked neighbors from probed cells; deterministic per session") {
     val e = Tables.embeddings(spark, sf)
-    val a = Ml.knnIvf(e).collect()
-    val b = Ml.knnIvf(e).collect()
+    val a = Ml.knnIvfFrom(e, Ml.ivfCentroids(e)).collect()
+    val b = Ml.knnIvfFrom(e, Ml.ivfCentroids(e)).collect()
     assert(a.nonEmpty)
     assert(a.forall(_.getAs[Long]("rank") <= 5L))
     assert(a.map(_.toString).toSeq == b.map(_.toString).toSeq)

@@ -98,7 +98,8 @@ class TpchDriftSpec extends SparkSpec {
   }
 
   test("typo_clusters: every candidate edge lands in one cluster, rep is the min member") {
-    val clusters = Llm.typoClusters(Tables.part(spark, sf), "p_name").collect()
+    val clusters = Llm.typoClustersFrom(Llm.typoPairs(Tables.part(spark, sf), "p_name"))
+      .collect()
     val rep = clusters.map(r => r.getString(0) -> r.getString(1)).toMap
     assert(rep.nonEmpty)
     // edges from the same candidate generator must connect same-cluster words
