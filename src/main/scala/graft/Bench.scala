@@ -100,8 +100,8 @@ object Bench {
     // the clock) and rebuild + noop-materialize each registered shared
     // frame UNDER THE CLOCK — the total now carries a visible
     // `shared_build` line item, per-query numbers stay the honest
-    // incremental (shared-frames-warm) cost, and per-query cross-round
-    // comparability with r17 is preserved. Released entries built inside
+    // incremental (shared-frames-warm) cost, comparable with records
+    // that left the shared builds untimed. Released entries built inside
     // query bodies (ML fits, CacheOnce frames) are not in the registry;
     // releasing them here charges their rebuild to their first pass-1
     // consumer, which the `pass1` map in BENCH_FULL.json records next to
@@ -141,7 +141,7 @@ object Bench {
         }
     }.toSeq
 
-    // total = Σ per-query min + the shared_build bill (r18): the
+    // total = Σ per-query min + the shared_build bill: the
     // suite total now charges the memoized frames' build cost instead
     // of amortizing it into the untimed warmup
     val total = results.collect { case (_, v, None, _) => v }.sum + sharedBuildSec
@@ -183,7 +183,7 @@ object Bench {
       // probe run can never masquerade as a default-config record in
       // cross-round comparisons
       val conf = s"""{"cpus":${jsonString(cpus)},"minPartitionSize":${jsonString(EntryPoint.MinPartitionSize)},"queryFilter":${only.map(f => jsonString(f.toSeq.sorted.mkString(","))).getOrElse("null")}}"""
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$q,"spread":$sp,"shared_build":$sbJson,"pass1":$p1Json,"errors":$errJson,"cache_mb":${math.round(cacheMb * 10) / 10.0},"conf":$conf,"timing":"noop-materialize min-of-3 + timed shared_build of the released memo frames; spread = max-min over the 3 timed passes; pass1 = cold-CacheOnce first pass (r1-r6 were min-of-2 or single-pass; r7-r17 left shared builds untimed in warmup)","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$q,"spread":$sp,"shared_build":$sbJson,"pass1":$p1Json,"errors":$errJson,"cache_mb":${math.round(cacheMb * 10) / 10.0},"conf":$conf,"timing":"noop-materialize min-of-3 + timed shared_build of the released memo frames; spread = max-min over the 3 timed passes; pass1 = cold-CacheOnce first pass","sf":"$sfDir"}"""
     }
     // best-effort: a read-only/odd cwd must not kill the run after the
     // queries already completed — the stdout line below is the record

@@ -70,8 +70,8 @@ object GenScale {
     // streaming file source selects leaves via
     // `pathGlobFilter=events.parquet`, so a DIRECTORY named
     // events.parquet would silently contribute zero files and every
-    // streaming query would drain an empty stream (caught by the r15
-    // soak's impossible <1 ratios). Write via coalesce(1) into a
+    // streaming query would drain an empty stream (a scale soak caught
+    // it by its impossible <1 ratios). Write via coalesce(1) into a
     // scratch dir, then move the part file to `<out>/<table>.parquet`.
     def writeSingle(df: DataFrame, table: String): Unit = {
       val tmp = java.nio.file.Files.createTempDirectory(s"genscale_$table")

@@ -147,15 +147,15 @@ object SparkEntry {
     memoFrame("docTf", s, d)(Search.docTermFreq(Tables.documents(s, d)))
   /** The unigram-LM quality frame doc_logprob serves and corpus_filter
     * joins — one vocab re-aggregate + postings join per session instead
-    * of one per consumer (r17). */
+    * of one per consumer. */
   private[graft] def docLogProb(s: SparkSession, d: String): DataFrame =
     memoFrame("docLogProb", s, d)(Llm.unigramLogProbFrom(docTf(s, d)))
   /** The gap-filled daily revenue series four serving queries reshape
-    * (dense, both anomaly tiers, spend_trend) — day-grain, bounded (r17). */
+    * (dense, both anomaly tiers, spend_trend) — day-grain, bounded. */
   private[graft] def dailyDenseF(s: SparkSession, d: String): DataFrame =
     memoFrame("dailyDense", s, d)(Serving.dailyDense(fact(s, d)))
   /** The cohort-retention triangle its pivot and melt reshape —
-    * (cohort, offset)-grain, bounded (r17). */
+    * (cohort, offset)-grain, bounded. */
   private[graft] def cohortRet(s: SparkSession, d: String): DataFrame =
     memoFrame("cohortRet", s, d)(Gold.cohortRetention(Tables.orders(s, d)))
   /** The shingle token-hash frame both decontamination tiers scan — one
@@ -170,12 +170,12 @@ object SparkEntry {
     memoFrame("decontamEx", s, d)(Llm.decontamHashes(Tables.documents(s, d)))
   /** The batch sessionization frame event_sessions serves and
     * session_overlaps interval-joins — one two-window pass per
-    * session (r17). */
+    * session. */
   private[graft] def eventSessionsF(s: SparkSession, d: String): DataFrame =
     memoFrame("eventSessions", s, d)(Serving.eventSessions(Tables.events(s, d)))
   /** The edit-distance-1 candidate pairs typo_pairs serves and
     * typo_clusters closes transitively — one deletion-neighborhood
-    * join + levenshtein verify per session (r17). */
+    * join + levenshtein verify per session. */
   private[graft] def typoPairsF(s: SparkSession, d: String): DataFrame =
     memoFrame("typoPairs", s, d)(Llm.typoPairs(Tables.part(s, d), "p_name"))
 

@@ -714,7 +714,7 @@ object Gold {
   def customerOverlapMatrix(orders: DataFrame): DataFrame = {
     // CacheOnce: yc feeds the per-year totals and BOTH sides of the
     // customer-key self-join — without the cache the scan + distinct
-    // shuffle run three times (r17, same move as customerChurnMonthly)
+    // shuffle run three times (same move as customerChurnMonthly)
     val yc = CacheOnce(validOrders(orders)
       .select(col("o_custkey"), year(col("o_orderdate")).as("yr"))
       .distinct())
@@ -826,7 +826,7 @@ object Gold {
         sum(d38(col("z"))).as("sz"),
         // products in DECIMAL, not long: y is per-client cents — a
         // whale client's y² passes Long.Max (the spend_trend overflow
-        // class, caught at sf1 by the r16 scale soak); x/z are small
+        // class, caught at sf1 by a scale soak); x/z are small
         // but kept uniform
         sum(d38(col("x")) * d38(col("x"))).as("sxx"),
         sum(d38(col("y")) * d38(col("y"))).as("syy"),
@@ -1088,7 +1088,7 @@ object Gold {
       .agg(sum("win").as("a"),
         // d is a per-COMMUNITY weighted degree (can approach 2|E|), so
         // the square multiplies in decimal — the spend_trend long-
-        // overflow class caught by the r16 scale soak
+        // overflow class caught by a scale soak at sf1
         sum(col("d").cast("decimal(38,0)") *
           col("d").cast("decimal(38,0)")).as("b"),
         sum("d").as("d2")) // Σ_c d_c = 2m exactly (each edge adds w twice)
@@ -1504,7 +1504,7 @@ object Gold {
   def supplierHhi(lineitem: DataFrame): DataFrame = {
     // group on an INT month index at the line grain — date_format is a
     // per-row formatter allocation and the string widens the shuffle key
-    // (r17, guide §2.3 narrower types); the yyyy-MM string is rebuilt
+    // (narrower shuffle key types); the yyyy-MM string is rebuilt
     // AFTER the month-grain aggregate (≤ tens of rows), where the two
     // renderings are equal for every real date (zero-padded %04d-%02d)
     val bySupp = lineitem

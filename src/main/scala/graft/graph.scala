@@ -63,7 +63,7 @@ object Graph {
   /** (count, order-independent hash fold) of the edge set — one action.
     * XOR, not sum: ANSI mode would overflow a long sum, and the edge set
     * is distinct so XOR cancellation can't hide a difference of pairs.
-    * This probe doubles as the round's MATERIALIZING action (r18 job
+    * This probe doubles as the round's MATERIALIZING action (job
     * fusion): the per-round frames are checkpointed LAZILY, so the
     * checksum job both computes-and-persists the round and reads the
     * convergence scalar — one job per round, not checkpoint + probe. */
@@ -88,7 +88,7 @@ object Graph {
     * DuckDB's default binary collation, which is what lets a string-keyed
     * component map hash-match a recursive-CTE oracle). */
   def connectedComponentsBy(edges: DataFrame, maxIter: Int = 30): DataFrame = {
-    // lazy checkpoints throughout (r18): the RDD is persisted and the
+    // lazy checkpoints throughout: the RDD is persisted and the
     // lineage severed at declaration, but the materializing job is the
     // checksum probe the loop must run anyway — fusing what used to be
     // an eager-checkpoint job + a probe job into one job per round.
@@ -226,7 +226,7 @@ object Graph {
           (lit((1 - damping) / n) +
             lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank"))
       roundProbe(next)
-      // lazy checkpoint (r18): the round's materializing job is the NEXT
+      // lazy checkpoint: the round's materializing job is the NEXT
       // round's broadcast build (or the consumer's action after the last
       // round) — what used to be an eager-checkpoint job + a broadcast
       // collect per round is now one job. In the broadcast regime the
@@ -273,7 +273,7 @@ object Graph {
     // construction), and letting AQE coalesce those tiny exchanges
     // beats a declared fixed-N layout (measured +77% wall at sf0.1 when
     // the pin forced 32-partition granularity onto every round's
-    // frontier frames, r16)
+    // frontier frames)
     val eB = edges
       .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
       .repartition(col("b"))
@@ -299,7 +299,7 @@ object Graph {
       // the broadcast gate) while distinct is the round's one shuffle —
       // in late rounds most neighbors are already visited, so filtering
       // first shrinks the shuffle to the genuinely-new nodes
-      // lazy checkpoint + count (r18 job fusion): the termination probe
+      // lazy checkpoint + count (job fusion): the termination probe
       // IS the materializing job — one job per level instead of an
       // eager-checkpoint job plus a count job
       val next = e.join(fr, e("a") === fr("node"))
@@ -311,7 +311,7 @@ object Graph {
       val n = next.count()
       if (n == 0) done = true
       else {
-        // no re-checkpoint of the accumulated distance set (r18): each
+        // no re-checkpoint of the accumulated distance set: each
         // level is already a checkpointed RDD, so the union is a flat
         // ≤ maxDepth-leaf scan of persisted blocks — re-materializing it
         // per level copied O(|dist|) rows per round for nothing (the
@@ -346,7 +346,7 @@ object Graph {
       // severs its lineage — PlanShapeSpec pins the broadcast-regime
       // round plan (zero exchanges) against regression, same as pageRank
       roundProbe: DataFrame => Unit = _ => ()): DataFrame = {
-    // r18: same two-regime discipline as pageRank. Below the 4M-node
+    // Same two-regime discipline as pageRank. Below the 4M-node
     // gate the |V|-row label frame is BROADCAST each round, so with the
     // edge list pinned hash(src) the whole round is exchange-free: the
     // map-side label join preserves the hash(src) layout, which
@@ -355,9 +355,10 @@ object Graph {
     // the old shape paid a full 2|E| aggregation exchange every round.
     // Past the gate, the label frame rides the shuffle join instead and
     // the edges are pinned hash(dst) so only the |V|-row side is ever
-    // exchanged (the pre-r18 shape). One free-ish driver scalar (|V| —
-    // the count doubles as the label frame's materializing action)
-    // decides the regime, exactly like pageRank's rank-vector gate.
+    // exchanged (the shape used at every size before the gate). One
+    // free-ish driver scalar (|V| — the count doubles as the label
+    // frame's materializing action) decides the regime, exactly like
+    // pageRank's rank-vector gate.
     val nPart = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val symRaw = edges
       .select(col("a").as("src"), col("b").as("dst"), col("w"))
@@ -371,7 +372,7 @@ object Graph {
       symRaw.repartition(nPart, col(symKey)).localCheckpoint(),
       Seq(symKey), nPart)
     for (_ <- 1 to rounds) {
-      // lazy checkpoints (r18): the round's RDD persists as the next
+      // lazy checkpoints: the round's RDD persists as the next
       // round's broadcast build (or the final consumer) computes through
       // it — no eager materialization job per round
       val lb = if (broadcastLabels) broadcast(labels) else labels
@@ -402,7 +403,7 @@ object Graph {
     * [[connectedComponents]]. Output: surviving nodes with their degree
     * inside the core. */
   def kCore(edges: DataFrame, k: Int = 3, maxRounds: Int = 16): DataFrame = {
-    // lazy checkpoints (r18 job fusion): the per-round count — already
+    // lazy checkpoints (job fusion): the per-round count — already
     // the convergence probe — doubles as the materializing job, fusing
     // the former eager-checkpoint job into it (one job per peel round)
     var e = edges

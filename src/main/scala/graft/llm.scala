@@ -340,8 +340,8 @@ object Llm {
     // CacheOnce: the prefix frame feeds BOTH sides of the candidate
     // self-join, and exchange reuse cannot unify them (the window/filter
     // output is not an exchange boundary) — without the cache the df
-    // aggregation + rarity window run twice (r17 plan: two identical
-    // Exchange→Window subtrees)
+    // aggregation + rarity window run twice (the plan held two
+    // identical Exchange→Window subtrees)
     val prefix = CacheOnce(shingleH.join(dfCounts, "h")
       .withColumn("pos", row_number().over(byRarity))
       .filter(col("pos") <=
@@ -910,7 +910,7 @@ object Llm {
         col("word").substr(i + 1, length(col("word")))))
     // CacheOnce: both sides of the candidate self-join consume the
     // variant frame — without the cache the vocab distinct + deletion
-    // explode run twice (r17)
+    // explode run twice
     val variants = CacheOnce(vocab.select(col("word"),
       explode(array_union(array(col("word")), dels)).as("v")))
     variants.as("a").join(variants.as("b"),

@@ -95,29 +95,23 @@ object Ml {
   /** PCA over the embedding corpus (spark.ml, k components): the
     * decomposition next to [[labelCentroids]]' means — explained
     * variance ratios per component plus each component's top-loading
-    * dimension. The fit is one covariance treeAggregate (a DIM×DIM
-    * matrix per partition, merged associatively — constant-size partials
-    * at any corpus scale) and an in-driver eigendecomposition of the
-    * tiny DIM×DIM result; projection would be a broadcast matrix
-    * multiply, never a shuffle. Outputs are SIGN-FREE (variance ratios,
-    * |loading| argmax) because eigenvector sign is arbitrary; gated
-    * rows-only (iterative/float linear algebra is not oracle-stable in
-    * the last ulps) + a StreamsSpec determinism/ordering gate. */
-  def embeddingPca(embeddings: DataFrame, k: Int = 2): DataFrame =
-    embeddingPcaFit(embeddings, k)._1
-
-  /** [[embeddingPca]] plus the fitted SIGNED component vectors
-    * ((component 1-based, loading array over dims) — the persisted-
-    * artifact form): the caller persists the
-    * components next to the IVF centroids and the DuckDB oracle
-    * restates from them (a) pairwise orthonormality, (b) each
-    * component's explained-variance ratio as the VARIANCE OF THE
-    * PROJECTION over the source embeddings divided by the total
+    * dimension — and the fitted SIGNED component vectors ((component
+    * 1-based, loading array over dims), the persisted-artifact form).
+    * The fit is one covariance treeAggregate (a DIM×DIM matrix per
+    * partition, merged associatively — constant-size partials at any
+    * corpus scale) and an in-driver eigendecomposition of the tiny
+    * DIM×DIM result; projection would be a broadcast matrix multiply,
+    * never a shuffle. The published outputs are SIGN-FREE (variance
+    * ratios, |loading| argmax) because eigenvector sign is arbitrary.
+    * The caller persists the components next to the IVF centroids and
+    * the DuckDB oracle restates from them (a) pairwise orthonormality,
+    * (b) each component's explained-variance ratio as the VARIANCE OF
+    * THE PROJECTION over the source embeddings divided by the total
     * per-dimension variance (vᵀΣv / trace Σ — the n-vs-n−1 convention
     * cancels in the ratio), and (c) top-|loading| dimension — so the
     * published decomposition is semantically verified against an
-    * independent engine's linear algebra each round instead of
-    * digest-pinned. */
+    * independent engine's linear algebra instead of digest-pinned; a
+    * StreamsSpec gate checks its determinism and ordering. */
   def embeddingPcaFit(embeddings: DataFrame, k: Int = 2): (DataFrame, DataFrame) = {
     import org.apache.spark.ml.feature.{PCA => MlPCA}
     import org.apache.spark.ml.functions.array_to_vector
@@ -302,9 +296,10 @@ object Ml {
   /** Deterministic scaled-RFM Lloyd's fit — every arithmetic step whose
     * result feeds back into the fit is ORDER-INDEPENDENT, so the
     * assignment is bit-identical across partition layouts (local[4] vs
-    * local[32]) and golden-pinnable, unlike the spark.ml fit it replaces
-    * (r15/r16 digest exemption: KMeans|| initialization samples per
-    * partition, so the whole fit was layout-sensitive). Three pieces:
+    * local[32]) and golden-pinnable, unlike the spark.ml fit it replaces,
+    * which had to be exempt from its digest (KMeans|| initialization
+    * samples per partition, so the whole fit was layout-sensitive).
+    * Three pieces:
     *
     *  - standardization stats: sums and sum-of-squares in DECIMAL (the
     *    suite's exact-cents discipline — decimal addition is exact, so

@@ -319,7 +319,7 @@ object Prep {
     * mapPartitions exists for. An earlier shape collected each group
     * into an array and folded with the `aggregate` HOF, whose
     * append-to-accumulator is O(k²) element copies per group of k
-    * chunks — the r16 full-registry 10x soak measured it 43.9x for 10x
+    * chunks — a full-registry 10x scale soak measured it 43.9x for 10x
     * data (the worst query in the suite); the streaming fold is O(k)
     * and soaks linear. `groups` remains the parallelism knob (streams
     * stay independent and the grp hash feeds the oracle's replay), but

@@ -77,8 +77,8 @@ object ExtensionQueries {
     },
       // the ORC reader must reproduce the parquet-path aggregate exactly
       Oracle(csvRoundtripSql)),
-    // r17: re-aggregates the shared tf frame (n = Σ tf, docs = row
-    // count) instead of running its own corpus explode — same counts
+    // re-aggregates the shared tf frame (n = Σ tf, docs = row count)
+    // instead of running its own corpus explode — same counts
     QuerySpec("vocab_top", (s, d) => Llm.vocabTopFrom(docTf(s, d)), Oracle(vocabTopSql)),
     // bounded-memory heavy-hitters tier: Misra-Gries candidates + exact
     // broadcast-filtered recount — same oracle as the exact tier
@@ -338,7 +338,7 @@ object ExtensionQueries {
     // (GoldSpec pins the relative-error floor vs the exact tier)
     QuerySpec("copurchase_triangles_approx", (s, d) =>
       Gold.copurchaseTrianglesApprox(triangleEdges(s, d)),
-      // DOULION tier promoted to a full oracle (r15): the edge coin is
+      // DOULION tier checked by a full oracle: the edge coin is
       // pmod(xxhash64(a, b, 42L), 2) — three chained XXH64 long-steps
       // restated in wrapping HUGEINT arithmetic (validated bit-equal to
       // Spark on probes) — then the SAME triangle SQL as the exact tier
@@ -450,7 +450,7 @@ object ExtensionQueries {
     // session-shared learn loop's final vocabulary (see bpeCore)
     QuerySpec("bpe_tokenize", (s, d) => Llm.bpeTokenizeFrom(bpeCore(s, d)._2),
       // the encode pass under the same learned merges: corpus token
-      // counts over the round-5 vocabulary
+      // counts over the vocabulary after the fifth merge (v5)
       Oracle(s"""$bpeSql
       SELECT token, CAST(sum(n) AS BIGINT) AS n FROM (
         SELECT unnest(syms) AS token, n FROM v5)

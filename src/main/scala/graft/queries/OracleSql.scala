@@ -329,12 +329,12 @@ object OracleSql {
     * exactly this step left-to-right with the previous hash as the next
     * seed (seed 42 at the start), so chaining these CTEs restates a
     * multi-column xxhash64 bit-for-bit (validated against Spark on
-    * literal probes, r15). `in`/`seed` are HUGEINT [0,2^64) expressions
+    * literal probes). `in`/`seed` are HUGEINT [0,2^64) expressions
     * over `src`'s columns; `keep` columns ride through. Every stage is
     * AS MATERIALIZED: each stage expression reads its predecessor's
     * column up to ~6 times, so DuckDB's default CTE inlining would grow
     * the expression tree exponentially across the 9×3 chained stages
-    * (the un-materialized form hung the planner; measured r15). */
+    * (the un-materialized form hung the planner). */
   private[queries] def xxLong(name: String, src: String, keep: String,
       in: String, seed: String, out: String): String =
     s"""${name}_0 AS MATERIALIZED (SELECT $keep, ((($seed) + $XxP5plus8) % $XxM) AS h0,

@@ -22,7 +22,7 @@ object SearchQueries {
       r AS (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, word) AS rk
             FROM s)
       SELECT doc_id, rk, word, tf, df, score FROM r WHERE rk <= 3 ORDER BY doc_id, rk""")),
-    // r17: fed from the shared tf frame — doc length, postings, and df
+    // fed from the shared tf frame — doc length, postings, and df
     // are all (doc, word)-grain derivations, so the operator's own two
     // corpus token passes are gone (bit-identical scores)
     QuerySpec("bm25_search", (s, d) => Search.bm25From(docTf(s, d)),

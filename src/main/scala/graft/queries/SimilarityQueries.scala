@@ -51,7 +51,7 @@ object SimilarityQueries {
       WHERE rank <= 5 ORDER BY probe_id, rank""")),
     // IVF search against the persisted full-corpus quantizer: explicit
     // argmin assignment + nprobe probing (Ml.knnIvfFrom), hash-checked
-    // since r15 — the oracle reads the same centroid parquet
+    // by its oracle, which reads the same centroid parquet
     QuerySpec("knn_ivf", (s, d) =>
       Ml.knnIvfFrom(Tables.embeddings(s, d), Tables.parquet(s, ivfFullIndex(s, d))),
       // IVF search restated end-to-end from the PERSISTED coarse-quantizer

@@ -117,7 +117,7 @@ object Search {
       k: Int = 5): DataFrame = {
     // CacheOnce: srcTf feeds its own df re-aggregate AND the scored
     // join — without the cache the doc→source attach + (source, word)
-    // aggregation run twice (r17)
+    // aggregation run twice
     val srcTf = CacheOnce(tf.join(documents.select("doc_id", "source"), "doc_id")
       .groupBy("source", "word").agg(sum("tf").as("tf")))
     val s = documents.select("source").distinct().count()

@@ -89,8 +89,8 @@ object Serving {
         sum(d38(col("x"))).as("sx"), sum(d38(col("y"))).as("sy"),
         // multiply in DECIMAL, not long: y is a DAILY cents aggregate,
         // unbounded with scale — at sf1 (10x) y² already passes
-        // Long.Max and ANSI throws ARITHMETIC_OVERFLOW (caught by the
-        // r16 full-registry scale soak). Same exact integers, wider
+        // Long.Max and ANSI throws ARITHMETIC_OVERFLOW (caught by a
+        // full-registry scale soak). Same exact integers, wider
         // intermediate.
         sum(d38(col("x")) * d38(col("x"))).as("sxx"),
         sum(d38(col("y")) * d38(col("y"))).as("syy"),
@@ -748,7 +748,7 @@ object Serving {
   def customerChurnMonthly(orders: DataFrame): DataFrame = {
     // CacheOnce: act feeds THREE consumers (the per-month count and both
     // sides of the mi−1 self-join); without the cache the scan + distinct
-    // shuffle run three times (r17 plan: 3 identical aggregate subtrees)
+    // shuffle run three times (the plan held 3 identical aggregate subtrees)
     val act = CacheOnce(Gold.validOrders(orders)
       .select(col("o_custkey"),
         (year(col("o_orderdate")) * 12 + month(col("o_orderdate")) - 1).as("mi"))
@@ -826,7 +826,7 @@ object Serving {
     * [[eventsSlidingUniquesApprox]] is the tier that deletes that
     * multiplier. */
   def eventsSlidingUniques(events: DataFrame): DataFrame =
-    // EXACT, but pre-aggregated (r17): collapse to the (hour, user) grain
+    // EXACT, but pre-aggregated: collapse to the (hour, user) grain
     // FIRST — one map-side-combinable shuffle over the event stream —
     // then expand each hour-grain row into its 6 covering windows. The
     // window/slide multiplier now applies to the hour×user frame, not
@@ -931,7 +931,7 @@ object Serving {
     val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
     // CacheOnce: the pair frame feeds its own totals re-aggregate AND
     // the share join — without the cache the user-keyed window pass
-    // over the log runs twice (r17)
+    // over the log runs twice
     val pairs = CacheOnce(events
       .withColumn("prev_type", lag("event_type", 1).over(byUser))
       .filter(col("prev_type").isNotNull)
@@ -1014,7 +1014,7 @@ object Serving {
     // CacheOnce on the step frames: each step feeds the NEXT step's
     // join AND its own count aggregate — without the caches every
     // downstream consumer re-runs the whole prefix of the funnel
-    // (the view filter+agg ran 3x, click 2x) (r17)
+    // (the view filter+agg ran 3x, click 2x)
     val v = CacheOnce(events.filter(col("event_type") === "view")
       .groupBy("user_id").agg(min("ts").as("t_view")))
     val c = CacheOnce(events.filter(col("event_type") === "click")
@@ -1124,7 +1124,7 @@ object Serving {
       buckets: Int = 10): DataFrame = {
     // CacheOnce: `a` feeds the percentile-edge action, its count, and
     // the bucket aggregate (3 scans without the cache); `b` its count
-    // and aggregate (r17)
+    // and aggregate
     val a = CacheOnce(orders.filter(year(col("o_orderdate")) === yearA)
       .select(col("o_totalprice").as("amount")))
     val b = CacheOnce(orders.filter(year(col("o_orderdate")) === yearB)

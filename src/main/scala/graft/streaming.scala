@@ -1,6 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -34,12 +34,12 @@ object Streams extends Serializable {
     * received on the driver heap — across 9 streaming queries and 3
     * bench passes that accumulation was measured pushing the suite into
     * GC thrash. The previous invocation's DataFrame is dead by the time
-    * the next one starts, so the drop is safe. */
-  private[graft] val lastSink = new Tables.SessionMemo[String, String]
+    * the next one starts, so the drop is safe. The previous name is a
+    * session entry of [[Shared]], swapped for the new one. */
   private def sinkName(spark: SparkSession, prefix: String): String = {
     val name = s"${prefix}_${runId.incrementAndGet()}"
-    lastSink.put(spark, prefix, name)
-      .foreach(old => spark.catalog.dropTempView(old))
+    Option(Shared.session(spark, ("lastSink", prefix))(new AtomicReference[String])
+      .getAndSet(name)).foreach(spark.catalog.dropTempView)
     name
   }
 
@@ -714,8 +714,8 @@ object Streams extends Serializable {
       case None => s"tmp${writerToken}_${commitSeq.incrementAndGet()}"
     }
 
-  /** True iff a persisted lineage mark is in the pre-round-16 format:
-    * `ckpt` + exactly 8 lowercase-hex chars (the 32-bit hashCode id).
+  /** True iff a persisted lineage mark is in the legacy format: `ckpt`
+    * + exactly 8 lowercase-hex chars (the 32-bit hashCode id).
     * Current checkpoint ids are `ckpt` + 16 hex (SHA-256 pathTag) and
     * temp ids start with `tmp`, so the match is unambiguous. */
   private[graft] def isLegacyRunId(id: String): Boolean =
@@ -840,25 +840,21 @@ object Streams extends Serializable {
 
   /** The one shared full-outer pair drain behind the three attribution
     * views — drained once per (session, dataset), heartbeat-punctuated
-    * on both sides so every outer row flushes. The first call drains
-    * under `sharedPairsLock` and concurrent first callers wait for it:
-    * `Shared.session` alone may run its build twice, and the second
-    * drain's `sinkName` would drop the first one's memory table before
-    * that drain reads it back. */
+    * on both sides so every outer row flushes. A [[Shared.session]]
+    * entry is built once, so concurrent first callers wait for the one
+    * drain: a second drain's `sinkName` would drop the first one's
+    * memory table before that drain reads it back. */
   private def sharedAttributionPairs(spark: SparkSession, dir: String): DataFrame =
-    sharedPairsLock.synchronized {
-      Shared.session(spark, ("attrPairs", dir)) {
-        val state = stateSession(spark)
-        attributionPairsDrain(
-          () => eventsStream(state, dir).unionByName(heartbeatStream(state, dir)),
-          // own per-dir sink prefix: sinkName drops the PREVIOUS view of
-          // the same (session, prefix), so the memoized view must never
-          // share a prefix with per-call drains (spec/fuzz paths) or with
-          // a different dataset's shared drain in the same session
-          sharedPairsPrefix(dir))
-      }
+    Shared.session(spark, ("attrPairs", dir)) {
+      val state = stateSession(spark)
+      attributionPairsDrain(
+        () => eventsStream(state, dir).unionByName(heartbeatStream(state, dir)),
+        // own per-dir sink prefix: sinkName drops the PREVIOUS view of
+        // the same (session, prefix), so the memoized view must never
+        // share a prefix with per-call drains (spec/fuzz paths) or with
+        // a different dataset's shared drain in the same session
+        sharedPairsPrefix(dir))
     }
-  private val sharedPairsLock = new Object
   private[graft] def sharedPairsPrefix(dir: String): String =
     s"graft_attr_shared_${Tables.pathTag(dir)}"
 

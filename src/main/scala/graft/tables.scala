@@ -102,24 +102,6 @@ object Tables {
     requireColumns(df, schema.fieldNames.toSeq, table)
   }
 
-  /** Resolved-relation memo — what a catalog does for a registered table.
-    * Resolving a parquet relation costs a driver-side file listing and a
-    * footer read ([[parquet]]), and a 190-query bench pass issues
-    * hundreds of loader calls over test tables that are immutable within
-    * a session, so re-resolving per call is pure floor cost. One resolved
-    * handle per (session, dir, table); sinks and scratch dirs — anything
-    * rewritten mid-session — never load through here, they call
-    * [[parquet]] directly.
-    *
-    * Keys are `spark.sessionUUID` — unique per session for the JVM's
-    * lifetime, unlike an identity hash, which can recur after a stopped
-    * session is GC'd and would then hand a DataFrame bound to the dead
-    * session to an unrelated new one. The session handle rides along in
-    * the value so every `load` can evict entries whose SparkContext has
-    * stopped: a long-lived multi-session JVM (the test suite runs many)
-    * otherwise retains dead plans forever. */
-  private val loadMemo = new SessionMemo[(String, String), DataFrame]
-
   /** A parquet read whose schema is resolved on the driver from one
     * footer, so no schema-inference job runs. A schema-less
     * `spark.read.parquet` starts a one-task job to read a footer; a
@@ -182,70 +164,6 @@ object Tables {
         kids.iterator.filter(_.isDirectory).flatMap(firstDataFile(fs, _)).nextOption())
     }
 
-  /** One UUID per live session, assigned on first sight and never
-    * reused (Spark's own `sessionUUID` is `private[sql]`, so we mint our
-    * own). Weak keys: the value string holds no reference back to the
-    * session, so a dropped session's registry entry is collectable —
-    * and a later session occupying the same identity hash gets a FRESH
-    * uuid, which is exactly the collision class a raw `hashCode` key
-    * suffers. */
-  private val sessionIds =
-    new java.util.WeakHashMap[SparkSession, String]()
-  private[graft] def sessionId(spark: SparkSession): String =
-    sessionIds.synchronized {
-      var id = sessionIds.get(spark)
-      if (id == null) {
-        id = java.util.UUID.randomUUID().toString
-        sessionIds.put(spark, id)
-      }
-      id
-    }
-
-  /** Session-scoped memo: entries carry their owning
-    * session and every access first evicts entries whose session has
-    * stopped. Session UUIDs never recur, so without eviction a long
-    * multi-session JVM (the test suite, a notebook server) retains dead
-    * sessions' cached frames and scratch paths forever. Same TrieMap
-    * atomicity as before: getOrElseUpdate selects one winner; a
-    * concurrent first call may run `build` twice but only the winning
-    * value is kept. */
-  private[graft] final class SessionMemo[K, V] {
-    SessionMemo.register(this)
-    private val m = scala.collection.concurrent.TrieMap
-      .empty[(String, K), (SparkSession, V)]
-    def getOrElseUpdate(spark: SparkSession, key: K, build: => V): V = {
-      evict()
-      m.getOrElseUpdate((sessionId(spark), key), (spark, build))._2
-    }
-    def put(spark: SparkSession, key: K, v: V): Option[V] =
-      m.put((sessionId(spark), key), (spark, v)).map(_._2)
-    def apply(spark: SparkSession, key: K): V = m((sessionId(spark), key))._2
-    def values: Iterable[V] = m.values.map(_._2)
-    def clear(): Unit = m.clear()
-    private[graft] def keys: Set[(String, K)] = m.keySet.toSet
-    /** Session uuids currently owning at least one entry (audit hook). */
-    private[graft] def ownerSessionIds: Set[String] = m.keySet.map(_._1).toSet
-    /** The eviction pass every access runs, callable directly (audit). */
-    private[graft] def evictStopped(): Unit = evict()
-    private def evict(): Unit =
-      m.filterInPlace { case (_, (s, _)) => !s.sparkContext.isStopped }
-  }
-
-  /** Registry of every SessionMemo instance in the JVM (they are all
-    * created once at enclosing-object init), so the MemoAudit harness
-    * can assert stopped-session eviction across ALL of them — a new
-    * memo added anywhere is audited automatically, without a
-    * hand-maintained list going stale. */
-  private[graft] object SessionMemo {
-    private val all =
-      new java.util.concurrent.CopyOnWriteArrayList[SessionMemo[_, _]]
-    private def register(r: SessionMemo[_, _]): Unit = all.add(r)
-    private[graft] def registries: Seq[SessionMemo[_, _]] = {
-      import scala.jdk.CollectionConverters._
-      all.asScala.toSeq
-    }
-  }
-
   /** Collision-free short tag for a path (16 hex chars of SHA-256) —
     * for sink prefixes and scratch names that must never alias across
     * dataset dirs (a 32-bit `hashCode` collision between two dirs in
@@ -272,15 +190,18 @@ object Tables {
     p.toString
   }
 
+  /** A test table's resolved relation, memoized per (session, dir,
+    * table) as a [[Shared.session]] entry, as a catalog keeps a
+    * registered table. Resolving costs a driver-side file listing and a
+    * footer read ([[parquet]]), and a 191-query bench pass issues
+    * hundreds of loads of tables that are immutable within a session.
+    * Sinks and scratch dirs, which are rewritten mid-session, never load
+    * through here: they call [[parquet]] directly. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    loadMemo.getOrElseUpdate(spark, (dir, name), {
+    Shared.session(spark, ("load", dir, name)) {
       val df = parquet(spark, s"$dir/$name.parquet")
       required.get(name).map(requireColumns(df, _, name)).getOrElse(df)
-    })
-
-  /** Test hook: the memo's current keys (uuid, dir, table). */
-  private[graft] def loadMemoKeys: Set[(String, String, String)] =
-    loadMemo.keys.map { case (u, (d, n)) => (u, d, n) }
+    }
 
   /** Raw-log text lines for the events stream — the unstructured-source
     * entry an ELT pipeline parses FIRST (S-family sibling of the CSV

@@ -12,6 +12,12 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Spark's own id of a session (`private[sql]`): a random UUID per
+    * session instance, never reused in the JVM, so a later session can
+    * never inherit an entry keyed by it. */
+  def sessionUUID(spark: org.apache.spark.sql.SparkSession): String =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
+
   /** Register a temp SQL function backed by a native expression builder. */
   def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
       builder: Seq[Expression] => Expression): Unit =

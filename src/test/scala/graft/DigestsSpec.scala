@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.queries.{Digest, QuerySpec}
 
 /** Pins the determinism-digest gate (graft.Digests) that machine-checks
-  * the no-oracle queries across rounds, the spec registry's size, and
-  * the SessionMemo container the round-15 eviction sweep moved every
-  * session-keyed memo onto. */
+  * the no-oracle queries against committed goldens, the spec registry's
+  * size, and the SessionMemo container behind both of [[Shared]]'s
+  * lifetimes. */
 class DigestsSpec extends SparkSpec {
 
   test("resultDigest is row-order independent and column-order independent") {
@@ -55,18 +55,17 @@ class DigestsSpec extends SparkSpec {
     }
   }
 
-  test("SessionMemo: winner semantics, put returns previous, per-session keys") {
-    val m = new Tables.SessionMemo[String, String]
+  test("SessionMemo: winner semantics, per-session keys") {
+    val m = new Shared.SessionMemo[String, String]
     var builds = 0
     def build(v: String): String = { builds += 1; v }
     assert(m.getOrElseUpdate(spark, "k", build("a")) == "a")
     assert(m.getOrElseUpdate(spark, "k", build("b")) == "a") // memo hit
     assert(builds == 1)
-    assert(m.put(spark, "k", "c").contains("a"))
-    assert(m(spark, "k") == "c")
+    assert(m(spark, "k") == "a")
     val clone = spark.newSession()
     assert(m.getOrElseUpdate(clone, "k", build("d")) == "d") // own slot
-    assert(m(spark, "k") == "c")
+    assert(m(spark, "k") == "a")
     assert(m.keys.map(_._1).forall(_.length == 36)) // sessionUUID keys
     m.clear()
     assert(m.values.isEmpty)

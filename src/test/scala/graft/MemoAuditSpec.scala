@@ -2,11 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Stopped-session eviction across EVERY SessionMemo registry (r15
-  * judge item 6), run in a forked JVM because the shared-context suite
-  * cannot stop a session without killing every other suite — see
-  * [[MemoAuditMain]] for the lifecycle. This spec only spawns the JVM
-  * and asserts its verdict line. */
+/** Stopped-session eviction from both of [[Shared]]'s stores, run in a
+  * forked JVM because the shared-context suite cannot stop a session
+  * without killing every other suite — see [[MemoAuditMain]] for the
+  * lifecycle. This spec only spawns the JVM and asserts its verdict
+  * line. */
 class MemoAuditSpec extends AnyFunSuite {
 
   test("stopped session's entries are evicted from every memo registry; survivors stay serviceable") {

@@ -1,14 +1,55 @@
 package graft
 
+import java.util.concurrent.{Callable, CountDownLatch, Executors}
+import java.util.concurrent.atomic.AtomicInteger
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.storage.StorageLevel
 
-/** [[Shared]]'s single release path: `unpersistShared` drops every
+/** [[Shared]]'s two promises: each entry is built once, whoever calls
+  * first, and the single release path `unpersistShared` drops every
   * released cached frame and keeps every session fixture as it is. */
 class SharedSpec extends SparkSpec {
 
+  /** `body` on `n` threads released together by one latch. */
+  private def race[V](n: Int)(body: => V): Seq[V] = {
+    val go = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(n)
+    try {
+      val calls = Seq.fill(n)(pool.submit(new Callable[V] {
+        def call(): V = { go.await(); body }
+      }))
+      go.countDown()
+      calls.map(_.get())
+    } finally pool.shutdown()
+  }
+
+  test("concurrent first calls of one key run its build once; a failed build leaves no entry") {
+    val tag = java.util.UUID.randomUUID().toString
+    val builds = new AtomicInteger(0)
+    def slow[V](v: => V): V = { builds.incrementAndGet(); Thread.sleep(300); v }
+
+    val values = race(8)(Shared.session(spark, ("once", tag))(slow(new Object)))
+    assert(builds.get == 1, "a concurrent first call ran its own session build")
+    assert(values.forall(_ eq values.head))
+
+    builds.set(0)
+    val frames = race(8)(Shared.frame(spark, ("onceFrame", tag))(slow(spark.range(3).toDF())))
+    assert(builds.get == 1, "a concurrent first call ran its own frame build")
+    assert(frames.forall(_ eq frames.head))
+    frames.head.unpersist(blocking = true)
+
+    val failing = ("onceFailing", tag)
+    intercept[IllegalStateException] {
+      Shared.session[String](spark, failing)(throw new IllegalStateException("build failed"))
+    }
+    assert(!Shared.kept.keys((Bridge.sessionUUID(spark), failing)), "a failed build was kept")
+    assert(Shared.session(spark, failing)("rebuilt") == "rebuilt")
+  }
+
   test("unpersistShared uncaches frames, ML fits and CacheOnce frames; fixtures survive unwritten") {
-    val id = Tables.sessionId(spark)
+    val id = Bridge.sessionUUID(spark)
     for (q <- Seq("fact_achats", "kmeans_segments", "kmeans_silhouette", "knn_ivf",
         "event_funnel", "csv_roundtrip"))
       SparkEntry.queries(q)(spark, sf).collect()

@@ -50,21 +50,14 @@ class SourceGateSpec extends AnyFunSuite {
       .map(_.replaceAll("//.*", ""))
       .mkString("\n")
 
-  test("SessionMemo is constructed only by Shared, Tables.loadMemo and lastSink") {
-    val decl = """val\s+(\w+)\s*=\s*new\s+(?:Tables\.)?SessionMemo\b""".r
-    val anyNew = """new\s+(?:Tables\.)?SessionMemo\b""".r
+  test("SessionMemo is constructed only by Shared") {
+    val anyNew = """new\s+(?:\w+\.)*SessionMemo\b""".r
     val sites = mainSources.flatMap { p =>
-      val text = code(p)
-      val named = decl.findAllMatchIn(text).map(_.group(1)).toSeq
-      val anonymous = anyNew.findAllMatchIn(text).size - named.size
-      named.map(p.getFileName.toString -> _) ++
-        Seq.fill(anonymous)(p.getFileName.toString -> "<anonymous>")
+      Seq.fill(anyNew.findAllMatchIn(code(p)).size)(p.getFileName.toString)
     }
-    val outsideShared = sites.filterNot(_._1 == "shared.scala")
-    assert(outsideShared.sorted == Seq("streaming.scala" -> "lastSink",
-        "tables.scala" -> "loadMemo"),
-      "a cross-query memo belongs in graft.Shared (released or session " +
-        s"lifetime), not in its own SessionMemo: $outsideShared")
+    assert(sites == Seq("shared.scala", "shared.scala"),
+      "a session-keyed value belongs in graft.Shared (released or session " +
+        s"lifetime), not in its own SessionMemo: $sites")
   }
 
   test("every parquet read in src/main resolves its schema through Tables.parquet") {
@@ -138,8 +131,8 @@ class SourceGateSpec extends AnyFunSuite {
       s"session conf written outside a Shared.clone setup:\n${offenders.mkString("\n")}")
   }
 
-  /** `Obj.x` for every top-level object in `text` that defines both `x`
-    * and `xFrom`. */
+  /** `Obj.x / Obj.xFrom` (or `xFit`) for every top-level object in
+    * `text` that defines both forms. */
   private def wrapperPairs(text: String): Seq[String] = {
     val obj = """(?m)^(?:private\[\w+\]\s+)?object\s+(\w+)""".r
     val defn = """\bdef\s+(\w+)""".r
@@ -147,23 +140,29 @@ class SourceGateSpec extends AnyFunSuite {
     starts.zipWithIndex.flatMap { case (m, i) =>
       val end = if (i + 1 < starts.size) starts(i + 1).start else text.length
       val defs = defn.findAllMatchIn(text.substring(m.start, end)).map(_.group(1)).toSet
-      defs.filter(x => defs(x + "From")).toSeq.sorted.map(x => s"${m.group(1)}.$x")
+      val o = m.group(1)
+      for (x <- defs.toSeq.sorted; sfx <- Seq("From", "Fit") if defs(x + sfx))
+        yield s"$o.$x / $o.$x$sfx"
     }
   }
 
-  test("no object in src/main defines both x and xFrom") {
-    // the registry runs the *From form over its shared frames; a second
-    // entry point that rebuilds the same chain from raw input is a form
-    // that neither Bench nor Verify runs, so only tests would check it
+  test("no object in src/main defines both x and xFrom or xFit") {
+    // the registry runs the *From form over its shared frames, or the
+    // *Fit form whose fitted artifact it persists; a second entry point
+    // that rebuilds the same chain from raw input, or keeps one half of
+    // the fit's answer, is a form that neither Bench nor Verify runs, so
+    // only tests would check it
     assert(wrapperPairs(
       "object A {\n  def f(d: D) = fFrom(g(d))\n  def fFrom(x: D) = x\n}\n" +
-        "object B {\n  def h = 1\n}\nobject C {\n  def hFrom = 1\n}") == Seq("A.f"))
-    assert(wrapperPairs("private[graft] object A {\n  def kFrom = 1\n}").isEmpty)
+        "object B {\n  def h = 1\n}\nobject C {\n  def hFrom = 1\n}\n" +
+        "object D {\n  def p(d: D) = pFit(d)._1\n  def pFit(d: D) = (d, d)\n}") ==
+      Seq("A.f / A.fFrom", "D.p / D.pFit"))
+    assert(wrapperPairs("private[graft] object A {\n  def kFrom = 1\n  def kFit = 2\n}").isEmpty)
     val offenders = mainSources.flatMap { p =>
-      wrapperPairs(code(p)).map(x => s"${p.getFileName}: $x / ${x}From")
+      wrapperPairs(code(p)).map(x => s"${p.getFileName}: $x")
     }
     assert(offenders.isEmpty,
-      "call the registry's *From form instead of keeping a raw-input twin:\n" +
+      "call the registry's *From or *Fit form instead of keeping a twin:\n" +
         offenders.mkString("\n"))
   }
 

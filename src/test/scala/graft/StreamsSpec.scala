@@ -561,7 +561,7 @@ class StreamsSpec extends SparkSpec {
 
   test("embeddingPca: variance ratios ordered and in (0,1], deterministic, loadings sane") {
     val e = Tables.embeddings(spark, sf)
-    val a = Ml.embeddingPca(e).collect()
+    val a = Ml.embeddingPcaFit(e)._1.collect()
     assert(a.length == 2)
     val ev = a.map(_.getAs[Double]("explained_variance"))
     // components arrive strongest-first; ratios are a partial sum of 1
@@ -571,7 +571,7 @@ class StreamsSpec extends SparkSpec {
       assert(l > 0.0 && l <= 1.0) // unit-norm eigenvector component
     }
     // 4dp/3dp rounding absorbs treeAggregate float-order jitter
-    assert(Ml.embeddingPca(e).collect().toSeq == a.toSeq)
+    assert(Ml.embeddingPcaFit(e)._1.collect().toSeq == a.toSeq)
   }
 
   test("propensity model: temporal backtest — held-out scores, deterministic fit, held-out AUC beats chance") {
